@@ -103,10 +103,11 @@ def _is_no_append_error(e: Exception) -> bool:
     re-raise."""
     def _marked(name: str, msg: str) -> bool:
         # class names are the reliable signal; the message heuristic is
-        # restricted to the known Hadoop-2 "Not supported" IOException
-        # shape (an EXACT short message), so a transient error whose
-        # text merely CONTAINS "not supported" somewhere no longer
-        # silently takes the read+rewrite fallback (r5 ADVICE)
+        # restricted to IOExceptions whose message STARTS with the known
+        # no-append shapes ("Not supported", "Append is not supported
+        # by <FS>"), so a transient error whose text merely CONTAINS
+        # "not supported" mid-sentence still re-raises instead of
+        # silently taking the read+rewrite fallback
         # "Unsupported" covers java.lang.UnsupportedOperationException
         # AND HDFS's UnsupportedActionException (dfs.support.append=
         # false) — class NAMES carry intent, unlike free-text messages
@@ -115,8 +116,9 @@ def _is_no_append_error(e: Exception) -> bool:
             or "NotImplemented" in name
             or (
                 name.rsplit(".", 1)[-1] == "IOException"
-                and msg.strip().lower().rstrip(".") in
-                ("not supported", "append is not supported")
+                and msg.strip().lower().startswith(
+                    ("not supported", "append is not supported")
+                )
             )
         )
 

@@ -88,15 +88,17 @@ def slot_fold(
     """Per-``keys`` score from slotted contributions, summed in SLOT
     order — the codegen-HashAggregate twin of :func:`score_fold` for the
     case where the term set is driver-known: slot i = the term's index
-    in the set's ascending order, at most one row per (keys, slot).
-    Max-per-slot then an ordered add where a missing slot contributes
-    ``+0.0`` is bit-identical to the sorted collect_list fold for
-    nonnegative contributions (IEEE: x + 0.0 == x). The ONE shared copy
-    of this parity-critical fold — positional serving and the batch
-    relational scorer must not drift apart."""
+    in the set's ascending order. Sum-per-slot then an ordered add where
+    a missing slot contributes ``+0.0`` is bit-identical to the sorted
+    collect_list fold for nonnegative contributions with one row per
+    (keys, slot) (IEEE: 0.0 + x == x, x + 0.0 == x); duplicate rows of a
+    slot are summed, as :func:`score_fold` sums duplicate terms, never
+    dropped. The ONE shared copy of this parity-critical fold —
+    positional serving and the batch relational scorer must not drift
+    apart."""
     g = frame.groupBy(*keys).agg(
         *[
-            F.max(F.when(F.col(slot_col) == i, F.col(contrib_col))).alias(f"_c{i}")
+            F.sum(F.when(F.col(slot_col) == i, F.col(contrib_col))).alias(f"_c{i}")
             for i in range(n_slots)
         ]
     )

@@ -128,8 +128,13 @@ def check_preload_budget(
     charge them against one budget (pass ``budget - spent_so_far``)."""
     if budget_bytes is None:
         return 0
-    est = estimate_collect_bytes(df)
-    if est > budget_bytes:
+    return charge_preload(estimate_collect_bytes(df), what, budget_bytes)
+
+
+def charge_preload(est: int, what: str, budget_bytes: int | None) -> int:
+    """:func:`check_preload_budget` for a size the caller already
+    knows (e.g. decoded arrays); returns ``est``."""
+    if budget_bytes is not None and est > budget_bytes:
         raise PreloadBudgetExceeded(
             f"refusing to preload {what}: estimated {est:,} bytes of driver "
             f"memory exceeds the remaining {budget_bytes:,}-byte budget. "

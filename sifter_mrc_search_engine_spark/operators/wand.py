@@ -167,45 +167,67 @@ DENSE_POSTINGS_LIMIT = 20_000_000
 DENSE_DOCSPACE_LIMIT = 64_000_000
 
 
-def _dense_topk(rows, query_terms, doclen, n_docs: int, avgdl: float,
-                top_k: int, k1: float, b: float) -> List[Tuple[int, float]]:
-    """Vectorized exact scorer: decode everything, accumulate per-doc in
-    ASCENDING TERM order into a dense float64 array (identical summation
-    order to the oracle and to WAND), numpy top-k with doc_id tie-break.
+def packed_ids(lo: int, hi: int, count: int) -> bool:
+    """True when ``count`` doc ids spanning ``[lo, hi]`` suit an array
+    indexed by doc id: nonnegative, and under 1M or at most 8x wider
+    than their count."""
+    return lo >= 0 and hi < max(8 * count, 1_000_000)
 
-    O(total postings) with no per-doc Python — the winner for in-memory
-    serving when terms are dense and WAND's pruning cannot bite. WAND
-    remains the disk-path kernel (it avoids decoding skipped blocks)."""
-    by_term: dict = {}
-    for r in rows:
-        by_term.setdefault(r["term"], []).append(r)
-    max_doc = max(int(r["max_doc"]) for r in rows)
-    acc = np.zeros(max_doc + 1, dtype=np.float64)
-    seen = np.zeros(max_doc + 1, dtype=bool)
-    for term in sorted(by_term):
-        segs = by_term[term]
-        df = int(segs[0]["df"])
-        idf = float(np.log(1.0 + (n_docs - df + 0.5) / (df + 0.5)))
-        for r in segs:  # salted segments: disjoint doc ranges
-            ids, tfs = decode_postings(
-                gaps=bytes(r["gaps"]), tfs=bytes(r["tfs"]), n=int(r["n"]),
-                skips=bytes(r["skips"]), block_size=int(r["block_size"]),
+
+def term_impacts(segs, doclen, n_docs: int, avgdl: float,
+                 k1: float = BM25_K1, b: float = BM25_B) -> Tuple[np.ndarray, np.ndarray]:
+    """One term's postings as ``(doc_ids int64, impacts float64)``: every
+    segment decoded, each posting's exact float64 BM25 contribution (the
+    expression WAND's ``_score_doc`` and the oracle evaluate).
+
+    ``segs`` are the term's segment rows, concatenated in their order."""
+    df = int(segs[0]["df"])
+    idf = float(np.log(1.0 + (n_docs - df + 0.5) / (df + 0.5)))
+    ids_parts, imp_parts = [], []
+    for r in segs:
+        ids, tfs = decode_postings(
+            gaps=bytes(r["gaps"]), tfs=bytes(r["tfs"]), n=int(r["n"]),
+            skips=bytes(r["skips"]), block_size=int(r["block_size"]),
+        )
+        tfs = tfs.astype(np.float64)
+        if isinstance(doclen, np.ndarray):
+            dls = doclen[ids].astype(np.float64)
+        else:
+            dls = np.fromiter(
+                (doclen[int(i)] for i in ids), dtype=np.float64, count=ids.size
             )
-            tfs = tfs.astype(np.float64)
-            if isinstance(doclen, np.ndarray):
-                dls = doclen[ids].astype(np.float64)
-            else:
-                dls = np.fromiter(
-                    (doclen[int(i)] for i in ids), dtype=np.float64, count=ids.size
-                )
-            contrib = idf * tfs * (k1 + 1.0) / (tfs + k1 * ((1.0 - b) + (b * dls) / avgdl))
-            acc[ids] += contrib  # ids unique per term -> plain fancy add
-            seen[ids] = True
-    cand = np.flatnonzero(seen)
-    scores = acc[cand]
-    k = min(top_k, cand.size)
-    if k == 0:
+        ids_parts.append(ids)
+        imp_parts.append(idf * tfs * (k1 + 1.0) / (tfs + k1 * ((1.0 - b) + (b * dls) / avgdl)))
+    return np.concatenate(ids_parts), np.concatenate(imp_parts)
+
+
+def accumulate_topk(per_term: Sequence[Tuple[np.ndarray, np.ndarray]],
+                    top_k: int) -> List[Tuple[int, float]]:
+    """Exact top-k from per-term ``(doc_ids, impacts)`` pairs given in
+    ASCENDING TERM order: ``np.bincount(weights=...)`` over the
+    term-ordered concatenation starts each doc's float64 sum at 0.0 and
+    adds its impacts in that order, the summation order of the oracle
+    and of WAND; numpy top-k with doc_id tie-break.
+
+    Packed ids (:func:`packed_ids`) are counted straight into an array
+    indexed by doc id; negative or sparse ids are first mapped to dense
+    ranks with ``np.unique``."""
+    if top_k < 1 or not per_term:
         return []
+    ids = np.concatenate([i for i, _ in per_term])
+    if ids.size == 0:
+        return []
+    imp = np.concatenate([w for _, w in per_term])
+    hi = int(ids.max())
+    if packed_ids(int(ids.min()), hi, ids.size):
+        seen = np.zeros(hi + 1, dtype=bool)
+        seen[ids] = True
+        cand = np.flatnonzero(seen)
+        scores = np.bincount(ids, weights=imp, minlength=hi + 1)[cand]
+    else:
+        cand, inv = np.unique(ids, return_inverse=True)
+        scores = np.bincount(inv, weights=imp, minlength=cand.size)
+    k = min(top_k, cand.size)
     # keep every row tied with the k-th-best score so the doc_id
     # tie-break sees all tied candidates, then lexsort the small set
     kth_score = np.partition(scores, cand.size - k)[cand.size - k]
@@ -251,7 +273,14 @@ def wand_topk(
         if method == "dense" or (
             total_n <= DENSE_POSTINGS_LIMIT and max_doc <= DENSE_DOCSPACE_LIMIT
         ):
-            return _dense_topk(rows, query_terms, doclen, n_docs, avgdl, top_k, k1, b)
+            by_term: Dict[str, list] = {}
+            for r in rows:
+                by_term.setdefault(r["term"], []).append(r)
+            return accumulate_topk(
+                [term_impacts(by_term[t], doclen, n_docs, avgdl, k1, b)
+                 for t in sorted(by_term)],
+                top_k,
+            )
 
     cursors = []
     for r in rows:

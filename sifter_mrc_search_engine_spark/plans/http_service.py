@@ -74,6 +74,15 @@ def _file_answers(service: InferenceService, question: str, filename: str,
 
 def make_handler(service: InferenceService, structured=None):
     class Handler(BaseHTTPRequestHandler):
+        # keep-alive: a client's connection serves request after request.
+        # Headers and body go out in two writes, so Nagle must be off or
+        # the body waits for the client's delayed ACK (~40 ms per reply)
+        protocol_version = "HTTP/1.1"
+        disable_nagle_algorithm = True
+        # seconds an idle keep-alive connection may hold its handler
+        # thread; stop() does not close open connections
+        timeout = 60
+
         def log_message(self, *a):  # quiet test servers
             pass
 
@@ -82,6 +91,8 @@ def make_handler(service: InferenceService, structured=None):
             self.send_response(code)
             self.send_header("Content-Type", "application/json; charset=utf-8")
             self.send_header("Content-Length", str(len(body)))
+            if self.close_connection:
+                self.send_header("Connection", "close")
             self.end_headers()
             self.wfile.write(body)
 
@@ -109,6 +120,10 @@ def make_handler(service: InferenceService, structured=None):
 
         def do_POST(self):
             url = urlparse(self.path)
+            if "Content-Length" not in self.headers:
+                # e.g. Transfer-Encoding: chunked — the body stays unread,
+                # so it must not be parsed as the next request
+                self.close_connection = True
             length = int(self.headers.get("Content-Length", 0))
             raw = self.rfile.read(length)
             if url.path == "/inference":

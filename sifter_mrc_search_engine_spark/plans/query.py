@@ -6,7 +6,9 @@ The postings scan filters on BOTH the partition column ``bucket`` (parquet
 partition pruning: only the query terms' bucket directories are listed) and
 ``term`` (row-group pruning via parquet min/max stats). A query touches a
 handful of files regardless of index size — this is what makes the design
-hold at 10^12 docs.
+hold at 10^12 docs. A preloaded searcher (``preload=True``) skips the
+scan and the kernel: it decoded every term once into BM25 impact arrays
+at construction, and a query only adds its terms' arrays.
 
 Doc lengths: loaded once per (process, index) into dense numpy arrays and
 cached — the Lucene-norms analogue. At true 10^12 scale the norms sidecar
@@ -42,9 +44,10 @@ from ..functions.xxhash import term_bucket
 from ..operators.compressed_index import (
     DEFAULT_PRELOAD_BUDGET_BYTES,
     PreloadBudgetExceeded,
+    charge_preload,
     check_preload_budget,
 )
-from ..operators.wand import wand_topk
+from ..operators.wand import accumulate_topk, packed_ids, term_impacts, wand_topk
 
 _DOCLEN_CACHE: dict[tuple, tuple] = {}
 
@@ -89,8 +92,8 @@ def _load_norms(
     check_preload_budget(doclens_df, f"doclens of {index_dir}", budget_bytes)
     rows = doclens_df.collect()
     ids = [r["doc_id"] for r in rows]
-    min_id, max_id = min(ids), max(ids)
-    if min_id >= 0 and max_id < max(8 * len(ids), 1_000_000):
+    max_id = max(ids)
+    if packed_ids(min(ids), max_id, len(ids)):
         dl = np.zeros(max_id + 1, dtype=np.int64)
         for r in rows:
             dl[r["doc_id"]] = r["doc_len"]
@@ -117,24 +120,35 @@ class IndexSearcher:
         norms: str = "preload",
         preload_budget_bytes: int | None = DEFAULT_PRELOAD_BUDGET_BYTES,
     ):
-        """``preload=True`` pulls the postings table into a driver-side
-        term->rows dict — the low-latency serving mode (sub-ms routing, no
-        Spark job per query). Appropriate while the hot index fits driver
-        memory; at 10^12 docs serving runs against the bucket-pruned scan
-        (default) or an external KV tier. Before collecting, the
-        postings size is ESTIMATED (one cheap aggregate) and the preload
-        refused with :class:`PreloadBudgetExceeded` above
-        ``preload_budget_bytes`` (default 4 GiB) — a clear error naming
-        the knob beats an OOMed driver. ``None`` disables the check.
+        """``preload=True`` is the low-latency serving mode (no Spark job
+        and no postings decode per query): at construction it collects
+        the postings table and the norms, and decodes each term once into
+        a ``(doc_ids int64, impacts float64)`` pair, the impact being the
+        posting's exact BM25 contribution. A query then only adds its
+        terms' impact arrays in ascending-term order and takes the top-k.
+        The searcher serves the one index snapshot it read, even if the
+        directory is rebuilt under it. Appropriate while the hot index
+        fits driver memory; at 10^12 docs serving runs against the
+        bucket-pruned scan (default) or an external KV tier. Every
+        driver-side collect is charged against ``preload_budget_bytes``
+        (default 4 GiB) before it happens: the ESTIMATED compressed rows
+        (one cheap aggregate), 16 bytes per decoded posting, then the
+        norms; above it the preload is refused with
+        :class:`PreloadBudgetExceeded` — a clear error naming the knob
+        beats an OOMed driver. ``None`` disables the check.
 
         ``norms``: 'preload' loads the doclens sidecar into driver memory
-        on first use (lowest latency; bounded by the norms table fitting
-        the serving head). 'join' never materializes norms on the driver —
-        every query scores through the in-plan doclen join
+        (at construction with ``preload=True``, else on first use;
+        lowest latency; bounded by the norms table fitting the serving
+        head). 'join' never materializes norms on the driver — every
+        query scores through the in-plan doclen join
         (:meth:`search_many_relational`'s shape), the mode that holds at
-        10^12 docs where the norms table itself is cluster-resident."""
+        10^12 docs where the norms table itself is cluster-resident.
+        Impacts need norms, so ``preload=True`` requires 'preload'."""
         if norms not in ("preload", "join"):
             raise ValueError(f"unknown norms mode {norms!r}")
+        if preload and norms == "join":
+            raise ValueError("preload=True needs driver norms (norms='preload')")
         self.spark = spark
         self.index_dir = index_dir
         self.buckets = buckets
@@ -145,54 +159,67 @@ class IndexSearcher:
         self.doclens = spark.read.parquet(f"{index_dir}/doclens")
         stats = json.loads(fsio.read_text(fsio.join(index_dir, "stats.json"), spark))
         self.n_docs, self.avgdl = int(stats["n_docs"]), float(stats["avgdl"])
-        self._doclen = None  # lazy: join-mode never touches it
+        self._doclen = None  # lazy without preload: join-mode never touches it
         self._preload_budget = preload_budget_bytes
-        self._preload_spent = 0  # postings + lazy norms share ONE budget
-        self._mem: dict[str, list] | None = None
+        self._mem: dict[str, tuple[np.ndarray, np.ndarray]] | None = None
         if preload:
-            self._preload_spent = check_preload_budget(
-                self.postings, f"postings of {index_dir}", preload_budget_bytes
-            )
-            self._mem = {}
-            for r in self.postings.collect():
-                self._mem.setdefault(r["term"], []).append(r)
+            self._mem = self._preload_impacts(preload_budget_bytes)
+
+    def _preload_impacts(self, budget: int | None) -> dict:
+        """term -> frozen ``(doc_ids, impacts)``; the compressed rows,
+        the decoded store and the norms share ONE budget (separate
+        full-budget checks would admit their sum)."""
+        what = f"postings of {self.index_dir}"
+        spent = check_preload_budget(self.postings, what, budget)
+        by_term: dict[str, list] = {}
+        for r in self.postings.collect():
+            by_term.setdefault(r["term"], []).append(r)
+        if budget is not None:
+            decoded = 16 * sum(int(r["n"]) for segs in by_term.values() for r in segs)
+            spent += charge_preload(decoded, f"decoded {what}", budget - spent)
+        self._doclen, _, _ = _load_norms(
+            self.spark, self.index_dir, None if budget is None else budget - spent
+        )
+        store = {}
+        for term, segs in by_term.items():
+            ids, imp = term_impacts(segs, self._doclen, self.n_docs, self.avgdl)
+            ids.flags.writeable = imp.flags.writeable = False
+            store[term] = (ids, imp)
+        return store
 
     @property
     def doclen(self):
-        """Driver-resident norms, loaded lazily (preload mode only).
-        The cache-miss collect is budget-checked like every other
-        driver preload — one row per doc is exactly the collect that
-        kills the driver at 10^12 docs — and charged against the SAME
-        budget the constructor's postings preload spent from (two
-        full-budget checks would admit 2x jointly; r5 review)."""
+        """Driver-resident norms: loaded at construction with
+        ``preload=True``, lazily otherwise. The lazy cache-miss collect
+        is budget-checked like every other driver preload — one row per
+        doc is exactly the collect that kills the driver at 10^12
+        docs."""
         if self._doclen is None:
-            remaining = (
-                None
-                if self._preload_budget is None
-                else self._preload_budget - self._preload_spent
-            )
             self._doclen, _, _ = _load_norms(
-                self.spark, self.index_dir, remaining
+                self.spark, self.index_dir, self._preload_budget
             )
         return self._doclen
 
     def candidate_rows(self, terms: Sequence[str]) -> list:
-        """Postings fetch for a term set.
+        """Postings fetch for a term set: the bucket- and term-pruned scan.
 
         Bucket routing is computed DRIVER-SIDE (functions/xxhash.py is
         bit-identical to the JVM xxhash64) so the pruned scan is the only
-        Spark job a query pays; preloaded mode pays none.
+        Spark job a query pays.
         """
         tset = sorted(set(terms))
         if not tset:
             return []
-        if self._mem is not None:
-            return [r for t in tset for r in self._mem.get(t, [])]
         bks = sorted({term_bucket(t, self.buckets) for t in tset})
         return (
             self.postings.filter(F.col("bucket").isin(bks))
             .filter(F.col("term").isin(tset))
             .collect()
+        )
+
+    def _preloaded_topk(self, terms: Sequence[str], top_k: int) -> list[tuple[int, float]]:
+        return accumulate_topk(
+            [self._mem[t] for t in sorted(set(terms)) if t in self._mem], top_k
         )
 
     def search(
@@ -210,6 +237,8 @@ class IndexSearcher:
             rows = sorted(out.collect(), key=lambda r: r["rank"])
             return [(int(r["doc_id"]), float(r["score"])) for r in rows]
         terms = analyze(question)
+        if self._mem is not None:
+            return self._preloaded_topk(terms, top_k)
         rows = self.candidate_rows(terms)
         return wand_topk(rows, terms, self.doclen, self.n_docs, self.avgdl, top_k=top_k)
 
@@ -217,17 +246,26 @@ class IndexSearcher:
         self, questions: Sequence[str], top_k: int = DEFAULT_TOP_K
     ) -> list[list[tuple[int, float]]]:
         """Scatter-gather batch scoring on the driver: ONE bucket-pruned
-        scan fetches the union of all queries' postings, then the
-        vectorized kernels run per query locally. The right shape when the
-        union of candidate lists fits one node (a serving head); the
-        distributed ``search_many`` covers huge batches/indexes."""
+        scan fetches the union of all queries' postings (none when
+        preloaded), then the vectorized kernels run per query locally.
+        The right shape when the union of candidate lists fits one node
+        (a serving head); the distributed ``search_many`` covers huge
+        batches/indexes."""
         top_k = max(1, min(int(top_k), MAX_TOP_K))
         q_terms = [analyze(q) for q in questions]
-        all_terms = sorted({t for ts in q_terms for t in ts})
-        rows = self.candidate_rows(all_terms)
-        by_term: dict[str, list] = {}
-        for r in rows:
-            by_term.setdefault(r["term"], []).append(r)
+        if self._mem is not None:
+            def score(terms):
+                return self._preloaded_topk(terms, top_k)
+        else:
+            by_term: dict[str, list] = {}
+            for r in self.candidate_rows(sorted({t for ts in q_terms for t in ts})):
+                by_term.setdefault(r["term"], []).append(r)
+
+            def score(terms):
+                cand = [r for t in set(terms) for r in by_term.get(t, [])]
+                return wand_topk(
+                    cand, terms, self.doclen, self.n_docs, self.avgdl, top_k=top_k
+                )
         out = []
         # memoize per exact term LIST: repeated queries in a batch run
         # the kernel once (identical inputs -> identical output)
@@ -235,11 +273,9 @@ class IndexSearcher:
         for terms in q_terms:
             key = tuple(terms)
             if key not in memo:
-                cand = [r for t in set(terms) for r in by_term.get(t, [])]
-                memo[key] = wand_topk(
-                    cand, terms, self.doclen, self.n_docs, self.avgdl, top_k=top_k
-                )
-            # fresh list per query: callers may mutate their result rows
+                memo[key] = score(terms)
+            # fresh list of immutable tuples per query: a caller mutating
+            # its result cannot change a repeated query's
             out.append(list(memo[key]))
         return out
 

@@ -78,3 +78,16 @@ def test_postings_sorted_and_df_consistent(docs):
         assert ids == sorted(ids)
         assert row["df"] == len(ids) == df_exp[row["term"]]
         assert 0 <= row["bucket"] < 64
+
+
+def test_slot_fold_sums_duplicate_slot_rows_like_score_fold(spark):
+    """Two rows in one (keys, slot) are both counted, as score_fold
+    counts two rows of one term; values are exact in binary, so the
+    order duplicates are added in cannot matter."""
+    from sifter_mrc_search_engine_spark.operators.bm25 import score_fold, slot_fold
+
+    rows = [(1, "a", 0, 1.0), (1, "a", 0, 2.0), (1, "b", 1, 0.5), (2, "b", 1, 0.25)]
+    frame = spark.createDataFrame(rows, "doc_id long, term string, _slot int, contrib double")
+    slotted = slot_fold(frame.drop("term"), ["doc_id"], 2).collect()
+    folded = score_fold(frame.drop("_slot"), ["doc_id"]).collect()
+    assert sorted(map(tuple, slotted)) == sorted(map(tuple, folded)) == [(1, 3.5), (2, 0.25)]

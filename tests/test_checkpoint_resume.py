@@ -94,10 +94,18 @@ def test_fingerprint_mismatch_refuses(spark, docs, tmp_path_factory):
 
 
 @pytest.fixture(scope="module")
-def searcher(spark, docs, tmp_path_factory):
+def index_dir(spark, docs, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("idx_search"))
     build_index_resumable(docs, d, buckets=BUCKETS)
-    return IndexSearcher(spark, d, buckets=BUCKETS)
+    return d
+
+
+@pytest.fixture(scope="module")
+def searcher(spark, index_dir, request):
+    """The bucket-pruned scan searcher; tests parametrize it indirectly
+    with ``True`` to serve from the preloaded impact store instead."""
+    preload = getattr(request, "param", False)
+    return IndexSearcher(spark, index_dir, buckets=BUCKETS, preload=preload)
 
 
 QUERIES = [
@@ -106,9 +114,15 @@ QUERIES = [
     f"{VOCAB[2]} {VOCAB[7]} {VOCAB[100]}",
     "zzznotaterm",
 ]
+SEARCHERS = [pytest.param(False, id="scan"), pytest.param(True, id="preload")]
 
 
-@pytest.mark.parametrize("q", QUERIES)
+@pytest.mark.parametrize(
+    "q, searcher",
+    [pytest.param(q, False, id=q) for q in QUERIES]
+    + [pytest.param(q, True, id=f"preload-{q}") for q in QUERIES],
+    indirect=["searcher"],
+)
 def test_searcher_matches_brute_force(spark, docs, searcher, q):
     expected = [
         (r["doc_id"], r["score"]) for r in bm25_brute_force(docs, q, top_k=10).collect()
@@ -159,10 +173,73 @@ def test_join_norms_serves_without_driver_doclens(spark, docs, searcher, tmp_pat
     )
 
 
+@pytest.mark.parametrize("searcher", SEARCHERS, indirect=True)
 def test_search_many_local_matches_search(searcher):
     batch = searcher.search_many_local(QUERIES, top_k=10)
     for q, got in zip(QUERIES, batch):
         assert got == searcher.search(q, top_k=10), q
+
+
+@pytest.mark.parametrize("searcher", SEARCHERS, indirect=True)
+def test_search_many_local_results_are_independent(searcher):
+    """Repeated queries in a batch share one kernel run; mutating one
+    result list must not change the other's."""
+    q = QUERIES[1]
+    first, second = searcher.search_many_local([q, q], top_k=10)
+    assert len(first) > 1
+    first[0] = (-1, -1.0)
+    del first[1:]
+    assert second == searcher.search(q, top_k=10)
+
+
+#: doc-id spaces besides the packed one: ``_load_norms`` keeps a dict
+#: (not an array) for both, and the scan path runs WAND for the sparse one
+ID_SPACES = {
+    "negative": ("doc_id - 400", -400, 1),
+    "sparse": ("doc_id * 1000000007", 0, 1000000007),
+}
+
+
+def test_preloaded_equals_scan_bitwise(spark, docs, index_dir, tmp_path_factory):
+    """The decode-once impact store returns exactly (==, no tolerance)
+    what the scan path returns, on packed, negative and sparse ids —
+    and remapping ids monotonically only remaps the answers."""
+    scan = IndexSearcher(spark, index_dir, buckets=BUCKETS)
+    pre = IndexSearcher(spark, index_dir, buckets=BUCKETS, preload=True)
+    base = [pre.search(q, top_k=10) for q in QUERIES]
+    assert base == [scan.search(q, top_k=10) for q in QUERIES]
+    assert any(base)
+    assert pre.search_many_local(QUERIES) == scan.search_many_local(QUERIES)
+    for name, (expr, shift, stride) in ID_SPACES.items():
+        d = str(tmp_path_factory.mktemp(f"idx_{name}"))
+        build_index_resumable(
+            docs.selectExpr(f"{expr} as doc_id", "text"), d, buckets=BUCKETS
+        )
+        scan = IndexSearcher(spark, d, buckets=BUCKETS)
+        pre = IndexSearcher(spark, d, buckets=BUCKETS, preload=True)
+        assert isinstance(pre.doclen, dict), name
+        got = [pre.search(q, top_k=10) for q in QUERIES]
+        assert got == [scan.search(q, top_k=10) for q in QUERIES], name
+        assert got == [[(i * stride + shift, s) for i, s in hits] for hits in base], name
+        assert pre.search_many_local(QUERIES) == scan.search_many_local(QUERIES), name
+
+
+def test_preloaded_searcher_pins_its_snapshot(spark, docs, tmp_path_factory):
+    """A preloaded searcher reads postings, norms and stats at
+    construction: rebuilding the directory under it from another corpus
+    changes none of its answers."""
+    import shutil
+
+    d = str(tmp_path_factory.mktemp("idx_pinned"))
+    build_index_resumable(docs, d, buckets=BUCKETS)
+    reference = IndexSearcher(spark, d, buckets=BUCKETS, preload=True)
+    before = [reference.search(q, top_k=10) for q in QUERIES]
+    pinned = IndexSearcher(spark, d, buckets=BUCKETS, preload=True)  # not queried yet
+    shutil.rmtree(d)
+    build_index_resumable(docs.filter("doc_id % 3 = 0"), d, buckets=BUCKETS)
+    assert [pinned.search(q, top_k=10) for q in QUERIES] == before
+    rebuilt = IndexSearcher(spark, d, buckets=BUCKETS, preload=True)
+    assert [rebuilt.search(q, top_k=10) for q in QUERIES] != before
 
 
 def test_search_many_relational_matches_brute_force(spark, docs, searcher):

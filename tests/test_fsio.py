@@ -42,6 +42,26 @@ def test_fsio_join_preserves_scheme():
     assert fsio.join("/tmp/x/", "a", "b") == "/tmp/x/a/b"
 
 
+class IOException(Exception):
+    """Stands in for PySpark's converted ``java.io.IOException``: the
+    classifier reads the class name and the message."""
+
+
+def test_no_append_message_matched_by_prefix():
+    assert fsio._is_no_append_error(IOException("Not supported"))
+    assert fsio._is_no_append_error(
+        IOException("Append is not supported by org.apache.hadoop.fs.XFileSystem")
+    )
+
+
+def test_not_supported_mid_sentence_reraises():
+    assert not fsio._is_no_append_error(
+        IOException("lease recovery failed: operation not supported by the namenode")
+    )
+    # the message alone never decides: other classes re-raise
+    assert not fsio._is_no_append_error(RuntimeError("Not supported"))
+
+
 def test_index_build_and_serve_on_remote_style_dir(spark, tmp_path):
     """The full resumable build + search protocol against a file:// dir:
     manifest append, stats.json sidecar, resume, and query all route

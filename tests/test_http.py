@@ -1,7 +1,11 @@
 """HTTP front door: the reference's GET/POST /inference + /inference/file
 routes (server.py:54-188) over stdlib http.server."""
 
+import http.client
 import json
+import socket
+import threading
+import time
 import urllib.error
 import urllib.request
 import uuid
@@ -71,6 +75,79 @@ def test_get_validation_and_404(door):
     assert code == 404 and out["detail"] == "검색된 문서가 없습니다."
     code, _ = _get(door, "/nope")
     assert code == 404
+
+
+def test_keep_alive_serves_two_gets_on_one_connection(door):
+    conn = http.client.HTTPConnection("127.0.0.1", door.port, timeout=10)
+    try:
+        socks = []
+        for _ in range(2):
+            conn.request("GET", f"/inference?question={VOCAB[0]}&top_k=3")
+            resp = conn.getresponse()
+            assert json.loads(resp.read())["answers"]
+            assert resp.status == 200 and resp.version == 11 and not resp.will_close
+            socks.append(conn.sock)
+        assert socks[0] is socks[1]  # no reconnect between the two
+    finally:
+        conn.close()
+
+
+def test_post_without_content_length_closes_connection(door):
+    """A chunked body is never read: the server must close after its
+    reply rather than parse the body as the next request."""
+    smuggled = b"GET /nope HTTP/1.1\r\nHost: x\r\n\r\n"
+    req = (
+        b"POST /inference HTTP/1.1\r\nHost: x\r\n"
+        b"Content-Type: application/json\r\nTransfer-Encoding: chunked\r\n\r\n"
+        + b"%x\r\n" % len(smuggled) + smuggled + b"\r\n0\r\n\r\n"
+    )
+    reply = b""
+    # one write, so the whole request is read before the server closes
+    with socket.create_connection(("127.0.0.1", door.port), timeout=10) as sock:
+        sock.sendall(req)
+        while chunk := sock.recv(65536):
+            reply += chunk
+    assert reply.startswith(b"HTTP/1.1 400 ")
+    assert b"\r\nConnection: close\r\n" in reply
+    assert reply.count(b"HTTP/1.1 ") == 1
+
+
+class _OneHitSearcher:
+    def search(self, question, top_k=10, clamp=True):
+        return [(1, 1.0)]
+
+
+def test_stop_returns_while_client_holds_idle_keep_alive_connection():
+    d = HttpFrontDoor(InferenceService(_OneHitSearcher())).start()
+    conn = http.client.HTTPConnection("127.0.0.1", d.port, timeout=10)
+    try:
+        conn.request("GET", f"/inference?question={VOCAB[0]}")
+        resp = conn.getresponse()
+        resp.read()
+        assert resp.status == 200 and not resp.will_close
+        t0 = time.monotonic()
+        stopper = threading.Thread(target=d.stop, daemon=True)
+        stopper.start()
+        stopper.join(timeout=10)
+        assert not stopper.is_alive()
+        assert time.monotonic() - t0 < 5
+    finally:
+        conn.close()
+
+
+def test_idle_keep_alive_connection_times_out():
+    d = HttpFrontDoor(InferenceService(_OneHitSearcher())).start()
+    d.server.RequestHandlerClass.timeout = 0.2
+    reply = b""
+    try:
+        with socket.create_connection(("127.0.0.1", d.port), timeout=10) as sock:
+            sock.sendall(b"GET /inference?question=abc HTTP/1.1\r\nHost: x\r\n\r\n")
+            # EOF (not the client's own 10 s timeout) once the server drops it
+            while chunk := sock.recv(65536):
+                reply += chunk
+    finally:
+        d.stop()
+    assert reply.startswith(b"HTTP/1.1 200 ")
 
 
 def test_post_inference_json_body(door):

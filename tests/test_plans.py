@@ -159,6 +159,53 @@ def test_preload_budget_refuses_oversized_collect(
     assert s2._mem
 
 
+def test_preload_budget_counts_decoded_store(spark, corpus_on_disk, tmp_path_factory):
+    """The preload keeps 16 bytes per posting of decoded (doc_id, impact)
+    arrays next to the collected rows and the norms: a budget that
+    admits the compressed-row estimate but not the decoded store is
+    refused; one covering rows, store and norms is admitted."""
+    from sifter_mrc_search_engine_spark.operators.compressed_index import (
+        PreloadBudgetExceeded,
+        estimate_collect_bytes,
+    )
+    from sifter_mrc_search_engine_spark.plans.query import (
+        IndexSearcher,
+        invalidate_norms_cache,
+    )
+
+    idx = str(tmp_path_factory.mktemp("plan_idx_decoded_budget"))
+    build_index_resumable(spark.read.parquet(corpus_on_disk), idx, buckets=8)
+    postings = spark.read.parquet(f"{idx}/postings")
+    rows_est = estimate_collect_bytes(postings)
+    decoded = 16 * postings.agg(F.sum("n")).first()[0]
+    norms_est = estimate_collect_bytes(spark.read.parquet(f"{idx}/doclens"))
+    with pytest.raises(PreloadBudgetExceeded, match="decoded postings"):
+        IndexSearcher(
+            spark, idx, buckets=8, preload=True,
+            preload_budget_bytes=rows_est + decoded - 1,
+        )
+    invalidate_norms_cache(idx)
+    with pytest.raises(PreloadBudgetExceeded, match="doclens"):
+        IndexSearcher(
+            spark, idx, buckets=8, preload=True,
+            preload_budget_bytes=rows_est + decoded + norms_est - 1,
+        )
+    s = IndexSearcher(
+        spark, idx, buckets=8, preload=True,
+        preload_budget_bytes=rows_est + decoded + norms_est,
+    )
+    assert s._mem
+
+
+def test_preload_refuses_join_norms(spark, tmp_path):
+    """Impacts are computed from driver norms, which norms='join'
+    promises never to collect."""
+    from sifter_mrc_search_engine_spark.plans.query import IndexSearcher
+
+    with pytest.raises(ValueError, match="norms='preload'"):
+        IndexSearcher(spark, str(tmp_path), preload=True, norms="join")
+
+
 def test_preload_budget_guards_fielded_searcher(spark, tmp_path_factory):
     """Same guard on the fielded serving tier (the multisegment tiers
     are covered in test_streaming / test_fielded_streaming, which own
