@@ -6,7 +6,8 @@
 
 Single question -> one JSON line of answers (the reference's /inference
 response shape). ``--batch-file`` scores one question per line via the
-distributed batch path and prints one JSON line each.
+driver batch path (one pruned scan for the whole file) and prints one JSON
+line each.
 """
 
 from __future__ import annotations

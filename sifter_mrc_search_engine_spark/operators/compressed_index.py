@@ -131,15 +131,21 @@ def check_preload_budget(
     return charge_preload(estimate_collect_bytes(df), what, budget_bytes)
 
 
-def charge_preload(est: int, what: str, budget_bytes: int | None) -> int:
+#: :func:`charge_preload`'s default advice on what to run instead
+NO_PRELOAD_ADVICE = "Serve this index with preload off (bucket-pruned scans / norms='join')"
+
+
+def charge_preload(
+    est: int, what: str, budget_bytes: int | None, alternative: str = NO_PRELOAD_ADVICE
+) -> int:
     """:func:`check_preload_budget` for a size the caller already
-    knows (e.g. decoded arrays); returns ``est``."""
+    knows (e.g. decoded arrays); returns ``est``. ``alternative`` is the
+    error's advice on what to run instead."""
     if budget_bytes is not None and est > budget_bytes:
         raise PreloadBudgetExceeded(
             f"refusing to preload {what}: estimated {est:,} bytes of driver "
             f"memory exceeds the remaining {budget_bytes:,}-byte budget. "
-            f"Serve this index with preload off (bucket-pruned scans / "
-            f"norms='join'), or raise preload_budget_bytes if the driver "
+            f"{alternative}, or raise preload_budget_bytes if the driver "
             f"really has the headroom."
         )
     return est

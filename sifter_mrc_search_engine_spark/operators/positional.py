@@ -110,9 +110,13 @@ def _anchor_match(occ: DataFrame, slots: Sequence[str], distinct: bool = True) -
 
     ``distinct=False`` skips the trailing doc_id dedup for consumers
     that feed a left-semi join, where duplicates are free but the extra
-    exchange is not."""
-    slots_df = occ.sparkSession.createDataFrame(
-        list(enumerate(slots)), "slot int, term string"
+    exchange is not.
+
+    The ``(slot, term)`` table is built JVM-side (a ``posexplode`` of
+    literals): ``createDataFrame(list)`` would plan as ``Scan
+    ExistingRDD`` and add a Python-worker stage to every phrase query."""
+    slots_df = occ.sparkSession.range(1).select(
+        F.posexplode(F.array(*[F.lit(t) for t in slots])).alias("slot", "term")
     )
     anchors = occ.join(F.broadcast(slots_df), "term").select(
         "doc_id", (F.col("pos") - F.col("slot")).alias("anchor"), "slot"

@@ -15,27 +15,28 @@ cached — the Lucene-norms analogue. At true 10^12 scale the norms sidecar
 would be range-partitioned and memory-mapped per executor; the access
 pattern (random lookups by doc_id during scoring) is identical.
 
-Batch scoring (``search_many``) distributes queries across executors: each
-query's postings rows are joined to it and the WAND kernel runs inside
-``applyInPandas`` per query group.
+Batch scoring has two shapes. ``search_many`` is a driver scatter-gather:
+one pruned scan fetches the union of the batch's postings (none when
+preloaded), each term is decoded once, each distinct term set is folded
+once, and the rows come back as a JVM local relation, so the batch starts
+no Python worker. ``search_many_relational`` keeps postings and norms on
+the executors: one Catalyst plan for batches or indexes too big for the
+driver.
+
+A scan searcher re-reads the index directory when stats.json's freshness
+token changes, so it follows an in-place rebuild; a preloaded searcher
+serves the snapshot it decoded.
 """
 
 from __future__ import annotations
 
 import json
-from typing import Sequence
+from typing import NamedTuple, Sequence
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    DoubleType,
-    IntegerType,
-    LongType,
-    StructField,
-    StructType,
-)
 
 from ..constants import DEFAULT_TOP_K, MAX_TOP_K, TERM_BUCKETS
 from ..functions import fsio
@@ -43,6 +44,7 @@ from ..functions.analyzer import analyze
 from ..functions.xxhash import term_bucket
 from ..operators.compressed_index import (
     DEFAULT_PRELOAD_BUDGET_BYTES,
+    NO_PRELOAD_ADVICE,
     PreloadBudgetExceeded,
     charge_preload,
     check_preload_budget,
@@ -108,6 +110,38 @@ def _load_norms(
     return out
 
 
+#: the batch paths' output columns: (query_id int, rank int, doc_id long,
+#: score double)
+HITS_COLUMNS = (("query_id", "int"), ("rank", "int"), ("doc_id", "long"), ("score", "double"))
+
+
+def _local_frame(spark: SparkSession, rows: list, columns) -> DataFrame:
+    """Driver-known ``rows`` as a JVM local relation. With Arrow on (see
+    ``session.get_spark``) pyspark ships a non-empty pandas frame as
+    Arrow batches into a ``LocalTableScan``, so collecting or
+    broadcasting it starts no Python worker; ``createDataFrame(list)``
+    plans as ``Scan ExistingRDD``, a Python stage. pyspark sends an EMPTY
+    pandas frame down that list path, so no rows become an empty range."""
+    if not rows:
+        return spark.range(0).select(
+            *[F.lit(None).cast(t).alias(c) for c, t in columns]
+        )
+    pdf = pd.DataFrame(rows, columns=[c for c, _ in columns])
+    return spark.createDataFrame(pdf, ", ".join(f"{c} {t}" for c, t in columns))
+
+
+class _Snapshot(NamedTuple):
+    """Everything a request reads from the index directory, resolved
+    together under one stats.json freshness token."""
+
+    token: tuple
+    postings: DataFrame
+    doclens: DataFrame
+    n_docs: int
+    avgdl: float
+    doclen: object  # driver norms; None until first needed
+
+
 class IndexSearcher:
     """Serve BM25 top-k queries from a built index directory."""
 
@@ -135,7 +169,13 @@ class IndexSearcher:
         (one cheap aggregate), 16 bytes per decoded posting, then the
         norms; above it the preload is refused with
         :class:`PreloadBudgetExceeded` — a clear error naming the knob
-        beats an OOMed driver. ``None`` disables the check.
+        beats an OOMed driver. ``None`` disables the check. Without
+        preload the same budget bounds the norms and each
+        :meth:`search_many` batch's decoded postings.
+
+        Without preload the searcher follows the directory: each request
+        checks stats.json's freshness token and re-reads the index when a
+        rebuild or compaction has rewritten it.
 
         ``norms``: 'preload' loads the doclens sidecar into driver memory
         (at construction with ``preload=True``, else on first use;
@@ -153,55 +193,99 @@ class IndexSearcher:
         self.index_dir = index_dir
         self.buckets = buckets
         self.norms_mode = norms
-        self.postings = spark.read.parquet(f"{index_dir}/postings")
-        # one doclens relation per searcher: the batch paths used to
-        # re-list the sidecar parquet on every call
-        self.doclens = spark.read.parquet(f"{index_dir}/doclens")
-        stats = json.loads(fsio.read_text(fsio.join(index_dir, "stats.json"), spark))
-        self.n_docs, self.avgdl = int(stats["n_docs"]), float(stats["avgdl"])
-        self._doclen = None  # lazy without preload: join-mode never touches it
+        self._stats_path = fsio.join(index_dir, "stats.json")
+        self._snap = self._resolve(fsio.freshness_token(self._stats_path, spark))
         self._preload_budget = preload_budget_bytes
         self._mem: dict[str, tuple[np.ndarray, np.ndarray]] | None = None
         if preload:
             self._mem = self._preload_impacts(preload_budget_bytes)
 
+    def _resolve(self, token: tuple) -> _Snapshot:
+        stats = json.loads(fsio.read_text(self._stats_path, self.spark))
+        return _Snapshot(
+            token,
+            self.spark.read.parquet(f"{self.index_dir}/postings"),
+            self.spark.read.parquet(f"{self.index_dir}/doclens"),
+            int(stats["n_docs"]),
+            float(stats["avgdl"]),
+            None,
+        )
+
+    def _snapshot(self) -> _Snapshot:
+        """The index state for one request; read it once per request. A
+        changed freshness token (a rebuild in place) re-resolves it; a
+        preloaded searcher keeps the snapshot it decoded."""
+        snap = self._snap
+        if self._mem is None:
+            token = fsio.freshness_token(self._stats_path, self.spark)
+            if token != snap.token:
+                snap = self._snap = self._resolve(token)
+        return snap
+
+    def _norms(self, snap: _Snapshot, budget: int | None):
+        """``snap``'s driver norms, loaded on first use; the cache-miss
+        collect is budget-checked like every other driver preload — one
+        row per doc is exactly the collect that kills the driver at
+        10^12 docs."""
+        if snap.doclen is None:
+            dl, _, _ = _load_norms(self.spark, self.index_dir, budget)
+            snap = snap._replace(doclen=dl)
+            if self._snap.token == snap.token:
+                self._snap = snap
+        return snap.doclen
+
+    def _impacts(
+        self,
+        snap: _Snapshot,
+        rows,
+        budget: int | None,
+        what: str,
+        alternative: str = NO_PRELOAD_ADVICE,
+    ) -> dict:
+        """term -> ``(doc_ids, impacts)`` of the postings ``rows``, each
+        term decoded once. The decoded arrays (16 bytes per posting) are
+        charged against ``budget`` before any is built, then a norms
+        collect against what is left: one budget, because separate
+        full-budget checks would admit their sum. ``alternative`` is the
+        refusal's advice (:func:`charge_preload`)."""
+        by_term: dict[str, list] = {}
+        for r in rows:
+            by_term.setdefault(r["term"], []).append(r)
+        decoded = 16 * sum(int(r["n"]) for segs in by_term.values() for r in segs)
+        spent = charge_preload(decoded, f"decoded {what}", budget, alternative)
+        doclen = self._norms(snap, None if budget is None else budget - spent)
+        return {
+            t: term_impacts(segs, doclen, snap.n_docs, snap.avgdl)
+            for t, segs in by_term.items()
+        }
+
     def _preload_impacts(self, budget: int | None) -> dict:
         """term -> frozen ``(doc_ids, impacts)``; the compressed rows,
-        the decoded store and the norms share ONE budget (separate
-        full-budget checks would admit their sum)."""
+        the decoded store and the norms share ONE budget."""
+        snap = self._snap
         what = f"postings of {self.index_dir}"
-        spent = check_preload_budget(self.postings, what, budget)
-        by_term: dict[str, list] = {}
-        for r in self.postings.collect():
-            by_term.setdefault(r["term"], []).append(r)
-        if budget is not None:
-            decoded = 16 * sum(int(r["n"]) for segs in by_term.values() for r in segs)
-            spent += charge_preload(decoded, f"decoded {what}", budget - spent)
-        self._doclen, _, _ = _load_norms(
-            self.spark, self.index_dir, None if budget is None else budget - spent
+        spent = check_preload_budget(snap.postings, what, budget)
+        store = self._impacts(
+            snap, snap.postings.collect(), None if budget is None else budget - spent, what
         )
-        store = {}
-        for term, segs in by_term.items():
-            ids, imp = term_impacts(segs, self._doclen, self.n_docs, self.avgdl)
+        for ids, imp in store.values():
             ids.flags.writeable = imp.flags.writeable = False
-            store[term] = (ids, imp)
         return store
+
+    @property
+    def postings(self) -> DataFrame:
+        """The current snapshot's postings relation."""
+        return self._snapshot().postings
 
     @property
     def doclen(self):
         """Driver-resident norms: loaded at construction with
-        ``preload=True``, lazily otherwise. The lazy cache-miss collect
-        is budget-checked like every other driver preload — one row per
-        doc is exactly the collect that kills the driver at 10^12
-        docs."""
-        if self._doclen is None:
-            self._doclen, _, _ = _load_norms(
-                self.spark, self.index_dir, self._preload_budget
-            )
-        return self._doclen
+        ``preload=True``, lazily otherwise."""
+        return self._norms(self._snapshot(), self._preload_budget)
 
-    def candidate_rows(self, terms: Sequence[str]) -> list:
-        """Postings fetch for a term set: the bucket- and term-pruned scan.
+    def candidate_rows(self, terms: Sequence[str], snap: _Snapshot | None = None) -> list:
+        """Postings fetch for a term set: the bucket- and term-pruned scan
+        of ``snap`` (default: the current snapshot).
 
         Bucket routing is computed DRIVER-SIDE (functions/xxhash.py is
         bit-identical to the JVM xxhash64) so the pruned scan is the only
@@ -212,14 +296,9 @@ class IndexSearcher:
             return []
         bks = sorted({term_bucket(t, self.buckets) for t in tset})
         return (
-            self.postings.filter(F.col("bucket").isin(bks))
+            (snap or self._snapshot()).postings.filter(F.col("bucket").isin(bks))
             .filter(F.col("term").isin(tset))
             .collect()
-        )
-
-    def _preloaded_topk(self, terms: Sequence[str], top_k: int) -> list[tuple[int, float]]:
-        return accumulate_topk(
-            [self._mem[t] for t in sorted(set(terms)) if t in self._mem], top_k
         )
 
     def search(
@@ -238,58 +317,65 @@ class IndexSearcher:
             return [(int(r["doc_id"]), float(r["score"])) for r in rows]
         terms = analyze(question)
         if self._mem is not None:
-            return self._preloaded_topk(terms, top_k)
-        rows = self.candidate_rows(terms)
-        return wand_topk(rows, terms, self.doclen, self.n_docs, self.avgdl, top_k=top_k)
+            return accumulate_topk(
+                [self._mem[t] for t in sorted(set(terms)) if t in self._mem], top_k
+            )
+        snap = self._snapshot()
+        rows = self.candidate_rows(terms, snap)
+        doclen = self._norms(snap, self._preload_budget)
+        return wand_topk(rows, terms, doclen, snap.n_docs, snap.avgdl, top_k=top_k)
 
     def search_many_local(
         self, questions: Sequence[str], top_k: int = DEFAULT_TOP_K
     ) -> list[list[tuple[int, float]]]:
-        """Scatter-gather batch scoring on the driver: ONE bucket-pruned
-        scan fetches the union of all queries' postings (none when
-        preloaded), then the vectorized kernels run per query locally.
-        The right shape when the union of candidate lists fits one node
-        (a serving head); the distributed ``search_many`` covers huge
-        batches/indexes."""
+        """Scatter-gather batch scoring on the driver, one hit list per
+        question (each equal to :meth:`search`'s): the batch's terms come
+        from the preloaded store or ONE bucket-pruned scan decoded once
+        per term, and each distinct term set is folded once with
+        :func:`accumulate_topk` in ascending-term order. The right shape
+        while the batch's postings fit the driver;
+        :meth:`search_many_relational` covers the rest."""
         top_k = max(1, min(int(top_k), MAX_TOP_K))
-        q_terms = [analyze(q) for q in questions]
+        term_sets = [tuple(sorted(set(analyze(q)))) for q in questions]
         if self._mem is not None:
-            def score(terms):
-                return self._preloaded_topk(terms, top_k)
+            store = self._mem
         else:
-            by_term: dict[str, list] = {}
-            for r in self.candidate_rows(sorted({t for ts in q_terms for t in ts})):
-                by_term.setdefault(r["term"], []).append(r)
-
-            def score(terms):
-                cand = [r for t in set(terms) for r in by_term.get(t, [])]
-                return wand_topk(
-                    cand, terms, self.doclen, self.n_docs, self.avgdl, top_k=top_k
-                )
+            snap = self._snapshot()
+            terms = sorted({t for ts in term_sets for t in ts})
+            store = self._impacts(
+                snap,
+                self.candidate_rows(terms, snap),
+                self._preload_budget,
+                f"postings of a {len(terms)}-term batch of {self.index_dir}",
+                alternative="Score the batch with search_many_relational, "
+                "which keeps postings and norms on the executors",
+            )
         out = []
-        # memoize per exact term LIST: repeated queries in a batch run
-        # the kernel once (identical inputs -> identical output)
         memo: dict[tuple, list] = {}
-        for terms in q_terms:
-            key = tuple(terms)
-            if key not in memo:
-                memo[key] = score(terms)
+        for ts in term_sets:
+            if ts not in memo:
+                memo[ts] = accumulate_topk([store[t] for t in ts if t in store], top_k)
             # fresh list of immutable tuples per query: a caller mutating
             # its result cannot change a repeated query's
-            out.append(list(memo[key]))
+            out.append(list(memo[ts]))
         return out
 
-    def _decoded_candidates(self, all_terms: Sequence[str]) -> DataFrame:
-        """One bucket+term-pruned scan, decoded once per (term, segment)
-        to ``(term, df, doc_id, tf)`` rows — the shared front end of both
-        distributed batch-scoring plans."""
-        from ..operators.compressed_index import decode_index_df
-
-        bks = sorted({term_bucket(t, self.buckets) for t in all_terms})
-        cand = self.postings.filter(F.col("bucket").isin(bks)).filter(
-            F.col("term").isin(list(all_terms))
-        )
-        return decode_index_df(cand, keep_cols=("term", "df"))
+    def search_many(self, questions: Sequence[str], top_k: int = DEFAULT_TOP_K) -> DataFrame:
+        """:meth:`search_many_local` as a DataFrame of (query_id int,
+        rank int, doc_id long, score double), ``query_id`` being the
+        question's index. The rows are a JVM local relation (see
+        :func:`_local_frame`): collecting them runs no Spark stage and no
+        Python worker. ``norms='join'`` searchers hold no driver norms,
+        so they delegate to :meth:`search_many_relational`."""
+        if self.norms_mode == "join":
+            return self.search_many_relational(questions, top_k=top_k)
+        hits = self.search_many_local(questions, top_k)
+        rows = [
+            (qid, rank, doc, score)
+            for qid, h in enumerate(hits)
+            for rank, (doc, score) in enumerate(h, 1)
+        ]
+        return _local_frame(self.spark, rows, HITS_COLUMNS)
 
     @staticmethod
     def _distinct_term_sets(questions: Sequence[str]):
@@ -312,87 +398,6 @@ class IndexSearcher:
         pairs = [(sid, t) for ts, sid in sets.items() for t in ts]
         return pairs, mapping
 
-    def search_many(self, questions: Sequence[str], top_k: int = DEFAULT_TOP_K) -> DataFrame:
-        """Distributed batch scoring: exact numpy kernel per query group.
-
-        Returns DataFrame (query_id int, rank int, doc_id long, score
-        double). Postings for ALL queries' terms are fetched with one
-        pruned scan, decoded once per (term, segment), joined to query
-        ids AND to the doclens table inside the plan — doc lengths ride
-        the rows, so nothing is broadcast to executors (the old full-
-        norms broadcast was a wall at 10^12 docs). The per-group kernel
-        accumulates contributions in ascending-term order (float64),
-        bit-compatible with the brute-force oracle. Scoring runs once
-        per DISTINCT term set, then fans out to query ids through a
-        broadcast join (see :meth:`_distinct_term_sets`).
-        """
-        top_k = max(1, min(int(top_k), MAX_TOP_K))
-        pairs, mapping = self._distinct_term_sets(questions)
-        if not pairs:
-            return self.spark.createDataFrame(
-                [], "query_id int, rank int, doc_id long, score double"
-            )
-        qdf = self.spark.createDataFrame(pairs, "set_id int, term string")
-        mdf = self.spark.createDataFrame(mapping, "query_id int, set_id int")
-        all_terms = sorted({t for _, t in pairs})
-        decoded = self._decoded_candidates(all_terms)
-        # doclens join BEFORE the query fan-out: the broadcast qdf join
-        # multiplies rows by the term-sharing factor, so joining dl first
-        # shuffles each (term, doc) row once instead of once per query
-        joined = decoded.join(self.doclens, "doc_id").join(F.broadcast(qdf), "term")
-
-        n_docs, avgdl, k = self.n_docs, self.avgdl, top_k
-        from ..constants import BM25_B, BM25_K1
-
-        set_schema = StructType(
-            [
-                StructField("set_id", IntegerType(), False),
-                StructField("rank", IntegerType(), False),
-                StructField("doc_id", LongType(), False),
-                StructField("score", DoubleType(), False),
-            ]
-        )
-
-        def score_group(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            sid = int(key[0])
-            # ascending-term processing order -> per-doc float64 sums are
-            # accumulated in term order, matching the oracle's sorted fold
-            pdf = pdf.sort_values(["term", "doc_id"], kind="mergesort")
-            df_arr = pdf["df"].to_numpy(dtype=np.float64)
-            tf = pdf["tf"].to_numpy(dtype=np.float64)
-            dls = pdf["doc_len"].to_numpy(dtype=np.float64)
-            idf = np.log(1.0 + (n_docs - df_arr + 0.5) / (df_arr + 0.5))
-            contrib = (
-                idf * tf * (BM25_K1 + 1.0)
-                / (tf + BM25_K1 * ((1.0 - BM25_B) + (BM25_B * dls) / avgdl))
-            )
-            ids = pdf["doc_id"].to_numpy(dtype=np.int64)
-            uniq, inv = np.unique(ids, return_inverse=True)
-            acc = np.zeros(uniq.size, dtype=np.float64)
-            np.add.at(acc, inv, contrib)
-            kk = min(k, uniq.size)
-            if kk == 0:
-                return pd.DataFrame(
-                    {"set_id": [], "rank": [], "doc_id": [], "score": []}
-                )
-            kth = np.partition(acc, uniq.size - kk)[uniq.size - kk]
-            mask = acc >= kth  # keep ties for the doc_id tie-break
-            cids, cscores = uniq[mask], acc[mask]
-            order = np.lexsort((cids, -cscores))[:kk]
-            return pd.DataFrame(
-                {
-                    "set_id": sid,
-                    "rank": range(1, kk + 1),
-                    "doc_id": cids[order],
-                    "score": cscores[order],
-                }
-            )
-
-        per_set = joined.groupBy("set_id").applyInPandas(score_group, set_schema)
-        return per_set.join(F.broadcast(mdf), "set_id").select(
-            "query_id", "rank", "doc_id", "score"
-        )
-
     def search_many_relational(
         self, questions: Sequence[str], top_k: int = DEFAULT_TOP_K, clamp: bool = True
     ) -> DataFrame:
@@ -411,33 +416,38 @@ class IndexSearcher:
         """
         from pyspark.sql import Window
 
-        from ..operators.bm25 import bm25_contrib_expr
+        from ..operators.bm25 import bm25_contrib_expr, slot_fold
+        from ..operators.compressed_index import decode_index_df
 
         top_k = max(1, min(int(top_k), MAX_TOP_K) if clamp else int(top_k))
         pairs, mapping = self._distinct_term_sets(questions)
         if not pairs:
-            return self.spark.createDataFrame(
-                [], "query_id int, rank int, doc_id long, score double"
-            )
+            return _local_frame(self.spark, [], HITS_COLUMNS)
         # slot = the term's index in its set's ASCENDING order: the score
         # below adds slot contributions in slot order, reproducing the
         # oracle's sorted-term float64 fold with a plain codegen
         # HashAggregate instead of collect_list+array_sort+aggregate
         # (ObjectHashAggregate) — a missing slot adds +0.0, which leaves
         # an IEEE sum of nonnegative contributions bit-unchanged
-        set_sizes: dict[int, int] = {}
-        for sid, _t in pairs:
-            set_sizes[sid] = set_sizes.get(sid, 0) + 1
         slot_pairs = []
         seen: dict[int, int] = {}
         for sid, t in pairs:  # pairs are emitted per set in ascending-term order
             slot_pairs.append((sid, seen.get(sid, 0), t))
             seen[sid] = seen.get(sid, 0) + 1
-        max_slots = max(set_sizes.values())
-        qdf = self.spark.createDataFrame(slot_pairs, "set_id int, slot int, term string")
-        mdf = self.spark.createDataFrame(mapping, "query_id int, set_id int")
+        max_slots = max(seen.values())
+        qdf = _local_frame(
+            self.spark, slot_pairs, (("set_id", "int"), ("slot", "int"), ("term", "string"))
+        )
+        mdf = _local_frame(self.spark, mapping, (("query_id", "int"), ("set_id", "int")))
         all_terms = sorted({t for _, _, t in slot_pairs})
-        decoded = self._decoded_candidates(all_terms)
+        snap = self._snapshot()
+        bks = sorted({term_bucket(t, self.buckets) for t in all_terms})
+        decoded = decode_index_df(
+            snap.postings.filter(F.col("bucket").isin(bks)).filter(
+                F.col("term").isin(all_terms)
+            ),
+            keep_cols=("term", "df"),
+        )
 
         # term-major order: the BM25 contribution is query-INDEPENDENT, so
         # join doclens and evaluate it once per (term, doc) row, THEN fan
@@ -446,14 +456,10 @@ class IndexSearcher:
         # set_id -> query_id broadcast join at the end restores the
         # per-query rows (identical output, term-sharing batches pay the
         # heavy stages once)
-        contrib = bm25_contrib_expr(
-            "tf", "df", "doc_len", self.n_docs, self.avgdl
-        )
-        per_term_doc = decoded.join(self.doclens, "doc_id").select(
+        contrib = bm25_contrib_expr("tf", "df", "doc_len", snap.n_docs, snap.avgdl)
+        per_term_doc = decoded.join(snap.doclens, "doc_id").select(
             "term", "doc_id", contrib.alias("contrib")
         )
-        from ..operators.bm25 import slot_fold
-
         fanned = per_term_doc.join(F.broadcast(qdf), "term").select(
             "set_id", "doc_id", F.col("slot").alias("_slot"), "contrib"
         )

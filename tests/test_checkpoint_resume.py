@@ -200,7 +200,19 @@ ID_SPACES = {
 }
 
 
-def test_preloaded_equals_scan_bitwise(spark, docs, index_dir, tmp_path_factory):
+@pytest.fixture(scope="module")
+def id_space_dirs(docs, tmp_path_factory):
+    """name -> an index of the corpus under each :data:`ID_SPACES` id map."""
+    out = {}
+    for name, (expr, _, _) in ID_SPACES.items():
+        d = out[name] = str(tmp_path_factory.mktemp(f"idx_{name}"))
+        build_index_resumable(
+            docs.selectExpr(f"{expr} as doc_id", "text"), d, buckets=BUCKETS
+        )
+    return out
+
+
+def test_preloaded_equals_scan_bitwise(spark, index_dir, id_space_dirs):
     """The decode-once impact store returns exactly (==, no tolerance)
     what the scan path returns, on packed, negative and sparse ids —
     and remapping ids monotonically only remaps the answers."""
@@ -211,10 +223,7 @@ def test_preloaded_equals_scan_bitwise(spark, docs, index_dir, tmp_path_factory)
     assert any(base)
     assert pre.search_many_local(QUERIES) == scan.search_many_local(QUERIES)
     for name, (expr, shift, stride) in ID_SPACES.items():
-        d = str(tmp_path_factory.mktemp(f"idx_{name}"))
-        build_index_resumable(
-            docs.selectExpr(f"{expr} as doc_id", "text"), d, buckets=BUCKETS
-        )
+        d = id_space_dirs[name]
         scan = IndexSearcher(spark, d, buckets=BUCKETS)
         pre = IndexSearcher(spark, d, buckets=BUCKETS, preload=True)
         assert isinstance(pre.doclen, dict), name
@@ -256,3 +265,124 @@ def test_search_many_relational_matches_brute_force(spark, docs, searcher):
         ]
         got = [(d, s) for _, d, s in sorted(by_q.get(i, []))]
         assert got == expected, q
+
+
+def _by_query(df, n: int) -> list[list[tuple[int, float]]]:
+    """A batch frame's rows as one ``search``-shaped hit list per query."""
+    out = [[] for _ in range(n)]
+    for r in sorted(df.collect(), key=lambda r: (r["query_id"], r["rank"])):
+        out[r["query_id"]].append((r["doc_id"], r["score"]))
+    return out
+
+
+def _executed_plan(df) -> str:
+    df.collect()
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+#: plan nodes that run a Python worker: pandas UDFs, grouped-map pandas,
+#: row UDFs and ``createDataFrame(list)`` tables
+PYTHON_NODES = ("ArrowEvalPython", "FlatMapGroupsInPandas", "BatchEvalPython", "ExistingRDD")
+
+HITS_TYPES = [("query_id", "int"), ("rank", "int"), ("doc_id", "bigint"), ("score", "double")]
+
+
+@pytest.mark.parametrize("searcher", SEARCHERS, indirect=True)
+def test_search_many_runs_no_python_worker(searcher):
+    plan = _executed_plan(searcher.search_many(QUERIES, top_k=10))
+    assert not [n for n in PYTHON_NODES if n in plan], plan
+    assert "LocalTableScan" in plan, plan
+
+
+def test_search_many_relational_plans_no_existing_rdd(searcher):
+    """The relational plan's driver-known tables (term slots and the
+    set -> query map) are local relations, not Python-fed RDDs; only the
+    decode UDF runs Python."""
+    plan = _executed_plan(searcher.search_many_relational(QUERIES, top_k=10))
+    assert "ExistingRDD" not in plan, plan
+
+
+def test_search_many_preloaded_equals_scan_equals_search(spark, index_dir, id_space_dirs):
+    """Exact (==) agreement of the preloaded batch, the scan batch and
+    per-question ``search``, on packed, negative and sparse ids."""
+    for name, d in [("packed", index_dir), *id_space_dirs.items()]:
+        scan = IndexSearcher(spark, d, buckets=BUCKETS)
+        pre = IndexSearcher(spark, d, buckets=BUCKETS, preload=True)
+        singles = [scan.search(q, top_k=10) for q in QUERIES]
+        assert any(singles), name
+        assert _by_query(scan.search_many(QUERIES, top_k=10), len(QUERIES)) == singles, name
+        assert _by_query(pre.search_many(QUERIES, top_k=10), len(QUERIES)) == singles, name
+
+
+@pytest.mark.parametrize("searcher", SEARCHERS, indirect=True)
+@pytest.mark.parametrize("batch", [[], ["zzznotaterm", "!!!"]], ids=["empty", "unknown"])
+def test_search_many_without_hits_is_typed_and_empty(searcher, batch):
+    for method in ("search_many", "search_many_relational"):
+        out = getattr(searcher, method)(batch, top_k=10)
+        assert [(f.name, f.dataType.simpleString()) for f in out.schema] == HITS_TYPES
+        assert "ExistingRDD" not in _executed_plan(out), method
+        assert out.collect() == [], method
+
+
+def test_join_norms_search_many_is_relational(spark, docs, tmp_path_factory):
+    """A norms='join' searcher's batch is the relational plan, and it
+    collects no norms to the driver."""
+    from sifter_mrc_search_engine_spark.plans import query as query_mod
+
+    d = str(tmp_path_factory.mktemp("idx_join_batch"))
+    build_index_resumable(docs, d, buckets=BUCKETS)
+    s = IndexSearcher(spark, d, buckets=BUCKETS, norms="join")
+    got = _by_query(s.search_many(QUERIES, top_k=10), len(QUERIES))
+    assert any(got)
+    assert got == _by_query(s.search_many_relational(QUERIES, top_k=10), len(QUERIES))
+    assert not any(k[0] == d for k in query_mod._DOCLEN_CACHE), (
+        "join mode collected doclens to the driver"
+    )
+
+
+def test_search_many_budget_covers_decoded_batch(spark, index_dir, searcher):
+    """The batch's decoded arrays (16 bytes per posting) are charged
+    against ``preload_budget_bytes``; a refusal names the distributed
+    alternative, which the same searcher still serves."""
+    from sifter_mrc_search_engine_spark.functions.analyzer import analyze
+    from sifter_mrc_search_engine_spark.operators.compressed_index import (
+        PreloadBudgetExceeded,
+    )
+
+    terms = sorted({t for q in QUERIES for t in analyze(q)})
+    decoded = 16 * sum(int(r["n"]) for r in searcher.candidate_rows(terms))
+    searcher.doclen  # norms cached: the budget below is the batch's alone
+    tight = IndexSearcher(spark, index_dir, buckets=BUCKETS, preload_budget_bytes=decoded - 1)
+    with pytest.raises(PreloadBudgetExceeded, match="search_many_relational"):
+        tight.search_many(QUERIES, top_k=10)
+    with pytest.raises(PreloadBudgetExceeded, match="preload_budget_bytes"):
+        tight.search_many_local(QUERIES, top_k=10)
+    exact = IndexSearcher(spark, index_dir, buckets=BUCKETS, preload_budget_bytes=decoded)
+    assert exact.search_many_local(QUERIES, top_k=10) == searcher.search_many_local(QUERIES)
+    assert _by_query(tight.search_many_relational(QUERIES, top_k=10), len(QUERIES)) == [
+        [(d, pytest.approx(s, rel=1e-12, abs=1e-12)) for d, s in hits]
+        for hits in searcher.search_many_local(QUERIES)
+    ]
+
+
+def test_scan_searcher_follows_in_place_rebuild(spark, docs, tmp_path_factory):
+    """Without preload the searcher re-reads the directory when its
+    stats.json changes: after ``rmtree`` and a rebuild from another
+    corpus it answers exactly as a fresh searcher does."""
+    import shutil
+
+    d = str(tmp_path_factory.mktemp("idx_rebuilt"))
+    build_index_resumable(docs, d, buckets=BUCKETS)
+    s = IndexSearcher(spark, d, buckets=BUCKETS)
+    before = [s.search(q, top_k=10) for q in QUERIES]
+    assert _by_query(s.search_many(QUERIES, top_k=10), len(QUERIES)) == before
+    shutil.rmtree(d)
+    build_index_resumable(docs.filter("doc_id % 3 = 0"), d, buckets=BUCKETS)
+    fresh = IndexSearcher(spark, d, buckets=BUCKETS)
+    expected = [fresh.search(q, top_k=10) for q in QUERIES]
+    assert expected != before
+    assert [s.search(q, top_k=10) for q in QUERIES] == expected
+    assert _by_query(s.search_many(QUERIES, top_k=10), len(QUERIES)) == _by_query(
+        fresh.search_many(QUERIES, top_k=10), len(QUERIES)
+    )
+    assert _by_query(s.search_many(QUERIES, top_k=10), len(QUERIES)) == expected

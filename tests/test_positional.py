@@ -304,6 +304,22 @@ def test_phrase_topk_indexed_parity(spark, docs, tmp_path):
     assert empty.columns == ["doc_id", "score"] and empty.count() == 0
 
 
+def test_phrase_plans_have_no_python_fed_tables(spark, docs, tmp_path):
+    """The phrase slot table is built JVM-side: neither the indexed nor
+    the corpus phrase plan contains a ``createDataFrame(list)`` scan
+    (``ExistingRDD``), which would run a Python worker per query."""
+    path = str(tmp_path / "posidx")
+    P.write_positional_index(docs, path)
+    local_docs = spark.createDataFrame(docs.toPandas(), "doc_id long, text string")
+    for q in (
+        P.phrase_topk_indexed(spark, path, "beta alpha beta"),
+        P.phrase_topk(local_docs, "beta alpha beta"),
+    ):
+        assert _ids(q) == {2, 5}
+        plan = q._jdf.queryExecution().executedPlan().toString()
+        assert "ExistingRDD" not in plan, plan
+
+
 def test_near_topk_indexed_parity(spark, docs, tmp_path):
     path = str(tmp_path / "posidx")
     P.write_positional_index(docs, path)
