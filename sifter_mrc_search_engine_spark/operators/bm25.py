@@ -20,11 +20,22 @@ array fold rather than a shuffle-order-dependent SUM.
 Scale posture: the query side is a handful of terms — always broadcast; the
 per-term contribution join is tf ⋈ df ⋈ doclen; top-k plans as
 TakeOrderedAndProject (no global sort materialization).
+
+The formula lives here twice and nowhere else: as Catalyst Columns
+(:func:`idf_expr`, :func:`bm25_contrib_expr`) for the relational plans,
+and as their driver twin (:func:`idf`, :func:`impacts`) for the WAND and
+dense kernels, the index encoders and the streaming bounds. The twin is
+``==`` to the JVM, not merely close: Spark's ``Log`` evaluates
+``StrictMath.log`` (fdlibm ``__ieee754_log``), whose last bit differs
+from libm's and numpy's ``log`` on about 23% of idf arguments, so
+:func:`idf` runs a pure-Python port of fdlibm instead; :func:`impacts`
+keeps the operation order Catalyst evaluates ``bm25_contrib_expr`` in.
 """
 
 from __future__ import annotations
 
 import functools
+import struct
 from typing import Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -32,6 +43,66 @@ from pyspark.sql import functions as F
 
 from ..constants import BM25_B, BM25_K1, DEFAULT_TOP_K
 from ..functions.analyzer import analyze
+
+
+_LN2_HI = 6.93147180369123816490e-01
+_LN2_LO = 1.90821492927058770002e-10
+_LG1 = 6.666666666666735130e-01
+_LG2 = 3.999999999940941908e-01
+_LG3 = 2.857142874366239149e-01
+_LG4 = 2.222219843214978396e-01
+_LG5 = 1.818357216161805012e-01
+_LG6 = 1.531383769920937332e-01
+_LG7 = 1.479819860511658591e-01
+
+
+def _strict_log(x: float) -> float:
+    """fdlibm ``e_log.c`` ``__ieee754_log`` — what ``StrictMath.log``
+    and so Spark's ``log`` compute — for positive, normal, finite ``x``
+    (every idf argument; the zero, negative, subnormal and inf branches
+    are left out)."""
+    bits = struct.unpack("<q", struct.pack("<d", x))[0]
+    hx, lx = bits >> 32, bits & 0xFFFFFFFF
+    k = (hx >> 20) - 1023
+    hx &= 0x000FFFFF
+    i = (hx + 0x95F64) & 0x100000
+    # normalize x or x/2 into [sqrt(2)/2, sqrt(2))
+    x = struct.unpack("<d", struct.pack("<q", ((hx | (i ^ 0x3FF00000)) << 32) | lx))[0]
+    k += i >> 20
+    f = x - 1.0
+    dk = float(k)
+    if (0x000FFFFF & (2 + hx)) < 3:  # |f| < 2**-20
+        if f == 0.0:
+            return 0.0 if k == 0 else dk * _LN2_HI + dk * _LN2_LO
+        r = f * f * (0.5 - 0.33333333333333333 * f)
+        return f - r if k == 0 else dk * _LN2_HI - ((r - dk * _LN2_LO) - f)
+    s = f / (2.0 + f)
+    z = s * s
+    w = z * z
+    t1 = w * (_LG2 + w * (_LG4 + w * _LG6))
+    t2 = z * (_LG1 + w * (_LG3 + w * (_LG5 + w * _LG7)))
+    r = t2 + t1
+    if ((hx - 0x6147A) | (0x6B851 - hx)) > 0:
+        hfsq = 0.5 * f * f
+        if k == 0:
+            return f - (hfsq - s * (hfsq + r))
+        return dk * _LN2_HI - ((hfsq - (s * (hfsq + r) + dk * _LN2_LO)) - f)
+    if k == 0:
+        return f - s * (f - r)
+    return dk * _LN2_HI - ((s * (f - r) - dk * _LN2_LO) - f)
+
+
+def idf(df: int, n_docs: int) -> float:
+    """Driver twin of :func:`idf_expr`, ``==`` to Spark's value."""
+    return _strict_log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
+
+
+def impacts(idf, x, dl, avgdl, k1=BM25_K1, b=BM25_B):
+    """Driver twin of :func:`bm25_contrib_expr` over scalars or numpy
+    arrays: ``x`` is tf (or BM25F's weighted tf), ``dl`` the (weighted)
+    doc length. The operation order is Catalyst's, so results are
+    ``==`` to the relational plans."""
+    return idf * x * (k1 + 1.0) / (x + k1 * ((1.0 - b) + (b * dl) / avgdl))
 
 
 def idf_expr(df_col, n_docs_col):
@@ -51,8 +122,9 @@ def bm25_contrib_expr(x, df_col, dlen, n_docs, avgdl, k1=BM25_K1, b=BM25_B):
     ``avgdl`` accept python scalars (index-sidecar serving) or Columns
     (in-plan stats cross-join). Shared by every relational scoring plan
     (plans/query.py, streaming/incremental.py, operators/fielded_index.py,
-    operators/positional.py) so the bit-parity-critical float64
-    expression exists exactly once."""
+    operators/positional.py, operators/bm25f.py) so the bit-parity-critical
+    float64 expression exists exactly once; :func:`impacts` is its driver
+    twin."""
     x = F.col(x) if isinstance(x, str) else x
     dlen = F.col(dlen) if isinstance(dlen, str) else dlen
     n_docs = n_docs if isinstance(n_docs, Column) else F.lit(n_docs)

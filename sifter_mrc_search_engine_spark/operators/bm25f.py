@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 
 from ..constants import BM25_B, BM25_K1, DEFAULT_TOP_K
 from ..functions.analyzer import analyze, tokenize_expr
-from .bm25 import idf_expr
+from .bm25 import bm25_contrib_expr
 
 
 def _toks(field: str):
@@ -101,10 +101,9 @@ def bm25f_brute_force(
         "df", F.count(F.lit(1)).over(Window.partitionBy("term"))
     )
     joined = wtf.join(wdl, "doc_id").crossJoin(F.broadcast(stats))
-    norm = F.col("wtf") + F.lit(k1) * (
-        F.lit(1.0) - F.lit(b) + F.lit(b) * F.col("wdl") / F.col("avg_wdl")
+    contrib = bm25_contrib_expr(
+        "wtf", "df", "wdl", F.col("n_docs"), F.col("avg_wdl"), k1, b
     )
-    contrib = idf_expr("df", "n_docs") * F.col("wtf") * F.lit(k1 + 1.0) / norm
     scored = (
         joined.select("doc_id", "term", contrib.alias("contrib"))
         .groupBy("doc_id")

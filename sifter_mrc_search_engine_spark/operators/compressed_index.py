@@ -45,6 +45,7 @@ from pyspark.sql.types import (
 )
 
 from ..constants import BLOCK_SIZE, BM25_B, BM25_K1, SALT_FANOUT, SALT_THRESHOLD, TERM_BUCKETS
+from . import bm25
 from .index_build import term_bucket_expr
 from .postings_codec import encode_postings
 from ..functions.analyzer import tokenize_expr
@@ -384,10 +385,8 @@ def encode_tf(
                 # segment-local df <= true df -> idf here >= true idf, so the
                 # stored impact bounds remain valid upper bounds for WAND;
                 # the exact df for SCORING is the window sum applied below
-                df_total = int(dfl)
-                idf = np.log(1.0 + (n_docs - df_total + 0.5) / (df_total + 0.5))
-                tf_f = tfs_np.astype(np.float64)
-                impacts = idf * tf_f * (k1 + 1.0) / (tf_f + k1 * ((1.0 - b) + (b * dls_np) / avgdl))
+                idf = bm25.idf(int(dfl), n_docs)
+                impacts = bm25.impacts(idf, tfs_np.astype(np.float64), dls_np, avgdl, k1, b)
                 e = encode_postings(ids, tfs_np, impacts, block_size)
                 out.append(tuple(e[c] for c in cols))
             return pd.DataFrame(out, columns=cols)
@@ -517,12 +516,8 @@ def encode_token_occurrences(
             tfs_np = counts.astype(np.int64)
             udls = dls[order][starts].astype(np.float64)
             df_total = int(uids.size)
-            idf = np.log(1.0 + (n_docs - df_total + 0.5) / (df_total + 0.5))
-            tf_f = tfs_np.astype(np.float64)
-            impacts = (
-                idf * tf_f * (k1 + 1.0)
-                / (tf_f + k1 * ((1.0 - b) + (b * udls) / avgdl))
-            )
+            idf = bm25.idf(df_total, n_docs)
+            impacts = bm25.impacts(idf, tfs_np.astype(np.float64), udls, avgdl, k1, b)
             e = encode_postings(uids, tfs_np, impacts, block_size)
             out.append((df_total, *(e[c] for c in cols)))
         return pd.DataFrame(out, columns=["df_local"] + cols)

@@ -45,6 +45,7 @@ from ..constants import BM25_B, BM25_K1, DEFAULT_TOP_K, TERM_BUCKETS
 from ..functions import fsio
 from ..functions.analyzer import analyze, tokenize_expr
 from ..functions.xxhash import term_bucket
+from . import bm25
 from .bm25 import bm25_contrib_expr, score_fold
 from .compressed_index import DEFAULT_PRELOAD_BUDGET_BYTES, check_preload_budget
 from .compressed_index import decode_index_df, encode_tf, write_index
@@ -263,8 +264,6 @@ def bm25f_wand_topk(
     """
     import heapq
 
-    import numpy as np
-
     from .wand import _Cursor
 
     names = sorted(weights)
@@ -290,8 +289,7 @@ def bm25f_wand_topk(
 
         def __init__(self, term, cursors):
             self.term = term
-            df = int(df_by_term[term])
-            self.idf = float(np.log(1.0 + (n_docs - df + 0.5) / (df + 0.5)))
+            self.idf = bm25.idf(int(df_by_term[term]), n_docs)
             self.has_bmtf = all(c.blockmaxtf is not None for _, c in cursors)
             if self.has_bmtf:
                 # global max weighted tf: per field, max tf over all of that
@@ -415,11 +413,7 @@ def bm25f_wand_topk(
             wdl = wdl_of(pivot_doc)
             score = 0.0
             for g in matching:
-                wtf = g.wtf_at(pivot_doc)
-                score += (
-                    g.idf * wtf * (k1 + 1.0)
-                    / (wtf + k1 * ((1.0 - b) + (b * wdl) / avg_wdl))
-                )
+                score += bm25.impacts(g.idf, g.wtf_at(pivot_doc), wdl, avg_wdl, k1, b)
             offer(pivot_doc, score)
             for g in matching:
                 g.advance_past(pivot_doc)
@@ -498,8 +492,7 @@ def bm25f_exhaustive_topk(
         uniq, inv = np.unique(all_ids, return_inverse=True)
         wtf = np.zeros(uniq.size, dtype=np.float64)
         np.add.at(wtf, inv, all_vals)
-        df = uniq.size
-        idf = float(np.log(1.0 + (n_docs - df + 0.5) / (df + 0.5)))
+        idf = bm25.idf(uniq.size, n_docs)
         wdl = np.fromiter(
             (
                 sum(float(weights[f]) * flen.get(f, {}).get(int(d), 0) for f in names)
@@ -508,9 +501,7 @@ def bm25f_exhaustive_topk(
             dtype=np.float64,
             count=uniq.size,
         )
-        contrib = idf * wtf * (k1 + 1.0) / (
-            wtf + k1 * ((1.0 - b) + (b * wdl) / avg_wdl)
-        )
+        contrib = bm25.impacts(idf, wtf, wdl, avg_wdl, k1, b)
         for d, c in zip(uniq.tolist(), contrib.tolist()):
             acc[d] = acc.get(d, 0.0) + c
     hits = sorted(acc.items(), key=lambda it: (-it[1], it[0]))[:top_k]

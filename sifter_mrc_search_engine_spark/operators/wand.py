@@ -37,6 +37,7 @@ from typing import Dict, List, Sequence, Tuple
 import numpy as np
 
 from ..constants import BLOCK_SIZE, BM25_B, BM25_K1, DEFAULT_TOP_K
+from . import bm25
 from .postings_codec import (
     decode_blockmax,
     decode_postings,
@@ -155,9 +156,7 @@ def _score_doc(cursors: List[_Cursor], doc: int, dl: float, avgdl: float,
     parts: List[Tuple[str, float]] = []
     for c in cursors:
         if not c.exhausted and c.doc == doc:
-            tf = float(c.cur_tf)
-            contrib = c.idf * tf * (k1 + 1.0) / (tf + k1 * ((1.0 - b) + (b * dl) / avgdl))
-            parts.append((c.term, contrib))
+            parts.append((c.term, bm25.impacts(c.idf, float(c.cur_tf), dl, avgdl, k1, b)))
     score = 0.0
     for _, v in sorted(parts, key=lambda p: p[0]):
         score += v
@@ -180,19 +179,18 @@ def packed_ids(lo: int, hi: int, count: int) -> bool:
 def term_impacts(segs, doclen, n_docs: int, avgdl: float,
                  k1: float = BM25_K1, b: float = BM25_B) -> Tuple[np.ndarray, np.ndarray]:
     """One term's postings as ``(doc_ids int64, impacts float64)``: every
-    segment decoded, each posting's exact float64 BM25 contribution (the
-    expression WAND's ``_score_doc`` and the oracle evaluate).
+    segment decoded, each posting's BM25 contribution from
+    :func:`bm25.idf` and :func:`bm25.impacts` — the values WAND's
+    ``_score_doc`` computes, ``==`` to the oracle's ``bm25_contrib_expr``.
 
     ``segs`` are the term's segment rows, concatenated in their order."""
-    df = int(segs[0]["df"])
-    idf = float(np.log(1.0 + (n_docs - df + 0.5) / (df + 0.5)))
+    idf = bm25.idf(int(segs[0]["df"]), n_docs)
     ids_parts, imp_parts = [], []
     for r in segs:
         ids, tfs = decode_postings(
             gaps=bytes(r["gaps"]), tfs=bytes(r["tfs"]), n=int(r["n"]),
             skips=bytes(r["skips"]), block_size=int(r["block_size"]),
         )
-        tfs = tfs.astype(np.float64)
         if isinstance(doclen, np.ndarray):
             dls = doclen[ids].astype(np.float64)
         else:
@@ -200,7 +198,7 @@ def term_impacts(segs, doclen, n_docs: int, avgdl: float,
                 (doclen[int(i)] for i in ids), dtype=np.float64, count=ids.size
             )
         ids_parts.append(ids)
-        imp_parts.append(idf * tfs * (k1 + 1.0) / (tfs + k1 * ((1.0 - b) + (b * dls) / avgdl)))
+        imp_parts.append(bm25.impacts(idf, tfs.astype(np.float64), dls, avgdl, k1, b))
     return np.concatenate(ids_parts), np.concatenate(imp_parts)
 
 
@@ -285,11 +283,7 @@ def wand_topk(
                 top_k,
             )
 
-    cursors = []
-    for r in rows:
-        df = int(r["df"])
-        idf = float(np.log(1.0 + (n_docs - df + 0.5) / (df + 0.5)))
-        cursors.append(_Cursor(r, idf))
+    cursors = [_Cursor(r, bm25.idf(int(r["df"]), n_docs)) for r in rows]
 
     heap: List[Tuple[float, int]] = []  # (score, -doc_id) min-heap, size k
 

@@ -37,6 +37,7 @@ from ..operators.compressed_index import (
     build_compressed_index,
     check_preload_budget,
 )
+from ..operators import bm25
 from ..operators.wand import wand_topk
 
 PAGES_DDL = "doc_id long, text string"
@@ -197,8 +198,6 @@ class MultiSegmentSearcher:
         )
 
     def search(self, question: str, top_k: int = DEFAULT_TOP_K, clamp: bool = True):
-        import numpy as np
-
         top_k = max(1, min(int(top_k), MAX_TOP_K) if clamp else int(top_k))
         terms = analyze(question)
         if not terms:
@@ -215,10 +214,7 @@ class MultiSegmentSearcher:
         for r in rows:
             d = dict(r)
             d["df"] = df_tot[d["term"]]
-            idf = float(
-                np.log(1.0 + (self.n_docs - d["df"] + 0.5) / (d["df"] + 0.5))
-            )
-            d["max_impact"] = idf * (BM25_K1 + 1.0)
+            d["max_impact"] = bm25.idf(d["df"], self.n_docs) * (BM25_K1 + 1.0)
             fixed.append(d)
         return wand_topk(
             fixed, terms, self.doclen, self.n_docs, self.avgdl,

@@ -91,3 +91,58 @@ def test_slot_fold_sums_duplicate_slot_rows_like_score_fold(spark):
     slotted = slot_fold(frame.drop("term"), ["doc_id"], 2).collect()
     folded = score_fold(frame.drop("_slot"), ["doc_id"]).collect()
     assert sorted(map(tuple, slotted)) == sorted(map(tuple, folded)) == [(1, 3.5), (2, 0.25)]
+
+
+def _idf_grid():
+    """(df, N) pairs: df = 1 and df = N at every N, N = 1, the small dfs,
+    a geometric sweep, and df = N at large N, where the argument
+    ``1 + 0.5/(N + 0.5)`` reaches fdlibm's ``|f| < 2^-20`` branch."""
+    grid = set()
+    for n in (1, 2, 7, 100, 10_000, 120_000, 2_400_000, 1_000_000_000):
+        dfs = set(range(1, min(n, 150) + 1)) | {n - 1, n}
+        q = 1
+        while q < n:
+            dfs |= {q, n - q}
+            q = q * 9 // 8 + 1
+        grid |= {(df, n) for df in dfs if df >= 1}
+    return sorted(grid)
+
+
+def test_idf_equals_spark_idf_expr(spark):
+    """bm25.idf is ``==`` to Spark's idf_expr (StrictMath.log) on every
+    grid point, computed in one Spark job. The grid is sensitive: libm's
+    log misses Spark's value on a share of it."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    from sifter_mrc_search_engine_spark.operators.bm25 import idf, idf_expr
+
+    grid = _idf_grid()
+    frame = spark.createDataFrame(grid, "df long, n long")
+    rows = frame.select("df", "n", idf_expr(F.col("df"), F.col("n")).alias("idf")).collect()
+    assert len(rows) == len(grid)
+    bad = [(r["df"], r["n"], r["idf"]) for r in rows if idf(r["df"], r["n"]) != r["idf"]]
+    assert not bad, bad[:10]
+    libm = sum(
+        float(np.log(1.0 + (r["n"] - r["df"] + 0.5) / (r["df"] + 0.5))) != r["idf"]
+        for r in rows
+    )
+    assert libm > 0
+
+
+def test_library_has_no_libm_log():
+    """Every driver idf goes through bm25.idf: a numpy or math log in the
+    library would differ from Spark's in the last bit. Catalyst
+    ``F.log`` is allowed."""
+    import re
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parents[1] / "sifter_mrc_search_engine_spark"
+    pattern = re.compile(r"\b(?:np|numpy|math)\.log\(")
+    hits = [
+        f"{p.relative_to(pkg)}:{i}"
+        for p in sorted(pkg.rglob("*.py"))
+        for i, line in enumerate(p.read_text(encoding="utf-8").splitlines(), 1)
+        if pattern.search(line)
+    ]
+    assert not hits, hits

@@ -1,5 +1,5 @@
 """Fielded index: BM25F served from persisted per-field postings must be
-rank-identical (scores within 1e-12) to the query-time brute force."""
+rank- and score-identical (``==``) to the query-time brute force."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -45,7 +45,7 @@ def test_fielded_matches_brute_force(spark, corpus, fielded_dir, q):
     ]
     assert [d for d, _ in got] == [d for d, _ in exp], q
     for (gd, gs), (ed, es) in zip(got, exp):
-        assert gs == pytest.approx(es, rel=1e-12, abs=1e-12)
+        assert gs == es
 
 
 def test_weights_are_query_time(spark, corpus, fielded_dir):
@@ -61,7 +61,7 @@ def test_weights_are_query_time(spark, corpus, fielded_dir):
     ]
     assert [d for d, _ in got] == [d for d, _ in exp]
     for (gd, gs), (ed, es) in zip(got, exp):
-        assert gs == pytest.approx(es, rel=1e-12, abs=1e-12)
+        assert gs == es
 
 
 def test_stored_terms_are_field_prefixed(spark, fielded_dir):
@@ -107,7 +107,7 @@ def test_fielded_searcher_serving_kernel(spark, corpus, fielded_dir, preload):
             got = s.search(q, w, top_k=10)
             assert [d for d, _ in got] == [d for d, _ in exp], (q, w, preload)
             for (gd, gs), (_, es) in zip(got, exp):
-                assert gs == pytest.approx(es, rel=1e-12, abs=1e-12)
+                assert gs == es
     # empty/unknown questions behave like the engine contract
     assert s.search("", WEIGHTS) == []
     assert s.search("zzznotaterm", WEIGHTS) == []
@@ -129,7 +129,7 @@ def test_fielded_wand_vs_exhaustive(spark, corpus, fielded_dir, method):
         got = s.search(q, WEIGHTS, top_k=3, method=method)
         assert [d for d, _ in got] == [d for d, _ in exp], (q, method)
         for (gd, gs), (_, es) in zip(got, exp):
-            assert gs == pytest.approx(es, rel=1e-12, abs=1e-12)
+            assert gs == es
 
 
 def test_fielded_join_norms_no_driver_state(spark, corpus, fielded_dir):
@@ -145,7 +145,7 @@ def test_fielded_join_norms_no_driver_state(spark, corpus, fielded_dir):
         b = joined.search(q, WEIGHTS, top_k=5)
         assert [d for d, _ in a] == [d for d, _ in b], q
         for (_, sa), (_, sb) in zip(a, b):
-            assert sb == pytest.approx(sa, rel=1e-12, abs=1e-12)
+            assert sb == sa
     # join mode cannot honor the driver WAND kernel — must fail loudly,
     # not silently run a different execution strategy
     with pytest.raises(ValueError, match="wand"):
@@ -170,7 +170,7 @@ def test_fielded_wand_subset_weights(spark, corpus, fielded_dir, method):
         got = s.search(q, w, top_k=5, method=method)
         assert [d for d, _ in got] == [d for d, _ in exp], (q, method)
         for (gd, gs), (_, es) in zip(got, exp):
-            assert gs == pytest.approx(es, rel=1e-12, abs=1e-12)
+            assert gs == es
 
 
 def test_fielded_wand_skips_blocks():

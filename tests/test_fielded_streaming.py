@@ -67,7 +67,7 @@ def test_fielded_multisegment_matches_brute_force(spark, fstreamed, q):
     got = s.search(q, WEIGHTS, top_k=10)
     assert [d for d, _ in got] == [d for d, _ in exp], q
     for (_, gs), (_, es) in zip(got, exp):
-        assert gs == pytest.approx(es, rel=1e-12, abs=1e-12)
+        assert gs == es
 
 
 def test_fielded_multisegment_subset_weights(spark, fstreamed):
@@ -81,7 +81,7 @@ def test_fielded_multisegment_subset_weights(spark, fstreamed):
     got = s.search(QUERIES[1], w, top_k=5)
     assert [d for d, _ in got] == [d for d, _ in exp]
     for (_, gs), (_, es) in zip(got, exp):
-        assert gs == pytest.approx(es, rel=1e-12, abs=1e-12)
+        assert gs == es
 
 
 def test_fielded_overlap_detected_and_compacted(spark, tmp_path):
@@ -130,7 +130,7 @@ def test_fielded_overlap_detected_and_compacted(spark, tmp_path):
             got = s.search(q, WEIGHTS, top_k=10, method=method)
             assert [d for d, _ in got] == [d for d, _ in exp], (q, method)
             for (_, gs), (_, es) in zip(got, exp):
-                assert gs == pytest.approx(es, rel=1e-12, abs=1e-12)
+                assert gs == es
 
 
 def test_mixed_field_segments_refused(spark, tmp_path):
@@ -172,7 +172,7 @@ def test_fielded_multisegment_preload_kernels(spark, fstreamed):
             got = s.search(q, WEIGHTS, top_k=10, method=method)
             assert [d for d, _ in got] == [d for d, _ in exp], (q, method)
             for (_, gs), (_, es) in zip(got, exp):
-                assert gs == pytest.approx(es, rel=1e-12, abs=1e-12)
+                assert gs == es
     # subset weights route through the exact union-df derivation
     w = {"title": 2.0}
     exp = [
@@ -217,7 +217,7 @@ def test_fielded_multiseg_partial_sidecar_stays_exact(spark, fstreamed, tmp_path
             got = s.search(q, WEIGHTS, top_k=10, method=method)
             assert [d for d, _ in got] == [d for d, _ in exp], (q, method)
             for (_, gs), (_, es) in zip(got, exp):
-                assert gs == pytest.approx(es, rel=1e-12, abs=1e-12)
+                assert gs == es
 
 
 def test_fielded_multisegment_preload_budget(spark, fstreamed):

@@ -54,7 +54,7 @@ def test_brute_force_reproduces_golden(spark, corpus):
         exp = [(d, s) for d, s in case["expected"]]
         assert [d for d, _ in got] == [d for d, _ in exp], case["query"]
         for (gd, gs), (_, es) in zip(got, exp):
-            assert gs == pytest.approx(es, rel=1e-12, abs=1e-12)
+            assert gs == es
 
 
 def test_wand_reproduces_golden_full_sweep(corpus):
@@ -68,4 +68,4 @@ def test_wand_reproduces_golden_full_sweep(corpus):
             )
             assert [d for d, _ in got] == [d for d, _ in exp], (case["query"], method)
             for (gd, gs), (_, es) in zip(got, exp):
-                assert gs == pytest.approx(es, rel=1e-12, abs=1e-12)
+                assert gs == es

@@ -7,16 +7,18 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from sifter_mrc_search_engine_spark.constants import BM25_B, BM25_K1
+from sifter_mrc_search_engine_spark.operators import bm25
 from sifter_mrc_search_engine_spark.operators.postings_codec import encode_postings
 from sifter_mrc_search_engine_spark.operators.wand import wand_topk
 
 
 def _naive(rows_by_term, doclen, n_docs, avgdl, terms, k):
-    """Independent reference: python dict accumulation, ascending-term sum."""
+    """Independent reference: python dict accumulation, ascending-term
+    sum; only the log is shared (bm25.idf, Spark's)."""
     acc = {}
     for term in sorted(set(terms) & set(rows_by_term)):
         ids, tfs, df = rows_by_term[term]
-        idf = np.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
+        idf = bm25.idf(df, n_docs)
         for d, tf in zip(ids, tfs):
             tf = float(tf)
             dl = float(doclen[d])
@@ -65,7 +67,7 @@ def test_all_kernels_agree(c, k, block_pow):
     # exact impacts for valid block-max bounds
     rows = []
     for term, (ids, tfs, df) in rows_by_term.items():
-        idf = np.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
+        idf = bm25.idf(df, n_docs)
         tf_f = tfs.astype(np.float64)
         dls = doclen[ids].astype(np.float64)
         impacts = idf * tf_f * (BM25_K1 + 1.0) / (
@@ -98,7 +100,7 @@ def test_tie_breaking_exhaustive():
     tfs = np.ones(50, dtype=np.int64)
     doclen = np.full(200, 10, dtype=np.int64)
     avgdl = 10.0
-    idf = np.log(1.0 + (200 - 50 + 0.5) / 50.5)
+    idf = bm25.idf(50, 200)
     impacts = np.full(50, idf * 1 * 2.2 / (1 + 1.2))
     e = encode_postings(ids, tfs, impacts, 8)
     row = {

@@ -53,7 +53,7 @@ def test_universal_term_salts_and_stays_exact(spark, stopword_corpus):
             )
             assert [d for d, _ in got] == [d for d, _ in exp], (q, m)
             for (gd, gs), (_, es) in zip(got, exp):
-                assert gs == pytest.approx(es, rel=1e-12, abs=1e-12)
+                assert gs == es
 
 
 def test_distributed_batch_paths_on_salted_index(spark, stopword_corpus, tmp_path):
@@ -90,4 +90,65 @@ def test_distributed_batch_paths_on_salted_index(spark, stopword_corpus, tmp_pat
             got = [(d, s) for _, d, s in sorted(by_q[i])]
             assert [d for d, _ in got] == [d for d, _ in exp[q]], (method, q)
             for (gd, gs), (_, es) in zip(got, exp[q]):
-                assert gs == pytest.approx(es, rel=1e-12, abs=1e-12)
+                assert gs == es
+
+
+SPIKE_TF = 100_000
+#: doc_id -> tf of the low-df token "spike": three documents at tf ~10^5
+#: make its one (term, segment) encoder group ~300k occurrences at df 7
+SPIKE = {0: SPIKE_TF, 1: SPIKE_TF + 1, 2: SPIKE_TF + 2, 7: 1, 57: 1, 107: 1, 157: 1}
+
+
+@pytest.fixture(scope="module")
+def tf_skew_corpus(spark):
+    docs = spark.range(200).selectExpr(
+        "id as doc_id",
+        f"concat(if(id < 3, repeat('spike ', {SPIKE_TF} + cast(id as int)), ''),"
+        " if(pmod(id, 50) = 7, 'spike ', ''),"
+        " 'word', cast(pmod(id, 13) as string), ' tail') as text",
+    ).cache()
+    docs.count()
+    return docs
+
+
+def test_tf_skew_encodes_exactly(spark, tf_skew_corpus):
+    """tf skew, not df skew: the fused occurrence encoder keeps df, tfs
+    and the block-max bounds exact for a token at tf ~10^5 in a few
+    documents, and WAND over it is ``==`` to brute force."""
+    import numpy as np
+
+    from sifter_mrc_search_engine_spark.operators import bm25
+    from sifter_mrc_search_engine_spark.operators.postings_codec import (
+        decode_blockmax,
+        decode_postings,
+    )
+
+    docs = tf_skew_corpus
+    dl = {r["doc_id"]: r["doc_len"] for r in doc_lengths(docs).collect()}
+    n_docs, avgdl = len(dl), sum(dl.values()) / len(dl)
+    idx = build_compressed_index(
+        docs, buckets=8, block_size=4, stats=(n_docs, avgdl)
+    ).collect()
+    (row,) = [r for r in idx if r["term"] == "spike"]
+    assert row["df"] == row["n"] == len(SPIKE)
+    ids, tfs = decode_postings(
+        gaps=bytes(row["gaps"]), tfs=bytes(row["tfs"]), n=int(row["n"]),
+        skips=bytes(row["skips"]), block_size=int(row["block_size"]),
+    )
+    assert ids.tolist() == sorted(SPIKE)
+    assert tfs.tolist() == [SPIKE[d] for d in sorted(SPIKE)]
+    dls = np.array([dl[int(d)] for d in ids], dtype=np.float64)
+    imp = bm25.impacts(bm25.idf(len(SPIKE), n_docs), tfs.astype(np.float64), dls, avgdl)
+    assert decode_blockmax(bytes(row["blockmax"])).tolist() == [
+        imp[i : i + 4].max() for i in range(0, imp.size, 4)
+    ]
+    assert row["max_impact"] == imp.max()
+
+    for q in ("spike", "spike word7"):
+        exp = [
+            (r["doc_id"], r["score"])
+            for r in bm25_brute_force(docs, q, top_k=10).collect()
+        ]
+        for m in ("wand", "dense"):
+            got = wand_topk(idx, q.split(), dl, n_docs, avgdl, top_k=10, method=m)
+            assert got == exp, (q, m)

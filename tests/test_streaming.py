@@ -50,7 +50,7 @@ def test_multisegment_join_norms_no_driver_state(spark, streamed):
         a, b = pre.search(q, top_k=10), joined.search(q, top_k=10)
         assert [d for d, _ in a] == [d for d, _ in b], q
         for (_, sa), (_, sb) in zip(a, b):
-            assert sb == pytest.approx(sa, rel=1e-12, abs=1e-12)
+            assert sb == sa
 
 
 @pytest.mark.parametrize("q", QUERIES)
@@ -63,7 +63,7 @@ def test_multisegment_search_equals_batch_oracle(spark, streamed, q):
     got = s.search(q, top_k=10)
     assert [d for d, _ in got] == [d for d, _ in expected], q
     for (gd, gs), (ed, es) in zip(got, expected):
-        assert gs == pytest.approx(es, rel=1e-12, abs=1e-12)
+        assert gs == es
 
 
 def test_streaming_checkpoint_no_reprocess(spark, streamed):
@@ -92,7 +92,7 @@ def test_compaction_preserves_results(spark, streamed):
         got = s.search(q, top_k=10)
         assert [d for d, _ in got] == [d for d, _ in expected], q
         for (gd, gs), (ed, es) in zip(got, expected):
-            assert gs == pytest.approx(es, rel=1e-12, abs=1e-12)
+            assert gs == es
 
 
 def test_compaction_blockmax_tight(spark, streamed):
@@ -103,6 +103,7 @@ def test_compaction_blockmax_tight(spark, streamed):
     import json
     import numpy as np
     from sifter_mrc_search_engine_spark.constants import BM25_B, BM25_K1
+    from sifter_mrc_search_engine_spark.operators import bm25
     from sifter_mrc_search_engine_spark.operators.postings_codec import (
         decode_blockmax,
         decode_postings,
@@ -124,7 +125,7 @@ def test_compaction_blockmax_tight(spark, streamed):
             skips=bytes(r["skips"]), block_size=int(r["block_size"]),
         )
         df = int(r["df"])
-        idf = np.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
+        idf = bm25.idf(df, n_docs)
         tf = tfs.astype(np.float64)
         dls = np.array([dl[int(i)] for i in ids], dtype=np.float64)
         imp = idf * tf * (BM25_K1 + 1.0) / (tf + BM25_K1 * ((1.0 - BM25_B) + BM25_B * dls / avgdl))
@@ -132,7 +133,7 @@ def test_compaction_blockmax_tight(spark, streamed):
         bs = int(r["block_size"])
         for b in range(bm.size):
             true_max = imp[b * bs : (b + 1) * bs].max()
-            assert bm[b] == pytest.approx(true_max, rel=1e-12)
+            assert bm[b] == true_max
 
 
 def test_overlapping_segments_detected_and_compacted(spark, tmp_path):
@@ -172,7 +173,7 @@ def test_overlapping_segments_detected_and_compacted(spark, tmp_path):
         got = s.search(q, top_k=10)
         assert [d for d, _ in got] == [d for d, _ in expected], q
         for (gd, gs), (ed, es) in zip(got, expected):
-            assert gs == pytest.approx(es, rel=1e-12, abs=1e-12)
+            assert gs == es
 
 
 def test_segment_order_numeric_past_ten(spark, tmp_path):
@@ -245,7 +246,7 @@ def test_mixed_schema_segments_search_and_compact(spark, tmp_path):
             got = s.search(q, top_k=10)
             assert [d for d, _ in got] == [d for d, _ in expected], (norms, q)
             for (_, gs), (_, es) in zip(got, expected):
-                assert gs == pytest.approx(es, rel=1e-12, abs=1e-12)
+                assert gs == es
 
     # compaction re-encodes (restoring blockmaxtf for every term)
     compact_dir = compact_segments(spark, idx_dir, buckets=4)

@@ -70,10 +70,7 @@ def test_wand_rank_identity(corpus, qi):
         got = wand_topk(index, analyze(q), doclen, n_docs, avgdl, top_k=10, method=method)
         assert [d for d, _ in got] == [d for d, _ in expected], (q, method)
         for (gd, gs), (ed, es) in zip(got, expected):
-            # summation order is pinned (ascending term), so the only
-            # residual divergence is the transcendental: JVM Math.log vs
-            # libm np.log in idf can differ by 1 ulp. Allow exactly that.
-            assert gs == pytest.approx(es, rel=1e-12, abs=1e-12), (q, method, gd, gs, es)
+            assert gs == es, (q, method, gd, gs, es)
     # the two kernels agree bit-for-bit with each other
     w = wand_topk(index, analyze(q), doclen, n_docs, avgdl, top_k=10, method="wand")
     d = wand_topk(index, analyze(q), doclen, n_docs, avgdl, top_k=10, method="dense")
@@ -107,6 +104,7 @@ def test_blockmax_skips_block_decodes():
     metadata alone. Flat tf=1 postings with an early coinciding spike
     mean term-level UBs can't prune but per-block bounds rule out every
     post-spike block."""
+    from sifter_mrc_search_engine_spark.operators import bm25
     from sifter_mrc_search_engine_spark.operators import wand as wand_mod
     from sifter_mrc_search_engine_spark.operators.postings_codec import encode_postings
     from sifter_mrc_search_engine_spark.constants import BM25_B, BM25_K1
@@ -119,7 +117,7 @@ def test_blockmax_skips_block_decodes():
     def row(term):
         tfs = np.ones(n, dtype=np.int64)
         tfs[7] = 50
-        idf = float(np.log(1.0 + (n - n + 0.5) / (n + 0.5)))
+        idf = bm25.idf(n, n)
         tf_f = tfs.astype(np.float64)
         impacts = idf * tf_f * (BM25_K1 + 1.0) / (
             tf_f + BM25_K1 * ((1.0 - BM25_B) + BM25_B * 100.0 / avgdl)
