@@ -149,7 +149,7 @@ def main() -> None:
         finally:
             shutil.rmtree(pos_dir, ignore_errors=True)
 
-        searcher = IndexSearcher(spark, idx_dir, buckets=64)
+        searcher = IndexSearcher(spark, idx_dir)
         timed("wand_batch", lambda: searcher.search_many(BATCH_QUERIES, 10).collect())
         timed("wand_batch_local", lambda: searcher.search_many_local(BATCH_QUERIES, 10))
         timed(
@@ -167,7 +167,7 @@ def main() -> None:
             return lats[len(lats) // 2], lats[int(len(lats) * 0.95) - 1]
 
         lat_p50, lat_p95 = percentiles(searcher)
-        served = IndexSearcher(spark, idx_dir, buckets=64, preload=True)
+        served = IndexSearcher(spark, idx_dir, preload=True)
         serve_p50, serve_p95 = percentiles(served)
     finally:
         shutil.rmtree(idx_dir, ignore_errors=True)

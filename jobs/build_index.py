@@ -9,7 +9,8 @@
 
 ``--positional-output``: ALSO write the positional index (phrase /
 slop / NEAR / prefix / wildcard / fuzzy / bool serving tier) from the
-same cleaned corpus in the same submit.
+same cleaned corpus in the same submit. It is the main index format plus
+a ``poss`` column, so it also serves plain BM25.
 
 ``--html``: extract text from the ``html`` binary column first (the
 byte-identical reference cleaning pipeline). ``--fields``: concatenate the
@@ -44,7 +45,7 @@ def main(argv=None) -> None:
     ap.add_argument("--positional-output", default=None,
                     help="also write the positional index (structured query tier) here")
     ap.add_argument("--pos-buckets", type=int, default=None,
-                    help="positional index bucket modulus (default: operator default)")
+                    help="positional index bucket modulus (default: TERM_BUCKETS)")
     args = ap.parse_args(argv)
 
     from sifter_mrc_search_engine_spark.functions.cleaning import extract_html_udf
@@ -76,14 +77,14 @@ def main(argv=None) -> None:
         buckets=args.buckets, max_buckets_this_run=args.max_buckets,
     )
     if args.positional_output:
+        from sifter_mrc_search_engine_spark.constants import TERM_BUCKETS
         from sifter_mrc_search_engine_spark.operators.positional import (
-            TERM_BUCKETS_POS,
             write_positional_index,
         )
 
         pos_stats = write_positional_index(
             docs, args.positional_output, id_col=args.id_col,
-            text_col=text_col, buckets=args.pos_buckets or TERM_BUCKETS_POS,
+            text_col=text_col, buckets=args.pos_buckets or TERM_BUCKETS,
         )
         summary = {**summary, "positional": pos_stats}
     print(json.dumps(summary))

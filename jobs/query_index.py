@@ -2,7 +2,7 @@
 
     spark-submit --py-files sifter_pkg.zip jobs/query_index.py \
         --index /path/to/index_dir --question "..." [--top-k 10] \
-        [--buckets 64] [--batch-file questions.txt]
+        [--batch-file questions.txt]
 
 Single question -> one JSON line of answers (the reference's /inference
 response shape). ``--batch-file`` scores one question per line via the
@@ -24,7 +24,6 @@ def main(argv=None) -> None:
     ap.add_argument("--index", required=True)
     ap.add_argument("--question", default=None)
     ap.add_argument("--top-k", type=int, default=10)
-    ap.add_argument("--buckets", type=int, default=64)
     ap.add_argument("--batch-file", default=None)
     args = ap.parse_args(argv)
 
@@ -32,7 +31,7 @@ def main(argv=None) -> None:
     from sifter_mrc_search_engine_spark.plans.service import InferenceService
 
     spark = SparkSession.builder.getOrCreate()
-    searcher = IndexSearcher(spark, args.index, buckets=args.buckets)
+    searcher = IndexSearcher(spark, args.index)
     if args.batch_file:
         questions = [q for q in Path(args.batch_file).read_text().splitlines() if q.strip()]
         out = searcher.search_many(questions, top_k=args.top_k).collect()

@@ -1,7 +1,7 @@
 """spark-submit job: serve the HTTP inference front door over a built index.
 
     spark-submit --py-files sifter_pkg.zip jobs/serve_http.py \
-        --index /path/to/index_dir [--port 8000] [--buckets 64] \
+        --index /path/to/index_dir [--port 8000] \
         [--meta /path/to/docmeta.parquet] [--preload] \
         [--positional-index /path/to/pos_index_dir]
 
@@ -29,7 +29,6 @@ def main(argv=None) -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--index", required=True)
     ap.add_argument("--port", type=int, default=8000)
-    ap.add_argument("--buckets", type=int, default=64)
     ap.add_argument("--meta", default=None)
     ap.add_argument("--preload", action="store_true")
     ap.add_argument("--positional-index", default=None,
@@ -41,7 +40,7 @@ def main(argv=None) -> None:
     from sifter_mrc_search_engine_spark.plans.service import InferenceService
 
     spark = SparkSession.builder.getOrCreate()
-    searcher = IndexSearcher(spark, args.index, buckets=args.buckets, preload=args.preload)
+    searcher = IndexSearcher(spark, args.index, preload=args.preload)
     meta = None
     if args.meta:
         meta = {

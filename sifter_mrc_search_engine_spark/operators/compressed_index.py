@@ -14,6 +14,11 @@ Two exchanges end to end; re-encoding from an EXISTING tf aggregate
 (streaming compaction, fielded builds) goes through :func:`encode_tf`,
 which adds the (term, doc_id) aggregate exchange its input requires.
 
+``positions=True`` adds one ``poss`` column (within-doc position deltas)
+to the same rows: the positional index is this format plus ``poss``, and
+scoring-only reads prune it away. :func:`decode_index_df` is the one
+decoder and :func:`write_index` the one writer for both.
+
 Skew defense: terms whose df exceeds SALT_THRESHOLD are split into
 SALT_FANOUT doc-id RANGE segments (ranges are disjoint and ordered, so the
 segments of a term concatenate back into one sorted posting list — no
@@ -47,7 +52,7 @@ from pyspark.sql.types import (
 from ..constants import BLOCK_SIZE, BM25_B, BM25_K1, SALT_FANOUT, SALT_THRESHOLD, TERM_BUCKETS
 from . import bm25
 from .index_build import term_bucket_expr
-from .postings_codec import encode_postings
+from .postings_codec import decode_postings, encode_postings, varbyte_decode, varbyte_encode
 from ..functions.analyzer import tokenize_expr
 
 INDEX_SCHEMA = StructType(
@@ -70,6 +75,17 @@ INDEX_SCHEMA = StructType(
         StructField("blockmaxtf", BinaryType(), False),
     ]
 )
+
+#: the positional index's one extra column: per posting, the varbyte
+#: within-doc position deltas, the first position of each doc absolute
+POSS_FIELD = StructField("poss", BinaryType(), False)
+
+#: the encoder UDFs' output columns (a subset of INDEX_SCHEMA)
+_ENC_COLS = ["n", "max_impact", "gaps", "tfs", "skips", "blockmax", "blockmaxtf"]
+
+#: binary payload columns: nothing filters on their bytes, so parquet
+#: min/max statistics on them are dead footer weight (``term`` keeps its)
+_BLOB_COLS = ("gaps", "tfs", "skips", "blockmax", "blockmaxtf", "poss")
 
 
 #: default driver-memory budget for the preload serving tiers (4 GiB):
@@ -203,8 +219,10 @@ def build_compressed_index(
     persist_tf: bool = False,
     only_buckets: "Sequence[int] | None" = None,
     hot: "tuple[list, int] | None" = None,
+    positions: bool = False,
 ) -> DataFrame:
-    """Return the compressed index DataFrame (INDEX_SCHEMA).
+    """Return the compressed index DataFrame (INDEX_SCHEMA, plus ``poss``
+    with ``positions=True`` — see :func:`encode_token_occurrences`).
 
     ``stats`` = (n_docs, avgdl) if the caller already knows them (the
     resumable build derives them from the doclens sidecar — saves a scan).
@@ -232,6 +250,8 @@ def build_compressed_index(
         n_docs, avgdl = int(stats[0]), float(stats[1])
 
     if persist_tf:
+        if positions:
+            raise ValueError("persist_tf encodes a tf aggregate, which has no positions")
         from pyspark import StorageLevel
 
         tf = tf_doclen(docs, id_col, text_col).persist(StorageLevel.MEMORY_AND_DISK)
@@ -249,6 +269,7 @@ def build_compressed_index(
         docs, n_docs, avgdl, id_col=id_col, text_col=text_col,
         buckets=buckets, salt_fanout=salt_fanout,
         k1=k1, b=b, block_size=block_size, only_buckets=only_buckets, hot=hot,
+        positions=positions,
     )
 
 
@@ -354,21 +375,9 @@ def encode_tf(
         array_cols.append(F.transform("posts", lambda s: s["doc_len"]).alias("dl_arr"))
     arrays = grouped.select("term", "segment", "df_local", *array_cols)
 
-    enc_type = StructType(
-        [
-            StructField("n", LongType(), False),
-            StructField("max_impact", DoubleType(), False),
-            StructField("gaps", BinaryType(), False),
-            StructField("tfs", BinaryType(), False),
-            StructField("skips", BinaryType(), False),
-            StructField("blockmax", BinaryType(), False),
-            StructField("blockmaxtf", BinaryType(), False),
-        ]
-    )
+    enc_type = StructType([INDEX_SCHEMA[c] for c in _ENC_COLS])
 
     from pyspark.sql.functions import pandas_udf
-
-    cols = ["n", "max_impact", "gaps", "tfs", "skips", "blockmax", "blockmaxtf"]
 
     if with_impacts:
 
@@ -388,8 +397,8 @@ def encode_tf(
                 idf = bm25.idf(int(dfl), n_docs)
                 impacts = bm25.impacts(idf, tfs_np.astype(np.float64), dls_np, avgdl, k1, b)
                 e = encode_postings(ids, tfs_np, impacts, block_size)
-                out.append(tuple(e[c] for c in cols))
-            return pd.DataFrame(out, columns=cols)
+                out.append(tuple(e[c] for c in _ENC_COLS))
+            return pd.DataFrame(out, columns=_ENC_COLS)
 
         enc_col = enc_udf("term", "doc_ids", "tf_arr", "dl_arr", "df_local")
     else:
@@ -406,8 +415,8 @@ def encode_tf(
                     impacts=None,
                     block_size=block_size,
                 )
-                out.append(tuple(e[c] for c in cols))
-            return pd.DataFrame(out, columns=cols)
+                out.append(tuple(e[c] for c in _ENC_COLS))
+            return pd.DataFrame(out, columns=_ENC_COLS)
 
         enc_col = enc_udf_plain("doc_ids", "tf_arr")
 
@@ -436,6 +445,7 @@ def encode_token_occurrences(
     block_size: int = BLOCK_SIZE,
     only_buckets: "Sequence[int] | None" = None,
     hot: "tuple[list, int] | None" = None,
+    positions: bool = False,
 ) -> DataFrame:
     """Fresh-build encoder: RAW token occurrences grouped straight into
     (term, segment) encoder groups; the per-doc tf aggregation happens
@@ -446,6 +456,11 @@ def encode_token_occurrences(
     :func:`tf_doclen` pays two. Output is INDEX_SCHEMA, bit-identical
     postings (sorted doc_ids, identical tfs/impacts/blockmax), and the
     same bucket partitioning contract.
+
+    ``positions=True`` makes each occurrence carry its token position
+    and adds the ``poss`` column (:data:`POSS_FIELD`); every other column
+    is byte-identical to the ``positions=False`` build, whose shuffle
+    never carries a position.
 
     ``hot`` is REQUIRED here (callers sample it concurrently with the
     doclens job): occurrence-level rows cannot reuse the pair-counting
@@ -462,7 +477,9 @@ def encode_token_occurrences(
     rows = toks.select(
         "doc_id",
         F.size("_tk").cast("long").alias("doc_len"),
-        F.explode("_tk").alias("term"),
+        F.posexplode("_tk").alias("pos", "term")
+        if positions
+        else F.explode("_tk").alias("term"),
     )
     if hot_terms:
         seg = F.when(
@@ -476,39 +493,36 @@ def encode_token_occurrences(
         rows = rows.filter(
             term_bucket_expr("term", buckets).isin(sorted(set(only_buckets)))
         )
+    occ = ["doc_id", "doc_len"] + (["pos"] if positions else [])
     grouped = rows.groupBy("term", "segment").agg(
-        F.collect_list(F.struct("doc_id", "doc_len")).alias("occs")
+        F.collect_list(F.struct(*occ)).alias("occs")
     )
     arrays = grouped.select(
         "term",
         "segment",
-        F.transform("occs", lambda s: s["doc_id"]).alias("occ_ids"),
-        F.transform("occs", lambda s: s["doc_len"]).alias("occ_dls"),
+        # F.transform calls each lambda right away, so `c` binds per field
+        *[F.transform("occs", lambda s: s[c]).alias(f"occ_{c}") for c in occ],
     )
 
+    out_cols = ["df_local"] + _ENC_COLS + (["poss"] if positions else [])
     enc_type = StructType(
-        [
-            StructField("df_local", LongType(), False),
-            StructField("n", LongType(), False),
-            StructField("max_impact", DoubleType(), False),
-            StructField("gaps", BinaryType(), False),
-            StructField("tfs", BinaryType(), False),
-            StructField("skips", BinaryType(), False),
-            StructField("blockmax", BinaryType(), False),
-            StructField("blockmaxtf", BinaryType(), False),
-        ]
+        [StructField("df_local", LongType(), False)]
+        + [INDEX_SCHEMA[c] for c in _ENC_COLS]
+        + ([POSS_FIELD] if positions else [])
     )
     from pyspark.sql.functions import pandas_udf
 
-    cols = ["n", "max_impact", "gaps", "tfs", "skips", "blockmax", "blockmaxtf"]
-
     @pandas_udf(enc_type)
-    def enc_occ_udf(occ_ids: pd.Series, occ_dls: pd.Series) -> pd.DataFrame:
+    def enc_occ_udf(occ_ids: pd.Series, occ_dls: pd.Series, *occ_pos: pd.Series) -> pd.DataFrame:
         out = []
-        for ids, dls in zip(occ_ids, occ_dls):
+        for ids, dls, *pos in zip(occ_ids, occ_dls, *occ_pos):
             ids = np.asarray(ids, dtype=np.int64)
             dls = np.asarray(dls, dtype=np.int64)
-            order = np.argsort(ids, kind="stable")
+            pos = np.asarray(pos[0], dtype=np.int64) if pos else None
+            if pos is not None:
+                order = np.lexsort((pos, ids))
+            else:
+                order = np.argsort(ids, kind="stable")
             ids_s = ids[order]
             uids, starts, counts = np.unique(
                 ids_s, return_index=True, return_counts=True
@@ -519,38 +533,47 @@ def encode_token_occurrences(
             idf = bm25.idf(df_total, n_docs)
             impacts = bm25.impacts(idf, tfs_np.astype(np.float64), udls, avgdl, k1, b)
             e = encode_postings(uids, tfs_np, impacts, block_size)
-            out.append((df_total, *(e[c] for c in cols)))
-        return pd.DataFrame(out, columns=["df_local"] + cols)
+            row = (df_total, *(e[c] for c in _ENC_COLS))
+            if pos is not None:
+                # within-doc deltas, first position of each doc absolute
+                p = pos[order]
+                flat = p.copy()
+                flat[1:] -= p[:-1]
+                flat[starts] = p[starts]
+                row += (varbyte_encode(flat),)
+            out.append(row)
+        return pd.DataFrame(out, columns=out_cols)
 
     # `e` referenced twice below (df_local + the struct) — the two-step
     # projection keeps the UDF evaluated once (multi-referenced aliases
     # are not collapsed)
-    enc = arrays.withColumn("e", enc_occ_udf("occ_ids", "occ_dls"))
+    enc = arrays.withColumn("e", enc_occ_udf(*[f"occ_{c}" for c in occ]))
     encoded = enc.select(
         "term",
         term_bucket_expr("term", buckets).alias("bucket"),
         "segment",
         F.col("e.df_local").alias("df_local"),
-        F.array_min("occ_ids").alias("min_doc"),
-        F.array_max("occ_ids").alias("max_doc"),
+        F.array_min("occ_doc_id").alias("min_doc"),
+        F.array_max("occ_doc_id").alias("max_doc"),
         "e",
     )
     return _finalize_encoded(encoded, block_size)
 
 
-
 def _finalize_encoded(pre: "DataFrame", block_size: int) -> DataFrame:
     """Shared encoder tail: repartition by ``bucket``, exact-df window
     over (bucket, term) — no exchange on top of the bucket partitioning
-    (a term lives in one bucket) — and the INDEX_SCHEMA projection.
+    (a term lives in one bucket) — and the INDEX_SCHEMA projection, plus
+    ``poss`` when the encoder produced it.
     ``pre`` needs columns (term, bucket, segment, df_local, min_doc,
-    max_doc, e{n, max_impact, gaps, tfs, skips, blockmax, blockmaxtf}).
+    max_doc, e{n, max_impact, gaps, tfs, skips, blockmax, blockmaxtf[, poss]}).
     The ONE copy of the layout/partitioning contract both encoders and
     the writers rely on."""
     from pyspark.sql import Window
 
     out = pre.repartition("bucket")
     df_col = F.sum("df_local").over(Window.partitionBy("bucket", "term"))
+    encoded = pre.schema["e"].dataType.fieldNames()
     return out.select(
         "term",
         "bucket",
@@ -561,80 +584,96 @@ def _finalize_encoded(pre: "DataFrame", block_size: int) -> DataFrame:
         F.col("min_doc").cast("long").alias("min_doc"),
         F.col("max_doc").cast("long").alias("max_doc"),
         F.col("e.max_impact").alias("max_impact"),
-        F.col("e.gaps").alias("gaps"),
-        F.col("e.tfs").alias("tfs"),
-        F.col("e.skips").alias("skips"),
-        F.col("e.blockmax").alias("blockmax"),
-        F.col("e.blockmaxtf").alias("blockmaxtf"),
+        *[F.col(f"e.{c}").alias(c) for c in _BLOB_COLS if c in encoded],
     )
 
 
+def _decode_positions(poss: bytes, tfs: np.ndarray) -> list:
+    """Per posting, its absolute positions: the inverse of the encoder's
+    within-doc deltas (a cumsum that restarts at every doc)."""
+    flat = varbyte_decode(poss, count=int(tfs.sum())).astype(np.int64)
+    run = np.cumsum(flat)
+    ends = np.cumsum(tfs)
+    starts = ends - tfs
+    absolute = run - np.repeat(run[starts] - flat[starts], tfs)
+    return [a.tolist() for a in np.split(absolute, ends[:-1])]
+
+
 def decode_index_df(
-    index_df: DataFrame, keep_cols: tuple[str, ...] = ("term", "df")
+    index_df: DataFrame,
+    keep_cols: tuple[str, ...] = ("term", "df"),
+    positions: bool = False,
 ) -> DataFrame:
     """Distributed decode of INDEX_SCHEMA rows back to tf rows:
-    ``(*keep_cols, doc_id, tf)``.
+    ``(*keep_cols, doc_id, tf)``, plus ``positions array<long>`` with
+    ``positions=True`` (the row must then carry ``poss``). Without it
+    ``poss`` is never selected, so a scan of a positional index leaves
+    the positions payload on disk.
 
     Each encoded (term, segment) row is decoded exactly once inside a
     scalar pandas UDF, then exploded JVM-side — the inverse of
     :func:`encode_tf`, running on executors (never ``collect()``s
-    postings to the driver). Shared by the segment compactor and the
-    relational batch scorer.
+    postings to the driver). The one cluster decoder: the segment
+    compactor, the relational batch scorer and the positional query
+    shapes all read through it.
     """
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import ArrayType
 
-    from .postings_codec import decode_postings
+    out_cols = {"doc_id": ArrayType(LongType()), "tf": ArrayType(LongType())}
+    if positions:
+        out_cols["positions"] = ArrayType(ArrayType(LongType()))
 
-    dec_type = StructType(
-        [
-            StructField("doc_ids", ArrayType(LongType()), False),
-            StructField("tfs_arr", ArrayType(LongType()), False),
-        ]
-    )
-
-    @pandas_udf(dec_type)
+    @pandas_udf(StructType([StructField(c, t, False) for c, t in out_cols.items()]))
     def decode_udf(
-        gaps: pd.Series, tfs: pd.Series, n: pd.Series, skips: pd.Series, bs: pd.Series
+        gaps: pd.Series, tfs: pd.Series, n: pd.Series, skips: pd.Series,
+        bs: pd.Series, *poss: pd.Series,
     ) -> pd.DataFrame:
-        out_ids, out_tfs = [], []
-        for g, t, nn, sk, b in zip(gaps, tfs, n, skips, bs):
+        out = []
+        for g, t, nn, sk, b, *p in zip(gaps, tfs, n, skips, bs, *poss):
             ids, tf = decode_postings(
                 gaps=bytes(g), tfs=bytes(t), n=int(nn), skips=bytes(sk), block_size=int(b)
             )
-            out_ids.append(ids.tolist())
-            out_tfs.append(tf.tolist())
-        return pd.DataFrame({"doc_ids": out_ids, "tfs_arr": out_tfs})
+            row = (ids.tolist(), tf.tolist())
+            if p:
+                row += (_decode_positions(bytes(p[0]), tf),)
+            out.append(row)
+        return pd.DataFrame(out, columns=list(out_cols))
 
+    codec = ["gaps", "tfs", "n", "skips", "block_size"] + (["poss"] if positions else [])
     return (
-        index_df.select(
-            *keep_cols,
-            decode_udf("gaps", "tfs", "n", "skips", "block_size").alias("d"),
-        )
-        .select(*keep_cols, F.explode(F.arrays_zip("d.doc_ids", "d.tfs_arr")).alias("p"))
-        .select(
-            *keep_cols,
-            F.col("p.doc_ids").alias("doc_id"),
-            F.col("p.tfs_arr").alias("tf"),
-        )
+        index_df.select(*keep_cols, decode_udf(*codec).alias("d"))
+        .select(*keep_cols, F.explode(F.arrays_zip(*[f"d.{c}" for c in out_cols])).alias("p"))
+        .select(*keep_cols, *[F.col(f"p.{c}").alias(c) for c in out_cols])
     )
 
 
-def write_index(index_df: DataFrame, path: str) -> None:
-    """Persist partitioned by bucket — query-time term lookups prune to the
-    buckets of the query's terms (partition pruning on the filter); rows
-    term-sorted within files so parquet row-group stats prune further.
+def write_index(index_df: DataFrame, path: str, dynamic: bool = False) -> None:
+    """The one postings-table writer. Persist partitioned by bucket —
+    query-time term lookups prune to the buckets of the query's terms
+    (partition pruning on the filter); rows term-sorted within files so
+    parquet row-group stats prune further.
 
-    ``encode_tf`` output is already hash-partitioned by bucket, so no
+    The encoders' output is already hash-partitioned by bucket, so no
     repartition here; the in-partition sort leads with ``bucket`` so the
     dynamic-partition writer's required ordering is satisfied and it
-    inserts no extra sort of its own."""
-    (
-        index_df.sortWithinPartitions("bucket", "term", "segment")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(path)
-    )
+    inserts no extra sort of its own.
+
+    ``dynamic=True`` overwrites only the buckets present in
+    ``index_df``: the resumable builders write the missing buckets next
+    to the landed ones. Whole-index writes keep the default, which
+    replaces every bucket, so a bucket that lost all its terms in a
+    rebuild cannot survive from the old index.
+
+    Min/max statistics are off for the binary payload columns: nothing
+    filters on their bytes, and on small indexes those footer entries
+    weigh as much as a sixth of the postings files."""
+    w = index_df.sortWithinPartitions("bucket", "term", "segment").write.mode("overwrite")
+    if dynamic:
+        w = w.option("partitionOverwriteMode", "dynamic")
+    for c in _BLOB_COLS:
+        w = w.option(f"parquet.column.statistics.enabled#{c}", "false")
+    w.partitionBy("bucket").parquet(path)
 
 
 def read_index(spark, path: str) -> DataFrame:

@@ -16,10 +16,13 @@ Every operator here exists in two shapes:
   match → BM25), which doubles as the DuckDB-oracle-checkable contract
   query, and
 * for phrase queries an **index-backed** form over a persisted positional
-  index (delta+varbyte doc gaps AND within-doc position deltas, bucket-
-  partitioned like the main index), which is the serving path: the scan
-  prunes to the phrase terms' buckets, positions decode executor-side,
-  and the adjacency intersection is ONE shuffle on (doc_id, anchor).
+  index — the main compressed index format plus a ``poss`` column of
+  within-doc position deltas, written by the same encoder and writer
+  (:mod:`operators.compressed_index`) — which is the serving path: the
+  scan prunes to the phrase terms' buckets, positions decode
+  executor-side through the one index decoder, and the adjacency
+  intersection is ONE shuffle on (doc_id, anchor). Scoring-only shapes
+  never read ``poss``.
 
 Scale posture (10^12 docs): phrase/proximity matching only ever touches
 postings of the query's terms (bucket partition pruning + term row-group
@@ -36,33 +39,27 @@ import json
 import re
 from typing import Sequence
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    BinaryType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
 
-from ..constants import BM25_B, BM25_K1, DEFAULT_TOP_K
+from ..constants import BM25_B, BM25_K1, DEFAULT_TOP_K, TERM_BUCKETS
 from ..functions import fsio
 from ..functions.analyzer import analyze
 from .bm25 import bm25_term_scores, sum_in_term_order
-from .compressed_index import write_doclens
-from .index_build import corpus_stats, doc_lengths, term_bucket_expr, term_frequencies
-from .postings_codec import varbyte_decode, varbyte_encode
+from .compressed_index import (
+    build_compressed_index,
+    decode_index_df,
+    sample_hot_terms,
+    tf_doclen,
+    write_doclens,
+    write_index,
+)
+from .index_build import corpus_stats, doc_lengths, term_frequencies
 
 #: tokens produced by the analyzer ([a-z0-9가-힣]+) contain no SQL LIKE
 #: metacharacters or quotes, so they embed directly into oracle strings;
 #: enforced before any interpolation.
 _TOKEN_OK = re.compile(r"[a-z0-9가-힣]+\Z")
-
-TERM_BUCKETS_POS = 64  #: positional index is sparser than the tf index
 
 
 def _checked_terms(terms: Sequence[str]) -> list[str]:
@@ -889,137 +886,19 @@ def sql_bool_topk(
 # ----------------------------------------------------- positional index
 
 
-POS_INDEX_SCHEMA = StructType(
-    [
-        StructField("term", StringType(), False),
-        StructField("bucket", LongType(), False),
-        StructField("segment", LongType(), False),
-        StructField("df", LongType(), False),
-        StructField("n", LongType(), False),
-        StructField("doc_gaps", BinaryType(), False),
-        StructField("tfs", BinaryType(), False),
-        StructField("poss", BinaryType(), False),
-    ]
-)
-
-POS_SALT_THRESHOLD = 100_000  #: same role as the main index's threshold
-POS_SALT_FANOUT = 32
-
-
 def build_positional_index(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    buckets: int = TERM_BUCKETS_POS,
-    salt_threshold: int = POS_SALT_THRESHOLD,
-    salt_fanout: int = POS_SALT_FANOUT,
-    hot: "tuple[list, int] | None" = None,
+    buckets: int = TERM_BUCKETS,
+    **index_kwargs,
 ) -> DataFrame:
-    """Positional postings: per (term, segment) row, doc_id deltas,
-    per-doc position counts (== tf), and within-doc position deltas, all
-    varbyte. ``df`` is the exact total across a term's segments (window
-    sum, same recipe as the main index encoder).
-
-    Hot terms are doc_id-range segmented (sampled Zipf-head detection
-    like ``compressed_index.encode_tf``) so a head term's positions
-    never serialize through one task; the phrase intersection explodes
-    per (term, segment) row, so segmentation is transparent to readers.
-    """
-    pos = token_positions(docs, id_col, text_col)
-
-    if hot is None:
-        from .compressed_index import sample_hot_terms
-
-        # sample over (term, doc_id) pair counts — identical hot
-        # decisions to sampling the grouped frame directly
-        pairs = pos.groupBy("term", "doc_id").agg(F.count(F.lit(1)).alias("tf"))
-        hot = sample_hot_terms(pairs, salt_threshold)
-    hot_terms, max_doc_global = hot
-    seg_range = max(1, (max_doc_global + 1 + salt_fanout - 1) // salt_fanout)
-    if hot_terms:
-        seg = F.when(
-            F.col("term").isin(hot_terms),
-            (F.col("doc_id") / F.lit(seg_range)).cast("long"),
-        ).otherwise(F.lit(0).cast("long"))
-    else:
-        seg = F.lit(0).cast("long")
-
-    # ONE exchange of the raw (doc_id, pos) occurrences straight into
-    # (term, segment) encoder groups: the per-doc position grouping and
-    # the doc sort both happen inside the encoder as a vectorized numpy
-    # lexsort + run-length — the r5 shape paid a (term, doc_id)
-    # collect_list shuffle AND a (term, segment) regroup of the same
-    # payload back to back
-    grouped = pos.withColumn("segment", seg).groupBy("term", "segment").agg(
-        F.collect_list(F.struct("doc_id", "pos")).alias("occs")
-    )
-    arrays = grouped.select(
-        "term",
-        "segment",
-        F.transform("occs", lambda s: s["doc_id"]).alias("occ_ids"),
-        F.transform("occs", lambda s: s["pos"]).alias("occ_pos"),
-    )
-
-    enc_type = StructType(
-        [
-            StructField("df_local", LongType(), False),
-            StructField("n", LongType(), False),
-            StructField("doc_gaps", BinaryType(), False),
-            StructField("tfs", BinaryType(), False),
-            StructField("poss", BinaryType(), False),
-        ]
-    )
-
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf(enc_type)
-    def enc_udf(occ_ids: pd.Series, occ_pos: pd.Series) -> pd.DataFrame:
-        out = []
-        for ids, poss in zip(occ_ids, occ_pos):
-            ids = np.asarray(ids, dtype=np.int64)
-            poss = np.asarray(poss, dtype=np.int64)
-            order = np.lexsort((poss, ids))
-            ids, poss = ids[order], poss[order]
-            uids, starts, counts = np.unique(
-                ids, return_index=True, return_counts=True
-            )
-            gaps = np.diff(uids, prepend=np.int64(0))
-            # within-doc deltas, first position of each doc absolute
-            flat = poss.copy()
-            flat[1:] -= poss[:-1]
-            flat[starts] = poss[starts]
-            out.append(
-                (
-                    int(uids.size),
-                    int(uids.size),
-                    varbyte_encode(gaps),
-                    varbyte_encode(counts.astype(np.int64)),
-                    varbyte_encode(flat),
-                )
-            )
-        return pd.DataFrame(out, columns=["df_local", "n", "doc_gaps", "tfs", "poss"])
-
-    encoded = arrays.select(
-        "term",
-        term_bucket_expr("term", buckets).alias("bucket"),
-        "segment",
-        enc_udf("occ_ids", "occ_pos").alias("e"),
-    ).repartition("bucket")
-    from pyspark.sql import Window
-
-    # (bucket, term) window over the bucket partitioning adds NO
-    # exchange (a term lives in one bucket) and the writer reuses the
-    # same partitioning — two exchanges end to end vs the r5 four
-    df_col = F.sum("e.df_local").over(Window.partitionBy("bucket", "term"))
-    return encoded.select(
-        "term",
-        "bucket",
-        F.col("segment").cast("long").alias("segment"),
-        df_col.cast("long").alias("df"),
-        F.col("e.n").alias("n"),
-        F.col("e.doc_gaps").alias("doc_gaps"),
-        F.col("e.tfs").alias("tfs"),
-        F.col("e.poss").alias("poss"),
+    """The positional index: the main compressed index format plus the
+    ``poss`` column — :func:`compressed_index.build_compressed_index`
+    with ``positions=True`` (same encoder, salting, df and bucket
+    layout). ``index_kwargs`` pass through (``stats``, ``hot``, ...)."""
+    return build_compressed_index(
+        docs, id_col, text_col, buckets=buckets, positions=True, **index_kwargs
     )
 
 
@@ -1028,9 +907,9 @@ def write_positional_index(
     path: str,
     id_col: str = "doc_id",
     text_col: str = "text",
-    buckets: int = TERM_BUCKETS_POS,
+    buckets: int = TERM_BUCKETS,
 ) -> dict:
-    """Persist postings (bucket-partitioned, term-sorted in-file) + the
+    """Persist postings (:func:`compressed_index.write_index`) + the
     doclens sidecar + stats.json — same layout contract as the main
     index dir so serving code treats both uniformly.
 
@@ -1040,114 +919,22 @@ def write_positional_index(
     sampled hot set (same overlap recipe as build_index_resumable)."""
     from concurrent.futures import ThreadPoolExecutor
 
-    from .compressed_index import sample_hot_terms
-
-    per_doc_groups = token_positions(docs, id_col, text_col).groupBy(
-        "term", "doc_id"
-    ).agg(F.count(F.lit(1)).alias("tf"))
     with ThreadPoolExecutor(max_workers=2) as pool:
-        f_hot = pool.submit(sample_hot_terms, per_doc_groups, POS_SALT_THRESHOLD)
+        f_hot = pool.submit(sample_hot_terms, tf_doclen(docs, id_col, text_col))
         stats = write_doclens(docs, f"{path}/doclens", id_col, text_col)
         hot = f_hot.result()
 
-    idx = build_positional_index(docs, id_col, text_col, buckets, hot=hot)
-    (
-        # already bucket-partitioned by the builder; bucket-led sort
-        # keeps term-sorted row groups without a writer-added sort
-        idx.sortWithinPartitions("bucket", "term", "segment")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(f"{path}/postings")
+    idx = build_positional_index(
+        docs, id_col, text_col, buckets,
+        stats=(stats["n_docs"], stats["avgdl"]), hot=hot,
     )
+    write_index(idx, f"{path}/postings")
     # the index dir is self-describing: serving reads the bucket count it
     # was WRITTEN with, so a caller can never prune with a mismatched
     # modulus (which would silently drop postings)
     stats = {**stats, "buckets": buckets}
     fsio.write_text(fsio.join(path, "stats.json"), json.dumps(stats), docs.sparkSession)
     return stats
-
-
-def decode_positional(index_df: DataFrame) -> DataFrame:
-    """Executor-side decode of POS_INDEX_SCHEMA rows to
-    ``(term, df, doc_id, positions array<long>)`` — the inverse of the
-    encoder; never collects postings to the driver."""
-    from pyspark.sql.functions import pandas_udf
-
-    dec_type = StructType(
-        [
-            StructField("doc_ids", ArrayType(LongType()), False),
-            StructField("pos_lists", ArrayType(ArrayType(LongType())), False),
-        ]
-    )
-
-    @pandas_udf(dec_type)
-    def dec_udf(
-        doc_gaps: pd.Series, tfs: pd.Series, poss: pd.Series, n: pd.Series
-    ) -> pd.DataFrame:
-        out_ids, out_pos = [], []
-        for g, t, p, nn in zip(doc_gaps, tfs, poss, n):
-            nn = int(nn)
-            ids = np.cumsum(varbyte_decode(bytes(g), count=nn).astype(np.int64))
-            tf_arr = varbyte_decode(bytes(t), count=nn).astype(np.int64)
-            flat = varbyte_decode(bytes(p), count=int(tf_arr.sum())).astype(np.int64)
-            plists, off = [], 0
-            for c in tf_arr:
-                plists.append(np.cumsum(flat[off : off + c]).tolist())
-                off += c
-            out_ids.append(ids.tolist())
-            out_pos.append(plists)
-        return pd.DataFrame({"doc_ids": out_ids, "pos_lists": out_pos})
-
-    return (
-        index_df.select(
-            "term", "df", dec_udf("doc_gaps", "tfs", "poss", "n").alias("d")
-        )
-        .select("term", "df", F.explode(F.arrays_zip("d.doc_ids", "d.pos_lists")).alias("p"))
-        .select(
-            "term",
-            "df",
-            F.col("p.doc_ids").alias("doc_id"),
-            F.col("p.pos_lists").alias("positions"),
-        )
-    )
-
-
-def decode_doc_tfs(index_df: DataFrame) -> DataFrame:
-    """Executor-side decode to ``(term, df, doc_id, tf)`` WITHOUT
-    positions: the ``poss`` column is never selected, so Parquet column
-    pruning skips the (largest) positions payload entirely — the right
-    scan for scoring-only queries (prefix/wildcard/fuzzy/bool), which
-    need tf but not where the tokens sit."""
-    from pyspark.sql.functions import pandas_udf
-
-    dec_type = StructType(
-        [
-            StructField("doc_ids", ArrayType(LongType()), False),
-            StructField("tfs_arr", ArrayType(LongType()), False),
-        ]
-    )
-
-    @pandas_udf(dec_type)
-    def dec_udf(doc_gaps: pd.Series, tfs: pd.Series, n: pd.Series) -> pd.DataFrame:
-        out_ids, out_tfs = [], []
-        for g, t, nn in zip(doc_gaps, tfs, n):
-            nn = int(nn)
-            ids = np.cumsum(varbyte_decode(bytes(g), count=nn).astype(np.int64))
-            tf_arr = varbyte_decode(bytes(t), count=nn).astype(np.int64)
-            out_ids.append(ids.tolist())
-            out_tfs.append(tf_arr.tolist())
-        return pd.DataFrame({"doc_ids": out_ids, "tfs_arr": out_tfs})
-
-    return (
-        index_df.select("term", "df", dec_udf("doc_gaps", "tfs", "n").alias("d"))
-        .select("term", "df", F.explode(F.arrays_zip("d.doc_ids", "d.tfs_arr")).alias("p"))
-        .select(
-            "term",
-            "df",
-            F.col("p.doc_ids").alias("doc_id"),
-            F.col("p.tfs_arr").alias("tf"),
-        )
-    )
 
 
 #: per-(session, index_dir, stats.json freshness) serving state:
@@ -1181,7 +968,7 @@ def _serve_state(spark: SparkSession, index_dir: str) -> tuple:
     stats = json.loads(fsio.read_text(fsio.join(index_dir, "stats.json"), spark))
     out = (
         stats,
-        int(stats.get("buckets", TERM_BUCKETS_POS)),
+        int(stats.get("buckets", TERM_BUCKETS)),
         spark.read.parquet(f"{index_dir}/postings"),
         spark.read.parquet(f"{index_dir}/doclens"),
     )
@@ -1207,7 +994,7 @@ def _index_buckets(index_dir: str, spark: SparkSession | None = None) -> int:
     if spark is not None:
         return _serve_state(spark, index_dir)[1]
     stats = json.loads(fsio.read_text(fsio.join(index_dir, "stats.json"), spark))
-    return int(stats.get("buckets", TERM_BUCKETS_POS))
+    return int(stats.get("buckets", TERM_BUCKETS))
 
 
 def _load_posts(
@@ -1229,7 +1016,7 @@ def _load_posts(
         _serve_state(spark, index_dir)[2]
         .filter(F.col("bucket").isin(bkts) & F.col("term").isin(list(uterms)))
     )
-    return decode_positional(idx) if with_positions else decode_doc_tfs(idx)
+    return decode_index_df(idx, positions=with_positions)
 
 
 def _scored_from_tfs(
@@ -1300,7 +1087,7 @@ def phrase_topk_indexed(
     posts = _load_posts(spark, index_dir, uterms, bkts)
     occ = posts.select("term", "doc_id", F.explode("positions").alias("pos"))
     matched = _anchor_match(occ, slots, distinct=False)
-    # scoring branch re-reads ONLY doc_gaps+tfs (tf-only decode): the r5
+    # scoring branch re-reads ONLY gaps+tfs (tf-only decode): the r5
     # shape consumed the positional decode twice, paying the positions
     # payload scan + heavy decode in both plan branches
     tf = _load_posts(spark, index_dir, uterms, bkts, with_positions=False)
@@ -1379,7 +1166,7 @@ def _vocab_topk_indexed(
     a hash bucket). Postings files are term-sorted in-file, so a prefix
     predicate prunes row groups via Parquet min/max stats; the
     positions column is never read (tf-only decode), and only matched
-    rows' doc_gaps/tfs binaries decode.
+    rows' gaps/tfs binaries decode.
 
     ``max_expansions`` keeps the HIGHEST-df expanded terms (ties term
     asc) exactly like the relational rewrite — computed as a distinct
@@ -1396,7 +1183,7 @@ def _vocab_topk_indexed(
             .select("term")
         )
         raw = raw.join(F.broadcast(top_terms), "term", "left_semi")
-    tf = decode_doc_tfs(raw)
+    tf = decode_index_df(raw)
     return _scored_from_tfs(spark, index_dir, tf, None, top_k, k1, b)
 
 

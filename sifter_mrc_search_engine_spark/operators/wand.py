@@ -45,6 +45,14 @@ from .postings_codec import (
     varbyte_decode,
 )
 
+#: the postings columns the BM25 kernels here read (:class:`_Cursor`,
+#: :func:`term_impacts`, :func:`wand_topk`): serving scans select only
+#: these, so a positional index's ``poss`` is never read for them
+KERNEL_COLUMNS = (
+    "term", "df", "n", "block_size", "max_doc", "max_impact",
+    "gaps", "tfs", "skips", "blockmax",
+)
+
 
 class _Cursor:
     """Lazy block-decoding cursor over one encoded posting segment."""

@@ -35,6 +35,7 @@ from ..constants import TERM_BUCKETS
 from ..operators.compressed_index import (
     build_compressed_index,
     release_build_cache,
+    write_index,
 )
 from ..functions import fsio
 from ..functions.analyzer import tokenize_expr
@@ -148,6 +149,9 @@ def build_index_resumable(
                 docs, f"{index_dir}/doclens", id_col, text_col
             )
             hot = f_hot.result()
+        # the bucket modulus rides stats.json: searchers prune with the
+        # modulus the index was BUILT with, never a caller's guess
+        stats = {**stats, "buckets": buckets}
         fsio.write_text(fsio.join(index_dir, "stats.json"), json.dumps(stats), spark)
         _append_manifest(
             index_dir,
@@ -166,6 +170,11 @@ def build_index_resumable(
     else:
         stats = json.loads(fsio.read_text(fsio.join(index_dir, "stats.json"), spark))
         fp = input_fingerprint(docs, id_col)
+        if int(stats.get("buckets", buckets)) != buckets:
+            raise ValueError(
+                f"index at {index_dir} was started with {stats['buckets']} "
+                f"buckets, not {buckets}; refusing to mix"
+            )
 
     stale = [m for m in manifest if m.get("input_fingerprint") not in (None, fp)]
     if stale:
@@ -201,16 +210,7 @@ def build_index_resumable(
         hot=hot,
         **index_kwargs,
     )
-    (
-        # encode_tf output is already bucket-partitioned and pruned to
-        # the missing buckets; bucket-led sort keeps term-sorted row
-        # groups (parquet min/max pruning) without a writer-added sort
-        idx.sortWithinPartitions("bucket", "term", "segment")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket")
-        .parquet(f"{index_dir}/postings")
-    )
+    write_index(idx, f"{index_dir}/postings", dynamic=True)
     release_build_cache()
     wall_ms = int((time.monotonic() - t1) * 1000)
 
@@ -355,13 +355,7 @@ def build_fielded_index_resumable(
                 tf, n_docs, 1.0, buckets=buckets, with_impacts=False,
                 only_buckets=missing,
             )
-            (
-                idx.sortWithinPartitions("bucket", "term", "segment")
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("bucket")
-                .parquet(f"{index_dir}/postings")
-            )
+            write_index(idx, f"{index_dir}/postings", dynamic=True)
             wall_ms = int((time.monotonic() - t1) * 1000)
             per_bucket = {
                 r["bucket"]: r

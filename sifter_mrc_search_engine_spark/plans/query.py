@@ -49,7 +49,13 @@ from ..operators.compressed_index import (
     charge_preload,
     check_preload_budget,
 )
-from ..operators.wand import accumulate_topk, packed_ids, term_impacts, wand_topk
+from ..operators.wand import (
+    KERNEL_COLUMNS,
+    accumulate_topk,
+    packed_ids,
+    term_impacts,
+    wand_topk,
+)
 
 _DOCLEN_CACHE: dict[tuple, tuple] = {}
 
@@ -139,6 +145,7 @@ class _Snapshot(NamedTuple):
     doclens: DataFrame
     n_docs: int
     avgdl: float
+    buckets: int  # the bucket modulus the index was built with
     doclen: object  # driver norms; None until first needed
 
 
@@ -149,7 +156,6 @@ class IndexSearcher:
         self,
         spark: SparkSession,
         index_dir: str,
-        buckets: int = TERM_BUCKETS,
         preload: bool = False,
         norms: str = "preload",
         preload_budget_bytes: int | None = DEFAULT_PRELOAD_BUDGET_BYTES,
@@ -191,7 +197,6 @@ class IndexSearcher:
             raise ValueError("preload=True needs driver norms (norms='preload')")
         self.spark = spark
         self.index_dir = index_dir
-        self.buckets = buckets
         self.norms_mode = norms
         self._stats_path = fsio.join(index_dir, "stats.json")
         self._snap = self._resolve(fsio.freshness_token(self._stats_path, spark))
@@ -208,6 +213,8 @@ class IndexSearcher:
             self.spark.read.parquet(f"{self.index_dir}/doclens"),
             int(stats["n_docs"]),
             float(stats["avgdl"]),
+            # dirs written before stats.json recorded it used the default
+            int(stats.get("buckets", TERM_BUCKETS)),
             None,
         )
 
@@ -264,9 +271,10 @@ class IndexSearcher:
         the decoded store and the norms share ONE budget."""
         snap = self._snap
         what = f"postings of {self.index_dir}"
-        spent = check_preload_budget(snap.postings, what, budget)
+        postings = snap.postings.select(*KERNEL_COLUMNS)
+        spent = check_preload_budget(postings, what, budget)
         store = self._impacts(
-            snap, snap.postings.collect(), None if budget is None else budget - spent, what
+            snap, postings.collect(), None if budget is None else budget - spent, what
         )
         for ids, imp in store.values():
             ids.flags.writeable = imp.flags.writeable = False
@@ -285,7 +293,9 @@ class IndexSearcher:
 
     def candidate_rows(self, terms: Sequence[str], snap: _Snapshot | None = None) -> list:
         """Postings fetch for a term set: the bucket- and term-pruned scan
-        of ``snap`` (default: the current snapshot).
+        of ``snap`` (default: the current snapshot), reading only the
+        columns the kernels use — a positional index's ``poss`` stays on
+        disk.
 
         Bucket routing is computed DRIVER-SIDE (functions/xxhash.py is
         bit-identical to the JVM xxhash64) so the pruned scan is the only
@@ -294,10 +304,12 @@ class IndexSearcher:
         tset = sorted(set(terms))
         if not tset:
             return []
-        bks = sorted({term_bucket(t, self.buckets) for t in tset})
+        snap = snap or self._snapshot()
+        bks = sorted({term_bucket(t, snap.buckets) for t in tset})
         return (
-            (snap or self._snapshot()).postings.filter(F.col("bucket").isin(bks))
+            snap.postings.filter(F.col("bucket").isin(bks))
             .filter(F.col("term").isin(tset))
+            .select(*KERNEL_COLUMNS)
             .collect()
         )
 
@@ -441,7 +453,7 @@ class IndexSearcher:
         mdf = _local_frame(self.spark, mapping, (("query_id", "int"), ("set_id", "int")))
         all_terms = sorted({t for _, _, t in slot_pairs})
         snap = self._snapshot()
-        bks = sorted({term_bucket(t, self.buckets) for t in all_terms})
+        bks = sorted({term_bucket(t, snap.buckets) for t in all_terms})
         decoded = decode_index_df(
             snap.postings.filter(F.col("bucket").isin(bks)).filter(
                 F.col("term").isin(all_terms)

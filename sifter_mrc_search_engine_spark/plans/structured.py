@@ -47,7 +47,9 @@ class StructuredSearchService:
     """Dispatches structured query dicts to the index-served operators.
 
     ``index_dir`` is a positional index written by
-    :func:`..operators.positional.write_positional_index`; results are
+    :func:`..operators.positional.write_positional_index` — the main
+    index format plus a ``poss`` column, so the same dir also serves
+    plain BM25 through ``IndexSearcher``; results are
     ``{"hits": [{"doc_id": int, "score": float}, ...]}`` in engine rank
     order (score desc, doc_id asc — the repo-wide tie-break)."""
 

@@ -36,6 +36,7 @@ from ..operators.compressed_index import (
     DEFAULT_PRELOAD_BUDGET_BYTES,
     build_compressed_index,
     check_preload_budget,
+    write_index,
 )
 from ..operators import bm25
 from ..operators.wand import wand_topk
@@ -56,7 +57,7 @@ def _write_segment(batch_df: DataFrame, seg_dir: str, buckets: int) -> None:
     stats = {"n_docs": n_docs, "dl_sum": dl_sum,
              "avgdl": (dl_sum / n_docs) if n_docs else 0.0}
     idx = build_compressed_index(batch_df, buckets=buckets, stats=(n_docs, stats["avgdl"]))
-    idx.write.mode("overwrite").partitionBy("bucket").parquet(f"{seg_dir}/postings")
+    write_index(idx, f"{seg_dir}/postings")
     fsio.write_text(fsio.join(seg_dir, "stats.json"), json.dumps(stats), spark)
     fsio.write_text(
         fsio.join(seg_dir, "_SEGMENT_COMMITTED"), str(int(time.time() * 1000)), spark
@@ -300,9 +301,8 @@ def compact_segments(
     # re-encode from the unioned tf (join doc_len back in)
     tf2 = tf.join(spark.read.parquet(dl_path), "doc_id")
     idx = encode_tf(tf2, stats["n_docs"], stats["avgdl"], buckets=buckets)
-    idx.write.mode("overwrite").partitionBy("bucket").parquet(
-        f"{index_dir}/compacted/postings"
-    )
+    write_index(idx, f"{index_dir}/compacted/postings")
+    stats["buckets"] = buckets  # the compacted dir serves as a plain index
     fsio.write_text(
         fsio.join(index_dir, "compacted", "stats.json"), json.dumps(stats), spark
     )
@@ -636,9 +636,7 @@ def compact_fielded_segments(
     tf = decode_index_df(post, keep_cols=("term", "_seg"))
     tf = tf.join(winners, ["doc_id", "_seg"]).drop("_seg")
     idx = encode_tf(tf, stats["n_docs"], 1.0, buckets=buckets, with_impacts=False)
-    idx.write.mode("overwrite").partitionBy("bucket").parquet(
-        f"{out_dir}/postings"
-    )
+    write_index(idx, f"{out_dir}/postings")
     # rebuild the union-df sidecar from the compacted postings: rows per
     # (prefixed term, doc) decode uniquely, so base-term df is a count
     # over distinct (base term, doc) pairs

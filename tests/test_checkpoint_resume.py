@@ -52,6 +52,9 @@ def test_interrupted_then_resumed_equals_uninterrupted(spark, docs, tmp_path_fac
     assert len(r1["built_buckets"]) == 3
     m1 = read_manifest(part_dir)
     assert {m.get("kind") for m in m1} >= {"doclens", None}
+    # stats.json records the modulus; a resume with another one is refused
+    with pytest.raises(ValueError, match="buckets"):
+        build_index_resumable(docs, part_dir, buckets=2 * BUCKETS)
 
     # resume: completed buckets are NOT recomputed
     r2 = build_index_resumable(docs, part_dir, buckets=BUCKETS)
@@ -105,7 +108,7 @@ def searcher(spark, index_dir, request):
     """The bucket-pruned scan searcher; tests parametrize it indirectly
     with ``True`` to serve from the preloaded impact store instead."""
     preload = getattr(request, "param", False)
-    return IndexSearcher(spark, index_dir, buckets=BUCKETS, preload=preload)
+    return IndexSearcher(spark, index_dir, preload=preload)
 
 
 QUERIES = [
@@ -160,7 +163,7 @@ def test_join_norms_serves_without_driver_doclens(spark, docs, searcher, tmp_pat
     d = str(tmp_path_factory.mktemp("idx_join"))
     build_index_resumable(docs, d, buckets=BUCKETS)
     query_mod.invalidate_norms_cache()
-    s = IndexSearcher(spark, d, buckets=BUCKETS, norms="join")
+    s = IndexSearcher(spark, d, norms="join")
     for q in QUERIES:
         got = s.search(q, top_k=10)
         exp = searcher.search(q, top_k=10)
@@ -215,16 +218,16 @@ def test_preloaded_equals_scan_bitwise(spark, index_dir, id_space_dirs):
     """The decode-once impact store returns exactly (==, no tolerance)
     what the scan path returns, on packed, negative and sparse ids —
     and remapping ids monotonically only remaps the answers."""
-    scan = IndexSearcher(spark, index_dir, buckets=BUCKETS)
-    pre = IndexSearcher(spark, index_dir, buckets=BUCKETS, preload=True)
+    scan = IndexSearcher(spark, index_dir)
+    pre = IndexSearcher(spark, index_dir, preload=True)
     base = [pre.search(q, top_k=10) for q in QUERIES]
     assert base == [scan.search(q, top_k=10) for q in QUERIES]
     assert any(base)
     assert pre.search_many_local(QUERIES) == scan.search_many_local(QUERIES)
     for name, (expr, shift, stride) in ID_SPACES.items():
         d = id_space_dirs[name]
-        scan = IndexSearcher(spark, d, buckets=BUCKETS)
-        pre = IndexSearcher(spark, d, buckets=BUCKETS, preload=True)
+        scan = IndexSearcher(spark, d)
+        pre = IndexSearcher(spark, d, preload=True)
         assert isinstance(pre.doclen, dict), name
         got = [pre.search(q, top_k=10) for q in QUERIES]
         assert got == [scan.search(q, top_k=10) for q in QUERIES], name
@@ -240,13 +243,13 @@ def test_preloaded_searcher_pins_its_snapshot(spark, docs, tmp_path_factory):
 
     d = str(tmp_path_factory.mktemp("idx_pinned"))
     build_index_resumable(docs, d, buckets=BUCKETS)
-    reference = IndexSearcher(spark, d, buckets=BUCKETS, preload=True)
+    reference = IndexSearcher(spark, d, preload=True)
     before = [reference.search(q, top_k=10) for q in QUERIES]
-    pinned = IndexSearcher(spark, d, buckets=BUCKETS, preload=True)  # not queried yet
+    pinned = IndexSearcher(spark, d, preload=True)  # not queried yet
     shutil.rmtree(d)
     build_index_resumable(docs.filter("doc_id % 3 = 0"), d, buckets=BUCKETS)
     assert [pinned.search(q, top_k=10) for q in QUERIES] == before
-    rebuilt = IndexSearcher(spark, d, buckets=BUCKETS, preload=True)
+    rebuilt = IndexSearcher(spark, d, preload=True)
     assert [rebuilt.search(q, top_k=10) for q in QUERIES] != before
 
 
@@ -305,8 +308,8 @@ def test_search_many_preloaded_equals_scan_equals_search(spark, index_dir, id_sp
     """Exact (==) agreement of the preloaded batch, the scan batch and
     per-question ``search``, on packed, negative and sparse ids."""
     for name, d in [("packed", index_dir), *id_space_dirs.items()]:
-        scan = IndexSearcher(spark, d, buckets=BUCKETS)
-        pre = IndexSearcher(spark, d, buckets=BUCKETS, preload=True)
+        scan = IndexSearcher(spark, d)
+        pre = IndexSearcher(spark, d, preload=True)
         singles = [scan.search(q, top_k=10) for q in QUERIES]
         assert any(singles), name
         assert _by_query(scan.search_many(QUERIES, top_k=10), len(QUERIES)) == singles, name
@@ -330,7 +333,7 @@ def test_join_norms_search_many_is_relational(spark, docs, tmp_path_factory):
 
     d = str(tmp_path_factory.mktemp("idx_join_batch"))
     build_index_resumable(docs, d, buckets=BUCKETS)
-    s = IndexSearcher(spark, d, buckets=BUCKETS, norms="join")
+    s = IndexSearcher(spark, d, norms="join")
     got = _by_query(s.search_many(QUERIES, top_k=10), len(QUERIES))
     assert any(got)
     assert got == _by_query(s.search_many_relational(QUERIES, top_k=10), len(QUERIES))
@@ -351,12 +354,12 @@ def test_search_many_budget_covers_decoded_batch(spark, index_dir, searcher):
     terms = sorted({t for q in QUERIES for t in analyze(q)})
     decoded = 16 * sum(int(r["n"]) for r in searcher.candidate_rows(terms))
     searcher.doclen  # norms cached: the budget below is the batch's alone
-    tight = IndexSearcher(spark, index_dir, buckets=BUCKETS, preload_budget_bytes=decoded - 1)
+    tight = IndexSearcher(spark, index_dir, preload_budget_bytes=decoded - 1)
     with pytest.raises(PreloadBudgetExceeded, match="search_many_relational"):
         tight.search_many(QUERIES, top_k=10)
     with pytest.raises(PreloadBudgetExceeded, match="preload_budget_bytes"):
         tight.search_many_local(QUERIES, top_k=10)
-    exact = IndexSearcher(spark, index_dir, buckets=BUCKETS, preload_budget_bytes=decoded)
+    exact = IndexSearcher(spark, index_dir, preload_budget_bytes=decoded)
     assert exact.search_many_local(QUERIES, top_k=10) == searcher.search_many_local(QUERIES)
     assert _by_query(
         tight.search_many_relational(QUERIES, top_k=10), len(QUERIES)
@@ -371,12 +374,12 @@ def test_scan_searcher_follows_in_place_rebuild(spark, docs, tmp_path_factory):
 
     d = str(tmp_path_factory.mktemp("idx_rebuilt"))
     build_index_resumable(docs, d, buckets=BUCKETS)
-    s = IndexSearcher(spark, d, buckets=BUCKETS)
+    s = IndexSearcher(spark, d)
     before = [s.search(q, top_k=10) for q in QUERIES]
     assert _by_query(s.search_many(QUERIES, top_k=10), len(QUERIES)) == before
     shutil.rmtree(d)
     build_index_resumable(docs.filter("doc_id % 3 = 0"), d, buckets=BUCKETS)
-    fresh = IndexSearcher(spark, d, buckets=BUCKETS)
+    fresh = IndexSearcher(spark, d)
     expected = [fresh.search(q, top_k=10) for q in QUERIES]
     assert expected != before
     assert [s.search(q, top_k=10) for q in QUERIES] == expected
@@ -384,3 +387,62 @@ def test_scan_searcher_follows_in_place_rebuild(spark, docs, tmp_path_factory):
         fresh.search_many(QUERIES, top_k=10), len(QUERIES)
     )
     assert _by_query(s.search_many(QUERIES, top_k=10), len(QUERIES)) == expected
+
+
+def _brute(docs, q):
+    return [(r["doc_id"], r["score"]) for r in bm25_brute_force(docs, q, top_k=10).collect()]
+
+
+def test_searcher_reads_bucket_modulus_from_stats(spark, docs, tmp_path_factory):
+    """The searcher prunes with the bucket modulus the index was built
+    with, read from stats.json: a 16-bucket index opened with no bucket
+    argument answers exactly (the default modulus would route terms to
+    the wrong buckets and drop their postings)."""
+    d = str(tmp_path_factory.mktemp("idx_b16"))
+    build_index_resumable(docs, d, buckets=16)
+    assert json.loads(Path(d, "stats.json").read_text())["buckets"] == 16
+    s = IndexSearcher(spark, d)
+    expected = [_brute(docs, q) for q in QUERIES]
+    assert any(expected)
+    assert [s.search(q, top_k=10) for q in QUERIES] == expected
+    assert _by_query(s.search_many_relational(QUERIES, top_k=10), len(QUERIES)) == expected
+
+
+@pytest.fixture(scope="module")
+def positional_dir(docs, tmp_path_factory):
+    from sifter_mrc_search_engine_spark.operators.positional import write_positional_index
+
+    d = str(tmp_path_factory.mktemp("idx_positional"))
+    write_positional_index(docs, d)
+    return d
+
+
+@pytest.mark.parametrize("preload", SEARCHERS)
+def test_searcher_over_positional_dir_never_reads_positions(
+    spark, docs, positional_dir, monkeypatch, preload
+):
+    """A positional dir is the main format plus ``poss``, so it serves
+    term queries exactly; the searcher's scans read only the kernel's
+    columns and leave ``poss`` on disk."""
+    assert "poss" in spark.read.parquet(f"{positional_dir}/postings").columns
+    expected = [_brute(docs, q) for q in QUERIES]
+    plans = []
+    frame = type(spark.range(1))  # the session's concrete DataFrame class
+    collect = frame.collect
+
+    def spy(df):
+        plans.append(
+            df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+        )
+        return collect(df)
+
+    monkeypatch.setattr(frame, "collect", spy)
+    s = IndexSearcher(spark, positional_dir, preload=preload)
+    assert [s.search(q, top_k=10) for q in QUERIES] == expected
+    assert s.search_many_local(QUERIES) == expected
+    scans = [
+        ln for p in plans for ln in p.splitlines()
+        if ln.strip().startswith("ReadSchema:") and "gaps" in ln
+    ]
+    assert scans
+    assert not any("poss" in ln for ln in scans), scans

@@ -84,7 +84,7 @@ def test_index_build_and_serve_on_remote_style_dir(spark, tmp_path):
     # resume: second run skips everything
     again = build_index_resumable(docs, idx, buckets=4)
     assert again["resumed"] and again["skipped"] == 4
-    hits = IndexSearcher(spark, idx, buckets=4).search("alpha beta", top_k=5)
+    hits = IndexSearcher(spark, idx).search("alpha beta", top_k=5)
     assert len(hits) == 5
 
 

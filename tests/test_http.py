@@ -35,7 +35,7 @@ def door(spark, tmp_path_factory):
         }
         for r in pages.collect()
     }
-    svc = InferenceService(IndexSearcher(spark, idx, buckets=8, preload=True), meta)
+    svc = InferenceService(IndexSearcher(spark, idx, preload=True), meta)
     d = HttpFrontDoor(svc).start()
     yield d
     d.stop()

@@ -85,7 +85,7 @@ def test_batch_scoring_joins_doclens_below_query_fanout(
     idx = str(tmp_path_factory.mktemp("plan_idx_batch"))
     docs = spark.read.parquet(corpus_on_disk)
     build_index_resumable(docs, idx, buckets=16)
-    s = IndexSearcher(spark, idx, buckets=16)
+    s = IndexSearcher(spark, idx)
     q = s.search_many_relational(["bababa dabiba", "bababa gaga"], top_k=5)
     plan = q._sc._jvm.PythonSQLUtils.explainString(q._jdf.queryExecution(), "simple")
     import re
@@ -146,15 +146,15 @@ def test_preload_budget_refuses_oversized_collect(
     build_index_resumable(docs, idx, buckets=8)
 
     with pytest.raises(PreloadBudgetExceeded, match="preload_budget_bytes"):
-        IndexSearcher(spark, idx, buckets=8, preload=True, preload_budget_bytes=64)
+        IndexSearcher(spark, idx, preload=True, preload_budget_bytes=64)
     # the estimate is a real number, not a constant
     est = estimate_collect_bytes(spark.read.parquet(f"{idx}/postings"))
     assert est > 64
     # default budget and explicit None both admit a small index
-    s = IndexSearcher(spark, idx, buckets=8, preload=True)
+    s = IndexSearcher(spark, idx, preload=True)
     assert s._mem
     s2 = IndexSearcher(
-        spark, idx, buckets=8, preload=True, preload_budget_bytes=None
+        spark, idx, preload=True, preload_budget_bytes=None
     )
     assert s2._mem
 
@@ -168,6 +168,7 @@ def test_preload_budget_counts_decoded_store(spark, corpus_on_disk, tmp_path_fac
         PreloadBudgetExceeded,
         estimate_collect_bytes,
     )
+    from sifter_mrc_search_engine_spark.operators.wand import KERNEL_COLUMNS
     from sifter_mrc_search_engine_spark.plans.query import (
         IndexSearcher,
         invalidate_norms_cache,
@@ -176,22 +177,23 @@ def test_preload_budget_counts_decoded_store(spark, corpus_on_disk, tmp_path_fac
     idx = str(tmp_path_factory.mktemp("plan_idx_decoded_budget"))
     build_index_resumable(spark.read.parquet(corpus_on_disk), idx, buckets=8)
     postings = spark.read.parquet(f"{idx}/postings")
-    rows_est = estimate_collect_bytes(postings)
+    # the preload collects only the kernel's columns, and charges those
+    rows_est = estimate_collect_bytes(postings.select(*KERNEL_COLUMNS))
     decoded = 16 * postings.agg(F.sum("n")).first()[0]
     norms_est = estimate_collect_bytes(spark.read.parquet(f"{idx}/doclens"))
     with pytest.raises(PreloadBudgetExceeded, match="decoded postings"):
         IndexSearcher(
-            spark, idx, buckets=8, preload=True,
+            spark, idx, preload=True,
             preload_budget_bytes=rows_est + decoded - 1,
         )
     invalidate_norms_cache(idx)
     with pytest.raises(PreloadBudgetExceeded, match="doclens"):
         IndexSearcher(
-            spark, idx, buckets=8, preload=True,
+            spark, idx, preload=True,
             preload_budget_bytes=rows_est + decoded + norms_est - 1,
         )
     s = IndexSearcher(
-        spark, idx, buckets=8, preload=True,
+        spark, idx, preload=True,
         preload_budget_bytes=rows_est + decoded + norms_est,
     )
     assert s._mem
@@ -250,12 +252,12 @@ def test_preload_budget_guards_lazy_norms(spark, corpus_on_disk, tmp_path_factor
     docs = spark.read.parquet(corpus_on_disk)
     build_index_resumable(docs, idx, buckets=8)
     invalidate_norms_cache(idx)
-    s = IndexSearcher(spark, idx, buckets=8, preload_budget_bytes=16)
+    s = IndexSearcher(spark, idx, preload_budget_bytes=16)
     with pytest.raises(PreloadBudgetExceeded, match="preload_budget_bytes"):
         _ = s.doclen
     # join mode never touches driver norms: same budget is irrelevant
     j = IndexSearcher(
-        spark, idx, buckets=8, norms="join", preload_budget_bytes=16
+        spark, idx, norms="join", preload_budget_bytes=16
     )
     assert j.search("bababa", top_k=3) is not None
 

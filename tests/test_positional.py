@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 import sifter_mrc_search_engine_spark.operators.positional as P
+from sifter_mrc_search_engine_spark.operators.compressed_index import decode_index_df
 
 
 def _ids(df):
@@ -262,7 +263,7 @@ def test_bool_topk(docs):
 
 def test_positional_codec_roundtrip(spark, docs):
     idx = P.build_positional_index(docs)
-    back = P.decode_positional(idx)
+    back = decode_index_df(idx, keep_cols=("term",), positions=True)
     got = {
         (r["term"], r["doc_id"]): list(r["positions"]) for r in back.collect()
     }
@@ -291,11 +292,11 @@ def test_phrase_topk_indexed_parity(spark, docs, tmp_path):
     assert stats["n_docs"] == 7
     for phrase in ["alpha beta", "beta alpha beta", "gamma", "zeta zeta"]:
         a = [
-            (r["doc_id"], round(r["score"], 4))
+            (r["doc_id"], r["score"])
             for r in P.phrase_topk(docs, phrase).collect()
         ]
         b = [
-            (r["doc_id"], round(r["score"], 4))
+            (r["doc_id"], r["score"])
             for r in P.phrase_topk_indexed(spark, path, phrase).collect()
         ]
         assert a == b, phrase
@@ -325,11 +326,11 @@ def test_near_topk_indexed_parity(spark, docs, tmp_path):
     P.write_positional_index(docs, path)
     for q, w in [("alpha beta", 2), ("alpha beta gamma", 3), ("alpha eta", 50)]:
         a = [
-            (r["doc_id"], round(r["score"], 4))
+            (r["doc_id"], r["score"])
             for r in P.near_topk(docs, q, w).collect()
         ]
         b = [
-            (r["doc_id"], round(r["score"], 4))
+            (r["doc_id"], r["score"])
             for r in P.near_topk_indexed(spark, path, q, w).collect()
         ]
         assert a == b, (q, w)
@@ -356,11 +357,11 @@ def test_indexed_serving_reads_bucket_modulus_from_stats(spark, docs, tmp_path):
     stats = P.write_positional_index(docs, path, buckets=7)
     assert stats["buckets"] == 7
     a = [
-        (r["doc_id"], round(r["score"], 4))
+        (r["doc_id"], r["score"])
         for r in P.phrase_topk(docs, "alpha beta").collect()
     ]
     b = [
-        (r["doc_id"], round(r["score"], 4))
+        (r["doc_id"], r["score"])
         for r in P.phrase_topk_indexed(spark, path, "alpha beta").collect()
     ]
     assert a == b and len(a) == 3
@@ -378,12 +379,12 @@ def test_positional_on_real_corpus(spark, sf_dir, tmp_path):
     P.write_positional_index(docs, path)
     served = P.phrase_topk_indexed(spark, path, phrase, top_k=10)
     assert [
-        (r["doc_id"], round(r["score"], 4)) for r in brute.collect()
-    ] == [(r["doc_id"], round(r["score"], 4)) for r in served.collect()]
+        (r["doc_id"], r["score"]) for r in brute.collect()
+    ] == [(r["doc_id"], r["score"]) for r in served.collect()]
 
 
 def _rows(df):
-    return [(r["doc_id"], round(r["score"], 4)) for r in df.collect()]
+    return [(r["doc_id"], r["score"]) for r in df.collect()]
 
 
 def test_indexed_structured_family_parity(spark, docs, tmp_path):
@@ -462,11 +463,83 @@ def test_vocab_scan_never_reads_positions(spark, docs, tmp_path):
         # the postings scan is the one reading the codec columns
         scans = [
             ln for ln in plan.splitlines()
-            if ln.strip().startswith("ReadSchema:") and "doc_gaps" in ln
+            if ln.strip().startswith("ReadSchema:") and "gaps" in ln
         ]
         assert scans, plan[:2000]
         for ln in scans:
             assert "poss" not in ln, ln
+
+
+def test_positional_dir_is_main_format_plus_poss(spark, docs, tmp_path):
+    from sifter_mrc_search_engine_spark.operators.compressed_index import (
+        INDEX_SCHEMA,
+        POSS_FIELD,
+    )
+
+    path = str(tmp_path / "posidx")
+    P.write_positional_index(docs, path)
+    got = {(f.name, f.dataType) for f in spark.read.parquet(f"{path}/postings").schema}
+    want = {(f.name, f.dataType) for f in [*INDEX_SCHEMA.fields, POSS_FIELD]}
+    assert got == want
+
+
+def test_postings_footers_keep_term_stats_only(spark, docs, tmp_path):
+    """The writer keeps parquet min/max statistics on ``term`` (row-group
+    pruning reads them) and writes none for the binary payload columns."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "posidx")
+    P.write_positional_index(docs, path)
+    blobs = {"gaps", "tfs", "skips", "blockmax", "blockmaxtf", "poss"}
+    files = glob.glob(f"{path}/postings/bucket=*/*.parquet")
+    assert files
+    for f in files:
+        meta = pq.ParquetFile(f).metadata
+        for g in range(meta.num_row_groups):
+            cols = {
+                meta.row_group(g).column(i).path_in_schema: meta.row_group(g).column(i)
+                for i in range(meta.num_columns)
+            }
+            assert blobs <= set(cols), sorted(cols)
+            term = cols["term"].statistics
+            assert term is not None and term.has_min_max, f
+            for c in blobs:
+                st = cols[c].statistics
+                assert st is None or not st.has_min_max, (f, c)
+
+
+def test_indexed_positional_on_negative_and_sparse_ids(spark, tmp_path):
+    """Negative and sparse doc ids (two's-complement block restarts, gaps
+    beyond 2^32) through the indexed phrase, slop and near shapes, each
+    == its relational twin. 'alpha' spans more than one 128-posting
+    block, so block restarts at negative ids are exercised."""
+    words = ["alpha", "beta", "gamma", "delta"]
+    rows = [
+        (-5, "alpha beta gamma delta"),
+        (0, "beta alpha beta gamma"),
+        (1 << 40, "gamma beta alpha beta"),
+    ]
+    for i in range(300):
+        text = " ".join(words[(i * k + k // 2) % 4] for k in range(1, 7))
+        rows.append((-(1 << 41) + i * ((1 << 34) + 7), text))
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    path = str(tmp_path / "posidx")
+    P.write_positional_index(docs, path)
+    assert spark.read.parquet(f"{path}/postings").filter("term = 'alpha'").first()["n"] > 128
+
+    for phrase in ["alpha beta", "beta alpha beta", "gamma delta"]:
+        want = _rows(P.phrase_topk(docs, phrase))
+        assert want and want == _rows(P.phrase_topk_indexed(spark, path, phrase)), phrase
+    for phrase, slop in [("alpha beta", 0), ("alpha gamma", 2), ("delta alpha", 1)]:
+        want = _rows(P.phrase_slop_topk(docs, phrase, slop))
+        assert want and want == _rows(
+            P.phrase_slop_topk_indexed(spark, path, phrase, slop)
+        ), (phrase, slop)
+    for q, w in [("alpha beta", 2), ("alpha gamma delta", 4)]:
+        want = _rows(P.near_topk(docs, q, w))
+        assert want and want == _rows(P.near_topk_indexed(spark, path, q, w)), (q, w)
 
 
 def test_oracle_parity_with_zero_token_doc(spark):

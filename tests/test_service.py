@@ -27,7 +27,7 @@ def service(spark, tmp_path_factory):
         }
         for r in pages.collect()
     }
-    return InferenceService(IndexSearcher(spark, idx, buckets=16, preload=True), meta)
+    return InferenceService(IndexSearcher(spark, idx, preload=True), meta)
 
 
 def test_validation_ranges(service):

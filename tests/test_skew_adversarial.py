@@ -69,7 +69,7 @@ def test_distributed_batch_paths_on_salted_index(spark, stopword_corpus, tmp_pat
     build_index_resumable(
         docs, idx_dir, buckets=8, salt_threshold=1_000, salt_fanout=8
     )
-    searcher = IndexSearcher(spark, idx_dir, buckets=8)
+    searcher = IndexSearcher(spark, idx_dir)
     # sanity: the universal term really is salted in the stored index
     n_seg = (
         searcher.postings.filter(F.col("term") == "the").count()

@@ -83,7 +83,7 @@ def test_compaction_preserves_results(spark, streamed):
     compact_dir = compact_segments(spark, idx_dir, buckets=8)
     from sifter_mrc_search_engine_spark.plans.query import IndexSearcher
 
-    s = IndexSearcher(spark, compact_dir, buckets=8)
+    s = IndexSearcher(spark, compact_dir)
     for q in QUERIES:
         expected = [
             (r["doc_id"], r["score"])
@@ -164,7 +164,7 @@ def test_overlapping_segments_detected_and_compacted(spark, tmp_path):
     )
     from sifter_mrc_search_engine_spark.operators.bm25 import bm25_brute_force
 
-    s = IndexSearcher(spark, compact_dir, buckets=4)
+    s = IndexSearcher(spark, compact_dir)
     for q in ["alpha", "gamma delta", "beta"]:
         expected = [
             (r["doc_id"], r["score"])
@@ -201,7 +201,7 @@ def test_segment_order_numeric_past_ten(spark, tmp_path):
     assert [s.rsplit("=", 1)[1] for s in segs] == [str(i) for i in range(11)]
 
     compact_dir = compact_segments(spark, idx_dir, buckets=4)
-    s = IndexSearcher(spark, compact_dir, buckets=4)
+    s = IndexSearcher(spark, compact_dir)
     # the batch-10 content must win: 'beta' finds doc 7, 'alpha' does not
     assert [d for d, _ in s.search("beta", top_k=5)] == [7]
     assert [d for d, _ in s.search("alpha", top_k=5)] == []
@@ -251,7 +251,7 @@ def test_mixed_schema_segments_search_and_compact(spark, tmp_path):
     # compaction re-encodes (restoring blockmaxtf for every term)
     compact_dir = compact_segments(spark, idx_dir, buckets=4)
     assert "blockmaxtf" in spark.read.parquet(f"{compact_dir}/postings").columns
-    s2 = IndexSearcher(spark, compact_dir, buckets=4)
+    s2 = IndexSearcher(spark, compact_dir)
     got = s2.search("alpha", top_k=10)
     expected = [
         (r["doc_id"], r["score"])
