@@ -309,7 +309,7 @@ PHRASE_QUESTION = "part filter"
 
 def _q_phrase_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-phrase top-k served from the persisted positional index
-    (bucket-pruned scan -> executor decode -> anchor intersection);
+    (one bucket-pruned scan -> driver decode -> anchor intersection);
     oracle = the relational twin, proving index == brute force."""
     from sifter_mrc_search_engine_spark.operators import positional as _pos
 
@@ -574,9 +574,7 @@ def _q_bm25_multisegment(spark: SparkSession, sf_dir: str) -> DataFrame:
         _SEG_DIRS[sf_dir] = _build_once("seg", sf_dir, _build)
     key = (spark.sparkContext.applicationId, sf_dir)
     if key not in _SEG_MEMO:
-        _SEG_MEMO[key] = MultiSegmentSearcher(
-            spark, _SEG_DIRS[sf_dir], buckets=16, norms="join"
-        )
+        _SEG_MEMO[key] = MultiSegmentSearcher(spark, _SEG_DIRS[sf_dir], norms="join")
     out = _SEG_MEMO[key].search_df(FLAGSHIP_QUESTION, top_k=10)
     return out.select("doc_id", F.round("score", 4).alias("score"))
 

@@ -15,46 +15,65 @@ Every operator here exists in two shapes:
 * a **relational** form over the raw ``documents`` table (tokenize →
   match → BM25), which doubles as the DuckDB-oracle-checkable contract
   query, and
-* for phrase queries an **index-backed** form over a persisted positional
-  index — the main compressed index format plus a ``poss`` column of
-  within-doc position deltas, written by the same encoder and writer
-  (:mod:`operators.compressed_index`) — which is the serving path: the
-  scan prunes to the phrase terms' buckets, positions decode
-  executor-side through the one index decoder, and the adjacency
-  intersection is ONE shuffle on (doc_id, anchor). Scoring-only shapes
-  never read ``poss``.
+* an **index-backed** form over a persisted positional index — the main
+  compressed index format plus a ``poss`` column of within-doc position
+  deltas, written by the same encoder and writer
+  (:mod:`operators.compressed_index`). Scoring-only shapes never read
+  ``poss``.
 
-Scale posture (10^12 docs): phrase/proximity matching only ever touches
-postings of the query's terms (bucket partition pruning + term row-group
-pruning); the anchor aggregation keys on (doc_id, anchor) so no
-per-term position list is ever collected; hot terms are doc_id-range
+Phrase, slop and near queries are served on the driver
+(:func:`positional_topk`): ONE bucket- and term-pruned scan collects the
+terms' raw rows, each segment's doc ids, tfs and positions decode once in
+numpy, the match runs over packed (doc rank, position) keys, and the
+matched docs are scored with :func:`bm25.idf`/:func:`bm25.impacts` and
+the driver fold (:func:`operators.wand.accumulate_topk`). No Python
+worker, shuffle or decode UDF runs per request.
+
+Scale posture (10^12 docs): matching only ever touches postings of the
+query's terms (bucket partition pruning + term row-group pruning). The
+driver path's decoded arrays are charged against the driver-memory
+budget first; past it the query runs the cluster plan, which is also the
+driver kernel's test twin: positions decode executor-side through the
+one index decoder and the relational form's Catalyst matcher runs over
+them (the phrase anchor aggregation is ONE shuffle on (doc_id, anchor),
+so no per-term position list is collected). Hot terms are doc_id-range
 segmented exactly like the main index so one Zipf-head term cannot pin a
-single task. Scoring reuses the deterministic sorted-term float64 fold
-from :mod:`operators.bm25`.
+single task. Scoring reproduces the deterministic sorted-term float64
+fold from :mod:`operators.bm25` on both paths.
 """
 
 from __future__ import annotations
 
 import json
 import re
-from typing import Sequence
+from typing import NamedTuple, Sequence
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..constants import BM25_B, BM25_K1, DEFAULT_TOP_K, TERM_BUCKETS
 from ..functions import fsio
 from ..functions.analyzer import analyze
+from . import bm25
 from .bm25 import bm25_term_scores, sum_in_term_order
 from .compressed_index import (
+    DEFAULT_PRELOAD_BUDGET_BYTES,
+    PreloadBudgetExceeded,
+    _load_norms,
+    _local_frame,
     build_compressed_index,
+    charge_preload,
     decode_index_df,
+    decode_positions,
     sample_hot_terms,
     tf_doclen,
     write_doclens,
     write_index,
 )
 from .index_build import corpus_stats, doc_lengths, term_frequencies
+from .postings_codec import decode_postings
+from .wand import KERNEL_COLUMNS, accumulate_topk, doc_lens
 
 #: tokens produced by the analyzer ([a-z0-9가-힣]+) contain no SQL LIKE
 #: metacharacters or quotes, so they embed directly into oracle strings;
@@ -988,35 +1007,33 @@ def _serve_state(spark: SparkSession, index_dir: str) -> tuple:
     return out
 
 
-def _index_buckets(index_dir: str, spark: SparkSession | None = None) -> int:
-    """The bucket modulus the index dir was written with (stats.json is
-    authoritative; pre-buckets-field dirs fall back to the default)."""
-    if spark is not None:
-        return _serve_state(spark, index_dir)[1]
-    stats = json.loads(fsio.read_text(fsio.join(index_dir, "stats.json"), spark))
-    return int(stats.get("buckets", TERM_BUCKETS))
+def _pruned_postings(
+    spark: SparkSession, index_dir: str, uterms: Sequence[str]
+) -> DataFrame:
+    """The raw postings rows of the query's terms: bucket-partition-
+    pruned and term-pruned, so a query never touches postings of other
+    terms. Bucket ids come from the driver-side xxhash twin (no Spark job
+    per query — same recipe as ``IndexSearcher``), with the modulus from
+    the index's own stats.json."""
+    from ..functions.xxhash import term_bucket
+
+    _, buckets, postings, _ = _serve_state(spark, index_dir)
+    bkts = sorted({term_bucket(t, buckets) for t in uterms})
+    return postings.filter(F.col("bucket").isin(bkts) & F.col("term").isin(list(uterms)))
 
 
 def _load_posts(
     spark: SparkSession,
     index_dir: str,
     uterms: Sequence[str],
-    buckets: int,
     with_positions: bool = True,
 ) -> DataFrame:
-    """Bucket-partition-pruned, term-pruned decoded postings for the
-    query's terms — never touches postings of non-query terms. Bucket
-    ids come from the driver-side xxhash twin (no Spark job per query —
-    same recipe as ``IndexSearcher``). ``with_positions=False`` decodes
-    only doc_ids + tfs (and never reads the positions column)."""
-    from ..functions.xxhash import term_bucket
-
-    bkts = sorted({term_bucket(t, buckets) for t in uterms})
-    idx = (
-        _serve_state(spark, index_dir)[2]
-        .filter(F.col("bucket").isin(bkts) & F.col("term").isin(list(uterms)))
+    """:func:`_pruned_postings` decoded executor-side by the one cluster
+    decoder. ``with_positions=False`` decodes only doc_ids + tfs (and
+    never reads the positions column)."""
+    return decode_index_df(
+        _pruned_postings(spark, index_dir, uterms), positions=with_positions
     )
-    return decode_index_df(idx, positions=with_positions)
 
 
 def _scored_from_tfs(
@@ -1032,7 +1049,7 @@ def _scored_from_tfs(
     """BM25 over ``(term, df, doc_id, tf)`` rows with the index's exact
     df, the doclens sidecar, and stats.json's corpus stats, optionally
     restricted (left-semi) to ``matched`` doc_ids — the one scoring tail
-    every indexed query shape funnels into.
+    every cluster-side indexed query shape funnels into.
 
     When the caller's term set is DRIVER-KNOWN (``score_terms``), the
     ascending-term float64 fold is computed as a slot-indexed codegen
@@ -1063,6 +1080,253 @@ def _scored_from_tfs(
     return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(top_k)
 
 
+# ------------------------------------------- phrase, slop, near: serving
+
+
+#: the single-query score shapes' output columns
+SCORE_COLUMNS = (("doc_id", "long"), ("score", "double"))
+
+
+class PositionalQuery(NamedTuple):
+    """One positional match over the index. ``kind`` is 'phrase' (the
+    slots at consecutive positions), 'slop' (the slots in order inside a
+    span of ``window`` positions) or 'near' (every term inside a span of
+    ``window`` positions, in any order). ``terms`` are the phrase's slots
+    in order, or near's sorted distinct terms; empty when the text
+    analyzes to nothing. Matches are scored with BM25 over the distinct
+    terms."""
+
+    kind: str
+    terms: tuple
+    window: int
+
+
+def phrase_query(phrase: str) -> PositionalQuery:
+    """The exact phrase: :func:`phrase_topk`'s match."""
+    slots = tuple(phrase_terms(phrase))
+    return PositionalQuery("phrase", slots, len(slots))
+
+
+def slop_query(phrase: str, slop: int = 0) -> PositionalQuery:
+    """The phrase in order within ``len(slots) + slop`` positions:
+    :func:`phrase_slop_topk`'s match."""
+    if slop < 0:
+        raise ValueError("slop must be >= 0")
+    slots = tuple(phrase_terms(phrase))
+    return PositionalQuery("slop", slots, len(slots) + slop)
+
+
+def near_query(question: str, window: int) -> PositionalQuery:
+    """Every analyzed term within ``window`` positions, any order:
+    :func:`near_topk`'s match."""
+    if window < 1:
+        raise ValueError("window must be >= 1")
+    return PositionalQuery("near", tuple(sorted(set(analyze(question)))), window)
+
+
+def _cluster_topk(
+    spark: SparkSession,
+    index_dir: str,
+    query: PositionalQuery,
+    top_k: int,
+    k1: float,
+    b: float,
+) -> DataFrame:
+    """The scale path and the driver kernel's twin: executor-side decode
+    of the pruned scan, the relational form's shared matcher over the
+    decoded ``(doc_id, pos, term)`` occurrences, then BM25 from a tf-only
+    re-read of the same postings (the positional decode is never consumed
+    twice)."""
+    uterms = sorted(set(query.terms))
+    posts = _load_posts(spark, index_dir, uterms)
+    occ = posts.select("term", "doc_id", F.explode("positions").alias("pos"))
+    if query.kind == "phrase":
+        matched = _anchor_match(occ, query.terms, distinct=False)
+    elif query.kind == "slop":
+        matched = _ordered_chain_match(occ, query.terms, query.window, distinct=False)
+    else:
+        matched = _min_cover_match(occ, uterms, query.window, distinct=False)
+    tf = _load_posts(spark, index_dir, uterms, with_positions=False)
+    return _scored_from_tfs(
+        spark, index_dir, tf, matched, top_k, k1, b, score_terms=uterms
+    )
+
+
+def _member(sorted_keys: np.ndarray, q: np.ndarray) -> np.ndarray:
+    """Which of ``q`` occur in ``sorted_keys`` (ascending, non-empty)."""
+    i = np.searchsorted(sorted_keys, q)
+    np.minimum(i, sorted_keys.size - 1, out=i)
+    return sorted_keys[i] == q
+
+
+def _decode_term(segs) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """One term's ``(doc_ids, tfs, positions)``, every segment decoded
+    once: positions are flat, ``tfs[i]`` of them for posting ``i``.
+    Salted segments hold disjoint doc-id ranges, so ordering them by
+    ``max_doc`` makes the concatenation ascending."""
+    ids, tfs, pos = [], [], []
+    for r in sorted(segs, key=lambda r: r["max_doc"]):
+        i, t = decode_postings(
+            gaps=bytes(r["gaps"]), tfs=bytes(r["tfs"]), n=int(r["n"]),
+            skips=bytes(r["skips"]), block_size=int(r["block_size"]),
+        )
+        ids.append(i)
+        tfs.append(t)
+        pos.append(decode_positions(bytes(r["poss"]), t))
+    return np.concatenate(ids), np.concatenate(tfs), np.concatenate(pos)
+
+
+def _match_docs(post: dict, query: PositionalQuery) -> np.ndarray | None:
+    """Sorted doc ids matching ``query`` over decoded ``post`` (term ->
+    :func:`_decode_term`), or None when the packed keys could overflow.
+
+    Only docs holding every term can match. Each occurrence there becomes
+    the int64 key ``rank(doc) * W + pos + m``, where ``rank`` indexes the
+    sorted candidate docs (so negative and sparse ids pack densely), ``m``
+    is the slot count and ``W = max_pos + m + 1``: a doc's keys, and its
+    phrase anchors ``key - slot``, stay inside ``[rank * W, rank * W + W)``
+    and ascend with the position. The matchers are numpy twins of the
+    Catalyst ones:
+
+    * phrase — :func:`_anchor_match`: the anchors common to every slot;
+    * slop — :func:`_ordered_chain_match`'s greedy chain: from each
+      first-slot key, the next slot's first key above the previous one,
+      kept while it is in the same doc within the window;
+    * near — :func:`_min_cover_match`'s running max: at each occurrence,
+      every term's last key at or before it, all in the same doc, spanning
+      at most the window."""
+    uterms = sorted(set(query.terms))
+    cand = min((post[t][0] for t in uterms), key=len)
+    for t in uterms:
+        cand = cand[_member(post[t][0], cand)]
+    if cand.size == 0:
+        return cand
+    m = len(query.terms)
+    occ = {}
+    for t in uterms:
+        ids, tfs, pos = post[t]
+        keep = _member(cand, ids)
+        occ[t] = (np.repeat(np.searchsorted(cand, ids[keep]), tfs[keep]),
+                  pos[np.repeat(keep, tfs)])
+    w = max(int(p.max()) for _, p in occ.values()) + m + 1
+    if cand.size * w >= 1 << 62:
+        return None
+    keys = {t: rank * w + p + m for t, (rank, p) in occ.items()}
+
+    if query.kind == "phrase":
+        anchors = sorted((keys[t] - j for j, t in enumerate(query.terms)), key=len)
+        hit = anchors[0]
+        for a in anchors[1:]:
+            hit = hit[_member(a, hit)]
+    elif query.kind == "slop":
+        hit = prev = keys[query.terms[0]]
+        for t in query.terms[1:]:
+            k = keys[t]
+            i = np.searchsorted(k, prev, side="right")
+            nxt = k[np.minimum(i, k.size - 1)]
+            ok = (i < k.size) & (nxt // w == hit // w) & (nxt <= hit + query.window - 1)
+            hit, prev = hit[ok], nxt[ok]
+    else:
+        q = np.concatenate(list(keys.values()))
+        ok = np.ones(q.size, dtype=bool)
+        least = q
+        for k in keys.values():
+            i = np.searchsorted(k, q, side="right") - 1
+            last = k[np.maximum(i, 0)]
+            ok &= (i >= 0) & (last // w == q // w)
+            least = np.minimum(least, last)
+        hit = q[ok & (q - least <= query.window - 1)]
+    return cand[np.unique(hit // w)]
+
+
+def _driver_topk(
+    spark: SparkSession,
+    index_dir: str,
+    query: PositionalQuery,
+    top_k: int,
+    k1: float,
+    b: float,
+) -> list[tuple[int, float]] | None:
+    """``query``'s top-k on the driver from ONE pruned scan: the terms'
+    raw rows (kernel columns plus ``poss``) are collected, decoded once,
+    matched by :func:`_match_docs`, and the matched docs scored with
+    :func:`bm25.idf`/:func:`bm25.impacts` and folded by
+    :func:`accumulate_topk` in ascending-term order — ``==`` to the
+    cluster plan's slot fold. No Python worker, shuffle or decode UDF runs.
+
+    The decoded arrays (at most 16 bytes per posting and per position,
+    each position being at least one varbyte) are charged against
+    ``DEFAULT_PRELOAD_BUDGET_BYTES`` before any decode, the norms against
+    what is left. Returns None, the cue to run :func:`_cluster_topk`,
+    over budget or when the packed match keys could overflow."""
+    uterms = sorted(set(query.terms))
+    if not uterms:
+        return []
+    rows = _pruned_postings(spark, index_dir, uterms).select(*KERNEL_COLUMNS, "poss").collect()
+    by_term: dict[str, list] = {}
+    for r in rows:
+        by_term.setdefault(r["term"], []).append(r)
+    if len(by_term) < len(uterms):  # a term absent from the index matches no doc
+        return []
+    budget = DEFAULT_PRELOAD_BUDGET_BYTES
+    try:
+        spent = charge_preload(
+            16 * sum(int(r["n"]) + len(r["poss"]) for r in rows),
+            f"decoded postings and positions of {uterms}", budget,
+        )
+        doclen, n_docs, avgdl = _load_norms(spark, index_dir, budget - spent)
+    except PreloadBudgetExceeded:
+        return None
+    post = {t: _decode_term(by_term[t]) for t in uterms}
+    matched = _match_docs(post, query)
+    if matched is None:
+        return None
+    if not matched.size:
+        return []
+    per_term = []
+    for t in uterms:
+        ids, tfs, _ = post[t]
+        keep = _member(matched, ids)
+        ids, tfs = ids[keep], tfs[keep].astype(np.float64)
+        idf = bm25.idf(int(by_term[t][0]["df"]), n_docs)
+        per_term.append((ids, bm25.impacts(idf, tfs, doc_lens(doclen, ids), avgdl, k1, b)))
+    return accumulate_topk(per_term, top_k)
+
+
+def positional_topk(
+    spark: SparkSession,
+    index_dir: str,
+    query: PositionalQuery,
+    top_k: int = DEFAULT_TOP_K,
+    k1: float = BM25_K1,
+    b: float = BM25_B,
+) -> list[tuple[int, float]]:
+    """``query``'s top-k ``(doc_id, score)`` from the positional index,
+    ranked (score desc, doc_id asc): the driver kernel, or the cluster
+    plan's collected rows when the driver path declines."""
+    hits = _driver_topk(spark, index_dir, query, top_k, k1, b)
+    if hits is None:
+        rows = _cluster_topk(spark, index_dir, query, top_k, k1, b).collect()
+        hits = [(int(r["doc_id"]), float(r["score"])) for r in rows]
+    return hits
+
+
+def _positional_frame(
+    spark: SparkSession,
+    index_dir: str,
+    query: PositionalQuery,
+    top_k: int,
+    k1: float,
+    b: float,
+) -> DataFrame:
+    """:func:`positional_topk` as a DataFrame: the driver kernel's rows
+    as a JVM ``LocalTableScan``, else the cluster plan itself."""
+    hits = _driver_topk(spark, index_dir, query, top_k, k1, b)
+    if hits is None:
+        return _cluster_topk(spark, index_dir, query, top_k, k1, b)
+    return _local_frame(spark, hits, SCORE_COLUMNS)
+
+
 def phrase_topk_indexed(
     spark: SparkSession,
     index_dir: str,
@@ -1074,26 +1338,8 @@ def phrase_topk_indexed(
     """:func:`phrase_topk` served from the persisted positional index —
     identical results by construction (pinned by pytest + the shared
     DuckDB twin). The bucket modulus comes from the index's own
-    stats.json, never from the caller.
-
-    Plan: bucket-partition-pruned scan of the phrase terms' postings →
-    executor-side decode → anchor intersection (one shuffle on
-    (doc_id, anchor)) → BM25 from tf=|positions| with the index's exact
-    df and the doclens sidecar."""
-    slots = phrase_terms(phrase)
-    if not slots:
-        return spark.createDataFrame([], "doc_id long, score double")
-    uterms, bkts = sorted(set(slots)), _index_buckets(index_dir, spark)
-    posts = _load_posts(spark, index_dir, uterms, bkts)
-    occ = posts.select("term", "doc_id", F.explode("positions").alias("pos"))
-    matched = _anchor_match(occ, slots, distinct=False)
-    # scoring branch re-reads ONLY gaps+tfs (tf-only decode): the r5
-    # shape consumed the positional decode twice, paying the positions
-    # payload scan + heavy decode in both plan branches
-    tf = _load_posts(spark, index_dir, uterms, bkts, with_positions=False)
-    return _scored_from_tfs(
-        spark, index_dir, tf, matched, top_k, k1, b, score_terms=uterms
-    )
+    stats.json, never from the caller. See :func:`positional_topk`."""
+    return _positional_frame(spark, index_dir, phrase_query(phrase), top_k, k1, b)
 
 
 def near_topk_indexed(
@@ -1105,22 +1351,9 @@ def near_topk_indexed(
     k1: float = BM25_K1,
     b: float = BM25_B,
 ) -> DataFrame:
-    """:func:`near_topk` served from the persisted positional index —
-    same pruned scan + decode as the phrase path, then the SAME
-    :func:`_min_cover_match` over the decoded (doc_id, pos, term)
-    occurrences (one window shuffle on doc_id)."""
-    if window < 1:
-        raise ValueError("window must be >= 1")
-    uterms = sorted(set(analyze(question)))
-    if not uterms:
-        return spark.createDataFrame([], "doc_id long, score double")
-    bkts = _index_buckets(index_dir, spark)
-    posts = _load_posts(spark, index_dir, uterms, bkts)
-    occ = posts.select("term", "doc_id", F.explode("positions").alias("pos"))
-    matched = _min_cover_match(occ, uterms, window, distinct=False)
-    tf = _load_posts(spark, index_dir, uterms, bkts, with_positions=False)
-    return _scored_from_tfs(
-        spark, index_dir, tf, matched, top_k, k1, b, score_terms=uterms
+    """:func:`near_topk` served from the persisted positional index."""
+    return _positional_frame(
+        spark, index_dir, near_query(question, window), top_k, k1, b
     )
 
 
@@ -1134,21 +1367,8 @@ def phrase_slop_topk_indexed(
     b: float = BM25_B,
 ) -> DataFrame:
     """:func:`phrase_slop_topk` served from the persisted positional
-    index — pruned scan + decode, then the SAME
-    :func:`_ordered_chain_match` over the decoded occurrences."""
-    if slop < 0:
-        raise ValueError("slop must be >= 0")
-    slots = phrase_terms(phrase)
-    if not slots:
-        return spark.createDataFrame([], "doc_id long, score double")
-    uterms, bkts = sorted(set(slots)), _index_buckets(index_dir, spark)
-    posts = _load_posts(spark, index_dir, uterms, bkts)
-    occ = posts.select("term", "doc_id", F.explode("positions").alias("pos"))
-    matched = _ordered_chain_match(occ, slots, len(slots) + slop, distinct=False)
-    tf = _load_posts(spark, index_dir, uterms, bkts, with_positions=False)
-    return _scored_from_tfs(
-        spark, index_dir, tf, matched, top_k, k1, b, score_terms=uterms
-    )
+    index."""
+    return _positional_frame(spark, index_dir, slop_query(phrase, slop), top_k, k1, b)
 
 
 def _vocab_topk_indexed(
@@ -1270,9 +1490,7 @@ def bool_topk_indexed(
     if not score_t:
         return spark.createDataFrame([], "doc_id long, score double")
     all_t = sorted(set(score_t) | set(not_t))
-    tf = _load_posts(
-        spark, index_dir, all_t, _index_buckets(index_dir, spark), with_positions=False
-    )
+    tf = _load_posts(spark, index_dir, all_t, with_positions=False)
     match = _bool_match_ids(tf, must_t, score_t, not_t)
     score_tf = tf.filter(F.col("term").isin(score_t))
     return _scored_from_tfs(

@@ -184,6 +184,14 @@ def packed_ids(lo: int, hi: int, count: int) -> bool:
     return lo >= 0 and hi < max(8 * count, 1_000_000)
 
 
+def doc_lens(doclen, ids: np.ndarray) -> np.ndarray:
+    """float64 lengths of ``ids`` from the driver norms (a dense array
+    indexed by doc id, or a dict for sparse id spaces)."""
+    if isinstance(doclen, np.ndarray):
+        return doclen[ids].astype(np.float64)
+    return np.fromiter((doclen[int(i)] for i in ids), dtype=np.float64, count=ids.size)
+
+
 def term_impacts(segs, doclen, n_docs: int, avgdl: float,
                  k1: float = BM25_K1, b: float = BM25_B) -> Tuple[np.ndarray, np.ndarray]:
     """One term's postings as ``(doc_ids int64, impacts float64)``: every
@@ -199,14 +207,10 @@ def term_impacts(segs, doclen, n_docs: int, avgdl: float,
             gaps=bytes(r["gaps"]), tfs=bytes(r["tfs"]), n=int(r["n"]),
             skips=bytes(r["skips"]), block_size=int(r["block_size"]),
         )
-        if isinstance(doclen, np.ndarray):
-            dls = doclen[ids].astype(np.float64)
-        else:
-            dls = np.fromiter(
-                (doclen[int(i)] for i in ids), dtype=np.float64, count=ids.size
-            )
         ids_parts.append(ids)
-        imp_parts.append(bm25.impacts(idf, tfs.astype(np.float64), dls, avgdl, k1, b))
+        imp_parts.append(
+            bm25.impacts(idf, tfs.astype(np.float64), doc_lens(doclen, ids), avgdl, k1, b)
+        )
     return np.concatenate(ids_parts), np.concatenate(imp_parts)
 
 

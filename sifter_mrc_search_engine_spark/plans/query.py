@@ -34,7 +34,6 @@ import json
 from typing import NamedTuple, Sequence
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -42,98 +41,22 @@ from ..constants import DEFAULT_TOP_K, MAX_TOP_K, TERM_BUCKETS
 from ..functions import fsio
 from ..functions.analyzer import analyze
 from ..functions.xxhash import term_bucket
-from ..operators.compressed_index import (
+from ..operators.compressed_index import (  # noqa: F401  (norms cache re-exported)
+    _DOCLEN_CACHE,
     DEFAULT_PRELOAD_BUDGET_BYTES,
     NO_PRELOAD_ADVICE,
     PreloadBudgetExceeded,
+    _load_norms,
+    _local_frame,
     charge_preload,
     check_preload_budget,
+    invalidate_norms_cache,
 )
-from ..operators.wand import (
-    KERNEL_COLUMNS,
-    accumulate_topk,
-    packed_ids,
-    term_impacts,
-    wand_topk,
-)
-
-_DOCLEN_CACHE: dict[tuple, tuple] = {}
-
-
-def invalidate_norms_cache(index_dir: str | None = None) -> None:
-    """Drop cached norms for ``index_dir`` (or all). Build/compaction
-    paths need not call this — the cache key includes the stats.json
-    freshness token (mtime+size), so a rebuilt index at the same path
-    misses naturally."""
-    if index_dir is None:
-        _DOCLEN_CACHE.clear()
-        return
-    for k in [k for k in _DOCLEN_CACHE if k[0] == index_dir]:
-        del _DOCLEN_CACHE[k]
-
-
-def _load_norms(
-    spark: SparkSession, index_dir: str, budget_bytes: int | None = None
-):
-    """(doclen lookup, n_docs, avgdl), cached per (index_dir, freshness).
-
-    The freshness token is stats.json's (mtime_ns, size): rebuilding or
-    compacting an index at the same path in one process must not serve
-    stale doc lengths. Dense numpy array when doc_ids are nonnegative
-    and reasonably packed (fast vectorized lookups); dict fallback for
-    sparse / hash-derived / negative id spaces.
-
-    ``budget_bytes`` gates ONLY the cache-miss collect: a cache hit
-    costs zero additional driver memory, so it must neither pay the
-    estimate aggregate nor be refusable (r5 review).
-    """
-    stats_path = fsio.join(index_dir, "stats.json")
-    key = (index_dir, fsio.freshness_token(stats_path, spark))
-    if key in _DOCLEN_CACHE:
-        return _DOCLEN_CACHE[key]
-    # evict superseded versions of the same index — a rebuild-per-batch
-    # process must not pin every generation's doclen array forever
-    for stale in [k for k in _DOCLEN_CACHE if k[0] == index_dir]:
-        del _DOCLEN_CACHE[stale]
-    stats = json.loads(fsio.read_text(stats_path, spark))
-    doclens_df = spark.read.parquet(f"{index_dir}/doclens")
-    check_preload_budget(doclens_df, f"doclens of {index_dir}", budget_bytes)
-    rows = doclens_df.collect()
-    ids = [r["doc_id"] for r in rows]
-    max_id = max(ids)
-    if packed_ids(min(ids), max_id, len(ids)):
-        dl = np.zeros(max_id + 1, dtype=np.int64)
-        for r in rows:
-            dl[r["doc_id"]] = r["doc_len"]
-        out = (dl, int(stats["n_docs"]), float(stats["avgdl"]))
-    else:
-        out = (
-            {r["doc_id"]: r["doc_len"] for r in rows},
-            int(stats["n_docs"]),
-            float(stats["avgdl"]),
-        )
-    _DOCLEN_CACHE[key] = out
-    return out
-
+from ..operators.wand import KERNEL_COLUMNS, accumulate_topk, term_impacts, wand_topk
 
 #: the batch paths' output columns: (query_id int, rank int, doc_id long,
 #: score double)
 HITS_COLUMNS = (("query_id", "int"), ("rank", "int"), ("doc_id", "long"), ("score", "double"))
-
-
-def _local_frame(spark: SparkSession, rows: list, columns) -> DataFrame:
-    """Driver-known ``rows`` as a JVM local relation. With Arrow on (see
-    ``session.get_spark``) pyspark ships a non-empty pandas frame as
-    Arrow batches into a ``LocalTableScan``, so collecting or
-    broadcasting it starts no Python worker; ``createDataFrame(list)``
-    plans as ``Scan ExistingRDD``, a Python stage. pyspark sends an EMPTY
-    pandas frame down that list path, so no rows become an empty range."""
-    if not rows:
-        return spark.range(0).select(
-            *[F.lit(None).cast(t).alias(c) for c, t in columns]
-        )
-    pdf = pd.DataFrame(rows, columns=[c for c, _ in columns])
-    return spark.createDataFrame(pdf, ", ".join(f"{c} {t}" for c, t in columns))
 
 
 class _Snapshot(NamedTuple):

@@ -11,6 +11,12 @@ the INDEX-SERVED forms reachable from the HTTP front door with the same
 validation conventions as the free-text route (400 on bad input, never
 a dropped connection).
 
+Phrase, slop and near requests call the list-returning
+:func:`..operators.positional.positional_topk` directly: one pruned scan
+and the driver kernel (the cluster plan only past the driver budget),
+with no result DataFrame to build and collect. The other shapes collect
+their operator's plan.
+
 Every request is a JSON object with a ``type`` discriminator; the knob
 names match the operator signatures one-to-one so the HTTP surface and
 the Python API never drift:
@@ -99,19 +105,14 @@ class StructuredSearchService:
             raise ValidationError(f"top_k must be in [1, {MAX_TOP_K}]")
 
         spark, d = self.spark, self.index_dir
+        query = out = None
         try:
             if qtype == "phrase":
-                out = P.phrase_topk_indexed(spark, d, params["phrase"], top_k=top_k)
+                query = P.phrase_query(params["phrase"])
             elif qtype == "slop":
-                out = P.phrase_slop_topk_indexed(
-                    spark, d, params["phrase"],
-                    slop=self._int(params, "slop", 0), top_k=top_k,
-                )
+                query = P.slop_query(params["phrase"], self._int(params, "slop", 0))
             elif qtype == "near":
-                out = P.near_topk_indexed(
-                    spark, d, params["question"],
-                    window=self._int(params, "window", 3), top_k=top_k,
-                )
+                query = P.near_query(params["question"], self._int(params, "window", 3))
             elif qtype == "prefix":
                 out = P.prefix_topk_indexed(
                     spark, d, params["prefix"], top_k=top_k,
@@ -139,8 +140,9 @@ class StructuredSearchService:
         except ValueError as e:
             # operator-level validation (bad slop/window/pattern/edits)
             raise ValidationError(str(e))
-        hits = [
-            {"doc_id": int(r["doc_id"]), "score": float(r["score"])}
-            for r in out.collect()
-        ]
+        if query is not None:
+            pairs = P.positional_topk(spark, d, query, top_k=top_k)
+        else:
+            pairs = [(r["doc_id"], r["score"]) for r in out.collect()]
+        hits = [{"doc_id": int(doc), "score": float(score)} for doc, score in pairs]
         return {"type": qtype, "hits": hits}

@@ -54,8 +54,10 @@ def _write_segment(batch_df: DataFrame, seg_dir: str, buckets: int) -> None:
         F.count(F.lit(1)).alias("n"), F.sum("doc_len").alias("s")
     ).collect()[0]
     n_docs, dl_sum = int(r["n"]), int(r["s"] or 0)
+    # the segment records the modulus it was written with: a searcher
+    # pruning with another one would silently drop postings
     stats = {"n_docs": n_docs, "dl_sum": dl_sum,
-             "avgdl": (dl_sum / n_docs) if n_docs else 0.0}
+             "avgdl": (dl_sum / n_docs) if n_docs else 0.0, "buckets": buckets}
     idx = build_compressed_index(batch_df, buckets=buckets, stats=(n_docs, stats["avgdl"]))
     write_index(idx, f"{seg_dir}/postings")
     fsio.write_text(fsio.join(seg_dir, "stats.json"), json.dumps(stats), spark)
@@ -127,7 +129,6 @@ class MultiSegmentSearcher:
         self,
         spark: SparkSession,
         index_dir: str,
-        buckets: int = TERM_BUCKETS,
         norms: str = "preload",
         preload_budget_bytes: int | None = DEFAULT_PRELOAD_BUDGET_BYTES,
     ):
@@ -137,20 +138,26 @@ class MultiSegmentSearcher:
         ``preload_budget_bytes``, default 4 GiB; ``None`` disables).
         ``norms='join'`` keeps norms cluster-resident — queries score
         through an in-plan doclen join over the lazy unioned sidecars —
-        the mode that holds at 10^12 docs."""
+        the mode that holds at 10^12 docs.
+
+        Each segment is pruned with the bucket modulus its stats.json
+        records (segments written before it was recorded used
+        ``TERM_BUCKETS``)."""
         if norms not in ("preload", "join"):
             raise ValueError(f"unknown norms mode {norms!r}")
         self.spark = spark
-        self.buckets = buckets
         self.norms_mode = norms
         self.segments = list_segments(index_dir, spark)
         if not self.segments:
             raise ValueError(f"no committed segments under {index_dir}")
         n, s = 0, 0
+        moduli = set()
         for seg in self.segments:
             st = json.loads(fsio.read_text(fsio.join(seg, "stats.json"), spark))
             n += st["n_docs"]
             s += st["dl_sum"]
+            moduli.add(int(st.get("buckets", TERM_BUCKETS)))
+        self.moduli = sorted(moduli)
         dl = None
         for seg in self.segments:
             d = spark.read.parquet(f"{seg}/doclens")
@@ -192,8 +199,11 @@ class MultiSegmentSearcher:
         from ..functions.xxhash import term_bucket
 
         # driver-side bucket routing (bit-identical to JVM xxhash64) ->
-        # the pruned unioned scan is the only Spark job this query pays
-        bks = sorted({term_bucket(t, self.buckets) for t in tset})
+        # the pruned unioned scan is the only Spark job this query pays.
+        # Segments of different moduli share the scan: the union of their
+        # buckets keeps every segment's postings (the term filter drops
+        # the extra rows)
+        bks = sorted({term_bucket(t, m) for t in tset for m in self.moduli})
         return self.postings.filter(F.col("bucket").isin(bks)).filter(
             F.col("term").isin(tset)
         )

@@ -153,5 +153,5 @@ def test_streaming_segments_on_remote_style_dir(spark, tmp_path):
     stream_build_index(spark, src, idx, ckpt, buckets=4)
     segs = list_segments(idx, spark)
     assert segs, "no committed segments discovered on the file:// dir"
-    hits = MultiSegmentSearcher(spark, idx, buckets=4).search("alpha", top_k=5)
+    hits = MultiSegmentSearcher(spark, idx).search("alpha", top_k=5)
     assert len(hits) == 5

@@ -49,6 +49,36 @@ def _assert_matches_oracle(spark_df, docs_df, sql):
     return got
 
 
+#: plan nodes that mean a Python worker runs for the query
+_PYTHON_NODES = ("ArrowEvalPython", "BatchEvalPython", "ExistingRDD")
+
+
+def _plan(df):
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _driver_twin(monkeypatch, run):
+    """``run()``'s rows on the driver path and on its cluster twin, which
+    a zero driver budget forces. The driver frame plans with no Python
+    worker; the twin's plan decodes in the executor UDF."""
+    driver = run()
+    plan = _plan(driver)
+    assert not any(n in plan for n in _PYTHON_NODES), plan
+    with monkeypatch.context() as m:
+        m.setattr(P, "DEFAULT_PRELOAD_BUDGET_BYTES", 0)
+        twin = run()
+    assert "ArrowEvalPython" in _plan(twin), _plan(twin)
+    return _rows(driver), _rows(twin)
+
+
+def _three_way(monkeypatch, relational, run, nonempty=False):
+    """driver == cluster twin == relational twin, bit for bit."""
+    want = _rows(relational)
+    driver, twin = _driver_twin(monkeypatch, run)
+    assert driver == want and twin == want, (driver, twin, want)
+    assert want or not nonempty
+
+
 # ---------------------------------------------------------------- phrase
 
 
@@ -286,20 +316,16 @@ def test_positional_codec_roundtrip(spark, docs):
     assert dfs == truth
 
 
-def test_phrase_topk_indexed_parity(spark, docs, tmp_path):
+def test_phrase_topk_indexed_parity(spark, docs, tmp_path, monkeypatch):
     path = str(tmp_path / "posidx")
     stats = P.write_positional_index(docs, path)
     assert stats["n_docs"] == 7
     for phrase in ["alpha beta", "beta alpha beta", "gamma", "zeta zeta"]:
-        a = [
-            (r["doc_id"], r["score"])
-            for r in P.phrase_topk(docs, phrase).collect()
-        ]
-        b = [
-            (r["doc_id"], r["score"])
-            for r in P.phrase_topk_indexed(spark, path, phrase).collect()
-        ]
-        assert a == b, phrase
+        _three_way(
+            monkeypatch, P.phrase_topk(docs, phrase),
+            lambda: P.phrase_topk_indexed(spark, path, phrase),
+            nonempty=phrase != "zeta zeta",
+        )
     # unanalyzable -> typed empty
     empty = P.phrase_topk_indexed(spark, path, "!!!")
     assert empty.columns == ["doc_id", "score"] and empty.count() == 0
@@ -317,54 +343,76 @@ def test_phrase_plans_have_no_python_fed_tables(spark, docs, tmp_path):
         P.phrase_topk(local_docs, "beta alpha beta"),
     ):
         assert _ids(q) == {2, 5}
-        plan = q._jdf.queryExecution().executedPlan().toString()
-        assert "ExistingRDD" not in plan, plan
+        assert "ExistingRDD" not in _plan(q), _plan(q)
 
 
-def test_near_topk_indexed_parity(spark, docs, tmp_path):
+def test_near_topk_indexed_parity(spark, docs, tmp_path, monkeypatch):
     path = str(tmp_path / "posidx")
     P.write_positional_index(docs, path)
     for q, w in [("alpha beta", 2), ("alpha beta gamma", 3), ("alpha eta", 50)]:
-        a = [
-            (r["doc_id"], r["score"])
-            for r in P.near_topk(docs, q, w).collect()
-        ]
-        b = [
-            (r["doc_id"], r["score"])
-            for r in P.near_topk_indexed(spark, path, q, w).collect()
-        ]
-        assert a == b, (q, w)
+        _three_way(
+            monkeypatch, P.near_topk(docs, q, w),
+            lambda: P.near_topk_indexed(spark, path, q, w),
+            nonempty=q != "alpha eta",
+        )
     empty = P.near_topk_indexed(spark, path, "!!!", 3)
     assert empty.columns == ["doc_id", "score"] and empty.count() == 0
     with pytest.raises(ValueError, match="window"):
         P.near_topk_indexed(spark, path, "alpha", 0)
 
 
-def test_phrase_indexed_scan_is_bucket_pruned(spark, docs, tmp_path):
+def test_phrase_indexed_scan_is_bucket_pruned(spark, docs, tmp_path, monkeypatch):
+    """Both the scan the driver path collects and the over-budget cluster
+    plan prune the postings to the phrase terms' bucket partitions."""
     path = str(tmp_path / "posidx")
     P.write_positional_index(docs, path)
-    q = P.phrase_topk_indexed(spark, path, "alpha beta")
-    plan = q._sc._jvm.PythonSQLUtils.explainString(
-        q._jdf.queryExecution(), "formatted"
-    )
+
+    def formatted(df):
+        return df._sc._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "formatted"
+        )
+
+    scans = []
+    pruned = P._pruned_postings
+
+    def spy(*args):
+        scans.append(pruned(*args))
+        return scans[-1]
+
+    monkeypatch.setattr(P, "_pruned_postings", spy)
+    assert _ids(P.phrase_topk_indexed(spark, path, "alpha beta")) == {1, 2, 5}
+    assert len(scans) == 1
+    plan = formatted(scans[0])
     assert "PartitionFilters: [bucket" in plan, plan[:2000]
 
+    monkeypatch.setattr(P, "DEFAULT_PRELOAD_BUDGET_BYTES", 0)
+    q = P.phrase_topk_indexed(spark, path, "alpha beta")
+    plan = formatted(q)
+    assert "ArrowEvalPython" in plan and "PartitionFilters: [bucket" in plan, plan[:2000]
+    assert _ids(q) == {1, 2, 5}
 
-def test_indexed_serving_reads_bucket_modulus_from_stats(spark, docs, tmp_path):
+
+def test_indexed_serving_reads_bucket_modulus_from_stats(spark, docs, tmp_path, monkeypatch):
     # write with a NON-default modulus; serving must pick it up from
     # stats.json — a caller-supplied mismatch would silently drop postings
     path = str(tmp_path / "posidx7")
     stats = P.write_positional_index(docs, path, buckets=7)
     assert stats["buckets"] == 7
-    a = [
-        (r["doc_id"], r["score"])
-        for r in P.phrase_topk(docs, "alpha beta").collect()
-    ]
-    b = [
-        (r["doc_id"], r["score"])
-        for r in P.phrase_topk_indexed(spark, path, "alpha beta").collect()
-    ]
-    assert a == b and len(a) == 3
+    assert len(P.phrase_topk(docs, "alpha beta").collect()) == 3
+    _three_way(
+        monkeypatch, P.phrase_topk(docs, "alpha beta"),
+        lambda: P.phrase_topk_indexed(spark, path, "alpha beta"),
+    )
+    _three_way(
+        monkeypatch, P.phrase_slop_topk(docs, "alpha gamma", 2),
+        lambda: P.phrase_slop_topk_indexed(spark, path, "alpha gamma", 2),
+        nonempty=True,
+    )
+    _three_way(
+        monkeypatch, P.near_topk(docs, "beta gamma", 2),
+        lambda: P.near_topk_indexed(spark, path, "beta gamma", 2),
+        nonempty=True,
+    )
 
 
 def test_positional_on_real_corpus(spark, sf_dir, tmp_path):
@@ -387,7 +435,7 @@ def _rows(df):
     return [(r["doc_id"], r["score"]) for r in df.collect()]
 
 
-def test_indexed_structured_family_parity(spark, docs, tmp_path):
+def test_indexed_structured_family_parity(spark, docs, tmp_path, monkeypatch):
     # ONE index; every structured shape served from it must be
     # rank-identical (same float64 fold) to its relational twin — which
     # is the DuckDB-oracled contract query, so parity here transitively
@@ -396,9 +444,11 @@ def test_indexed_structured_family_parity(spark, docs, tmp_path):
     P.write_positional_index(docs, path)
 
     for phrase, slop in [("alpha beta", 0), ("alpha gamma", 2), ("beta alpha beta", 1)]:
-        assert _rows(P.phrase_slop_topk(docs, phrase, slop)) == _rows(
-            P.phrase_slop_topk_indexed(spark, path, phrase, slop)
-        ), (phrase, slop)
+        _three_way(
+            monkeypatch, P.phrase_slop_topk(docs, phrase, slop),
+            lambda: P.phrase_slop_topk_indexed(spark, path, phrase, slop),
+            nonempty=True,
+        )
 
     for p in ["alpha", "alphab", "z"]:
         assert _rows(P.prefix_topk(docs, p)) == _rows(
@@ -510,7 +560,7 @@ def test_postings_footers_keep_term_stats_only(spark, docs, tmp_path):
                 assert st is None or not st.has_min_max, (f, c)
 
 
-def test_indexed_positional_on_negative_and_sparse_ids(spark, tmp_path):
+def test_indexed_positional_on_negative_and_sparse_ids(spark, tmp_path, monkeypatch):
     """Negative and sparse doc ids (two's-complement block restarts, gaps
     beyond 2^32) through the indexed phrase, slop and near shapes, each
     == its relational twin. 'alpha' spans more than one 128-posting
@@ -530,16 +580,92 @@ def test_indexed_positional_on_negative_and_sparse_ids(spark, tmp_path):
     assert spark.read.parquet(f"{path}/postings").filter("term = 'alpha'").first()["n"] > 128
 
     for phrase in ["alpha beta", "beta alpha beta", "gamma delta"]:
-        want = _rows(P.phrase_topk(docs, phrase))
-        assert want and want == _rows(P.phrase_topk_indexed(spark, path, phrase)), phrase
+        _three_way(
+            monkeypatch, P.phrase_topk(docs, phrase),
+            lambda: P.phrase_topk_indexed(spark, path, phrase), nonempty=True,
+        )
     for phrase, slop in [("alpha beta", 0), ("alpha gamma", 2), ("delta alpha", 1)]:
-        want = _rows(P.phrase_slop_topk(docs, phrase, slop))
-        assert want and want == _rows(
-            P.phrase_slop_topk_indexed(spark, path, phrase, slop)
-        ), (phrase, slop)
+        _three_way(
+            monkeypatch, P.phrase_slop_topk(docs, phrase, slop),
+            lambda: P.phrase_slop_topk_indexed(spark, path, phrase, slop),
+            nonempty=True,
+        )
     for q, w in [("alpha beta", 2), ("alpha gamma delta", 4)]:
-        want = _rows(P.near_topk(docs, q, w))
-        assert want and want == _rows(P.near_topk_indexed(spark, path, q, w)), (q, w)
+        _three_way(
+            monkeypatch, P.near_topk(docs, q, w),
+            lambda: P.near_topk_indexed(spark, path, q, w), nonempty=True,
+        )
+
+
+def test_positional_budget_routes_to_cluster_plan(spark, docs, tmp_path, monkeypatch):
+    """Before any decode the driver path charges 16 bytes per posting and
+    per position byte against the budget; one byte short, the query runs
+    the cluster plan, with == rows, from the frame and the list cores."""
+    from sifter_mrc_search_engine_spark.operators.wand import KERNEL_COLUMNS
+    from sifter_mrc_search_engine_spark.plans.structured import StructuredSearchService
+
+    path = str(tmp_path / "posidx")
+    P.write_positional_index(docs, path)
+    rows = P._pruned_postings(spark, path, ["alpha", "beta"]).select(*KERNEL_COLUMNS, "poss").collect()
+    charge = 16 * sum(r["n"] + len(r["poss"]) for r in rows)
+    svc = StructuredSearchService(spark, path)
+    want = _rows(P.phrase_topk(docs, "beta alpha beta"))
+    driver = P.phrase_topk_indexed(spark, path, "beta alpha beta")
+    hits = svc.search({"type": "phrase", "phrase": "beta alpha beta"})["hits"]
+    monkeypatch.setattr(P, "DEFAULT_PRELOAD_BUDGET_BYTES", charge - 1)
+    twin = P.phrase_topk_indexed(spark, path, "beta alpha beta")
+    assert "ArrowEvalPython" in _plan(twin) and "ArrowEvalPython" not in _plan(driver)
+    assert want == _rows(driver) == _rows(twin) and len(want) == 2
+    assert svc.search({"type": "phrase", "phrase": "beta alpha beta"})["hits"] == hits
+    assert [(h["doc_id"], h["score"]) for h in hits] == want
+
+
+def test_positional_driver_follows_rebuild_in_place(spark, docs, tmp_path, monkeypatch):
+    """After ``rmtree`` and a rebuild at the same path, the driver path
+    answers like a fresh call on the new corpus (new postings relation,
+    new norms), and == its cluster twin."""
+    import shutil
+
+    path = str(tmp_path / "posidx")
+    P.write_positional_index(docs, path)
+    assert _ids(P.phrase_topk_indexed(spark, path, "alpha beta")) == {1, 2, 5}
+    assert _ids(P.near_topk_indexed(spark, path, "alpha beta", 2)) == {1, 2, 3, 5}
+    shutil.rmtree(path)
+    new = spark.createDataFrame(
+        [(10, "alpha beta alpha beta x"), (11, "beta y alpha"), (12, "x alpha beta")],
+        "doc_id long, text string",
+    )
+    P.write_positional_index(new, path)
+    _three_way(
+        monkeypatch, P.phrase_topk(new, "alpha beta"),
+        lambda: P.phrase_topk_indexed(spark, path, "alpha beta"), nonempty=True,
+    )
+    _three_way(
+        monkeypatch, P.near_topk(new, "alpha beta", 2),
+        lambda: P.near_topk_indexed(spark, path, "alpha beta", 2), nonempty=True,
+    )
+    assert _ids(P.phrase_topk_indexed(spark, path, "alpha beta")) == {10, 12}
+
+
+def test_positional_matches_stay_inside_one_doc(spark, tmp_path, monkeypatch):
+    """A slop chain or a near window never spans two docs: 'alpha' ends
+    the longest doc and 'beta' opens the next one, which the packed match
+    keys place just ``window`` apart."""
+    docs = spark.createDataFrame(
+        [(1, "beta x x x x alpha"), (2, "beta x x x x alpha"), (3, "alpha beta")],
+        "doc_id long, text string",
+    )
+    path = str(tmp_path / "posidx")
+    P.write_positional_index(docs, path)
+    _three_way(
+        monkeypatch, P.phrase_slop_topk(docs, "alpha beta", 2),
+        lambda: P.phrase_slop_topk_indexed(spark, path, "alpha beta", 2), nonempty=True,
+    )
+    _three_way(
+        monkeypatch, P.near_topk(docs, "alpha beta", 4),
+        lambda: P.near_topk_indexed(spark, path, "alpha beta", 4), nonempty=True,
+    )
+    assert _ids(P.near_topk_indexed(spark, path, "alpha beta", 4)) == {3}
 
 
 def test_oracle_parity_with_zero_token_doc(spark):

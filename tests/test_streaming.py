@@ -43,8 +43,8 @@ def test_multisegment_join_norms_no_driver_state(spark, streamed):
     """norms='join' must serve identical results with ZERO doclens on the
     driver — the 10^12-doc serving shape."""
     docs, idx_dir = streamed
-    pre = MultiSegmentSearcher(spark, idx_dir, buckets=8)
-    joined = MultiSegmentSearcher(spark, idx_dir, buckets=8, norms="join")
+    pre = MultiSegmentSearcher(spark, idx_dir)
+    joined = MultiSegmentSearcher(spark, idx_dir, norms="join")
     assert joined.doclen == {}  # nothing collected
     for q in QUERIES + ["zzznotaterm"]:
         a, b = pre.search(q, top_k=10), joined.search(q, top_k=10)
@@ -56,7 +56,7 @@ def test_multisegment_join_norms_no_driver_state(spark, streamed):
 @pytest.mark.parametrize("q", QUERIES)
 def test_multisegment_search_equals_batch_oracle(spark, streamed, q):
     docs, idx_dir = streamed
-    s = MultiSegmentSearcher(spark, idx_dir, buckets=8)
+    s = MultiSegmentSearcher(spark, idx_dir)
     expected = [
         (r["doc_id"], r["score"]) for r in bm25_brute_force(docs, q, top_k=10).collect()
     ]
@@ -64,6 +64,52 @@ def test_multisegment_search_equals_batch_oracle(spark, streamed, q):
     assert [d for d, _ in got] == [d for d, _ in expected], q
     for (gd, gs), (ed, es) in zip(got, expected):
         assert gs == es
+
+
+def test_multisegment_prunes_with_each_segments_modulus(spark, tmp_path):
+    """The searcher takes no bucket count: each segment's stats.json
+    records the modulus it was written with. A 300-doc stream built with
+    ``buckets=8`` answers == the brute-force oracle, and so does a store
+    mixing that stream with a ``buckets=4`` segment and a segment whose
+    stats.json predates the field (written with ``TERM_BUCKETS``)."""
+    import json
+
+    from sifter_mrc_search_engine_spark.streaming.incremental import _write_segment
+
+    docs = synthesize_pages(spark, 300, partitions=2).selectExpr(
+        "cast(split(url, '/')[4] as long) + 1000 as doc_id", "text"
+    ).cache()
+    in_dir, idx = str(tmp_path / "in"), str(tmp_path / "idx")
+    docs.coalesce(1).write.parquet(in_dir)
+    stream_build_index(spark, in_dir, idx, str(tmp_path / "ckpt"), buckets=8)
+    segs = list_segments(idx)
+    assert [json.loads(open(f"{s}/stats.json").read())["buckets"] for s in segs] == [8]
+
+    def check(corpus):
+        s = MultiSegmentSearcher(spark, idx)
+        for q in QUERIES:
+            want = [
+                (r["doc_id"], r["score"])
+                for r in bm25_brute_force(corpus, q, top_k=10).collect()
+            ]
+            assert want and s.search(q, top_k=10) == want, q
+
+    check(docs)
+    extra = spark.createDataFrame(
+        [(1, f"{VOCAB[0]} {VOCAB[40]} {VOCAB[2]}"), (2, f"{VOCAB[7]} {VOCAB[100]}")],
+        "doc_id long, text string",
+    )
+    old = spark.createDataFrame(
+        [(3, f"{VOCAB[0]} {VOCAB[7]} {VOCAB[100]} {VOCAB[2]}")], "doc_id long, text string"
+    )
+    _write_segment(extra, f"{idx}/segments/seg=100", buckets=4)
+    _write_segment(old, f"{idx}/segments/seg=101", buckets=64)
+    stats_path = f"{idx}/segments/seg=101/stats.json"
+    st = json.loads(open(stats_path).read())
+    del st["buckets"]
+    with open(stats_path, "w") as f:
+        f.write(json.dumps(st))
+    check(docs.unionByName(extra).unionByName(old))
 
 
 def test_streaming_checkpoint_no_reprocess(spark, streamed):
@@ -154,7 +200,7 @@ def test_overlapping_segments_detected_and_compacted(spark, tmp_path):
     _write_segment(seg1, f"{idx_dir}/segments/seg=1", buckets=4)
 
     with pytest.raises(ValueError, match="overlap"):
-        MultiSegmentSearcher(spark, idx_dir, buckets=4)
+        MultiSegmentSearcher(spark, idx_dir)
 
     compact_dir = compact_segments(spark, idx_dir, buckets=4)
     # latest content wins: exactly-once corpus == docs 1,3 + NEW doc 2
@@ -237,7 +283,7 @@ def test_mixed_schema_segments_search_and_compact(spark, tmp_path):
     from sifter_mrc_search_engine_spark.operators.bm25 import bm25_brute_force
 
     for norms in ("preload", "join"):
-        s = MultiSegmentSearcher(spark, idx_dir, buckets=4, norms=norms)
+        s = MultiSegmentSearcher(spark, idx_dir, norms=norms)
         for q in ["alpha", "gamma delta"]:
             expected = [
                 (r["doc_id"], r["score"])
@@ -264,7 +310,7 @@ def test_multisegment_search_df_contract(spark, streamed):
     """search_df (the lazy zero-driver-norms plan) matches search() and
     keeps the engine's empty-question contract: 0 rows, same schema."""
     _, idx_dir = streamed
-    s = MultiSegmentSearcher(spark, idx_dir, buckets=8, norms="join")
+    s = MultiSegmentSearcher(spark, idx_dir, norms="join")
     df = s.search_df(QUERIES[1], top_k=5)
     assert [f.name for f in df.schema.fields] == ["doc_id", "score"]
     got = [(r["doc_id"], r["score"]) for r in df.collect()]
@@ -283,9 +329,9 @@ def test_multisegment_norms_preload_budget(spark, streamed):
 
     _, idx_dir = streamed
     with pytest.raises(PreloadBudgetExceeded, match="preload_budget_bytes"):
-        MultiSegmentSearcher(spark, idx_dir, buckets=8, preload_budget_bytes=16)
+        MultiSegmentSearcher(spark, idx_dir, preload_budget_bytes=16)
     # join mode never collects norms: the tiny budget is irrelevant
     s = MultiSegmentSearcher(
-        spark, idx_dir, buckets=8, norms="join", preload_budget_bytes=16
+        spark, idx_dir, norms="join", preload_budget_bytes=16
     )
     assert s.doclen == {}
