@@ -236,7 +236,7 @@ def _q_bm25f_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
         _FIELDED_IDX_MEMO[sf_dir] = _build_once("fielded", sf_dir, _build)
     out = search_bm25f(
         spark, _FIELDED_IDX_MEMO[sf_dir], FLAGSHIP_QUESTION, _BM25F_WEIGHTS,
-        top_k=10, buckets=16,
+        top_k=10,
     )
     return out.select("doc_id", F.round("score", 4).alias("score"))
 
@@ -257,14 +257,13 @@ def _q_bm25f_multisegment(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan — must be score-identical to brute force over the FULL corpus
     (stats merge additively; df re-derives from the unioned candidates),
     so the single-table oracle doubles as the multi-segment oracle."""
-    from pathlib import Path
-
     from sifter_mrc_search_engine_spark.operators.fielded_index import (
         build_fielded_index,
         search_bm25f,
     )
     from sifter_mrc_search_engine_spark.streaming.incremental import (
         FieldedMultiSegmentSearcher,
+        commit_segment,
     )
 
     if sf_dir not in _FIELDED_SEG_DIRS:
@@ -280,17 +279,17 @@ def _q_bm25f_multisegment(spark: SparkSession, sf_dir: str) -> DataFrame:
                     two_field.filter(F.col("doc_id") % 2 == par),
                     ["title", "content"], seg, buckets=16,
                 )
-                (Path(seg) / "_SEGMENT_COMMITTED").write_text("1")
+                commit_segment(seg, spark)
 
         _FIELDED_SEG_DIRS[sf_dir] = _build_once("fseg", sf_dir, _build)
     key = (spark.sparkContext.applicationId, sf_dir)
     if key not in _FIELDED_SEG_MEMO:
         _FIELDED_SEG_MEMO[key] = FieldedMultiSegmentSearcher(
-            spark, _FIELDED_SEG_DIRS[sf_dir], buckets=16
+            spark, _FIELDED_SEG_DIRS[sf_dir]
         )
     s = _FIELDED_SEG_MEMO[key]
     out = search_bm25f(
-        spark, "", FLAGSHIP_QUESTION, _BM25F_WEIGHTS, top_k=10, buckets=16,
+        spark, "", FLAGSHIP_QUESTION, _BM25F_WEIGHTS, top_k=10,
         postings=s.postings, doclens=s.doclens, stats=s.stats,
     )
     return out.select("doc_id", F.round("score", 4).alias("score"))
@@ -545,21 +544,18 @@ def _driver_sampling_order(q: dict) -> dict:
     return out
 
 
-#: per-(session, sf) memo of the single-field 2-segment searcher
-_SEG_MEMO: dict[tuple, object] = {}
 _SEG_DIRS: dict[str, str] = {}
 
 
 def _q_bm25_multisegment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship BM25 across TWO streamed-style single-field segments
-    (docs split by parity) via MultiSegmentSearcher's merged
-    zero-driver-norms plan — score-identical to brute force over the
-    full corpus (df = sum of per-segment dfs; doc_ids are disjoint), so
-    the single-table oracle doubles as the multi-segment oracle."""
-    from sifter_mrc_search_engine_spark.streaming.incremental import (
-        MultiSegmentSearcher,
-        _write_segment,
-    )
+    (docs split by parity) via ``IndexSearcher(norms='join')``'s
+    relational plan with the in-plan merged df — score-identical to
+    brute force over the full corpus (df = sum of per-segment dfs;
+    doc_ids are disjoint), so the single-table oracle doubles as the
+    multi-segment oracle."""
+    from sifter_mrc_search_engine_spark.plans.query import IndexSearcher
+    from sifter_mrc_search_engine_spark.streaming.incremental import _write_segment
 
     if sf_dir not in _SEG_DIRS:
         def _build(d: str) -> None:
@@ -572,11 +568,9 @@ def _q_bm25_multisegment(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
 
         _SEG_DIRS[sf_dir] = _build_once("seg", sf_dir, _build)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _SEG_MEMO:
-        _SEG_MEMO[key] = MultiSegmentSearcher(spark, _SEG_DIRS[sf_dir], norms="join")
-    out = _SEG_MEMO[key].search_df(FLAGSHIP_QUESTION, top_k=10)
-    return out.select("doc_id", F.round("score", 4).alias("score"))
+    searcher = IndexSearcher(spark, _SEG_DIRS[sf_dir], norms="join")
+    out = searcher.search_many_relational([FLAGSHIP_QUESTION], top_k=10)
+    return out.orderBy("rank").select("doc_id", F.round("score", 4).alias("score"))
 
 
 def _q_pack_stream(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -17,7 +17,9 @@ remote code path is exercised in tests without a real object store.
 
 from __future__ import annotations
 
+import os
 import re
+import threading
 from pathlib import Path
 
 from pyspark.sql import SparkSession
@@ -79,10 +81,19 @@ def read_text(path: str, spark: SparkSession | None = None) -> str:
 
 
 def write_text(path: str, text: str, spark: SparkSession | None = None) -> None:
+    """Replace a sidecar. A local path is written to a hidden temp
+    sibling and renamed over the target, so a concurrent reader sees the
+    old text or the new one, never a truncated file: stats.json is an
+    index's commit point."""
     if not is_remote(path):
         p = Path(path)
         p.parent.mkdir(parents=True, exist_ok=True)
-        p.write_text(text)
+        tmp = p.with_name(f".{p.name}.{os.getpid()}.{threading.get_ident()}.tmp")
+        try:
+            tmp.write_text(text)
+            os.replace(tmp, p)
+        finally:
+            tmp.unlink(missing_ok=True)
         return
     hpath, fs = _fs(path, spark)
     out = fs.create(hpath, True)

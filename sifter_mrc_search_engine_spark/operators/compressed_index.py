@@ -36,6 +36,8 @@ because avgdl/N are fixed by the corpus stats that precede encoding.
 from __future__ import annotations
 
 import json
+import threading
+from typing import Sequence
 
 import numpy as np
 import pandas as pd
@@ -58,6 +60,7 @@ from .postings_codec import decode_postings, encode_postings, varbyte_decode, va
 from .wand import packed_ids
 from ..functions import fsio
 from ..functions.analyzer import tokenize_expr
+from ..functions.xxhash import term_bucket
 
 INDEX_SCHEMA = StructType(
     [
@@ -172,61 +175,139 @@ def charge_preload(
     return est
 
 
-_DOCLEN_CACHE: dict[tuple, tuple] = {}
+class IndexSnapshot:
+    """One generation of an index directory, resolved as a whole under
+    one stats.json freshness token: everything a request reads.
 
+    stats.json is the commit point. A built (or compacted) dir is its
+    own one segment; a streamed dir lists its committed segments
+    (:func:`streaming.incremental.commit_segment`), each with its stats
+    and relative ``path``. Across segments the stats merge exactly:
+    ``n_docs`` adds, ``avgdl`` is Σdl_sum/Σn, the ``postings`` and
+    ``doclens`` relations are unions, and a scan prunes with the union
+    of the segments' bucket ``moduli``. Segments assume exactly-once
+    ingest: a doc id in two segments would double-count df and N, so a
+    multi-segment snapshot checks that its doclens hold ``n_docs``
+    distinct ids (one aggregate per generation).
 
-def invalidate_norms_cache(index_dir: str | None = None) -> None:
-    """Drop cached norms for ``index_dir`` (or all). Build/compaction
-    paths need not call this — the cache key includes the stats.json
-    freshness token (mtime+size), so a rebuilt index at the same path
-    misses naturally."""
-    if index_dir is None:
-        _DOCLEN_CACHE.clear()
-        return
-    for k in [k for k in _DOCLEN_CACHE if k[0] == index_dir]:
-        del _DOCLEN_CACHE[k]
+    The driver norms (``doclen``) load on first use; the budget is
+    charged on that miss only."""
 
+    __slots__ = (
+        "index_dir", "app", "token", "segments", "n_docs", "avgdl", "moduli",
+        "postings", "doclens", "doclen",
+    )
 
-def _load_norms(spark, index_dir: str, budget_bytes: int | None = None):
-    """(doclen lookup, n_docs, avgdl), cached per (index_dir, freshness).
-
-    The freshness token is stats.json's (mtime_ns, size): rebuilding or
-    compacting an index at the same path in one process must not serve
-    stale doc lengths. Dense numpy array when doc_ids are nonnegative
-    and reasonably packed (fast vectorized lookups); dict fallback for
-    sparse / hash-derived / negative id spaces.
-
-    ``budget_bytes`` gates ONLY the cache-miss collect: a cache hit
-    costs zero additional driver memory, so it must neither pay the
-    estimate aggregate nor be refusable (r5 review).
-    """
-    stats_path = fsio.join(index_dir, "stats.json")
-    key = (index_dir, fsio.freshness_token(stats_path, spark))
-    if key in _DOCLEN_CACHE:
-        return _DOCLEN_CACHE[key]
-    # evict superseded versions of the same index — a rebuild-per-batch
-    # process must not pin every generation's doclen array forever
-    for stale in [k for k in _DOCLEN_CACHE if k[0] == index_dir]:
-        del _DOCLEN_CACHE[stale]
-    stats = json.loads(fsio.read_text(stats_path, spark))
-    doclens_df = spark.read.parquet(f"{index_dir}/doclens")
-    check_preload_budget(doclens_df, f"doclens of {index_dir}", budget_bytes)
-    rows = doclens_df.collect()
-    ids = [r["doc_id"] for r in rows]
-    max_id = max(ids)
-    if packed_ids(min(ids), max_id, len(ids)):
-        dl = np.zeros(max_id + 1, dtype=np.int64)
-        for r in rows:
-            dl[r["doc_id"]] = r["doc_len"]
-        out = (dl, int(stats["n_docs"]), float(stats["avgdl"]))
-    else:
-        out = (
-            {r["doc_id"]: r["doc_len"] for r in rows},
-            int(stats["n_docs"]),
-            float(stats["avgdl"]),
+    def __init__(self, spark, index_dir: str, token: tuple):
+        stats = json.loads(fsio.read_text(fsio.join(index_dir, "stats.json"), spark))
+        segs = stats.get("segments")
+        self.index_dir = index_dir
+        self.app = spark.sparkContext.applicationId
+        self.token = token
+        self.segments = segs = (
+            [{**s, "path": fsio.join(index_dir, s["path"])} for s in segs]
+            if segs else [{**stats, "path": index_dir}]
         )
-    _DOCLEN_CACHE[key] = out
-    return out
+        self.n_docs = n = sum(int(s["n_docs"]) for s in segs)
+        if len(segs) == 1:
+            self.avgdl = float(segs[0]["avgdl"])
+        else:
+            self.avgdl = sum(int(s["dl_sum"]) for s in segs) / n if n else 0.0
+        # dirs written before stats.json recorded it used the default
+        self.moduli = sorted({int(s.get("buckets", TERM_BUCKETS)) for s in segs})
+        paths = [s["path"] for s in self.segments]
+        self.postings = spark.read.parquet(f"{paths[0]}/postings")
+        self.doclens = spark.read.parquet(f"{paths[0]}/doclens")
+        for p in paths[1:]:
+            # allowMissingColumns: segments written before the blockmaxtf
+            # codec column lack it; the kernels never read it
+            self.postings = self.postings.unionByName(
+                spark.read.parquet(f"{p}/postings"), allowMissingColumns=True
+            )
+            self.doclens = self.doclens.unionByName(spark.read.parquet(f"{p}/doclens"))
+        self.doclen = None
+        if len(paths) > 1:
+            distinct = self.doclens.select(F.countDistinct("doc_id")).collect()[0][0]
+            if distinct != n:
+                raise ValueError(
+                    f"doc_ids overlap across segments ({n} segment docs, "
+                    f"{distinct} distinct) — segments require exactly-once "
+                    "ingest; run compact_segments to dedupe keep-latest"
+                )
+
+    def pruned(self, terms: Sequence[str]) -> DataFrame:
+        """The postings rows of ``terms``: bucket-partition- and
+        term-pruned. Bucket ids come from the driver-side xxhash twin (no
+        Spark job), one per term and modulus: the term filter drops the
+        other segments' extra rows."""
+        tset = sorted(set(terms))
+        bks = sorted({term_bucket(t, m) for t in tset for m in self.moduli})
+        return self.postings.filter(F.col("bucket").isin(bks)).filter(
+            F.col("term").isin(tset)
+        )
+
+    def merged(self, rows: list) -> list:
+        """Collected postings ``rows`` as the merged index scores them.
+        One segment's rows are exact as stored. Across segments each
+        term's df is the sum of its rows' ``n`` (doc ids are
+        segment-disjoint), and the stored impact bounds, computed under
+        segment-local stats, are replaced by the always-valid
+        ``idf·(k1+1)`` (tf·(k1+1)/(tf+K) < k1+1): weaker pruning,
+        identical scores. Callers also turn block-max off."""
+        if len(self.segments) == 1:
+            return rows
+        df: dict[str, int] = {}
+        for r in rows:
+            df[r["term"]] = df.get(r["term"], 0) + int(r["n"])
+        return [
+            {**r.asDict(), "df": df[r["term"]],
+             "max_impact": bm25.idf(df[r["term"]], self.n_docs) * (BM25_K1 + 1.0)}
+            for r in rows
+        ]
+
+    def norms(self, budget_bytes: int | None):
+        """The driver norms, collected on first use: a dense numpy array
+        when the doc ids are nonnegative and packed, else a dict (sparse,
+        hash-derived or negative ids). Only that collect is charged
+        against ``budget_bytes``: one row per doc is exactly the collect
+        that kills the driver at 10^12 docs, and a loaded snapshot costs
+        no more memory."""
+        if self.doclen is None:
+            check_preload_budget(self.doclens, f"doclens of {self.index_dir}", budget_bytes)
+            rows = self.doclens.collect()
+            ids = [r["doc_id"] for r in rows]
+            max_id = max(ids)
+            if packed_ids(min(ids), max_id, len(ids)):
+                dl = np.zeros(max_id + 1, dtype=np.int64)
+                for r in rows:
+                    dl[r["doc_id"]] = r["doc_len"]
+            else:
+                dl = {r["doc_id"]: r["doc_len"] for r in rows}
+            self.doclen = dl
+        return self.doclen
+
+
+#: index_dir -> its current :class:`IndexSnapshot`
+_SNAPSHOTS: dict[str, IndexSnapshot] = {}
+_SNAPSHOTS_LOCK = threading.Lock()
+
+
+def snapshot(spark, index_dir: str) -> IndexSnapshot:
+    """``index_dir``'s current generation, for one request: one stat of
+    stats.json per call. The snapshot is reused while the session
+    (``applicationId``) and stats.json's freshness token are unchanged,
+    so the relations, merged stats and norms are built once per
+    generation. Each dir keeps only its current snapshot; a searcher
+    holding an older one keeps serving it. The lock guards the dict
+    against the front door's handler threads."""
+    token = fsio.freshness_token(fsio.join(index_dir, "stats.json"), spark)
+    with _SNAPSHOTS_LOCK:
+        snap = _SNAPSHOTS.get(index_dir)
+    if snap is None or snap.token != token or snap.app != spark.sparkContext.applicationId:
+        snap = IndexSnapshot(spark, index_dir, token)
+        with _SNAPSHOTS_LOCK:
+            _SNAPSHOTS[index_dir] = snap
+    return snap
 
 
 def _local_frame(spark, rows: list, columns) -> DataFrame:

@@ -12,7 +12,8 @@ reference engine's ``searchField`` list (search_functions.py:92-95).
 Layout under ``index_dir``:
   postings/bucket=*/   INDEX_SCHEMA rows, term = "<field>\\x1f<term>"
   doclens/             (doc_id, field, doc_len) long format
-  stats.json           {"n_docs": N, "fields": [...]}
+  stats.json           {"n_docs": N, "fields": [...], "len_sums": {...},
+                        "buckets": modulus}
 
 Query lifecycle (``search_bm25f``): driver-side bucket routing for the
 field-prefixed query terms -> ONE pruned scan -> distributed decode ->
@@ -214,6 +215,8 @@ def build_fielded_index(
         write_fielded_term_df(g, f"{index_dir}/term_df")
     finally:
         g.unpersist()
+    # searchers prune with the modulus the dir records, never a caller's
+    stats["buckets"] = buckets
     fsio.write_text(
         fsio.join(index_dir, "stats.json"), json.dumps(stats), docs.sparkSession
     )
@@ -636,7 +639,6 @@ class FieldedSearcher:
         self,
         spark: SparkSession,
         index_dir: str,
-        buckets: int = TERM_BUCKETS,
         preload: bool = False,
         norms: str = "preload",
         preload_budget_bytes: int | None = DEFAULT_PRELOAD_BUDGET_BYTES,
@@ -647,17 +649,19 @@ class FieldedSearcher:
         collects them once for the low-latency driver kernels. Driver
         collects are size-estimated first and refused above
         ``preload_budget_bytes`` (default 4 GiB; ``None`` disables the
-        check) — a clear error beats an OOMed driver."""
+        check) — a clear error beats an OOMed driver. The bucket modulus
+        is the one stats.json records (``TERM_BUCKETS`` for dirs written
+        before it was recorded)."""
         import numpy as np
 
         if norms not in ("preload", "join"):
             raise ValueError(f"unknown norms mode {norms!r}")
         self.spark = spark
         self.index_dir = index_dir
-        self.buckets = buckets
         self.norms_mode = norms
         stats = json.loads(fsio.read_text(fsio.join(index_dir, "stats.json"), spark))
         self._stats = stats
+        self.buckets = int(stats.get("buckets", TERM_BUCKETS))
         self.n_docs = int(stats["n_docs"])
         self.fields = list(stats["fields"])
         self.postings = spark.read.parquet(f"{index_dir}/postings")
@@ -818,7 +822,7 @@ class FieldedSearcher:
                 )
             rows2 = search_bm25f(
                 self.spark, self.index_dir, question, weights,
-                top_k=top_k, buckets=self.buckets, k1=k1, b=b,
+                top_k=top_k, k1=k1, b=b,
                 postings=self.postings, doclens=self.doclens_df,
                 stats=self._stats,
             ).collect()
@@ -838,7 +842,6 @@ def search_bm25f(
     question: str,
     weights: Mapping[str, float],
     top_k: int = DEFAULT_TOP_K,
-    buckets: int = TERM_BUCKETS,
     k1: float = BM25_K1,
     b: float = BM25_B,
     postings: DataFrame | None = None,
@@ -853,6 +856,8 @@ def search_bm25f(
     ``FieldedSearcher``) pass its already-bound relations and parsed
     stats so repeated queries skip the per-call stats.json read and
     parquet relation instantiation; defaults load from ``index_dir``.
+    Terms are routed with the bucket modulus ``stats`` records, or with
+    each of its ``moduli`` for a store of segments written with several.
     """
     if stats is None:
         stats = json.loads(fsio.read_text(fsio.join(index_dir, "stats.json"), spark))
@@ -868,7 +873,8 @@ def search_bm25f(
     if not qterms:
         return spark.createDataFrame([], "doc_id long, score double")
     fterms = [f"{f}{FIELD_SEP}{t}" for f in names for t in qterms]
-    bks = sorted({term_bucket(ft, buckets) for ft in fterms})
+    moduli = stats.get("moduli") or [int(stats.get("buckets", TERM_BUCKETS))]
+    bks = sorted({term_bucket(ft, m) for ft in fterms for m in moduli})
 
     post = postings if postings is not None else spark.read.parquet(
         f"{index_dir}/postings"

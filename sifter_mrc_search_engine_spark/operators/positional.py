@@ -59,14 +59,15 @@ from . import bm25
 from .bm25 import bm25_term_scores, sum_in_term_order
 from .compressed_index import (
     DEFAULT_PRELOAD_BUDGET_BYTES,
+    IndexSnapshot,
     PreloadBudgetExceeded,
-    _load_norms,
     _local_frame,
     build_compressed_index,
     charge_preload,
     decode_index_df,
     decode_positions,
     sample_hot_terms,
+    snapshot,
     tf_doclen,
     write_doclens,
     write_index,
@@ -956,89 +957,31 @@ def write_positional_index(
     return stats
 
 
-#: per-(session, index_dir, stats.json freshness) serving state:
-#: (stats dict, bucket modulus, postings relation, doclens relation).
-#: Each indexed structured query used to re-read stats.json twice and
-#: re-instantiate both parquet relations PER CALL — per-HTTP-request
-#: driver I/O with none of the caching the main query path has (r5
-#: ADVICE). The freshness token (stats.json mtime_ns+size) invalidates
-#: on rebuild; the applicationId keys out stopped sessions. Guarded by
-#: a lock: StructuredSearchService handlers run on ThreadingHTTPServer
-#: threads, and an unsynchronized evict-while-insert would die with
-#: "dictionary changed size during iteration".
-_SERVE_MEMO: dict[tuple, tuple] = {}
-_SERVE_MEMO_LOCK = None  # created lazily to keep import time clean
-_SERVE_MEMO_CAP = 64
-
-
-def _serve_state(spark: SparkSession, index_dir: str) -> tuple:
-    global _SERVE_MEMO_LOCK
-    if _SERVE_MEMO_LOCK is None:
-        import threading
-
-        _SERVE_MEMO_LOCK = threading.Lock()
-    token = fsio.freshness_token(fsio.join(index_dir, "stats.json"), spark)
-    app = spark.sparkContext.applicationId
-    key = (app, index_dir, token)
-    with _SERVE_MEMO_LOCK:
-        hit = _SERVE_MEMO.get(key)
-    if hit is not None:
-        return hit
-    stats = json.loads(fsio.read_text(fsio.join(index_dir, "stats.json"), spark))
-    out = (
-        stats,
-        int(stats.get("buckets", TERM_BUCKETS)),
-        spark.read.parquet(f"{index_dir}/postings"),
-        spark.read.parquet(f"{index_dir}/doclens"),
-    )
-    with _SERVE_MEMO_LOCK:
-        # evict only THIS session's superseded generations of the same
-        # dir (another live session's entry for the dir stays valid —
-        # evicting on index_dir alone would make two sessions thrash
-        # each other's cache on every call); a small FIFO cap bounds
-        # growth from dead applications / many index dirs
-        for stale in [
-            k for k in _SERVE_MEMO if k[0] == app and k[1] == index_dir and k != key
-        ]:
-            del _SERVE_MEMO[stale]
-        while len(_SERVE_MEMO) >= _SERVE_MEMO_CAP:
-            del _SERVE_MEMO[next(iter(_SERVE_MEMO))]
-        _SERVE_MEMO[key] = out
-    return out
-
-
-def _pruned_postings(
-    spark: SparkSession, index_dir: str, uterms: Sequence[str]
-) -> DataFrame:
-    """The raw postings rows of the query's terms: bucket-partition-
-    pruned and term-pruned, so a query never touches postings of other
-    terms. Bucket ids come from the driver-side xxhash twin (no Spark job
-    per query — same recipe as ``IndexSearcher``), with the modulus from
-    the index's own stats.json."""
-    from ..functions.xxhash import term_bucket
-
-    _, buckets, postings, _ = _serve_state(spark, index_dir)
-    bkts = sorted({term_bucket(t, buckets) for t in uterms})
-    return postings.filter(F.col("bucket").isin(bkts) & F.col("term").isin(list(uterms)))
+def _snapshot(spark: SparkSession, index_dir: str) -> IndexSnapshot:
+    """The positional index's current snapshot: one stats.json
+    freshness stat per request, the relations and norms built once per
+    generation. Streamed segments carry no ``poss``, so a dir of several
+    segments is refused."""
+    snap = snapshot(spark, index_dir)
+    if len(snap.segments) > 1:
+        raise ValueError(
+            f"{index_dir} has {len(snap.segments)} segments; positional "
+            "queries need one (compact it first)"
+        )
+    return snap
 
 
 def _load_posts(
-    spark: SparkSession,
-    index_dir: str,
-    uterms: Sequence[str],
-    with_positions: bool = True,
+    snap: IndexSnapshot, uterms: Sequence[str], with_positions: bool = True
 ) -> DataFrame:
-    """:func:`_pruned_postings` decoded executor-side by the one cluster
-    decoder. ``with_positions=False`` decodes only doc_ids + tfs (and
-    never reads the positions column)."""
-    return decode_index_df(
-        _pruned_postings(spark, index_dir, uterms), positions=with_positions
-    )
+    """The terms' pruned postings (:meth:`IndexSnapshot.pruned`) decoded
+    executor-side by the one cluster decoder. ``with_positions=False``
+    decodes only doc_ids + tfs (and never reads the positions column)."""
+    return decode_index_df(snap.pruned(uterms), positions=with_positions)
 
 
 def _scored_from_tfs(
-    spark: SparkSession,
-    index_dir: str,
+    snap: IndexSnapshot,
     tf: DataFrame,
     matched: DataFrame | None,
     top_k: int,
@@ -1047,7 +990,7 @@ def _scored_from_tfs(
     score_terms: Sequence[str] | None = None,
 ) -> DataFrame:
     """BM25 over ``(term, df, doc_id, tf)`` rows with the index's exact
-    df, the doclens sidecar, and stats.json's corpus stats, optionally
+    df, the doclens sidecar, and ``snap``'s corpus stats, optionally
     restricted (left-semi) to ``matched`` doc_ids — the one scoring tail
     every cluster-side indexed query shape funnels into.
 
@@ -1057,13 +1000,10 @@ def _scored_from_tfs(
     slot contributes +0.0 — bit-identical to the sorted fold over
     nonnegative contributions). Expansion shapes (prefix/wildcard/fuzzy)
     keep the generic collect_list fold — their terms live in the plan."""
-    stats, _, _, dl = _serve_state(spark, index_dir)
-    n_docs, avgdl = int(stats["n_docs"]), float(stats["avgdl"])
-
     from .bm25 import bm25_contrib_expr
 
-    contrib = bm25_contrib_expr("tf", "df", "doc_len", n_docs, avgdl, k1, b)
-    contribs = tf.join(dl, "doc_id").select("doc_id", "term", contrib.alias("contrib"))
+    contrib = bm25_contrib_expr("tf", "df", "doc_len", snap.n_docs, snap.avgdl, k1, b)
+    contribs = tf.join(snap.doclens, "doc_id").select("doc_id", "term", contrib.alias("contrib"))
     if matched is not None:
         contribs = contribs.join(matched, "doc_id", "left_semi")
     if score_terms:
@@ -1125,8 +1065,7 @@ def near_query(question: str, window: int) -> PositionalQuery:
 
 
 def _cluster_topk(
-    spark: SparkSession,
-    index_dir: str,
+    snap: IndexSnapshot,
     query: PositionalQuery,
     top_k: int,
     k1: float,
@@ -1138,7 +1077,7 @@ def _cluster_topk(
     re-read of the same postings (the positional decode is never consumed
     twice)."""
     uterms = sorted(set(query.terms))
-    posts = _load_posts(spark, index_dir, uterms)
+    posts = _load_posts(snap, uterms)
     occ = posts.select("term", "doc_id", F.explode("positions").alias("pos"))
     if query.kind == "phrase":
         matched = _anchor_match(occ, query.terms, distinct=False)
@@ -1146,10 +1085,8 @@ def _cluster_topk(
         matched = _ordered_chain_match(occ, query.terms, query.window, distinct=False)
     else:
         matched = _min_cover_match(occ, uterms, query.window, distinct=False)
-    tf = _load_posts(spark, index_dir, uterms, with_positions=False)
-    return _scored_from_tfs(
-        spark, index_dir, tf, matched, top_k, k1, b, score_terms=uterms
-    )
+    tf = _load_posts(snap, uterms, with_positions=False)
+    return _scored_from_tfs(snap, tf, matched, top_k, k1, b, score_terms=uterms)
 
 
 def _member(sorted_keys: np.ndarray, q: np.ndarray) -> np.ndarray:
@@ -1239,9 +1176,20 @@ def _match_docs(post: dict, query: PositionalQuery) -> np.ndarray | None:
     return cand[np.unique(hit // w)]
 
 
+def _decode_charge(rows) -> int:
+    """The driver bytes :func:`_driver_topk` may hold for the collected
+    ``rows``, charged before any decode: 96 per ``poss`` byte and 32 per
+    posting. Each position takes at least one byte; the decoded positions,
+    ``varbyte_decode``'s per-byte int64 arrays, :func:`decode_positions`'
+    cumsums and :func:`_match_docs`' packed keys peaked at 37–82 bytes per
+    position under ``tracemalloc`` (near is the widest matcher, phrase
+    and slop stay under 50). Per posting, the decoded ids and tfs keep 16
+    bytes and the block decode's transients add less than as much."""
+    return sum(96 * len(r["poss"]) + 32 * int(r["n"]) for r in rows)
+
+
 def _driver_topk(
-    spark: SparkSession,
-    index_dir: str,
+    snap: IndexSnapshot,
     query: PositionalQuery,
     top_k: int,
     k1: float,
@@ -1254,15 +1202,14 @@ def _driver_topk(
     :func:`accumulate_topk` in ascending-term order — ``==`` to the
     cluster plan's slot fold. No Python worker, shuffle or decode UDF runs.
 
-    The decoded arrays (at most 16 bytes per posting and per position,
-    each position being at least one varbyte) are charged against
+    The decode and match (:func:`_decode_charge`) are charged against
     ``DEFAULT_PRELOAD_BUDGET_BYTES`` before any decode, the norms against
     what is left. Returns None, the cue to run :func:`_cluster_topk`,
     over budget or when the packed match keys could overflow."""
     uterms = sorted(set(query.terms))
     if not uterms:
         return []
-    rows = _pruned_postings(spark, index_dir, uterms).select(*KERNEL_COLUMNS, "poss").collect()
+    rows = snap.pruned(uterms).select(*KERNEL_COLUMNS, "poss").collect()
     by_term: dict[str, list] = {}
     for r in rows:
         by_term.setdefault(r["term"], []).append(r)
@@ -1271,10 +1218,9 @@ def _driver_topk(
     budget = DEFAULT_PRELOAD_BUDGET_BYTES
     try:
         spent = charge_preload(
-            16 * sum(int(r["n"]) + len(r["poss"]) for r in rows),
-            f"decoded postings and positions of {uterms}", budget,
+            _decode_charge(rows), f"decoded postings and positions of {uterms}", budget
         )
-        doclen, n_docs, avgdl = _load_norms(spark, index_dir, budget - spent)
+        doclen = snap.norms(budget - spent)
     except PreloadBudgetExceeded:
         return None
     post = {t: _decode_term(by_term[t]) for t in uterms}
@@ -1288,8 +1234,10 @@ def _driver_topk(
         ids, tfs, _ = post[t]
         keep = _member(matched, ids)
         ids, tfs = ids[keep], tfs[keep].astype(np.float64)
-        idf = bm25.idf(int(by_term[t][0]["df"]), n_docs)
-        per_term.append((ids, bm25.impacts(idf, tfs, doc_lens(doclen, ids), avgdl, k1, b)))
+        idf = bm25.idf(int(by_term[t][0]["df"]), snap.n_docs)
+        per_term.append(
+            (ids, bm25.impacts(idf, tfs, doc_lens(doclen, ids), snap.avgdl, k1, b))
+        )
     return accumulate_topk(per_term, top_k)
 
 
@@ -1304,9 +1252,10 @@ def positional_topk(
     """``query``'s top-k ``(doc_id, score)`` from the positional index,
     ranked (score desc, doc_id asc): the driver kernel, or the cluster
     plan's collected rows when the driver path declines."""
-    hits = _driver_topk(spark, index_dir, query, top_k, k1, b)
+    snap = _snapshot(spark, index_dir)
+    hits = _driver_topk(snap, query, top_k, k1, b)
     if hits is None:
-        rows = _cluster_topk(spark, index_dir, query, top_k, k1, b).collect()
+        rows = _cluster_topk(snap, query, top_k, k1, b).collect()
         hits = [(int(r["doc_id"]), float(r["score"])) for r in rows]
     return hits
 
@@ -1321,9 +1270,10 @@ def _positional_frame(
 ) -> DataFrame:
     """:func:`positional_topk` as a DataFrame: the driver kernel's rows
     as a JVM ``LocalTableScan``, else the cluster plan itself."""
-    hits = _driver_topk(spark, index_dir, query, top_k, k1, b)
+    snap = _snapshot(spark, index_dir)
+    hits = _driver_topk(snap, query, top_k, k1, b)
     if hits is None:
-        return _cluster_topk(spark, index_dir, query, top_k, k1, b)
+        return _cluster_topk(snap, query, top_k, k1, b)
     return _local_frame(spark, hits, SCORE_COLUMNS)
 
 
@@ -1393,7 +1343,8 @@ def _vocab_topk_indexed(
     (term, df) top-k and broadcast-semi-joined back, never collected."""
     if max_expansions is not None and max_expansions < 1:
         raise ValueError("max_expansions must be >= 1")
-    raw = _serve_state(spark, index_dir)[2].filter(term_pred)
+    snap = _snapshot(spark, index_dir)
+    raw = snap.postings.filter(term_pred)
     if max_expansions is not None:
         top_terms = (
             raw.select("term", "df")
@@ -1404,7 +1355,7 @@ def _vocab_topk_indexed(
         )
         raw = raw.join(F.broadcast(top_terms), "term", "left_semi")
     tf = decode_index_df(raw)
-    return _scored_from_tfs(spark, index_dir, tf, None, top_k, k1, b)
+    return _scored_from_tfs(snap, tf, None, top_k, k1, b)
 
 
 def prefix_topk_indexed(
@@ -1490,9 +1441,8 @@ def bool_topk_indexed(
     if not score_t:
         return spark.createDataFrame([], "doc_id long, score double")
     all_t = sorted(set(score_t) | set(not_t))
-    tf = _load_posts(spark, index_dir, all_t, with_positions=False)
+    snap = _snapshot(spark, index_dir)
+    tf = _load_posts(snap, all_t, with_positions=False)
     match = _bool_match_ids(tf, must_t, score_t, not_t)
     score_tf = tf.filter(F.col("term").isin(score_t))
-    return _scored_from_tfs(
-        spark, index_dir, score_tf, match, top_k, k1, b, score_terms=score_t
-    )
+    return _scored_from_tfs(snap, score_tf, match, top_k, k1, b, score_terms=score_t)

@@ -323,6 +323,7 @@ def build_fielded_index_resumable(
         t0 = time.monotonic()
         if not have_doclens:
             stats = write_fielded_doclens(g, docs.count(), fields, index_dir)
+            stats["buckets"] = buckets  # FieldedSearcher prunes with it
             fsio.write_text(fsio.join(index_dir, "stats.json"), json.dumps(stats), spark)
             _append_manifest(
                 index_dir,

@@ -10,10 +10,11 @@ hold at 10^12 docs. A preloaded searcher (``preload=True``) skips the
 scan and the kernel: it decoded every term once into BM25 impact arrays
 at construction, and a query only adds its terms' arrays.
 
-Doc lengths: loaded once per (process, index) into dense numpy arrays and
-cached — the Lucene-norms analogue. At true 10^12 scale the norms sidecar
-would be range-partitioned and memory-mapped per executor; the access
-pattern (random lookups by doc_id during scoring) is identical.
+Doc lengths: loaded once per index snapshot into a dense numpy array (a
+dict for sparse ids) — the Lucene-norms analogue. At true 10^12 scale
+the norms sidecar would be range-partitioned and memory-mapped per
+executor; the access pattern (random lookups by doc_id during scoring)
+is identical.
 
 Batch scoring has two shapes. ``search_many`` is a driver scatter-gather:
 one pruned scan fetches the union of the batch's postings (none when
@@ -23,34 +24,34 @@ no Python worker. ``search_many_relational`` keeps postings and norms on
 the executors: one Catalyst plan for batches or indexes too big for the
 driver.
 
-A scan searcher re-reads the index directory when stats.json's freshness
-token changes, so it follows an in-place rebuild; a preloaded searcher
-serves the snapshot it decoded.
+Every request reads one :class:`IndexSnapshot` of the directory,
+resolved under stats.json's freshness token: a scan searcher follows an
+in-place rebuild or a newly committed stream segment, and a preloaded
+searcher serves the snapshot it decoded. A streamed directory (a list
+of committed segments) is served with merged stats: df, N and avgdl add
+up across segments, and block-max pruning is off when there is more than
+one.
 """
 
 from __future__ import annotations
 
-import json
-from typing import NamedTuple, Sequence
+from typing import Sequence
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..constants import DEFAULT_TOP_K, MAX_TOP_K, TERM_BUCKETS
-from ..functions import fsio
+from ..constants import DEFAULT_TOP_K, MAX_TOP_K
 from ..functions.analyzer import analyze
-from ..functions.xxhash import term_bucket
-from ..operators.compressed_index import (  # noqa: F401  (norms cache re-exported)
-    _DOCLEN_CACHE,
+from ..operators.compressed_index import (  # noqa: F401  (re-exported)
     DEFAULT_PRELOAD_BUDGET_BYTES,
     NO_PRELOAD_ADVICE,
+    IndexSnapshot,
     PreloadBudgetExceeded,
-    _load_norms,
     _local_frame,
     charge_preload,
     check_preload_budget,
-    invalidate_norms_cache,
+    snapshot,
 )
 from ..operators.wand import KERNEL_COLUMNS, accumulate_topk, term_impacts, wand_topk
 
@@ -59,21 +60,8 @@ from ..operators.wand import KERNEL_COLUMNS, accumulate_topk, term_impacts, wand
 HITS_COLUMNS = (("query_id", "int"), ("rank", "int"), ("doc_id", "long"), ("score", "double"))
 
 
-class _Snapshot(NamedTuple):
-    """Everything a request reads from the index directory, resolved
-    together under one stats.json freshness token."""
-
-    token: tuple
-    postings: DataFrame
-    doclens: DataFrame
-    n_docs: int
-    avgdl: float
-    buckets: int  # the bucket modulus the index was built with
-    doclen: object  # driver norms; None until first needed
-
-
 class IndexSearcher:
-    """Serve BM25 top-k queries from a built index directory."""
+    """Serve BM25 top-k queries from a built or streamed index directory."""
 
     def __init__(
         self,
@@ -104,7 +92,11 @@ class IndexSearcher:
 
         Without preload the searcher follows the directory: each request
         checks stats.json's freshness token and re-reads the index when a
-        rebuild or compaction has rewritten it.
+        rebuild, a compaction or a stream commit has rewritten it.
+
+        ``index_dir`` is a built index or a streamed one (see the module
+        doc). A streamed dir whose segments share a doc id raises
+        ``ValueError`` when it is resolved.
 
         ``norms``: 'preload' loads the doclens sidecar into driver memory
         (at construction with ``preload=True``, else on first use;
@@ -121,52 +113,23 @@ class IndexSearcher:
         self.spark = spark
         self.index_dir = index_dir
         self.norms_mode = norms
-        self._stats_path = fsio.join(index_dir, "stats.json")
-        self._snap = self._resolve(fsio.freshness_token(self._stats_path, spark))
+        self._snap = snapshot(spark, index_dir)
         self._preload_budget = preload_budget_bytes
         self._mem: dict[str, tuple[np.ndarray, np.ndarray]] | None = None
         if preload:
             self._mem = self._preload_impacts(preload_budget_bytes)
 
-    def _resolve(self, token: tuple) -> _Snapshot:
-        stats = json.loads(fsio.read_text(self._stats_path, self.spark))
-        return _Snapshot(
-            token,
-            self.spark.read.parquet(f"{self.index_dir}/postings"),
-            self.spark.read.parquet(f"{self.index_dir}/doclens"),
-            int(stats["n_docs"]),
-            float(stats["avgdl"]),
-            # dirs written before stats.json recorded it used the default
-            int(stats.get("buckets", TERM_BUCKETS)),
-            None,
-        )
-
-    def _snapshot(self) -> _Snapshot:
-        """The index state for one request; read it once per request. A
-        changed freshness token (a rebuild in place) re-resolves it; a
-        preloaded searcher keeps the snapshot it decoded."""
-        snap = self._snap
+    def _snapshot(self) -> IndexSnapshot:
+        """The index state for one request; read it once per request: the
+        directory's current snapshot, or the one a preloaded searcher
+        decoded."""
         if self._mem is None:
-            token = fsio.freshness_token(self._stats_path, self.spark)
-            if token != snap.token:
-                snap = self._snap = self._resolve(token)
-        return snap
-
-    def _norms(self, snap: _Snapshot, budget: int | None):
-        """``snap``'s driver norms, loaded on first use; the cache-miss
-        collect is budget-checked like every other driver preload — one
-        row per doc is exactly the collect that kills the driver at
-        10^12 docs."""
-        if snap.doclen is None:
-            dl, _, _ = _load_norms(self.spark, self.index_dir, budget)
-            snap = snap._replace(doclen=dl)
-            if self._snap.token == snap.token:
-                self._snap = snap
-        return snap.doclen
+            self._snap = snapshot(self.spark, self.index_dir)
+        return self._snap
 
     def _impacts(
         self,
-        snap: _Snapshot,
+        snap: IndexSnapshot,
         rows,
         budget: int | None,
         what: str,
@@ -183,7 +146,7 @@ class IndexSearcher:
             by_term.setdefault(r["term"], []).append(r)
         decoded = 16 * sum(int(r["n"]) for segs in by_term.values() for r in segs)
         spent = charge_preload(decoded, f"decoded {what}", budget, alternative)
-        doclen = self._norms(snap, None if budget is None else budget - spent)
+        doclen = snap.norms(None if budget is None else budget - spent)
         return {
             t: term_impacts(segs, doclen, snap.n_docs, snap.avgdl)
             for t, segs in by_term.items()
@@ -197,7 +160,8 @@ class IndexSearcher:
         postings = snap.postings.select(*KERNEL_COLUMNS)
         spent = check_preload_budget(postings, what, budget)
         store = self._impacts(
-            snap, postings.collect(), None if budget is None else budget - spent, what
+            snap, snap.merged(postings.collect()),
+            None if budget is None else budget - spent, what,
         )
         for ids, imp in store.values():
             ids.flags.writeable = imp.flags.writeable = False
@@ -212,13 +176,13 @@ class IndexSearcher:
     def doclen(self):
         """Driver-resident norms: loaded at construction with
         ``preload=True``, lazily otherwise."""
-        return self._norms(self._snapshot(), self._preload_budget)
+        return self._snapshot().norms(self._preload_budget)
 
-    def candidate_rows(self, terms: Sequence[str], snap: _Snapshot | None = None) -> list:
+    def candidate_rows(self, terms: Sequence[str], snap: IndexSnapshot | None = None) -> list:
         """Postings fetch for a term set: the bucket- and term-pruned scan
         of ``snap`` (default: the current snapshot), reading only the
         columns the kernels use — a positional index's ``poss`` stays on
-        disk.
+        disk — with merged df across segments (:meth:`IndexSnapshot.merged`).
 
         Bucket routing is computed DRIVER-SIDE (functions/xxhash.py is
         bit-identical to the JVM xxhash64) so the pruned scan is the only
@@ -228,13 +192,7 @@ class IndexSearcher:
         if not tset:
             return []
         snap = snap or self._snapshot()
-        bks = sorted({term_bucket(t, snap.buckets) for t in tset})
-        return (
-            snap.postings.filter(F.col("bucket").isin(bks))
-            .filter(F.col("term").isin(tset))
-            .select(*KERNEL_COLUMNS)
-            .collect()
-        )
+        return snap.merged(snap.pruned(tset).select(*KERNEL_COLUMNS).collect())
 
     def search(
         self, question: str, top_k: int = DEFAULT_TOP_K, clamp: bool = True
@@ -257,8 +215,11 @@ class IndexSearcher:
             )
         snap = self._snapshot()
         rows = self.candidate_rows(terms, snap)
-        doclen = self._norms(snap, self._preload_budget)
-        return wand_topk(rows, terms, doclen, snap.n_docs, snap.avgdl, top_k=top_k)
+        doclen = snap.norms(self._preload_budget)
+        return wand_topk(
+            rows, terms, doclen, snap.n_docs, snap.avgdl, top_k=top_k,
+            use_blockmax=len(snap.segments) == 1,
+        )
 
     def search_many_local(
         self, questions: Sequence[str], top_k: int = DEFAULT_TOP_K
@@ -346,6 +307,7 @@ class IndexSearcher:
         No WAND pruning: this is the throughput shape for query batches
         large enough that exhaustive scoring amortizes (offline eval runs,
         relevance-set generation), scaling with executors, not the driver.
+        Across segments the merged df is one more in-plan aggregate.
 
         Returns (query_id int, rank int, doc_id long, score double).
         """
@@ -376,13 +338,15 @@ class IndexSearcher:
         mdf = _local_frame(self.spark, mapping, (("query_id", "int"), ("set_id", "int")))
         all_terms = sorted({t for _, _, t in slot_pairs})
         snap = self._snapshot()
-        bks = sorted({term_bucket(t, snap.buckets) for t in all_terms})
-        decoded = decode_index_df(
-            snap.postings.filter(F.col("bucket").isin(bks)).filter(
-                F.col("term").isin(all_terms)
-            ),
-            keep_cols=("term", "df"),
-        )
+        cand = snap.pruned(all_terms)
+        if len(snap.segments) == 1:
+            decoded = decode_index_df(cand, keep_cols=("term", "df"))
+        else:
+            # a term's df is the sum of its rows' n (segment-disjoint docs)
+            df = cand.groupBy("term").agg(F.sum("n").alias("df"))
+            decoded = decode_index_df(cand, keep_cols=("term",)).join(
+                F.broadcast(df), "term"
+            )
 
         # term-major order: the BM25 contribution is query-INDEPENDENT, so
         # join doclens and evaluate it once per (term, doc) row, THEN fan

@@ -1,3 +1,3 @@
-from .incremental import stream_build_index, MultiSegmentSearcher
+from .incremental import commit_segment, stream_build_index
 
-__all__ = ["stream_build_index", "MultiSegmentSearcher"]
+__all__ = ["stream_build_index", "commit_segment"]

@@ -6,16 +6,24 @@ streamed-ingest path a living corpus needs: ``readStream`` over arriving
 page files -> ``foreachBatch`` -> one immutable index SEGMENT per batch
 (Lucene-style), each with its own postings/doclens/stats.
 
-Query-time correctness across segments (exact, not approximate):
+The index dir's root stats.json is its commit point: ``{"segments":
+[...]}``, one entry per committed segment (its stats plus its relative
+``path``), in batch order. :func:`commit_segment` publishes a written
+segment by rewriting it atomically, so a reader sees a segment whole or
+not at all.
+
+``plans.query.IndexSearcher`` serves a streamed dir like a built one,
+exactly, from the merged stats (:class:`operators.compressed_index.
+IndexSnapshot`):
   * df(term)  = sum of segment dfs
   * N, avgdl  = merged from segment stats (counts and length sums add)
   * per-posting tf and doc lengths are stored exactly, so BM25 scores are
     recomputed exactly under the MERGED stats at query time
   * the per-segment impact bounds (max_impact, blockmax) were computed
-    under segment-local stats and go stale under merged stats, so the
-    multi-segment searcher replaces them with the always-valid bound
-    idf_merged * (k1 + 1)  (since tf*(k1+1)/(tf + K) < k1+1 for K > 0)
-    and disables block-max pruning — weaker pruning, identical results.
+    under segment-local stats and go stale under merged stats, so they
+    are replaced by the always-valid bound idf_merged * (k1 + 1) (since
+    tf*(k1+1)/(tf + K) < k1+1 for K > 0) and block-max pruning is off —
+    weaker pruning, identical results.
 
 A background compaction (``compact_segments``) merges segments into one,
 restoring tight bounds — the classic segment-merge tradeoff.
@@ -24,27 +32,25 @@ restoring tight bounds — the classic segment-merge tradeoff.
 from __future__ import annotations
 
 import json
-import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..constants import BM25_B, BM25_K1, DEFAULT_TOP_K, MAX_TOP_K, TERM_BUCKETS
+from ..constants import BM25_B, BM25_K1, DEFAULT_TOP_K, TERM_BUCKETS
 from ..functions import fsio
-from ..functions.analyzer import analyze, tokenize_expr
+from ..functions.analyzer import tokenize_expr
 from ..operators.compressed_index import (
     DEFAULT_PRELOAD_BUDGET_BYTES,
     build_compressed_index,
     check_preload_budget,
     write_index,
 )
-from ..operators import bm25
-from ..operators.wand import wand_topk
 
 PAGES_DDL = "doc_id long, text string"
 
 
 def _write_segment(batch_df: DataFrame, seg_dir: str, buckets: int) -> None:
+    """Write one batch as the segment ``seg_dir`` and commit it."""
     spark = batch_df.sparkSession
     dl = batch_df.select(
         "doc_id", F.size(tokenize_expr("text")).cast("long").alias("doc_len")
@@ -61,9 +67,49 @@ def _write_segment(batch_df: DataFrame, seg_dir: str, buckets: int) -> None:
     idx = build_compressed_index(batch_df, buckets=buckets, stats=(n_docs, stats["avgdl"]))
     write_index(idx, f"{seg_dir}/postings")
     fsio.write_text(fsio.join(seg_dir, "stats.json"), json.dumps(stats), spark)
-    fsio.write_text(
-        fsio.join(seg_dir, "_SEGMENT_COMMITTED"), str(int(time.time() * 1000)), spark
-    )
+    commit_segment(seg_dir, spark)
+
+
+def _segment_batch_id(path: str) -> int:
+    name = str(path).rstrip("/").rsplit("/", 1)[-1]
+    try:
+        return int(name.split("=", 1)[1])
+    except (IndexError, ValueError):
+        return -1
+
+
+def commit_segment(seg_dir: str, spark: SparkSession | None = None) -> None:
+    """Publish the written segment ``seg_dir``, laid out as
+    ``<index_dir>/segments/seg=<batch_id>``, into its index's commit
+    point: the entry is the segment's own stats.json (whatever kind of
+    index it holds) plus its path relative to ``index_dir``. Entries stay
+    in BATCH order — numeric on the batch id, so seg=10 follows seg=9;
+    compaction's keep-latest dedupe depends on it. Idempotent: a
+    re-committed segment replaces its entry. One writer per index dir
+    (the stream's driver)."""
+    index_dir, name = str(seg_dir).rstrip("/").rsplit("/segments/", 1)
+    entry = json.loads(fsio.read_text(fsio.join(seg_dir, "stats.json"), spark))
+    entry["path"] = f"segments/{name}"
+    root = fsio.join(index_dir, "stats.json")
+    segs = json.loads(fsio.read_text(root, spark))["segments"] if fsio.exists(root, spark) else []
+    segs = [s for s in segs if s["path"] != entry["path"]] + [entry]
+    segs.sort(key=lambda s: (_segment_batch_id(s["path"]), s["path"]))
+    fsio.write_text(root, json.dumps({"segments": segs}), spark)
+
+
+def _committed(index_dir: str, spark: SparkSession | None = None) -> list[dict]:
+    """The commit point's entries in batch order, each ``path`` made
+    absolute; none before the first commit."""
+    root = fsio.join(index_dir, "stats.json")
+    if not fsio.exists(root, spark):
+        return []
+    segs = json.loads(fsio.read_text(root, spark)).get("segments", [])
+    return [{**s, "path": fsio.join(index_dir, s["path"])} for s in segs]
+
+
+def list_segments(index_dir: str, spark: SparkSession | None = None) -> list[str]:
+    """Committed segment dirs in batch order."""
+    return [s["path"] for s in _committed(index_dir, spark)]
 
 
 def stream_build_index(
@@ -96,173 +142,6 @@ def stream_build_index(
         q.awaitTermination()
         return q
     return writer.start()
-
-
-def _segment_batch_id(path: str) -> int:
-    name = str(path).rstrip("/").rsplit("/", 1)[-1]
-    try:
-        return int(name.split("=", 1)[1])
-    except (IndexError, ValueError):
-        return -1
-
-
-def list_segments(index_dir: str, spark: SparkSession | None = None) -> list[str]:
-    """Committed segments in BATCH order — numeric on the seg={batch_id}
-    suffix, NOT lexicographic (seg=10 sorts after seg=9, not after
-    seg=1); compaction's keep-latest dedupe depends on this order."""
-    segs = [
-        p for p in fsio.listdir(fsio.join(index_dir, "segments"), spark)
-        if fsio.exists(fsio.join(p, "_SEGMENT_COMMITTED"), spark)
-    ]
-    return sorted(segs, key=lambda s: (_segment_batch_id(s), s))
-
-
-class MultiSegmentSearcher:
-    """Exact BM25 top-k across all committed segments (see module doc).
-
-    Segments assume exactly-once ingest: a doc_id must appear in at most
-    one segment, else df/N/doclen merges double-count (validated at init
-    by comparing the summed per-segment doc counts to the distinct
-    doclen keys — cheap, the doclen dict is built anyway)."""
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        index_dir: str,
-        norms: str = "preload",
-        preload_budget_bytes: int | None = DEFAULT_PRELOAD_BUDGET_BYTES,
-    ):
-        """``norms='preload'`` collects every segment's doclens into a
-        driver dict (lowest latency; bounded by driver memory — the
-        collect is size-estimated first and refused above
-        ``preload_budget_bytes``, default 4 GiB; ``None`` disables).
-        ``norms='join'`` keeps norms cluster-resident — queries score
-        through an in-plan doclen join over the lazy unioned sidecars —
-        the mode that holds at 10^12 docs.
-
-        Each segment is pruned with the bucket modulus its stats.json
-        records (segments written before it was recorded used
-        ``TERM_BUCKETS``)."""
-        if norms not in ("preload", "join"):
-            raise ValueError(f"unknown norms mode {norms!r}")
-        self.spark = spark
-        self.norms_mode = norms
-        self.segments = list_segments(index_dir, spark)
-        if not self.segments:
-            raise ValueError(f"no committed segments under {index_dir}")
-        n, s = 0, 0
-        moduli = set()
-        for seg in self.segments:
-            st = json.loads(fsio.read_text(fsio.join(seg, "stats.json"), spark))
-            n += st["n_docs"]
-            s += st["dl_sum"]
-            moduli.add(int(st.get("buckets", TERM_BUCKETS)))
-        self.moduli = sorted(moduli)
-        dl = None
-        for seg in self.segments:
-            d = spark.read.parquet(f"{seg}/doclens")
-            dl = d if dl is None else dl.unionByName(d)
-        self.doclens_df = dl  # lazy union; never collected in join mode
-        self.doclen: dict[int, int] = {}
-        if norms == "preload":
-            check_preload_budget(
-                dl, f"doclens of {index_dir}", preload_budget_bytes
-            )
-            for r in dl.collect():
-                self.doclen[r["doc_id"]] = r["doc_len"]
-            distinct = len(self.doclen)
-        else:
-            distinct = dl.select(F.countDistinct("doc_id")).collect()[0][0]
-        if distinct != n:
-            raise ValueError(
-                f"doc_ids overlap across segments ({n} segment docs, "
-                f"{distinct} distinct) — segments require "
-                "exactly-once ingest; run compact_segments to dedupe "
-                "keep-latest"
-            )
-        self.n_docs, self.avgdl = n, (s / n if n else 0.0)
-        # ONE lazy unioned postings relation over all segments; a query
-        # is a single bucket+term-pruned scan across them (one Spark job)
-        post = None
-        for seg in self.segments:
-            p = spark.read.parquet(f"{seg}/postings")
-            # allowMissingColumns: segments written before the blockmaxtf
-            # codec column lack it; old rows surface null, which the WAND
-            # cursor treats as "no block metadata" and decodes eagerly
-            post = (
-                p if post is None
-                else post.unionByName(p, allowMissingColumns=True)
-            )
-        self.postings = post
-
-    def _pruned(self, tset: list[str]) -> DataFrame:
-        from ..functions.xxhash import term_bucket
-
-        # driver-side bucket routing (bit-identical to JVM xxhash64) ->
-        # the pruned unioned scan is the only Spark job this query pays.
-        # Segments of different moduli share the scan: the union of their
-        # buckets keeps every segment's postings (the term filter drops
-        # the extra rows)
-        bks = sorted({term_bucket(t, m) for t in tset for m in self.moduli})
-        return self.postings.filter(F.col("bucket").isin(bks)).filter(
-            F.col("term").isin(tset)
-        )
-
-    def search(self, question: str, top_k: int = DEFAULT_TOP_K, clamp: bool = True):
-        top_k = max(1, min(int(top_k), MAX_TOP_K) if clamp else int(top_k))
-        terms = analyze(question)
-        if not terms:
-            return []
-        tset = sorted(set(terms))
-        if self.norms_mode == "join":
-            return self._search_join(tset, top_k)
-        rows = [r.asDict() for r in self._pruned(tset).collect()]
-        # merged df per term; stale segment bounds -> safe UB idf*(k1+1)
-        df_tot: dict[str, int] = {}
-        for r in rows:
-            df_tot[r["term"]] = df_tot.get(r["term"], 0) + int(r["n"])
-        fixed = []
-        for r in rows:
-            d = dict(r)
-            d["df"] = df_tot[d["term"]]
-            d["max_impact"] = bm25.idf(d["df"], self.n_docs) * (BM25_K1 + 1.0)
-            fixed.append(d)
-        return wand_topk(
-            fixed, terms, self.doclen, self.n_docs, self.avgdl,
-            top_k=top_k, use_blockmax=False,
-        )
-
-    def search_df(self, question: str, top_k: int = DEFAULT_TOP_K) -> DataFrame:
-        """The zero-driver-norms merged query as a lazy DataFrame
-        ``(doc_id, score)``: decode the pruned unioned scan
-        executor-side, join the merged df (sum of per-segment n — exact,
-        doc_ids are segment-disjoint) and the lazy doclens union
-        in-plan, fold contributions in ascending-term float64 order,
-        top-k. Same scores as the preload path (pinned by pytest)."""
-        from ..operators.bm25 import bm25_contrib_expr, score_fold
-        from ..operators.compressed_index import decode_index_df
-
-        tset = sorted(set(analyze(question)))
-        if not tset:
-            return self.spark.createDataFrame([], "doc_id long, score double")
-        cand = self._pruned(tset)
-        dfs = cand.groupBy("term").agg(F.sum("n").alias("df"))
-        decoded = decode_index_df(cand, keep_cols=("term",)).join(
-            F.broadcast(dfs), "term"
-        )
-        joined = decoded.join(self.doclens_df, "doc_id")
-        contrib = bm25_contrib_expr(
-            "tf", "df", "doc_len", self.n_docs, self.avgdl
-        )
-        scored = score_fold(
-            joined.select("doc_id", "term", contrib.alias("contrib")),
-            ["doc_id"],
-        )
-        return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(top_k)
-
-    def _search_join(self, tset: list[str], top_k: int):
-        rows = self.search_df(" ".join(tset), top_k).collect()
-        return [(int(r["doc_id"]), float(r["score"])) for r in rows]
 
 
 def compact_segments(
@@ -358,11 +237,7 @@ def stream_build_fielded_index(
             return
         seg_dir = f"{index_dir}/segments/seg={batch_id}"
         build_fielded_index(batch_df, fields, seg_dir, buckets=buckets)
-        fsio.write_text(
-            fsio.join(seg_dir, "_SEGMENT_COMMITTED"),
-            str(int(time.time() * 1000)),
-            batch_df.sparkSession,
-        )
+        commit_segment(seg_dir, batch_df.sparkSession)
 
     writer = (
         stream.writeStream.foreachBatch(upsert)
@@ -383,7 +258,8 @@ class FieldedMultiSegmentSearcher:
     the relational plan (:func:`..operators.fielded_index.search_bm25f`
     with the merged relations passed in) recomputes df from the unioned
     candidate rows — exact when doc_ids are segment-disjoint, which is
-    validated at init exactly like :class:`MultiSegmentSearcher`.
+    validated at init. Each segment is pruned with the bucket modulus
+    its commit entry records.
     Norms stay cluster-resident (the ``norms='join'`` posture); there is
     no driver doclen state at any corpus size.
 
@@ -397,7 +273,6 @@ class FieldedMultiSegmentSearcher:
         self,
         spark: SparkSession,
         index_dir: str,
-        buckets: int = TERM_BUCKETS,
         preload: bool = False,
         preload_budget_bytes: int | None = DEFAULT_PRELOAD_BUDGET_BYTES,
     ):
@@ -411,16 +286,16 @@ class FieldedMultiSegmentSearcher:
         above ``preload_budget_bytes`` (default 4 GiB; ``None``
         disables) — a clear error beats an OOMed driver."""
         self.spark = spark
-        self.buckets = buckets
         self.preload = preload
-        self.segments = list_segments(index_dir, spark)
-        if not self.segments:
+        committed = _committed(index_dir, spark)
+        if not committed:
             raise ValueError(f"no committed segments under {index_dir}")
+        self.segments = [st["path"] for st in committed]
         n = 0
         len_sums: dict[str, int] = {}
         fields: list[str] | None = None
-        for seg in self.segments:
-            st = json.loads(fsio.read_text(fsio.join(seg, "stats.json"), spark))
+        for st in committed:
+            seg = st["path"]
             if fields is None:
                 fields = list(st["fields"])
             elif list(st["fields"]) != fields:
@@ -443,7 +318,11 @@ class FieldedMultiSegmentSearcher:
             for f, s in st["len_sums"].items():
                 len_sums[f] = len_sums.get(f, 0) + int(s)
         self.fields = fields or []
-        self.stats = {"n_docs": n, "fields": self.fields, "len_sums": len_sums}
+        # segments written before stats.json recorded it used the default
+        moduli = sorted({int(st.get("buckets", TERM_BUCKETS)) for st in committed})
+        self.stats = {
+            "n_docs": n, "fields": self.fields, "len_sums": len_sums, "moduli": moduli,
+        }
         post = None
         tagged = None
         for i, seg in enumerate(self.segments):
@@ -560,7 +439,7 @@ class FieldedMultiSegmentSearcher:
                 )
             rows = search_bm25f(
                 self.spark, "", question, weights,
-                top_k=top_k, buckets=self.buckets, k1=k1, b=b,
+                top_k=top_k, k1=k1, b=b,
                 postings=self.postings, doclens=self.doclens, stats=self.stats,
             ).collect()
             return [(int(r["doc_id"]), float(r["score"])) for r in rows]
@@ -589,16 +468,16 @@ def compact_fielded_segments(
     from ..operators.compressed_index import decode_index_df, encode_tf
     from ..operators.fielded_index import FIELD_SEP
 
-    segs = list_segments(index_dir, spark)
-    if not segs:
+    committed = _committed(index_dir, spark)
+    if not committed:
         raise ValueError(f"no committed segments under {index_dir}")
-    seg_ids = {s: i for i, s in enumerate(segs)}  # list order = batch order
+    seg_ids = {st["path"]: i for i, st in enumerate(committed)}  # batch order
     post = None
     dl = None
     n_docs_sum = 0
     fields: list[str] | None = None
-    for seg in segs:
-        st = json.loads(fsio.read_text(fsio.join(seg, "stats.json"), spark))
+    for st in committed:
+        seg = st["path"]
         n_docs_sum += int(st["n_docs"])
         if fields is None:
             fields = list(st["fields"])
@@ -641,6 +520,7 @@ def compact_fielded_segments(
         "n_docs": int(n_docs),
         "fields": fields or [],
         "len_sums": {r["field"]: int(r["s"]) for r in len_rows},
+        "buckets": buckets,
     }
 
     tf = decode_index_df(post, keep_cols=("term", "_seg"))

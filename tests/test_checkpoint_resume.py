@@ -6,6 +6,7 @@ from pathlib import Path
 import pytest
 
 from sifter_mrc_search_engine_spark.operators.bm25 import bm25_brute_force
+from sifter_mrc_search_engine_spark.operators.compressed_index import snapshot
 from sifter_mrc_search_engine_spark.plans.checkpoint import (
     build_index_resumable,
     read_manifest,
@@ -155,14 +156,11 @@ def test_top_k_clamped_to_reference_ceiling(searcher):
 
 def test_join_norms_serves_without_driver_doclens(spark, docs, searcher, tmp_path_factory):
     """norms='join' must answer single queries with NO doclens collect —
-    `_DOCLEN_CACHE` stays empty for the index — and results identical to
-    the preload path (the 10^12-doc serving shape: norms stay
-    cluster-resident and ride the in-plan join)."""
-    from sifter_mrc_search_engine_spark.plans import query as query_mod
-
+    the index snapshot's driver norms stay unloaded — and results
+    identical to the preload path (the 10^12-doc serving shape: norms
+    stay cluster-resident and ride the in-plan join)."""
     d = str(tmp_path_factory.mktemp("idx_join"))
     build_index_resumable(docs, d, buckets=BUCKETS)
-    query_mod.invalidate_norms_cache()
     s = IndexSearcher(spark, d, norms="join")
     for q in QUERIES:
         got = s.search(q, top_k=10)
@@ -170,9 +168,7 @@ def test_join_norms_serves_without_driver_doclens(spark, docs, searcher, tmp_pat
         assert [d_ for d_, _ in got] == [d_ for d_, _ in exp], q
         for (_, gs), (_, es) in zip(got, exp):
             assert gs == es
-    assert not any(k[0] == d for k in query_mod._DOCLEN_CACHE), (
-        "join mode collected doclens to the driver"
-    )
+    assert snapshot(spark, d).doclen is None, "join mode collected doclens to the driver"
 
 
 @pytest.mark.parametrize("searcher", SEARCHERS, indirect=True)
@@ -194,7 +190,7 @@ def test_search_many_local_results_are_independent(searcher):
     assert second == searcher.search(q, top_k=10)
 
 
-#: doc-id spaces besides the packed one: ``_load_norms`` keeps a dict
+#: doc-id spaces besides the packed one: ``IndexSnapshot.norms`` keeps a dict
 #: (not an array) for both, and the scan path runs WAND for the sparse one
 ID_SPACES = {
     "negative": ("doc_id - 400", -400, 1),
@@ -251,6 +247,46 @@ def test_preloaded_searcher_pins_its_snapshot(spark, docs, tmp_path_factory):
     assert [pinned.search(q, top_k=10) for q in QUERIES] == before
     rebuilt = IndexSearcher(spark, d, preload=True)
     assert [rebuilt.search(q, top_k=10) for q in QUERIES] != before
+
+
+def test_snapshot_resolves_whole_under_concurrent_rewrites(spark, docs, tmp_path_factory):
+    """Handler threads resolving the index snapshot while stats.json is
+    rewritten in place (each rewrite is a new freshness token) always get
+    a whole snapshot: no thread sees a partial stats.json or fails."""
+    import sys
+    import threading
+
+    from sifter_mrc_search_engine_spark.functions import fsio
+
+    d = str(tmp_path_factory.mktemp("idx_rewrites"))
+    build_index_resumable(docs, d, buckets=BUCKETS)
+    stats_path = fsio.join(d, "stats.json")
+    text, want = fsio.read_text(stats_path), snapshot(spark, d).n_docs
+    stop, errors, seen = threading.Event(), [], []
+
+    def reader():
+        try:
+            while not stop.is_set():
+                seen.append(snapshot(spark, d).n_docs)
+        except Exception as e:  # reported by the assertion below
+            errors.append(e)
+
+    threads = [threading.Thread(target=reader) for _ in range(8)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for _ in range(20):
+            fsio.write_text(stats_path, text)
+    finally:
+        stop.set()
+        for t in threads:
+            t.join(timeout=120)
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors[0]
+    assert seen and set(seen) == {want}
 
 
 def test_search_many_relational_matches_brute_force(spark, docs, searcher):
@@ -329,17 +365,13 @@ def test_search_many_without_hits_is_typed_and_empty(searcher, batch):
 def test_join_norms_search_many_is_relational(spark, docs, tmp_path_factory):
     """A norms='join' searcher's batch is the relational plan, and it
     collects no norms to the driver."""
-    from sifter_mrc_search_engine_spark.plans import query as query_mod
-
     d = str(tmp_path_factory.mktemp("idx_join_batch"))
     build_index_resumable(docs, d, buckets=BUCKETS)
     s = IndexSearcher(spark, d, norms="join")
     got = _by_query(s.search_many(QUERIES, top_k=10), len(QUERIES))
     assert any(got)
     assert got == _by_query(s.search_many_relational(QUERIES, top_k=10), len(QUERIES))
-    assert not any(k[0] == d for k in query_mod._DOCLEN_CACHE), (
-        "join mode collected doclens to the driver"
-    )
+    assert snapshot(spark, d).doclen is None, "join mode collected doclens to the driver"
 
 
 def test_search_many_budget_covers_decoded_batch(spark, index_dir, searcher):

@@ -41,7 +41,7 @@ def test_fielded_matches_brute_force(spark, corpus, fielded_dir, q):
     ]
     got = [
         (r["doc_id"], r["score"])
-        for r in search_bm25f(spark, fielded_dir, q, WEIGHTS, top_k=10, buckets=16).collect()
+        for r in search_bm25f(spark, fielded_dir, q, WEIGHTS, top_k=10).collect()
     ]
     assert [d for d, _ in got] == [d for d, _ in exp], q
     for (gd, gs), (ed, es) in zip(got, exp):
@@ -57,7 +57,7 @@ def test_weights_are_query_time(spark, corpus, fielded_dir):
     ]
     got = [
         (r["doc_id"], r["score"])
-        for r in search_bm25f(spark, fielded_dir, "the fast query", alt, top_k=10, buckets=16).collect()
+        for r in search_bm25f(spark, fielded_dir, "the fast query", alt, top_k=10).collect()
     ]
     assert [d for d, _ in got] == [d for d, _ in exp]
     for (gd, gs), (ed, es) in zip(got, exp):
@@ -74,7 +74,7 @@ def test_search_bm25f_no_full_doclens_aggregate(spark, fielded_dir):
     a per-query aggregate over the whole doclens table — the r2 plan had
     an avg(wdl) over ALL docs in every query."""
     plan = (
-        search_bm25f(spark, fielded_dir, "the fast query", WEIGHTS, top_k=10, buckets=16)
+        search_bm25f(spark, fielded_dir, "the fast query", WEIGHTS, top_k=10)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -86,7 +86,7 @@ def test_pruned_scan_shape(spark, fielded_dir):
     """The fielded query touches only the query terms' buckets — partition
     filters appear in the physical scan."""
     plan = search_bm25f(
-        spark, fielded_dir, "the fast query", WEIGHTS, top_k=10, buckets=16
+        spark, fielded_dir, "the fast query", WEIGHTS, top_k=10
     )._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [bucket" in plan or "bucket#" in plan, plan[:2000]
 
@@ -97,7 +97,7 @@ def test_fielded_searcher_serving_kernel(spark, corpus, fielded_dir, preload):
     brute force for multiple weightings."""
     from sifter_mrc_search_engine_spark.operators.fielded_index import FieldedSearcher
 
-    s = FieldedSearcher(spark, fielded_dir, buckets=16, preload=preload)
+    s = FieldedSearcher(spark, fielded_dir, preload=preload)
     for w in (WEIGHTS, {"title": 5.0, "content": 0.5}):
         for q in QUESTIONS:
             exp = [
@@ -119,7 +119,7 @@ def test_fielded_wand_vs_exhaustive(spark, corpus, fielded_dir, method):
     small top_k where the threshold actually bites."""
     from sifter_mrc_search_engine_spark.operators.fielded_index import FieldedSearcher
 
-    s = FieldedSearcher(spark, fielded_dir, buckets=16, preload=True)
+    s = FieldedSearcher(spark, fielded_dir, preload=True)
     assert s._term_df  # build wrote the union-df sidecar
     for q in QUESTIONS + ["the the the", "window table"]:
         exp = [
@@ -137,8 +137,8 @@ def test_fielded_join_norms_no_driver_state(spark, corpus, fielded_dir):
     per-field doclens to the driver — results match the preload kernel."""
     from sifter_mrc_search_engine_spark.operators.fielded_index import FieldedSearcher
 
-    pre = FieldedSearcher(spark, fielded_dir, buckets=16, preload=True)
-    joined = FieldedSearcher(spark, fielded_dir, buckets=16, norms="join")
+    pre = FieldedSearcher(spark, fielded_dir, preload=True)
+    joined = FieldedSearcher(spark, fielded_dir, norms="join")
     assert all(not m for m in joined._flen.values())  # nothing collected
     for q in QUESTIONS:
         a = pre.search(q, WEIGHTS, top_k=5)
@@ -160,7 +160,7 @@ def test_fielded_wand_subset_weights(spark, corpus, fielded_dir, method):
     fields from the fetched rows."""
     from sifter_mrc_search_engine_spark.operators.fielded_index import FieldedSearcher
 
-    s = FieldedSearcher(spark, fielded_dir, buckets=16, preload=True)
+    s = FieldedSearcher(spark, fielded_dir, preload=True)
     w = {"title": 3.0}  # subset of ["content", "title"]
     for q in QUESTIONS:
         exp = [
@@ -296,7 +296,7 @@ def test_fielded_interrupted_then_resumed_equals_uninterrupted(
     ]
     got = [
         (r["doc_id"], r["score"])
-        for r in search_bm25f(spark, part_dir, "the fast query", WEIGHTS, top_k=5, buckets=16).collect()
+        for r in search_bm25f(spark, part_dir, "the fast query", WEIGHTS, top_k=5).collect()
     ]
     assert [d for d, _ in got] == [d for d, _ in exp]
 
@@ -333,13 +333,13 @@ def test_fielded_term_df_sidecar_is_union_df(spark, corpus, fielded_dir):
 def test_unknown_weight_field_raises(spark, corpus, fielded_dir):
     from sifter_mrc_search_engine_spark.operators.fielded_index import FieldedSearcher
 
-    s = FieldedSearcher(spark, fielded_dir, buckets=16, preload=True)
+    s = FieldedSearcher(spark, fielded_dir, preload=True)
     with pytest.raises(ValueError, match="unindexed"):
         s.search("the fast query", {"headline": 2.0}, top_k=5)
     with pytest.raises(ValueError, match="unindexed"):
         search_bm25f(
             spark, fielded_dir, "the fast query", {"headline": 2.0},
-            top_k=5, buckets=16,
+            top_k=5,
         )
 
 
@@ -351,7 +351,7 @@ def test_auto_cost_model_decisions(spark, corpus, fielded_dir):
     sidecar — pinned here with synthetic df tables."""
     from sifter_mrc_search_engine_spark.operators.fielded_index import FieldedSearcher
 
-    s = FieldedSearcher(spark, fielded_dir, buckets=16, preload=True)
+    s = FieldedSearcher(spark, fielded_dir, preload=True)
 
     def pick(dfs):
         s._term_df = {f"t{i}": d for i, d in enumerate(dfs)}
@@ -372,9 +372,35 @@ def test_auto_cost_model_decisions(spark, corpus, fielded_dir):
     assert s._pick_method(["anything"]) == "exhaustive"  # no sidecar
 
     # and auto == the fixed methods on real queries (identical results)
-    s2 = FieldedSearcher(spark, fielded_dir, buckets=16, preload=True)
+    s2 = FieldedSearcher(spark, fielded_dir, preload=True)
     w = {"title": 2.0, "content": 1.0}
     for q in ("the fast query", "window", "spark join merge table"):
         assert s2.search(q, w, top_k=10, method="auto") == s2.search(
             q, w, top_k=10, method="exhaustive"
         )
+
+
+def test_fielded_searchers_read_bucket_modulus_from_stats(spark, corpus, tmp_path):
+    """A fielded index records the bucket modulus it was built with, and
+    every searcher prunes with it: built with ``buckets=8`` and opened
+    with no modulus, the relational plan and both driver tiers answer
+    == the brute-force oracle (pruning with the default modulus would
+    drop postings)."""
+    from sifter_mrc_search_engine_spark.operators.fielded_index import FieldedSearcher
+
+    d = str(tmp_path / "fidx8")
+    assert build_fielded_index(corpus, ["title", "content"], d, buckets=8)["buckets"] == 8
+    searchers = [FieldedSearcher(spark, d), FieldedSearcher(spark, d, preload=True),
+                 FieldedSearcher(spark, d, norms="join")]
+    for q in QUESTIONS:
+        want = [
+            (r["doc_id"], r["score"])
+            for r in bm25f_brute_force(corpus, q, WEIGHTS, top_k=10).collect()
+        ]
+        got = [
+            (r["doc_id"], r["score"])
+            for r in search_bm25f(spark, d, q, WEIGHTS, top_k=10).collect()
+        ]
+        assert want and got == want, q
+        for s in searchers:
+            assert s.search(q, WEIGHTS, top_k=10) == want, q

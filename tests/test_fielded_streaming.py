@@ -12,6 +12,7 @@ from sifter_mrc_search_engine_spark.operators.fielded_index import FieldedSearch
 from sifter_mrc_search_engine_spark.sources.pages import VOCAB, synthesize_pages
 from sifter_mrc_search_engine_spark.streaming.incremental import (
     FieldedMultiSegmentSearcher,
+    commit_segment,
     compact_fielded_segments,
     list_segments,
     stream_build_fielded_index,
@@ -59,7 +60,7 @@ def test_fielded_segments_created(spark, fstreamed):
 @pytest.mark.parametrize("q", QUERIES)
 def test_fielded_multisegment_matches_brute_force(spark, fstreamed, q):
     docs, idx_dir = fstreamed
-    s = FieldedMultiSegmentSearcher(spark, idx_dir, buckets=8)
+    s = FieldedMultiSegmentSearcher(spark, idx_dir)
     exp = [
         (r["doc_id"], r["score"])
         for r in bm25f_brute_force(docs, q, WEIGHTS, top_k=10).collect()
@@ -72,7 +73,7 @@ def test_fielded_multisegment_matches_brute_force(spark, fstreamed, q):
 
 def test_fielded_multisegment_subset_weights(spark, fstreamed):
     docs, idx_dir = fstreamed
-    s = FieldedMultiSegmentSearcher(spark, idx_dir, buckets=8)
+    s = FieldedMultiSegmentSearcher(spark, idx_dir)
     w = {"title": 2.0}  # subset of indexed fields
     exp = [
         (r["doc_id"], r["score"])
@@ -91,7 +92,6 @@ def test_fielded_overlap_detected_and_compacted(spark, tmp_path):
     from sifter_mrc_search_engine_spark.operators.fielded_index import (
         build_fielded_index,
     )
-    from pathlib import Path
 
     idx_dir = str(tmp_path / "fidx")
     seg0 = spark.createDataFrame(
@@ -108,10 +108,10 @@ def test_fielded_overlap_detected_and_compacted(spark, tmp_path):
     for i, seg in enumerate([seg0, seg1]):
         d = f"{idx_dir}/segments/seg={i}"
         build_fielded_index(seg, FIELDS, d, buckets=4)
-        (Path(d) / "_SEGMENT_COMMITTED").write_text("1")
+        commit_segment(d, spark)
 
     with pytest.raises(ValueError, match="overlap"):
-        FieldedMultiSegmentSearcher(spark, idx_dir, buckets=4)
+        FieldedMultiSegmentSearcher(spark, idx_dir)
 
     out = compact_fielded_segments(spark, idx_dir, buckets=4)
     latest = spark.createDataFrame(
@@ -120,7 +120,7 @@ def test_fielded_overlap_detected_and_compacted(spark, tmp_path):
          (3, "gamma headline", "gamma delta body words")],
         "doc_id long, title string, content string",
     )
-    s = FieldedSearcher(spark, out, buckets=4, preload=True)
+    s = FieldedSearcher(spark, out, preload=True)
     for q in ["alpha", "gamma delta", "beta", "headline"]:
         exp = [
             (r["doc_id"], r["score"])
@@ -137,7 +137,6 @@ def test_mixed_field_segments_refused(spark, tmp_path):
     from sifter_mrc_search_engine_spark.operators.fielded_index import (
         build_fielded_index,
     )
-    from pathlib import Path
 
     idx_dir = str(tmp_path / "fidx2")
     seg0 = spark.createDataFrame(
@@ -150,9 +149,9 @@ def test_mixed_field_segments_refused(spark, tmp_path):
     build_fielded_index(seg0, FIELDS, f"{idx_dir}/segments/seg=0", buckets=4)
     build_fielded_index(seg1, ["content"], f"{idx_dir}/segments/seg=1", buckets=4)
     for i in range(2):
-        (Path(f"{idx_dir}/segments/seg={i}") / "_SEGMENT_COMMITTED").write_text("1")
+        commit_segment(f"{idx_dir}/segments/seg={i}", spark)
     with pytest.raises(ValueError, match="mixed-field"):
-        FieldedMultiSegmentSearcher(spark, idx_dir, buckets=4)
+        FieldedMultiSegmentSearcher(spark, idx_dir)
 
 
 def test_fielded_multisegment_preload_kernels(spark, fstreamed):
@@ -162,7 +161,7 @@ def test_fielded_multisegment_preload_kernels(spark, fstreamed):
     score-identical to brute force over the full corpus — the same
     contract the relational path already carries."""
     docs, idx_dir = fstreamed
-    s = FieldedMultiSegmentSearcher(spark, idx_dir, buckets=8, preload=True)
+    s = FieldedMultiSegmentSearcher(spark, idx_dir, preload=True)
     for q in QUERIES:
         exp = [
             (r["doc_id"], r["score"])
@@ -183,7 +182,7 @@ def test_fielded_multisegment_preload_kernels(spark, fstreamed):
         got = s.search(QUERIES[1], w, top_k=5, method=method)
         assert [d for d, _ in got] == [d for d, _ in exp], method
     # no-preload 'wand' and unknown fields still fail loudly
-    s2 = FieldedMultiSegmentSearcher(spark, idx_dir, buckets=8)
+    s2 = FieldedMultiSegmentSearcher(spark, idx_dir)
     with pytest.raises(ValueError, match="preload"):
         s2.search(QUERIES[0], WEIGHTS, method="wand")
     with pytest.raises(ValueError, match="unindexed"):
@@ -206,7 +205,7 @@ def test_fielded_multiseg_partial_sidecar_stays_exact(spark, fstreamed, tmp_path
     segs = list_segments(clone)
     assert len(segs) >= 2
     shutil.rmtree(f"{segs[0]}/term_df")
-    s = FieldedMultiSegmentSearcher(spark, clone, buckets=8, preload=True)
+    s = FieldedMultiSegmentSearcher(spark, clone, preload=True)
     assert s._term_df == {}  # partial sum rejected, not silently used
     for q in QUERIES[:2]:
         exp = [
@@ -231,10 +230,10 @@ def test_fielded_multisegment_preload_budget(spark, fstreamed):
     _, idx_dir = fstreamed
     with pytest.raises(PreloadBudgetExceeded, match="preload_budget_bytes"):
         FieldedMultiSegmentSearcher(
-            spark, idx_dir, buckets=8, preload=True, preload_budget_bytes=16
+            spark, idx_dir, preload=True, preload_budget_bytes=16
         )
     # non-preload construction ignores the budget (nothing collected)
     s = FieldedMultiSegmentSearcher(
-        spark, idx_dir, buckets=8, preload_budget_bytes=16
+        spark, idx_dir, preload_budget_bytes=16
     )
     assert s._mem is None

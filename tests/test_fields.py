@@ -128,7 +128,7 @@ def test_bm25f_null_field_is_empty_not_poison(spark):
     assert all(s > 0 for _, s in brute)
     d = tempfile.mkdtemp()
     build_fielded_index(docs, ["title", "content"], d, buckets=4)
-    stored = [(r["doc_id"], r["score"]) for r in search_bm25f(spark, d, "zebra", w, top_k=3, buckets=4).collect()]
+    stored = [(r["doc_id"], r["score"]) for r in search_bm25f(spark, d, "zebra", w, top_k=3).collect()]
     assert [x for x, _ in stored] == [x for x, _ in brute]
     for (gd, gs), (_, es) in zip(stored, brute):
         assert gs == es

@@ -37,6 +37,34 @@ def test_fsio_primitives_local_and_remote(spark, tmp_path):
         assert fsio.listdir(fsio.join(base, "nope"), spark) == []
 
 
+def test_local_write_is_atomic(tmp_path):
+    """A local write_text renames a temp sibling over the target: a
+    reader polling while another thread rewrites stats.json between two
+    different-length documents always parses one of them whole, and no
+    temp file is left behind."""
+    import threading
+
+    p = str(tmp_path / "idx" / "stats.json")
+    docs = [json.dumps({"n_docs": i, "pad": "x" * (i * 997 % 50_000)}) for i in range(1, 41)]
+    fsio.write_text(p, docs[0])
+    stop = threading.Event()
+
+    def writer():
+        for i in range(600):
+            fsio.write_text(p, docs[i % len(docs)])
+        stop.set()
+
+    t = threading.Thread(target=writer)
+    t.start()
+    reads = 0
+    while not stop.is_set():
+        assert fsio.read_text(p) in docs
+        reads += 1
+    t.join()
+    assert reads > 0
+    assert sorted(x.name for x in (tmp_path / "idx").iterdir()) == ["stats.json"]
+
+
 def test_fsio_join_preserves_scheme():
     assert fsio.join("s3a://bkt/idx", "stats.json") == "s3a://bkt/idx/stats.json"
     assert fsio.join("/tmp/x/", "a", "b") == "/tmp/x/a/b"
@@ -134,11 +162,10 @@ def test_prepare_audit_on_remote_style_dir(spark, tmp_path):
 
 
 def test_streaming_segments_on_remote_style_dir(spark, tmp_path):
-    """The streaming tier end-to-end on a file:// index dir: segment
-    commit markers, discovery (authority-less listdir children), and
-    multi-segment serving."""
+    """The streaming tier end-to-end on a file:// index dir: the commit
+    point, segment discovery, and multi-segment serving."""
+    from sifter_mrc_search_engine_spark.plans.query import IndexSearcher
     from sifter_mrc_search_engine_spark.streaming.incremental import (
-        MultiSegmentSearcher,
         list_segments,
         stream_build_index,
     )
@@ -153,5 +180,5 @@ def test_streaming_segments_on_remote_style_dir(spark, tmp_path):
     stream_build_index(spark, src, idx, ckpt, buckets=4)
     segs = list_segments(idx, spark)
     assert segs, "no committed segments discovered on the file:// dir"
-    hits = MultiSegmentSearcher(spark, idx).search("alpha", top_k=5)
+    hits = IndexSearcher(spark, idx).search("alpha", top_k=5)
     assert len(hits) == 5

@@ -169,10 +169,7 @@ def test_preload_budget_counts_decoded_store(spark, corpus_on_disk, tmp_path_fac
         estimate_collect_bytes,
     )
     from sifter_mrc_search_engine_spark.operators.wand import KERNEL_COLUMNS
-    from sifter_mrc_search_engine_spark.plans.query import (
-        IndexSearcher,
-        invalidate_norms_cache,
-    )
+    from sifter_mrc_search_engine_spark.plans.query import IndexSearcher
 
     idx = str(tmp_path_factory.mktemp("plan_idx_decoded_budget"))
     build_index_resumable(spark.read.parquet(corpus_on_disk), idx, buckets=8)
@@ -186,7 +183,6 @@ def test_preload_budget_counts_decoded_store(spark, corpus_on_disk, tmp_path_fac
             spark, idx, preload=True,
             preload_budget_bytes=rows_est + decoded - 1,
         )
-    invalidate_norms_cache(idx)
     with pytest.raises(PreloadBudgetExceeded, match="doclens"):
         IndexSearcher(
             spark, idx, preload=True,
@@ -230,8 +226,8 @@ def test_preload_budget_guards_fielded_searcher(spark, tmp_path_factory):
     fidx = str(tmp_path_factory.mktemp("budget_fielded"))
     build_fielded_index(docs, ("title", "body"), fidx, buckets=4)
     with pytest.raises(PreloadBudgetExceeded, match="preload_budget_bytes"):
-        FieldedSearcher(spark, fidx, buckets=4, preload=True, preload_budget_bytes=32)
-    assert FieldedSearcher(spark, fidx, buckets=4, preload=True)._mem
+        FieldedSearcher(spark, fidx, preload=True, preload_budget_bytes=32)
+    assert FieldedSearcher(spark, fidx, preload=True)._mem
 
 
 def test_preload_budget_guards_lazy_norms(spark, corpus_on_disk, tmp_path_factory):
@@ -243,15 +239,11 @@ def test_preload_budget_guards_lazy_norms(spark, corpus_on_disk, tmp_path_factor
     from sifter_mrc_search_engine_spark.operators.compressed_index import (
         PreloadBudgetExceeded,
     )
-    from sifter_mrc_search_engine_spark.plans.query import (
-        IndexSearcher,
-        invalidate_norms_cache,
-    )
+    from sifter_mrc_search_engine_spark.plans.query import IndexSearcher
 
     idx = str(tmp_path_factory.mktemp("plan_idx_norm_budget"))
     docs = spark.read.parquet(corpus_on_disk)
     build_index_resumable(docs, idx, buckets=8)
-    invalidate_norms_cache(idx)
     s = IndexSearcher(spark, idx, preload_budget_bytes=16)
     with pytest.raises(PreloadBudgetExceeded, match="preload_budget_bytes"):
         _ = s.doclen

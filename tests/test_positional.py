@@ -7,7 +7,11 @@ import pytest
 from pyspark.sql import functions as F
 
 import sifter_mrc_search_engine_spark.operators.positional as P
-from sifter_mrc_search_engine_spark.operators.compressed_index import decode_index_df
+from sifter_mrc_search_engine_spark.operators.compressed_index import (
+    IndexSnapshot,
+    decode_index_df,
+    snapshot,
+)
 
 
 def _ids(df):
@@ -373,13 +377,13 @@ def test_phrase_indexed_scan_is_bucket_pruned(spark, docs, tmp_path, monkeypatch
         )
 
     scans = []
-    pruned = P._pruned_postings
+    pruned = IndexSnapshot.pruned
 
     def spy(*args):
         scans.append(pruned(*args))
         return scans[-1]
 
-    monkeypatch.setattr(P, "_pruned_postings", spy)
+    monkeypatch.setattr(IndexSnapshot, "pruned", spy)
     assert _ids(P.phrase_topk_indexed(spark, path, "alpha beta")) == {1, 2, 5}
     assert len(scans) == 1
     plan = formatted(scans[0])
@@ -598,16 +602,19 @@ def test_indexed_positional_on_negative_and_sparse_ids(spark, tmp_path, monkeypa
 
 
 def test_positional_budget_routes_to_cluster_plan(spark, docs, tmp_path, monkeypatch):
-    """Before any decode the driver path charges 16 bytes per posting and
-    per position byte against the budget; one byte short, the query runs
-    the cluster plan, with == rows, from the frame and the list cores."""
+    """Before any decode the driver path charges its decode and match
+    bound (``_decode_charge``) against the budget; one byte short, the
+    query runs the cluster plan, with == rows, from the frame and the
+    list cores."""
     from sifter_mrc_search_engine_spark.operators.wand import KERNEL_COLUMNS
     from sifter_mrc_search_engine_spark.plans.structured import StructuredSearchService
 
     path = str(tmp_path / "posidx")
     P.write_positional_index(docs, path)
-    rows = P._pruned_postings(spark, path, ["alpha", "beta"]).select(*KERNEL_COLUMNS, "poss").collect()
-    charge = 16 * sum(r["n"] + len(r["poss"]) for r in rows)
+    snap = snapshot(spark, path)
+    charge = P._decode_charge(
+        snap.pruned(["alpha", "beta"]).select(*KERNEL_COLUMNS, "poss").collect()
+    )
     svc = StructuredSearchService(spark, path)
     want = _rows(P.phrase_topk(docs, "beta alpha beta"))
     driver = P.phrase_topk_indexed(spark, path, "beta alpha beta")
@@ -701,3 +708,36 @@ def test_oracle_parity_with_zero_token_doc(spark):
         for r in con.sql(S.sql_highlight_topk("alpha beta", window=3)).df().itertuples()
     ]
     assert got == want
+
+
+def test_decode_charge_covers_measured_peak(spark, tmp_path):
+    """The driver path charges, before it decodes, at least the numpy
+    peak that ``tracemalloc`` measures while it decodes and matches a
+    head phrase (and its slop and near forms). The former charge, 16
+    bytes per posting and per position byte, falls short of it."""
+    import tracemalloc
+
+    from sifter_mrc_search_engine_spark.operators.wand import KERNEL_COLUMNS
+    from sifter_mrc_search_engine_spark.sources.pages import VOCAB, synthesize_pages
+
+    pages = synthesize_pages(spark, 3000, partitions=2).selectExpr(
+        "cast(split(url, '/')[4] as long) as doc_id", "text"
+    )
+    path = str(tmp_path / "posidx")
+    P.write_positional_index(pages, path)
+    head = f"{VOCAB[0]} {VOCAB[1]}"
+    for query in (P.phrase_query(head), P.slop_query(head, 2), P.near_query(head, 4)):
+        rows = snapshot(spark, path).pruned(query.terms).select(*KERNEL_COLUMNS, "poss").collect()
+        by_term = {}
+        for r in rows:
+            by_term.setdefault(r["term"], []).append(r)
+        tracemalloc.start()
+        try:
+            post = {t: P._decode_term(segs) for t, segs in by_term.items()}
+            matched = P._match_docs(post, query)
+            peak = tracemalloc.get_traced_memory()[1]
+        finally:
+            tracemalloc.stop()
+        assert matched is not None and matched.size > 0, query
+        assert P._decode_charge(rows) >= peak, (query, P._decode_charge(rows), peak)
+        assert 16 * sum(r["n"] + len(r["poss"]) for r in rows) < peak, query

@@ -4,9 +4,12 @@ identically to a batch build over the full corpus."""
 import pytest
 
 from sifter_mrc_search_engine_spark.operators.bm25 import bm25_brute_force
+from sifter_mrc_search_engine_spark.operators.compressed_index import IndexSnapshot
+from sifter_mrc_search_engine_spark.plans.query import IndexSearcher
 from sifter_mrc_search_engine_spark.sources.pages import VOCAB, synthesize_pages
 from sifter_mrc_search_engine_spark.streaming.incremental import (
-    MultiSegmentSearcher,
+    _write_segment,
+    commit_segment,
     compact_segments,
     list_segments,
     stream_build_index,
@@ -39,15 +42,25 @@ def test_segments_created(spark, streamed):
 QUERIES = [VOCAB[0], f"{VOCAB[0]} {VOCAB[40]}", f"{VOCAB[2]} {VOCAB[7]} {VOCAB[100]}"]
 
 
-def test_multisegment_join_norms_no_driver_state(spark, streamed):
+def _no_driver_norms(monkeypatch):
+    """Make any driver norms collect fail the test."""
+
+    def refuse(self, budget_bytes):
+        raise AssertionError("join mode collected doclens to the driver")
+
+    monkeypatch.setattr(IndexSnapshot, "norms", refuse)
+
+
+def test_multisegment_join_norms_no_driver_state(spark, streamed, monkeypatch):
     """norms='join' must serve identical results with ZERO doclens on the
     driver — the 10^12-doc serving shape."""
     docs, idx_dir = streamed
-    pre = MultiSegmentSearcher(spark, idx_dir)
-    joined = MultiSegmentSearcher(spark, idx_dir, norms="join")
-    assert joined.doclen == {}  # nothing collected
+    pre = IndexSearcher(spark, idx_dir)
+    want = {q: pre.search(q, top_k=10) for q in QUERIES + ["zzznotaterm"]}
+    _no_driver_norms(monkeypatch)
+    joined = IndexSearcher(spark, idx_dir, norms="join")
     for q in QUERIES + ["zzznotaterm"]:
-        a, b = pre.search(q, top_k=10), joined.search(q, top_k=10)
+        a, b = want[q], joined.search(q, top_k=10)
         assert [d for d, _ in a] == [d for d, _ in b], q
         for (_, sa), (_, sb) in zip(a, b):
             assert sb == sa
@@ -56,7 +69,7 @@ def test_multisegment_join_norms_no_driver_state(spark, streamed):
 @pytest.mark.parametrize("q", QUERIES)
 def test_multisegment_search_equals_batch_oracle(spark, streamed, q):
     docs, idx_dir = streamed
-    s = MultiSegmentSearcher(spark, idx_dir)
+    s = IndexSearcher(spark, idx_dir)
     expected = [
         (r["doc_id"], r["score"]) for r in bm25_brute_force(docs, q, top_k=10).collect()
     ]
@@ -74,8 +87,6 @@ def test_multisegment_prunes_with_each_segments_modulus(spark, tmp_path):
     stats.json predates the field (written with ``TERM_BUCKETS``)."""
     import json
 
-    from sifter_mrc_search_engine_spark.streaming.incremental import _write_segment
-
     docs = synthesize_pages(spark, 300, partitions=2).selectExpr(
         "cast(split(url, '/')[4] as long) + 1000 as doc_id", "text"
     ).cache()
@@ -86,7 +97,7 @@ def test_multisegment_prunes_with_each_segments_modulus(spark, tmp_path):
     assert [json.loads(open(f"{s}/stats.json").read())["buckets"] for s in segs] == [8]
 
     def check(corpus):
-        s = MultiSegmentSearcher(spark, idx)
+        s = IndexSearcher(spark, idx)
         for q in QUERIES:
             want = [
                 (r["doc_id"], r["score"])
@@ -109,6 +120,7 @@ def test_multisegment_prunes_with_each_segments_modulus(spark, tmp_path):
     del st["buckets"]
     with open(stats_path, "w") as f:
         f.write(json.dumps(st))
+    commit_segment(f"{idx}/segments/seg=101")  # re-commit the edited stats
     check(docs.unionByName(extra).unionByName(old))
 
 
@@ -127,8 +139,6 @@ def test_streaming_checkpoint_no_reprocess(spark, streamed):
 def test_compaction_preserves_results(spark, streamed):
     docs, idx_dir = streamed
     compact_dir = compact_segments(spark, idx_dir, buckets=8)
-    from sifter_mrc_search_engine_spark.plans.query import IndexSearcher
-
     s = IndexSearcher(spark, compact_dir)
     for q in QUERIES:
         expected = [
@@ -185,9 +195,6 @@ def test_compaction_blockmax_tight(spark, streamed):
 def test_overlapping_segments_detected_and_compacted(spark, tmp_path):
     """A doc_id re-delivered in a later batch: the searcher refuses the
     inconsistent segment set; compaction dedupes keep-latest."""
-    from sifter_mrc_search_engine_spark.plans.query import IndexSearcher
-    from sifter_mrc_search_engine_spark.streaming.incremental import _write_segment
-
     idx_dir = str(tmp_path / "idx")
     seg0 = spark.createDataFrame(
         [(1, "alpha beta"), (2, "beta gamma")], "doc_id long, text string"
@@ -200,7 +207,7 @@ def test_overlapping_segments_detected_and_compacted(spark, tmp_path):
     _write_segment(seg1, f"{idx_dir}/segments/seg=1", buckets=4)
 
     with pytest.raises(ValueError, match="overlap"):
-        MultiSegmentSearcher(spark, idx_dir)
+        IndexSearcher(spark, idx_dir)
 
     compact_dir = compact_segments(spark, idx_dir, buckets=4)
     # latest content wins: exactly-once corpus == docs 1,3 + NEW doc 2
@@ -226,9 +233,6 @@ def test_segment_order_numeric_past_ten(spark, tmp_path):
     """seg=10 must order AFTER seg=9, not after seg=1: keep-latest
     compaction picks the wrong winner under lexicographic order once a
     stream passes ten micro-batches."""
-    from sifter_mrc_search_engine_spark.plans.query import IndexSearcher
-    from sifter_mrc_search_engine_spark.streaming.incremental import _write_segment
-
     idx_dir = str(tmp_path / "idx")
     # 11 segments; doc 7 appears in seg=9 with OLD text and in seg=10 with NEW
     for b in range(11):
@@ -258,9 +262,6 @@ def test_mixed_schema_segments_search_and_compact(spark, tmp_path):
     on-disk layout) must still union with post-upgrade segments: search
     and compaction run, and scores match the batch oracle. Simulates the
     old layout by dropping blockmaxtf from one segment's postings."""
-    from sifter_mrc_search_engine_spark.plans.query import IndexSearcher
-    from sifter_mrc_search_engine_spark.streaming.incremental import _write_segment
-
     idx_dir = str(tmp_path / "idx")
     seg0 = spark.createDataFrame(
         [(1, "alpha beta"), (2, "beta gamma")], "doc_id long, text string"
@@ -283,7 +284,7 @@ def test_mixed_schema_segments_search_and_compact(spark, tmp_path):
     from sifter_mrc_search_engine_spark.operators.bm25 import bm25_brute_force
 
     for norms in ("preload", "join"):
-        s = MultiSegmentSearcher(spark, idx_dir, norms=norms)
+        s = IndexSearcher(spark, idx_dir, norms=norms)
         for q in ["alpha", "gamma delta"]:
             expected = [
                 (r["doc_id"], r["score"])
@@ -306,32 +307,79 @@ def test_mixed_schema_segments_search_and_compact(spark, tmp_path):
     assert [d for d, _ in got] == [d for d, _ in expected]
 
 
-def test_multisegment_search_df_contract(spark, streamed):
-    """search_df (the lazy zero-driver-norms plan) matches search() and
-    keeps the engine's empty-question contract: 0 rows, same schema."""
+HITS = ["query_id", "rank", "doc_id", "score"]
+
+
+def test_multisegment_relational_contract(spark, streamed):
+    """The zero-driver-norms relational plan (in-plan merged df) matches
+    search() and keeps the engine's empty-question contract: 0 rows,
+    same schema."""
     _, idx_dir = streamed
-    s = MultiSegmentSearcher(spark, idx_dir, norms="join")
-    df = s.search_df(QUERIES[1], top_k=5)
-    assert [f.name for f in df.schema.fields] == ["doc_id", "score"]
-    got = [(r["doc_id"], r["score"]) for r in df.collect()]
-    assert got == s.search(QUERIES[1], top_k=5)
-    empty = s.search_df("!!! ...", top_k=5)
+    s = IndexSearcher(spark, idx_dir, norms="join")
+    df = s.search_many_relational([QUERIES[1]], top_k=5)
+    assert [f.name for f in df.schema.fields] == HITS
+    got = [(r["doc_id"], r["score"]) for r in sorted(df.collect(), key=lambda r: r["rank"])]
+    assert got and got == IndexSearcher(spark, idx_dir).search(QUERIES[1], top_k=5)
+    empty = s.search_many_relational(["!!! ..."], top_k=5)
     assert empty.count() == 0
-    assert [f.name for f in empty.schema.fields] == ["doc_id", "score"]
+    assert [f.name for f in empty.schema.fields] == HITS
 
 
-def test_multisegment_norms_preload_budget(spark, streamed):
+def test_multisegment_norms_preload_budget(spark, streamed, tmp_path):
     """norms='preload' must size-estimate the unioned doclens before
-    collecting and refuse above the budget, naming the knob."""
+    collecting and refuse above the budget, naming the knob. A copy of
+    the store (its commit point lists relative paths) gives a snapshot
+    whose norms are not loaded yet."""
+    import shutil
+
     from sifter_mrc_search_engine_spark.operators.compressed_index import (
         PreloadBudgetExceeded,
     )
 
     _, idx_dir = streamed
+    clone = str(tmp_path / "clone")
+    shutil.copytree(idx_dir, clone)
+    s = IndexSearcher(spark, clone, preload_budget_bytes=16)
     with pytest.raises(PreloadBudgetExceeded, match="preload_budget_bytes"):
-        MultiSegmentSearcher(spark, idx_dir, preload_budget_bytes=16)
+        s.search(QUERIES[0], top_k=5)
     # join mode never collects norms: the tiny budget is irrelevant
-    s = MultiSegmentSearcher(
-        spark, idx_dir, norms="join", preload_budget_bytes=16
+    j = IndexSearcher(spark, clone, norms="join", preload_budget_bytes=16)
+    assert j.search(QUERIES[0], top_k=5) == IndexSearcher(spark, idx_dir).search(
+        QUERIES[0], top_k=5
     )
-    assert s.doclen == {}
+
+
+def test_searcher_follows_a_new_commit(spark, tmp_path):
+    """A scan-mode searcher over a streamed dir sees a batch committed
+    after it was built: its next search is == the brute-force oracle
+    over the grown corpus. A preloaded searcher keeps its snapshot, and
+    re-committing a segment changes nothing."""
+    docs = synthesize_pages(spark, 300, partitions=2).selectExpr(
+        "cast(split(url, '/')[4] as long) as doc_id", "text"
+    ).cache()
+    in_dir, idx, ckpt = str(tmp_path / "in"), str(tmp_path / "idx"), str(tmp_path / "ckpt")
+    first = docs.filter("doc_id < 150")
+    first.coalesce(1).write.parquet(f"{in_dir}/chunk=0")
+    stream_build_index(spark, f"{in_dir}/chunk=*", idx, ckpt, buckets=8)
+    scan, pinned = IndexSearcher(spark, idx), IndexSearcher(spark, idx, preload=True)
+
+    def want(corpus, q):
+        return [(r["doc_id"], r["score"]) for r in bm25_brute_force(corpus, q, top_k=10).collect()]
+
+    before = {q: want(first, q) for q in QUERIES}
+    assert all(before.values())
+    assert {q: scan.search(q, top_k=10) for q in QUERIES} == before
+
+    docs.filter("doc_id >= 150").coalesce(1).write.parquet(f"{in_dir}/chunk=1")
+    stream_build_index(spark, f"{in_dir}/chunk=*", idx, ckpt, buckets=8)
+    segs = list_segments(idx)
+    assert len(segs) == 2
+    after = {q: want(docs, q) for q in QUERIES}
+    assert after != before
+    assert {q: scan.search(q, top_k=10) for q in QUERIES} == after
+    assert scan.search_many_local(QUERIES, top_k=10) == [after[q] for q in QUERIES]
+    assert {q: pinned.search(q, top_k=10) for q in QUERIES} == before
+
+    commit_segment(segs[0], spark)
+    assert list_segments(idx) == segs
+    assert {q: IndexSearcher(spark, idx).search(q, top_k=10) for q in QUERIES} == after

@@ -14,7 +14,7 @@ Covered, over one synthesized 2.4M-page corpus (local[$SPARK_GRAFT_CPUS]):
 * ``fielded_multiseg_p50``  — BM25F across two parity-split fielded
   segments via FieldedMultiSegmentSearcher's merged relational plan
 * ``multiseg_p50``       — single-field two-segment serving
-  (MultiSegmentSearcher, norms='join': zero driver state)
+  (IndexSearcher, norms='join': zero driver state)
 
 Usage: SPARK_GRAFT_PIPE_DOCS=2400000 python tools/bench_pipeline.py
 """
@@ -43,11 +43,12 @@ from sifter_mrc_search_engine_spark.operators.fielded_index import (
     search_bm25f,
 )
 from sifter_mrc_search_engine_spark.operators.packing import materialize_chunks
+from sifter_mrc_search_engine_spark.plans.query import IndexSearcher
 from sifter_mrc_search_engine_spark.sources.pages import VOCAB, synthesize_pages
 from sifter_mrc_search_engine_spark.streaming.incremental import (
     FieldedMultiSegmentSearcher,
-    MultiSegmentSearcher,
     _write_segment,
+    commit_segment,
 )
 
 N_DOCS = int(os.environ.get("SPARK_GRAFT_PIPE_DOCS", "2400000"))
@@ -137,7 +138,7 @@ def main() -> None:
                 two_field.filter(F.col("doc_id") % 2 == par),
                 ["title", "content"], sdir,
             )
-            (Path(sdir) / "_SEGMENT_COMMITTED").write_text("1")
+            commit_segment(sdir, spark)
         dt = time.monotonic() - t0
         out["fielded_seg_build_sec"] = round(dt, 1)
         fm = FieldedMultiSegmentSearcher(spark, fseg)
@@ -170,10 +171,9 @@ def main() -> None:
         dt = time.monotonic() - t0
         out["seg_build_sec"] = round(dt, 1)
         out["seg_build_docs_per_sec"] = round(N_DOCS / dt, 1)
-        ms = MultiSegmentSearcher(spark, seg, norms="join")
+        ms = IndexSearcher(spark, seg, norms="join")
         out["multiseg_p50_ms"] = round(
-            p50(lambda: ms.search_df(QUERIES[0], top_k=10).collect(), reps=5)
-            * 1000, 1,
+            p50(lambda: ms.search(QUERIES[0], top_k=10), reps=5) * 1000, 1,
         )
 
         # positional / structured tier at soak scale: build once, then
