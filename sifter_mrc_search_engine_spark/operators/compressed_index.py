@@ -35,7 +35,10 @@ because avgdl/N are fixed by the corpus stats that precede encoding.
 
 from __future__ import annotations
 
+import bisect
+import functools
 import json
+import os
 import threading
 from typing import Sequence
 
@@ -175,6 +178,118 @@ def charge_preload(
     return est
 
 
+def _bucket_files(postings_dir: str) -> dict[int, list[str]]:
+    """bucket -> the parquet files of a local ``postings`` dir, skipping
+    ``_``/``.`` names as Spark's listing does (``_SUCCESS``, ``.crc``
+    checksums, ``_temporary`` attempt dirs)."""
+    out: dict[int, list[str]] = {}
+    for part in sorted(os.scandir(postings_dir), key=lambda e: e.name):
+        if not (part.is_dir() and part.name.startswith("bucket=")):
+            continue
+        files = sorted(
+            f.path for f in os.scandir(part.path)
+            if f.is_file() and not f.name.startswith(("_", "."))
+        )
+        out[int(part.name[len("bucket="):])] = files
+    return out
+
+
+def _may_hold(stats, tset: list) -> bool:
+    """Whether a row group whose ``term`` column has ``stats`` can hold
+    one of the ascending ``tset``: some term falls inside its min/max.
+    A group without statistics is kept."""
+    if stats is None or not stats.has_min_max:
+        return True
+    i = bisect.bisect_left(tset, stats.min)
+    return i < len(tset) and tset[i] <= stats.max
+
+
+class PostingsReader:
+    """The driver read of a few terms' postings rows from one generation
+    of one or more index dirs (a streamed dir's segments), each written
+    with its own bucket modulus.
+
+    A local dir is read in-process, with no Spark job: its
+    ``postings/bucket=N`` files are listed once, and a read opens only
+    the query buckets' files with :class:`pyarrow.parquet.ParquetFile`,
+    keeps the row groups whose ``term`` min/max statistics overlap the
+    term set (the pushdown Spark does), reads only the asked columns and
+    filters the rows on ``term``. A ``scheme://`` dir keeps the bucket-
+    and term-pruned collect of ``parts`` (the dirs' postings relations)
+    through the JVM, the split :mod:`functions.fsio` makes for sidecars.
+
+    ``pyarrow.parquet`` is imported on the first local read, so a
+    process that never reads this way never loads it."""
+
+    __slots__ = ("dirs", "moduli", "parts", "_files")
+
+    def __init__(self, dirs: Sequence[str], moduli: Sequence[int], parts: Sequence[DataFrame]):
+        self.dirs = list(dirs)
+        self.moduli = list(moduli)
+        self.parts = list(parts)
+        self._files: list | None = None
+
+    def rows(self, terms: Sequence[str], columns: Sequence[str]) -> list[dict]:
+        """The postings rows of ``terms`` as dicts of ``columns`` (None
+        for a column a dir's files lack), ordered by (dir, term,
+        ``segment``): a term's rows come out in the order its salted
+        segments and stream segments concatenate."""
+        tset = sorted(set(terms))
+        if not tset:
+            return []
+        keys = list(dict.fromkeys([*columns, "term", "segment"]))
+        if fsio.is_remote(self.dirs[0]):
+            got = self._collect(tset, keys)
+        else:
+            got = self._read(tset, keys)
+        got.sort(key=lambda r: (r["_dir"], r["term"], r["segment"]))
+        return [{c: r[c] for c in columns} for r in got]
+
+    def _read(self, tset: list, keys: list) -> list[dict]:
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        if self._files is None:
+            # racing handler threads may both list; the listings are equal
+            self._files = [_bucket_files(fsio.join(d, "postings")) for d in self.dirs]
+        wanted = pa.array(tset, pa.string())
+        out = []
+        for i, (files, m) in enumerate(zip(self._files, self.moduli)):
+            for bk in sorted({term_bucket(t, m) for t in tset}):
+                for path in files.get(bk, ()):
+                    with pq.ParquetFile(path) as pf:
+                        names = pf.schema_arrow.names
+                        col = names.index("term")
+                        groups = [
+                            g for g in range(pf.num_row_groups)
+                            if _may_hold(pf.metadata.row_group(g).column(col).statistics, tset)
+                        ]
+                        if not groups:
+                            continue
+                        tbl = pf.read_row_groups(
+                            groups, columns=[c for c in keys if c in names], use_threads=False
+                        )
+                    tbl = tbl.filter(pc.is_in(tbl["term"], value_set=wanted))
+                    for r in tbl.to_pylist():
+                        out.append({**dict.fromkeys(keys), **r, "bucket": bk, "_dir": i})
+        return out
+
+    def _collect(self, tset: list, keys: list) -> list[dict]:
+        frames = []
+        for i, (part, m) in enumerate(zip(self.parts, self.moduli)):
+            bks = sorted({term_bucket(t, m) for t in tset})
+            frames.append(
+                part.filter(F.col("bucket").isin(bks))
+                .filter(F.col("term").isin(tset))
+                .select(*[c for c in keys if c in part.columns], F.lit(i).alias("_dir"))
+            )
+        union = functools.reduce(
+            lambda a, b: a.unionByName(b, allowMissingColumns=True), frames
+        )
+        return [{**dict.fromkeys(keys), **r.asDict()} for r in union.collect()]
+
+
 class IndexSnapshot:
     """One generation of an index directory, resolved as a whole under
     one stats.json freshness token: everything a request reads.
@@ -195,7 +310,7 @@ class IndexSnapshot:
 
     __slots__ = (
         "index_dir", "app", "token", "segments", "n_docs", "avgdl", "moduli",
-        "postings", "doclens", "doclen",
+        "postings", "reader", "doclens", "doclen",
     )
 
     def __init__(self, spark, index_dir: str, token: tuple):
@@ -216,14 +331,17 @@ class IndexSnapshot:
         # dirs written before stats.json recorded it used the default
         self.moduli = sorted({int(s.get("buckets", TERM_BUCKETS)) for s in segs})
         paths = [s["path"] for s in self.segments]
-        self.postings = spark.read.parquet(f"{paths[0]}/postings")
+        parts = [spark.read.parquet(f"{p}/postings") for p in paths]
+        # allowMissingColumns: segments written before the blockmaxtf
+        # codec column lack it; the kernels never read it
+        self.postings = functools.reduce(
+            lambda a, b: a.unionByName(b, allowMissingColumns=True), parts
+        )
+        self.reader = PostingsReader(
+            paths, [int(s.get("buckets", TERM_BUCKETS)) for s in segs], parts
+        )
         self.doclens = spark.read.parquet(f"{paths[0]}/doclens")
         for p in paths[1:]:
-            # allowMissingColumns: segments written before the blockmaxtf
-            # codec column lack it; the kernels never read it
-            self.postings = self.postings.unionByName(
-                spark.read.parquet(f"{p}/postings"), allowMissingColumns=True
-            )
             self.doclens = self.doclens.unionByName(spark.read.parquet(f"{p}/doclens"))
         self.doclen = None
         if len(paths) > 1:
@@ -246,8 +364,15 @@ class IndexSnapshot:
             F.col("term").isin(tset)
         )
 
-    def merged(self, rows: list) -> list:
-        """Collected postings ``rows`` as the merged index scores them.
+    def rows(self, terms: Sequence[str], columns: Sequence[str]) -> list[dict]:
+        """The postings rows of ``terms`` as dicts of ``columns``, read on
+        the driver (:class:`PostingsReader`): ``==`` to
+        :meth:`pruned`'s collect, ordered by (segment dir, term,
+        ``segment``). A local dir starts no Spark job."""
+        return self.reader.rows(terms, columns)
+
+    def merged(self, rows: list[dict]) -> list[dict]:
+        """Postings ``rows`` (dicts) as the merged index scores them.
         One segment's rows are exact as stored. Across segments each
         term's df is the sum of its rows' ``n`` (doc ids are
         segment-disjoint), and the stored impact bounds, computed under
@@ -260,7 +385,7 @@ class IndexSnapshot:
         for r in rows:
             df[r["term"]] = df.get(r["term"], 0) + int(r["n"])
         return [
-            {**r.asDict(), "df": df[r["term"]],
+            {**r, "df": df[r["term"]],
              "max_impact": bm25.idf(df[r["term"]], self.n_docs) * (BM25_K1 + 1.0)}
             for r in rows
         ]
@@ -274,15 +399,15 @@ class IndexSnapshot:
         no more memory."""
         if self.doclen is None:
             check_preload_budget(self.doclens, f"doclens of {self.index_dir}", budget_bytes)
-            rows = self.doclens.collect()
-            ids = [r["doc_id"] for r in rows]
-            max_id = max(ids)
-            if packed_ids(min(ids), max_id, len(ids)):
+            pdf = self.doclens.select("doc_id", "doc_len").toPandas()
+            ids = pdf["doc_id"].to_numpy(np.int64)
+            lens = pdf["doc_len"].to_numpy(np.int64)
+            max_id = int(ids.max())
+            if packed_ids(int(ids.min()), max_id, ids.size):
                 dl = np.zeros(max_id + 1, dtype=np.int64)
-                for r in rows:
-                    dl[r["doc_id"]] = r["doc_len"]
+                dl[ids] = lens
             else:
-                dl = {r["doc_id"]: r["doc_len"] for r in rows}
+                dl = dict(zip(ids.tolist(), lens.tolist()))
             self.doclen = dl
         return self.doclen
 

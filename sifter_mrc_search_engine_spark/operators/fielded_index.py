@@ -48,7 +48,11 @@ from ..functions.analyzer import analyze, tokenize_expr
 from ..functions.xxhash import term_bucket
 from . import bm25
 from .bm25 import bm25_contrib_expr, score_fold
-from .compressed_index import DEFAULT_PRELOAD_BUDGET_BYTES, check_preload_budget
+from .compressed_index import (
+    DEFAULT_PRELOAD_BUDGET_BYTES,
+    PostingsReader,
+    check_preload_budget,
+)
 from .compressed_index import decode_index_df, encode_tf, write_index
 
 #: joins field and term in the stored term key; the analyzer's token
@@ -584,7 +588,7 @@ def serve_bm25f_preload(
     sidecar (``FieldedSearcher`` and ``FieldedMultiSegmentSearcher`` are
     thin wrappers; a fix here fixes both). ``fetch_rows(fterms)``
     returns the field-prefixed postings rows — a dict lookup when
-    preloaded, one batched pruned collect in scan mode. The cost-model
+    preloaded, one pruned driver read in scan mode. The cost-model
     knobs default to the module constants; a caller (e.g. a retuned
     subclass) can pass its own."""
     names = sorted(weights)
@@ -665,6 +669,7 @@ class FieldedSearcher:
         self.n_docs = int(stats["n_docs"])
         self.fields = list(stats["fields"])
         self.postings = spark.read.parquet(f"{index_dir}/postings")
+        self._reader = PostingsReader([index_dir], [self.buckets], [self.postings])
         # lazy relation, bound once; join-mode queries reuse it instead of
         # re-instantiating a parquet relation per call
         self.doclens_df = spark.read.parquet(f"{index_dir}/doclens")
@@ -773,12 +778,7 @@ class FieldedSearcher:
     def _rows_for(self, fterms: list[str]) -> list:
         if self._mem is not None:
             return [r for t in fterms for r in self._mem.get(t, [])]
-        bks = sorted({term_bucket(t, self.buckets) for t in fterms})
-        return (
-            self.postings.filter(F.col("bucket").isin(bks))
-            .filter(F.col("term").isin(fterms))
-            .collect()
-        )
+        return self._reader.rows(fterms, self.postings.columns)
 
     def search(
         self,

@@ -22,12 +22,13 @@ Every operator here exists in two shapes:
   ``poss``.
 
 Phrase, slop and near queries are served on the driver
-(:func:`positional_topk`): ONE bucket- and term-pruned scan collects the
-terms' raw rows, each segment's doc ids, tfs and positions decode once in
-numpy, the match runs over packed (doc rank, position) keys, and the
+(:func:`positional_topk`): ONE bucket- and term-pruned read fetches the
+terms' raw rows, each segment's doc ids, tfs and positions decode once
+in numpy, the match runs over packed (doc rank, position) keys, and the
 matched docs are scored with :func:`bm25.idf`/:func:`bm25.impacts` and
 the driver fold (:func:`operators.wand.accumulate_topk`). No Python
-worker, shuffle or decode UDF runs per request.
+worker, shuffle or decode UDF runs per request, and on a local index
+the read is in-process, so no Spark job does either.
 
 Scale posture (10^12 docs): matching only ever touches postings of the
 query's terms (bucket partition pruning + term row-group pruning). The
@@ -1195,9 +1196,10 @@ def _driver_topk(
     k1: float,
     b: float,
 ) -> list[tuple[int, float]] | None:
-    """``query``'s top-k on the driver from ONE pruned scan: the terms'
-    raw rows (kernel columns plus ``poss``) are collected, decoded once,
-    matched by :func:`_match_docs`, and the matched docs scored with
+    """``query``'s top-k on the driver from ONE pruned read
+    (:meth:`IndexSnapshot.rows`): the terms' raw rows (kernel columns
+    plus ``poss``) are fetched, decoded once, matched by
+    :func:`_match_docs`, and the matched docs scored with
     :func:`bm25.idf`/:func:`bm25.impacts` and folded by
     :func:`accumulate_topk` in ascending-term order — ``==`` to the
     cluster plan's slot fold. No Python worker, shuffle or decode UDF runs.
@@ -1209,7 +1211,7 @@ def _driver_topk(
     uterms = sorted(set(query.terms))
     if not uterms:
         return []
-    rows = snap.pruned(uterms).select(*KERNEL_COLUMNS, "poss").collect()
+    rows = snap.rows(uterms, (*KERNEL_COLUMNS, "poss"))
     by_term: dict[str, list] = {}
     for r in rows:
         by_term.setdefault(r["term"], []).append(r)

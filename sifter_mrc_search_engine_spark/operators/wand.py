@@ -23,7 +23,7 @@ the same term; a doc appears in exactly one segment so scoring is unchanged.
 Distribution: one query's postings are a handful of rows — the kernel runs
 driver-side per query (the reference serves queries from one process too,
 server.py:198-236). Query BATCHES run on the driver too
-(plans/query.py ``search_many``): one pruned scan for the whole batch, each
+(plans/query.py ``search_many``): one pruned read for the whole batch, each
 term decoded once by :func:`term_impacts`, each distinct term set folded by
 :func:`accumulate_topk`. The cluster-side batch plan is
 ``search_many_relational``, whose fold is Catalyst's.

@@ -1,14 +1,17 @@
 """Query lifecycle over a persisted index (SURVEY.md §3.1 Spark mapping).
 
-analyze(question) -> bucket-pruned postings scan -> WAND kernel -> top-k.
+analyze(question) -> bucket-pruned postings read -> WAND kernel -> top-k.
 
-The postings scan filters on BOTH the partition column ``bucket`` (parquet
-partition pruning: only the query terms' bucket directories are listed) and
-``term`` (row-group pruning via parquet min/max stats). A query touches a
-handful of files regardless of index size — this is what makes the design
-hold at 10^12 docs. A preloaded searcher (``preload=True``) skips the
-scan and the kernel: it decoded every term once into BM25 impact arrays
-at construction, and a query only adds its terms' arrays.
+The postings read prunes on BOTH the partition column ``bucket`` (only
+the query terms' bucket directories are opened) and ``term`` (row-group
+pruning via parquet min/max stats). A query touches a handful of files
+regardless of index size — this is what makes the design hold at 10^12
+docs. On a local index the driver reads those row groups itself
+(:class:`operators.compressed_index.PostingsReader`), so a query starts
+no Spark job; a ``scheme://`` index pays one pruned collect. A preloaded
+searcher (``preload=True``) skips the read and the kernel: it decoded
+every term once into BM25 impact arrays at construction, and a query
+only adds its terms' arrays.
 
 Doc lengths: loaded once per index snapshot into a dense numpy array (a
 dict for sparse ids) — the Lucene-norms analogue. At true 10^12 scale
@@ -17,7 +20,7 @@ executor; the access pattern (random lookups by doc_id during scoring)
 is identical.
 
 Batch scoring has two shapes. ``search_many`` is a driver scatter-gather:
-one pruned scan fetches the union of the batch's postings (none when
+one pruned read fetches the union of the batch's postings (none when
 preloaded), each term is decoded once, each distinct term set is folded
 once, and the rows come back as a JVM local relation, so the batch starts
 no Python worker. ``search_many_relational`` keeps postings and norms on
@@ -80,7 +83,7 @@ class IndexSearcher:
         The searcher serves the one index snapshot it read, even if the
         directory is rebuilt under it. Appropriate while the hot index
         fits driver memory; at 10^12 docs serving runs against the
-        bucket-pruned scan (default) or an external KV tier. Every
+        bucket-pruned read (default) or an external KV tier. Every
         driver-side collect is charged against ``preload_budget_bytes``
         (default 4 GiB) before it happens: the ESTIMATED compressed rows
         (one cheap aggregate), 16 bytes per decoded posting, then the
@@ -159,10 +162,12 @@ class IndexSearcher:
         what = f"postings of {self.index_dir}"
         postings = snap.postings.select(*KERNEL_COLUMNS)
         spent = check_preload_budget(postings, what, budget)
-        store = self._impacts(
-            snap, snap.merged(postings.collect()),
-            None if budget is None else budget - spent, what,
-        )
+        rows = postings.collect()
+        if len(snap.segments) > 1:
+            # merged() rewrites df per row: it takes dicts. One segment's
+            # Rows serve as collected, with no copy held beside them.
+            rows = snap.merged([r.asDict() for r in rows])
+        store = self._impacts(snap, rows, None if budget is None else budget - spent, what)
         for ids, imp in store.values():
             ids.flags.writeable = imp.flags.writeable = False
         return store
@@ -179,20 +184,22 @@ class IndexSearcher:
         return self._snapshot().norms(self._preload_budget)
 
     def candidate_rows(self, terms: Sequence[str], snap: IndexSnapshot | None = None) -> list:
-        """Postings fetch for a term set: the bucket- and term-pruned scan
-        of ``snap`` (default: the current snapshot), reading only the
-        columns the kernels use — a positional index's ``poss`` stays on
-        disk — with merged df across segments (:meth:`IndexSnapshot.merged`).
+        """Postings fetch for a term set: the bucket- and term-pruned read
+        of ``snap`` (default: the current snapshot) on the driver
+        (:meth:`IndexSnapshot.rows`), reading only the columns the
+        kernels use — a positional index's ``poss`` stays on disk — with
+        merged df across segments (:meth:`IndexSnapshot.merged`).
 
         Bucket routing is computed DRIVER-SIDE (functions/xxhash.py is
-        bit-identical to the JVM xxhash64) so the pruned scan is the only
-        Spark job a query pays.
+        bit-identical to the JVM xxhash64), and a local index's parquet
+        row groups are read in-process, so the fetch starts no Spark job;
+        a ``scheme://`` index pays one pruned collect.
         """
         tset = sorted(set(terms))
         if not tset:
             return []
         snap = snap or self._snapshot()
-        return snap.merged(snap.pruned(tset).select(*KERNEL_COLUMNS).collect())
+        return snap.merged(snap.rows(tset, KERNEL_COLUMNS))
 
     def search(
         self, question: str, top_k: int = DEFAULT_TOP_K, clamp: bool = True
@@ -226,7 +233,7 @@ class IndexSearcher:
     ) -> list[list[tuple[int, float]]]:
         """Scatter-gather batch scoring on the driver, one hit list per
         question (each equal to :meth:`search`'s): the batch's terms come
-        from the preloaded store or ONE bucket-pruned scan decoded once
+        from the preloaded store or ONE bucket-pruned read decoded once
         per term, and each distinct term set is folded once with
         :func:`accumulate_topk` in ascending-term order. The right shape
         while the batch's postings fit the driver;

@@ -12,10 +12,11 @@ validation conventions as the free-text route (400 on bad input, never
 a dropped connection).
 
 Phrase, slop and near requests call the list-returning
-:func:`..operators.positional.positional_topk` directly: one pruned scan
+:func:`..operators.positional.positional_topk` directly: one pruned read
 and the driver kernel (the cluster plan only past the driver budget),
-with no result DataFrame to build and collect. The other shapes collect
-their operator's plan.
+with no result DataFrame to build and collect. On a local index the
+read is in-process, so such a request starts no Spark job. The other
+shapes collect their operator's plan.
 
 Every request is a JSON object with a ``type`` discriminator; the knob
 names match the operator signatures one-to-one so the HTTP surface and

@@ -454,13 +454,16 @@ def test_searcher_over_positional_dir_never_reads_positions(
     spark, docs, positional_dir, monkeypatch, preload
 ):
     """A positional dir is the main format plus ``poss``, so it serves
-    term queries exactly; the searcher's scans read only the kernel's
+    term queries exactly; the searcher's reads (the preload's Spark
+    collect, the scan searcher's driver reads) take only the kernel's
     columns and leave ``poss`` on disk."""
+    import pyarrow.parquet as pq
+
     assert "poss" in spark.read.parquet(f"{positional_dir}/postings").columns
     expected = [_brute(docs, q) for q in QUERIES]
-    plans = []
+    plans, read_columns = [], []
     frame = type(spark.range(1))  # the session's concrete DataFrame class
-    collect = frame.collect
+    collect, read_row_groups = frame.collect, pq.ParquetFile.read_row_groups
 
     def spy(df):
         plans.append(
@@ -468,13 +471,22 @@ def test_searcher_over_positional_dir_never_reads_positions(
         )
         return collect(df)
 
+    def spy_read(self, row_groups, columns=None, **kwargs):
+        read_columns.append(columns)
+        return read_row_groups(self, row_groups, columns=columns, **kwargs)
+
     monkeypatch.setattr(frame, "collect", spy)
+    monkeypatch.setattr(pq.ParquetFile, "read_row_groups", spy_read)
     s = IndexSearcher(spark, positional_dir, preload=preload)
     assert [s.search(q, top_k=10) for q in QUERIES] == expected
     assert s.search_many_local(QUERIES) == expected
-    scans = [
-        ln for p in plans for ln in p.splitlines()
-        if ln.strip().startswith("ReadSchema:") and "gaps" in ln
-    ]
-    assert scans
-    assert not any("poss" in ln for ln in scans), scans
+    if preload:
+        scans = [
+            ln for p in plans for ln in p.splitlines()
+            if ln.strip().startswith("ReadSchema:") and "gaps" in ln
+        ]
+        assert scans
+        assert not any("poss" in ln for ln in scans), scans
+    else:
+        assert read_columns and all(c is not None and "gaps" in c for c in read_columns)
+        assert not any("poss" in c for c in read_columns), read_columns

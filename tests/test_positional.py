@@ -366,28 +366,37 @@ def test_near_topk_indexed_parity(spark, docs, tmp_path, monkeypatch):
 
 
 def test_phrase_indexed_scan_is_bucket_pruned(spark, docs, tmp_path, monkeypatch):
-    """Both the scan the driver path collects and the over-budget cluster
+    """Both the read the driver path makes and the over-budget cluster
     plan prune the postings to the phrase terms' bucket partitions."""
+    import pyarrow.parquet as pq
+
+    from sifter_mrc_search_engine_spark.functions.xxhash import term_bucket
+
     path = str(tmp_path / "posidx")
-    P.write_positional_index(docs, path)
+    stats = P.write_positional_index(docs, path)
 
     def formatted(df):
         return df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )
 
-    scans = []
-    pruned = IndexSnapshot.pruned
+    reads, opened = [], []
+    rows, init = IndexSnapshot.rows, pq.ParquetFile.__init__
 
-    def spy(*args):
-        scans.append(pruned(*args))
-        return scans[-1]
+    def spy_rows(*args):
+        reads.append(args[1:])
+        return rows(*args)
 
-    monkeypatch.setattr(IndexSnapshot, "pruned", spy)
+    def spy_open(self, source, *args, **kwargs):
+        opened.append(str(source))
+        return init(self, source, *args, **kwargs)
+
+    monkeypatch.setattr(IndexSnapshot, "rows", spy_rows)
+    monkeypatch.setattr(pq.ParquetFile, "__init__", spy_open)
     assert _ids(P.phrase_topk_indexed(spark, path, "alpha beta")) == {1, 2, 5}
-    assert len(scans) == 1
-    plan = formatted(scans[0])
-    assert "PartitionFilters: [bucket" in plan, plan[:2000]
+    assert len(reads) == 1
+    dirs = {f"{path}/postings/bucket={term_bucket(t, stats['buckets'])}/" for t in ("alpha", "beta")}
+    assert opened and all(any(f.startswith(d) for d in dirs) for f in opened), (opened, dirs)
 
     monkeypatch.setattr(P, "DEFAULT_PRELOAD_BUDGET_BYTES", 0)
     q = P.phrase_topk_indexed(spark, path, "alpha beta")
