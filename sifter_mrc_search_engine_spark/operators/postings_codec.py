@@ -63,9 +63,10 @@ def varbyte_encode(values: np.ndarray) -> bytes:
 
 
 def varbyte_decode(
-    buf: bytes, offset: int = 0, count: int | None = None, end: int | None = None
+    buf, offset: int = 0, count: int | None = None, end: int | None = None
 ) -> np.ndarray:
-    """Decode ``count`` values (or all) starting at byte ``offset``.
+    """Decode ``count`` values (or all) starting at byte ``offset`` of
+    the bytes-like ``buf``.
 
     ``end`` bounds the byte scan: without it the continuation-bit pass
     runs over the entire remaining buffer, making every block load
@@ -73,23 +74,27 @@ def varbyte_decode(
     the next block's byte offset.
     """
     raw = np.frombuffer(buf, dtype=np.uint8)[offset:end]
-    if raw.size == 0:
-        return np.zeros(0, dtype=np.uint64)
-    is_last = (raw & 0x80) == 0
-    ends = np.flatnonzero(is_last)
+    ends = np.flatnonzero(raw < 0x80)
     if count is not None:
         ends = ends[:count]
-        raw = raw[: ends[-1] + 1] if ends.size else raw[:0]
-        is_last = is_last[: raw.size]
-    starts = np.concatenate(([0], ends[:-1] + 1))
-    n = ends.size
-    vals = np.zeros(n, dtype=np.uint64)
-    # group index of each byte within its value
-    byte_val = (raw & 0x7F).astype(np.uint64)
-    # position within value: index - start of its value
-    value_id = np.cumsum(np.concatenate(([0], is_last[:-1].astype(np.int64))))
-    pos_in_val = np.arange(raw.size, dtype=np.int64) - starts[value_id]
-    np.add.at(vals, value_id, byte_val << _SHIFTS[pos_in_val])
+    if ends.size == 0:
+        return np.zeros(0, dtype=np.uint64)
+    raw = raw[: ends[-1] + 1]
+    if ends.size == raw.size:  # every value is one byte
+        return raw.astype(np.uint64)
+    starts = np.empty_like(ends)
+    starts[0] = 0
+    starts[1:] = ends[:-1] + 1
+    vals = (raw[starts] & 0x7F).astype(np.uint64)
+    # OR in the j-th byte of the values that have one: a pass per byte
+    # position (at most 10), over the multi-byte values only
+    multi = np.flatnonzero(ends > starts)
+    for j in range(1, 10):
+        at = starts[multi] + j
+        vals[multi] |= (raw[at] & 0x7F).astype(np.uint64) << _SHIFTS[j]
+        multi = multi[ends[multi] > at]
+        if multi.size == 0:
+            break
     return vals
 
 
@@ -165,6 +170,40 @@ def decode_blockmaxtf(blockmaxtf: bytes) -> np.ndarray:
     return np.frombuffer(blockmaxtf, dtype=np.int64)
 
 
+def decode_postings_many(
+    gaps, tfs, n, block_size=BLOCK_SIZE
+) -> Tuple[np.ndarray, np.ndarray]:
+    """Full decode of posting lists stored back to back -> their
+    concatenated ``(doc_ids int64, tfs int64)``.
+
+    ``gaps``/``tfs`` are the lists' varbyte streams concatenated (bytes-
+    like: a list's streams end on a value boundary, so one varbyte pass
+    decodes them all), ``n`` the postings per list and ``block_size`` one
+    size or one per list. Loop-free: a list restarts at an absolute id at
+    every block, so doc ids are one segmented prefix sum over all gaps
+    (int64 wraps alike in every step, so negative and hash-derived ids
+    come back exact)."""
+    n = np.asarray(n, dtype=np.int64).reshape(-1)
+    bs = np.broadcast_to(np.asarray(block_size, dtype=np.int64), n.shape)
+    g = varbyte_decode(gaps).astype(np.int64)
+    t = varbyte_decode(tfs).astype(np.int64)
+    total = int(n.sum())
+    assert g.size == total and t.size == total
+    if not total:
+        return g, t
+    # the first posting of every block: its list's start plus whole blocks
+    nb = -(-n // bs)
+    lst = np.repeat(np.arange(n.size), nb)
+    block_in_list = np.arange(lst.size) - (np.cumsum(nb) - nb)[lst]
+    starts = (np.cumsum(n) - n)[lst] + block_in_list * bs[lst]
+    g[starts] -= 1  # remove the +1 bias on absolutes
+    # a block's sum is its last id; rebasing each absolute on the block
+    # before turns the within-block sums into one prefix sum
+    last = np.add.reduceat(g, starts)
+    g[starts[1:]] -= last[:-1]
+    return np.cumsum(g), t
+
+
 def decode_postings(
     enc: dict | None = None,
     *,
@@ -174,21 +213,13 @@ def decode_postings(
     skips: bytes | None = None,
     block_size: int = BLOCK_SIZE,
 ) -> Tuple[np.ndarray, np.ndarray]:
-    """Full decode -> (doc_ids int64, tfs int64)."""
+    """Full decode of one list -> (doc_ids int64, tfs int64): the
+    one-list case of :func:`decode_postings_many` (``skips`` is not
+    needed for a full decode)."""
     if enc is not None:
-        gaps, tfs, n, skips = enc["gaps"], enc["tfs"], enc["n"], enc["skips"]
+        gaps, tfs, n = enc["gaps"], enc["tfs"], enc["n"]
         block_size = enc.get("block_size", block_size)
-    g = varbyte_decode(gaps).astype(np.int64)
-    t = varbyte_decode(tfs).astype(np.int64)
-    assert g.size == n and t.size == n
-    # undo per-block absolute restarts: cumsum within each block
-    doc_ids = np.empty(n, dtype=np.int64)
-    for b in range(0, n, block_size):
-        hi = min(b + block_size, n)
-        blk = g[b:hi].copy()
-        blk[0] -= 1  # remove the +1 bias on absolutes
-        doc_ids[b:hi] = np.cumsum(blk)
-    return doc_ids, t
+    return decode_postings_many(gaps, tfs, [n], block_size)
 
 
 def decode_block(

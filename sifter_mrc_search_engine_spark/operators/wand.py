@@ -22,11 +22,11 @@ the same term; a doc appears in exactly one segment so scoring is unchanged.
 
 Distribution: one query's postings are a handful of rows — the kernel runs
 driver-side per query (the reference serves queries from one process too,
-server.py:198-236). Query BATCHES run on the driver too
-(plans/query.py ``search_many``): one pruned read for the whole batch, each
-term decoded once by :func:`term_impacts`, each distinct term set folded by
-:func:`accumulate_topk`. The cluster-side batch plan is
-``search_many_relational``, whose fold is Catalyst's.
+server.py:198-236). Below the dense limits, a query and a query BATCH
+(plans/query.py ``search_many``) score from one pruned read as an Arrow
+table: :func:`term_impacts` decodes it in a few vectorized slices, and
+:func:`accumulate_topk` folds each distinct term set. The cluster-side
+batch plan is ``search_many_relational``, whose fold is Catalyst's.
 """
 
 from __future__ import annotations
@@ -38,9 +38,10 @@ import numpy as np
 
 from ..constants import BLOCK_SIZE, BM25_B, BM25_K1, DEFAULT_TOP_K
 from . import bm25
-from .postings_codec import (
+from .postings_codec import (  # noqa: F401  (decode_postings: traced by perfbench)
     decode_blockmax,
     decode_postings,
+    decode_postings_many,
     decode_skips,
     varbyte_decode,
 )
@@ -52,6 +53,8 @@ KERNEL_COLUMNS = (
     "term", "df", "n", "block_size", "max_doc", "max_impact",
     "gaps", "tfs", "skips", "blockmax",
 )
+#: the subset :func:`term_impacts` reads: the dense kernel's fetch
+DENSE_COLUMNS = ("term", "df", "n", "block_size", "gaps", "tfs")
 
 
 class _Cursor:
@@ -177,6 +180,12 @@ DENSE_POSTINGS_LIMIT = 20_000_000
 DENSE_DOCSPACE_LIMIT = 64_000_000
 
 
+def dense_fits(total_n: int, max_doc: int) -> bool:
+    """Whether postings this many and this wide take the dense kernel
+    (:func:`term_impacts` plus :func:`accumulate_topk`) in auto mode."""
+    return total_n <= DENSE_POSTINGS_LIMIT and max_doc <= DENSE_DOCSPACE_LIMIT
+
+
 def packed_ids(lo: int, hi: int, count: int) -> bool:
     """True when ``count`` doc ids spanning ``[lo, hi]`` suit an array
     indexed by doc id: nonnegative, and under 1M or at most 8x wider
@@ -192,26 +201,88 @@ def doc_lens(doclen, ids: np.ndarray) -> np.ndarray:
     return np.fromiter((doclen[int(i)] for i in ids), dtype=np.float64, count=ids.size)
 
 
-def term_impacts(segs, doclen, n_docs: int, avgdl: float,
-                 k1: float = BM25_K1, b: float = BM25_B) -> Tuple[np.ndarray, np.ndarray]:
-    """One term's postings as ``(doc_ids int64, impacts float64)``: every
-    segment decoded, each posting's BM25 contribution from
-    :func:`bm25.idf` and :func:`bm25.impacts` — the values WAND's
-    ``_score_doc`` computes, ``==`` to the oracle's ``bm25_contrib_expr``.
+#: postings :func:`term_impacts` decodes per slice (a longer row is a
+#: slice of its own): the decode's transients scale with the slice, not
+#: with the batch. 16k-posting slices raised a preloaded 10k-doc
+#: searcher's peak RSS by 1.7 MB; smaller ones cost more Python per batch
+DECODE_SLICE_POSTINGS = 1 << 13
+#: driver bytes a decoded posting keeps: its doc id and impact
+DECODED_BYTES = 16
+#: driver bytes per posting of a slice's transients (the varbyte pass,
+#: tfs, doc lengths, the impact expression's temporaries): 40-50 under
+#: ``tracemalloc`` (tests/test_postings_codec.py)
+DECODE_TRANSIENT_BYTES = 64
 
-    ``segs`` are the term's segment rows, concatenated in their order."""
-    idf = bm25.idf(int(segs[0]["df"]), n_docs)
-    ids_parts, imp_parts = [], []
-    for r in segs:
-        ids, tfs = decode_postings(
-            gaps=bytes(r["gaps"]), tfs=bytes(r["tfs"]), n=int(r["n"]),
-            skips=bytes(r["skips"]), block_size=int(r["block_size"]),
-        )
-        ids_parts.append(ids)
-        imp_parts.append(
-            bm25.impacts(idf, tfs.astype(np.float64), doc_lens(doclen, ids), avgdl, k1, b)
-        )
-    return np.concatenate(ids_parts), np.concatenate(imp_parts)
+
+def decode_charge(n: np.ndarray) -> int:
+    """The driver bytes :func:`term_impacts` may hold decoding rows of
+    ``n`` postings: the decoded arrays, plus the transients of its
+    largest slice."""
+    n = np.asarray(n, dtype=np.int64)
+    if not n.size:
+        return 0
+    total = int(n.sum())
+    return DECODED_BYTES * total + DECODE_TRANSIENT_BYTES * min(
+        total, max(DECODE_SLICE_POSTINGS, int(n.max()))
+    )
+
+
+def _blobs(arr) -> tuple[np.ndarray, np.ndarray]:
+    """(bytes, row offsets) of an Arrow binary array, without a copy: the
+    rows' values back to back as Arrow stores them, row ``i`` at
+    ``bytes[offsets[i]:offsets[i + 1]]``."""
+    import pyarrow as pa
+
+    _, offsets, data = arr.buffers()
+    width = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
+    off = np.frombuffer(offsets, dtype=width)[arr.offset : arr.offset + len(arr) + 1]
+    raw = np.zeros(0, np.uint8) if data is None else np.frombuffer(data, dtype=np.uint8)
+    return raw, off.astype(np.int64)
+
+
+def term_impacts(table, doclen, n_docs: int, avgdl: float,
+                 k1: float = BM25_K1, b: float = BM25_B) -> Dict[str, list]:
+    """term -> its postings as ``(doc_ids int64, impacts float64)``
+    pieces, one per row in row order, for the postings ``table`` (Arrow,
+    columns ``term``, ``df``, ``n``, ``block_size``, ``gaps``, ``tfs``):
+    each posting's BM25 contribution from :func:`bm25.idf` of its row's
+    df and :func:`bm25.impacts` — the values WAND's ``_score_doc``
+    computes, ``==`` to the oracle's ``bm25_contrib_expr``. A doc is in
+    one row of a term, so folding a term's pieces folds its list.
+
+    Each record batch's rows decode in slices of about
+    :data:`DECODE_SLICE_POSTINGS` postings, each with ONE
+    :func:`decode_postings_many` over the slice's concatenated ``gaps``
+    and ``tfs`` bytes (read in place) and one vectorized impact
+    expression; :func:`decode_charge` bounds the driver memory."""
+    out: Dict[str, list] = {}
+    idf_of: Dict[int, float] = {}
+    for batch in table.to_batches():
+        terms = batch["term"].to_pylist()
+        df = batch["df"].to_numpy().tolist()
+        idf_of.update((d, bm25.idf(d, n_docs)) for d in set(df) - idf_of.keys())
+        idf = np.array([idf_of[d] for d in df])
+        n = batch["n"].to_numpy().astype(np.int64)
+        bs = batch["block_size"].to_numpy().astype(np.int64)
+        gaps, g_off = _blobs(batch["gaps"])
+        tfs, t_off = _blobs(batch["tfs"])
+        row_end = np.cumsum(n)
+        lo = 0
+        while lo < n.size:
+            base = row_end[lo] - n[lo]
+            hi = max(lo + 1, int(np.searchsorted(row_end, base + DECODE_SLICE_POSTINGS, "right")))
+            ids, tf = decode_postings_many(
+                gaps[g_off[lo] : g_off[hi]], tfs[t_off[lo] : t_off[hi]], n[lo:hi], bs[lo:hi]
+            )
+            imp = bm25.impacts(
+                np.repeat(idf[lo:hi], n[lo:hi]), tf.astype(np.float64), doc_lens(doclen, ids),
+                avgdl, k1, b,
+            )
+            cuts = row_end[lo : hi - 1] - base
+            for t, i, w in zip(terms[lo:hi], np.split(ids, cuts), np.split(imp, cuts)):
+                out.setdefault(t, []).append((i, w))
+            lo = hi
+    return out
 
 
 def accumulate_topk(per_term: Sequence[Tuple[np.ndarray, np.ndarray]],
@@ -283,17 +354,12 @@ def wand_topk(
     if method != "wand":
         total_n = sum(int(r["n"]) for r in rows)
         max_doc = max(int(r["max_doc"]) for r in rows)
-        if method == "dense" or (
-            total_n <= DENSE_POSTINGS_LIMIT and max_doc <= DENSE_DOCSPACE_LIMIT
-        ):
-            by_term: Dict[str, list] = {}
-            for r in rows:
-                by_term.setdefault(r["term"], []).append(r)
-            return accumulate_topk(
-                [term_impacts(by_term[t], doclen, n_docs, avgdl, k1, b)
-                 for t in sorted(by_term)],
-                top_k,
-            )
+        if method == "dense" or dense_fits(total_n, max_doc):
+            import pyarrow as pa
+
+            table = pa.table({c: [r[c] for r in rows] for c in DENSE_COLUMNS})
+            store = term_impacts(table, doclen, n_docs, avgdl, k1, b)
+            return accumulate_topk([p for t in sorted(store) for p in store[t]], top_k)
 
     cursors = [_Cursor(r, bm25.idf(int(r["df"]), n_docs)) for r in rows]
 

@@ -126,6 +126,7 @@ def build_index_resumable(
     from ..operators.compressed_index import sample_hot_terms, tf_doclen
 
     spark = docs.sparkSession
+    positions = bool(index_kwargs.get("positions", False))
     manifest = read_manifest(index_dir, spark)
     done = {m["bucket"] for m in manifest if "bucket" in m}
     have_doclens = any(m.get("kind") == "doclens" for m in manifest)
@@ -150,8 +151,10 @@ def build_index_resumable(
             )
             hot = f_hot.result()
         # the bucket modulus rides stats.json: searchers prune with the
-        # modulus the index was BUILT with, never a caller's guess
-        stats = {**stats, "buckets": buckets}
+        # modulus the index was BUILT with, never a caller's guess; so
+        # does ``positions``, so a resume cannot mix tf-only and
+        # positional buckets in one dir
+        stats = {**stats, "buckets": buckets, "positions": positions}
         fsio.write_text(fsio.join(index_dir, "stats.json"), json.dumps(stats), spark)
         _append_manifest(
             index_dir,
@@ -174,6 +177,11 @@ def build_index_resumable(
             raise ValueError(
                 f"index at {index_dir} was started with {stats['buckets']} "
                 f"buckets, not {buckets}; refusing to mix"
+            )
+        if bool(stats.get("positions", positions)) != positions:
+            raise ValueError(
+                f"index at {index_dir} was started with positions="
+                f"{stats['positions']}, not {positions}; refusing to mix"
             )
 
     stale = [m for m in manifest if m.get("input_fingerprint") not in (None, fp)]

@@ -1,17 +1,31 @@
 """Query lifecycle over a persisted index (SURVEY.md §3.1 Spark mapping).
 
-analyze(question) -> bucket-pruned postings read -> WAND kernel -> top-k.
+analyze(question) -> pruned postings read -> one decode -> fold -> top-k.
 
-The postings read prunes on BOTH the partition column ``bucket`` (only
-the query terms' bucket directories are opened) and ``term`` (row-group
-pruning via parquet min/max stats). A query touches a handful of files
-regardless of index size — this is what makes the design hold at 10^12
-docs. On a local index the driver reads those row groups itself
-(:class:`operators.compressed_index.PostingsReader`), so a query starts
-no Spark job; a ``scheme://`` index pays one pruned collect. A preloaded
-searcher (``preload=True``) skips the read and the kernel: it decoded
-every term once into BM25 impact arrays at construction, and a query
-only adds its terms' arrays.
+A query touches a handful of files regardless of index size — this is
+what makes the design hold at 10^12 docs. On a local index the driver
+reads them itself through the generation's term dictionary
+(:class:`operators.compressed_index.TermDictionary`), built once per
+index generation and charged against the preload budget: the columnar
+side table of every postings row's scalar columns (term, segment, df,
+n, block size, bounds) and its (file, row group, row) location, with the
+files' parsed footers. A request looks its terms up there, opens only
+the files and row groups that hold them, reads just the binary payload
+columns and takes its rows out as one Arrow table; it starts no Spark
+job and parses no footer. A ``scheme://`` index pays one bucket- and
+term-pruned collect, through Arrow.
+
+The table is then decoded once per request
+(:func:`operators.wand.term_impacts`): in slices of about 8k postings,
+each ONE :func:`postings_codec.decode_postings_many` over the slice's
+concatenated ``gaps``/``tfs`` bytes and one vectorized BM25 impact
+expression, with no decode call or byte copy per row; the decode's
+driver memory (:func:`operators.wand.decode_charge`) is charged before
+it runs. :func:`accumulate_topk` folds each term set in ascending-term
+order. Past the dense limits a single query falls back to block-max
+WAND over the rows as dicts. A preloaded searcher (``preload=True``)
+skips the read and the decode: it decoded every term once, the same
+way, at construction, and never builds the dictionary.
 
 Doc lengths: loaded once per index snapshot into a dense numpy array (a
 dict for sparse ids) — the Lucene-norms analogue. At true 10^12 scale
@@ -21,11 +35,11 @@ is identical.
 
 Batch scoring has two shapes. ``search_many`` is a driver scatter-gather:
 one pruned read fetches the union of the batch's postings (none when
-preloaded), each term is decoded once, each distinct term set is folded
-once, and the rows come back as a JVM local relation, so the batch starts
-no Python worker. ``search_many_relational`` keeps postings and norms on
-the executors: one Catalyst plan for batches or indexes too big for the
-driver.
+preloaded), one decode scores them, each distinct term set is folded
+once, and the rows come back as a JVM local relation built from an Arrow
+table with a cached schema, so the batch starts no Python worker.
+``search_many_relational`` keeps postings and norms on the executors:
+one Catalyst plan for batches or indexes too big for the driver.
 
 Every request reads one :class:`IndexSnapshot` of the directory,
 resolved under stats.json's freshness token: a scan searcher follows an
@@ -56,7 +70,20 @@ from ..operators.compressed_index import (  # noqa: F401  (re-exported)
     check_preload_budget,
     snapshot,
 )
-from ..operators.wand import KERNEL_COLUMNS, accumulate_topk, term_impacts, wand_topk
+from ..operators.wand import (
+    DENSE_COLUMNS,
+    KERNEL_COLUMNS,
+    accumulate_topk,
+    decode_charge,
+    dense_fits,
+    term_impacts,
+    wand_topk,
+)
+
+#: a scan searcher's advice when a request's decode exceeds the budget
+_RELATIONAL_ADVICE = (
+    "Score with search_many_relational, which keeps postings and norms on the executors"
+)
 
 #: the batch paths' output columns: (query_id int, rank int, doc_id long,
 #: score double)
@@ -86,12 +113,13 @@ class IndexSearcher:
         bucket-pruned read (default) or an external KV tier. Every
         driver-side collect is charged against ``preload_budget_bytes``
         (default 4 GiB) before it happens: the ESTIMATED compressed rows
-        (one cheap aggregate), 16 bytes per decoded posting, then the
+        (one cheap aggregate), the decode (:func:`decode_charge`: 16
+        bytes per decoded posting plus one slice's transients), then the
         norms; above it the preload is refused with
         :class:`PreloadBudgetExceeded` — a clear error naming the knob
         beats an OOMed driver. ``None`` disables the check. Without
-        preload the same budget bounds the norms and each
-        :meth:`search_many` batch's decoded postings.
+        preload the same budget bounds the norms, the generation's term
+        dictionary and each request's decode.
 
         Without preload the searcher follows the directory: each request
         checks stats.json's freshness token and re-reads the index when a
@@ -118,7 +146,7 @@ class IndexSearcher:
         self.norms_mode = norms
         self._snap = snapshot(spark, index_dir)
         self._preload_budget = preload_budget_bytes
-        self._mem: dict[str, tuple[np.ndarray, np.ndarray]] | None = None
+        self._mem: dict[str, list[tuple[np.ndarray, np.ndarray]]] | None = None
         if preload:
             self._mem = self._preload_impacts(preload_budget_bytes)
 
@@ -133,43 +161,36 @@ class IndexSearcher:
     def _impacts(
         self,
         snap: IndexSnapshot,
-        rows,
+        table,
         budget: int | None,
         what: str,
         alternative: str = NO_PRELOAD_ADVICE,
     ) -> dict:
-        """term -> ``(doc_ids, impacts)`` of the postings ``rows``, each
-        term decoded once. The decoded arrays (16 bytes per posting) are
-        charged against ``budget`` before any is built, then a norms
-        collect against what is left: one budget, because separate
-        full-budget checks would admit their sum. ``alternative`` is the
-        refusal's advice (:func:`charge_preload`)."""
-        by_term: dict[str, list] = {}
-        for r in rows:
-            by_term.setdefault(r["term"], []).append(r)
-        decoded = 16 * sum(int(r["n"]) for segs in by_term.values() for r in segs)
-        spent = charge_preload(decoded, f"decoded {what}", budget, alternative)
+        """term -> ``(doc_ids, impacts)`` pieces of the postings
+        ``table`` (:func:`term_impacts`: one vectorized decode per
+        slice). The decode (:func:`decode_charge`: 16 bytes per decoded
+        posting plus one slice's transients) is charged against
+        ``budget`` before it runs, then a norms collect against what is
+        left: one budget, because separate full-budget checks would admit
+        their sum. ``alternative`` is the refusal's advice
+        (:func:`charge_preload`)."""
+        n = table["n"].to_numpy() if table.num_rows else ()
+        spent = charge_preload(decode_charge(n), f"decoded {what}", budget, alternative)
         doclen = snap.norms(None if budget is None else budget - spent)
-        return {
-            t: term_impacts(segs, doclen, snap.n_docs, snap.avgdl)
-            for t, segs in by_term.items()
-        }
+        return term_impacts(table, doclen, snap.n_docs, snap.avgdl)
 
     def _preload_impacts(self, budget: int | None) -> dict:
-        """term -> frozen ``(doc_ids, impacts)``; the compressed rows,
-        the decoded store and the norms share ONE budget."""
+        """term -> frozen ``(doc_ids, impacts)`` pieces; the compressed
+        rows, the decoded store and the norms share ONE budget."""
         snap = self._snap
         what = f"postings of {self.index_dir}"
         postings = snap.postings.select(*KERNEL_COLUMNS)
         spent = check_preload_budget(postings, what, budget)
-        rows = postings.collect()
-        if len(snap.segments) > 1:
-            # merged() rewrites df per row: it takes dicts. One segment's
-            # Rows serve as collected, with no copy held beside them.
-            rows = snap.merged([r.asDict() for r in rows])
-        store = self._impacts(snap, rows, None if budget is None else budget - spent, what)
-        for ids, imp in store.values():
-            ids.flags.writeable = imp.flags.writeable = False
+        table = snap.merged(postings.toArrow())
+        store = self._impacts(snap, table, None if budget is None else budget - spent, what)
+        for pieces in store.values():
+            for ids, imp in pieces:
+                ids.flags.writeable = imp.flags.writeable = False
         return store
 
     @property
@@ -183,23 +204,31 @@ class IndexSearcher:
         ``preload=True``, lazily otherwise."""
         return self._snapshot().norms(self._preload_budget)
 
-    def candidate_rows(self, terms: Sequence[str], snap: IndexSnapshot | None = None) -> list:
-        """Postings fetch for a term set: the bucket- and term-pruned read
-        of ``snap`` (default: the current snapshot) on the driver
-        (:meth:`IndexSnapshot.rows`), reading only the columns the
-        kernels use — a positional index's ``poss`` stays on disk — with
-        merged df across segments (:meth:`IndexSnapshot.merged`).
+    def candidate_table(
+        self,
+        terms: Sequence[str],
+        snap: IndexSnapshot | None = None,
+        columns: Sequence[str] = KERNEL_COLUMNS,
+    ):
+        """Postings fetch for a term set: the pruned read of ``snap``
+        (default: the current snapshot) on the driver
+        (:meth:`IndexSnapshot.table`), one Arrow table of ``columns``
+        (default: those the kernels use; a positional index's ``poss``
+        stays on disk), with merged df across segments
+        (:meth:`IndexSnapshot.merged`).
 
-        Bucket routing is computed DRIVER-SIDE (functions/xxhash.py is
-        bit-identical to the JVM xxhash64), and a local index's parquet
-        row groups are read in-process, so the fetch starts no Spark job;
-        a ``scheme://`` index pays one pruned collect.
+        A local index is read through the generation's term dictionary:
+        only the row groups holding the terms are read and no footer is
+        parsed, so the fetch starts no Spark job; a ``scheme://`` index
+        pays one pruned collect (bucket routing is computed DRIVER-SIDE:
+        functions/xxhash.py is bit-identical to the JVM xxhash64).
         """
-        tset = sorted(set(terms))
-        if not tset:
-            return []
         snap = snap or self._snapshot()
-        return snap.merged(snap.rows(tset, KERNEL_COLUMNS))
+        return snap.merged(snap.table(terms, columns, self._preload_budget))
+
+    def candidate_rows(self, terms: Sequence[str], snap: IndexSnapshot | None = None) -> list:
+        """:meth:`candidate_table` as dicts, one per (term, segment) row."""
+        return self.candidate_table(terms, snap).to_pylist()
 
     def search(
         self, question: str, top_k: int = DEFAULT_TOP_K, clamp: bool = True
@@ -215,18 +244,24 @@ class IndexSearcher:
             out = self.search_many_relational([question], top_k=top_k, clamp=False)
             rows = sorted(out.collect(), key=lambda r: r["rank"])
             return [(int(r["doc_id"]), float(r["score"])) for r in rows]
-        terms = analyze(question)
+        terms = sorted(set(analyze(question)))
         if self._mem is not None:
-            return accumulate_topk(
-                [self._mem[t] for t in sorted(set(terms)) if t in self._mem], top_k
+            store = self._mem
+        else:
+            snap = self._snapshot()
+            table = self.candidate_table(terms, snap)
+            if table.num_rows and not dense_fits(
+                int(table["n"].to_numpy().sum()), int(table["max_doc"].to_numpy().max())
+            ):
+                return wand_topk(
+                    table.to_pylist(), terms, snap.norms(self._preload_budget),
+                    snap.n_docs, snap.avgdl, top_k=top_k, use_blockmax=len(snap.segments) == 1,
+                )
+            store = self._impacts(
+                snap, table, self._preload_budget,
+                f"postings of {terms} in {self.index_dir}", alternative=_RELATIONAL_ADVICE,
             )
-        snap = self._snapshot()
-        rows = self.candidate_rows(terms, snap)
-        doclen = snap.norms(self._preload_budget)
-        return wand_topk(
-            rows, terms, doclen, snap.n_docs, snap.avgdl, top_k=top_k,
-            use_blockmax=len(snap.segments) == 1,
-        )
+        return accumulate_topk([p for t in terms for p in store.get(t, ())], top_k)
 
     def search_many_local(
         self, questions: Sequence[str], top_k: int = DEFAULT_TOP_K
@@ -247,17 +282,16 @@ class IndexSearcher:
             terms = sorted({t for ts in term_sets for t in ts})
             store = self._impacts(
                 snap,
-                self.candidate_rows(terms, snap),
+                self.candidate_table(terms, snap, DENSE_COLUMNS),
                 self._preload_budget,
                 f"postings of a {len(terms)}-term batch of {self.index_dir}",
-                alternative="Score the batch with search_many_relational, "
-                "which keeps postings and norms on the executors",
+                alternative=_RELATIONAL_ADVICE,
             )
         out = []
         memo: dict[tuple, list] = {}
         for ts in term_sets:
             if ts not in memo:
-                memo[ts] = accumulate_topk([store[t] for t in ts if t in store], top_k)
+                memo[ts] = accumulate_topk([p for t in ts for p in store.get(t, ())], top_k)
             # fresh list of immutable tuples per query: a caller mutating
             # its result cannot change a repeated query's
             out.append(list(memo[ts]))

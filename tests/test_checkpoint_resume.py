@@ -375,16 +375,18 @@ def test_join_norms_search_many_is_relational(spark, docs, tmp_path_factory):
 
 
 def test_search_many_budget_covers_decoded_batch(spark, index_dir, searcher):
-    """The batch's decoded arrays (16 bytes per posting) are charged
-    against ``preload_budget_bytes``; a refusal names the distributed
+    """The batch's decode (16 bytes per posting plus one slice's
+    transients, ``decode_charge``) is charged against
+    ``preload_budget_bytes``; a refusal names the distributed
     alternative, which the same searcher still serves."""
     from sifter_mrc_search_engine_spark.functions.analyzer import analyze
     from sifter_mrc_search_engine_spark.operators.compressed_index import (
         PreloadBudgetExceeded,
     )
+    from sifter_mrc_search_engine_spark.operators.wand import decode_charge
 
     terms = sorted({t for q in QUERIES for t in analyze(q)})
-    decoded = 16 * sum(int(r["n"]) for r in searcher.candidate_rows(terms))
+    decoded = decode_charge([int(r["n"]) for r in searcher.candidate_rows(terms)])
     searcher.doclen  # norms cached: the budget below is the batch's alone
     tight = IndexSearcher(spark, index_dir, preload_budget_bytes=decoded - 1)
     with pytest.raises(PreloadBudgetExceeded, match="search_many_relational"):
@@ -455,27 +457,36 @@ def test_searcher_over_positional_dir_never_reads_positions(
 ):
     """A positional dir is the main format plus ``poss``, so it serves
     term queries exactly; the searcher's reads (the preload's Spark
-    collect, the scan searcher's driver reads) take only the kernel's
-    columns and leave ``poss`` on disk."""
+    collect to Arrow, the scan searcher's driver reads) take only the
+    kernel's columns and leave ``poss`` on disk."""
     import pyarrow.parquet as pq
 
     assert "poss" in spark.read.parquet(f"{positional_dir}/postings").columns
     expected = [_brute(docs, q) for q in QUERIES]
     plans, read_columns = [], []
     frame = type(spark.range(1))  # the session's concrete DataFrame class
-    collect, read_row_groups = frame.collect, pq.ParquetFile.read_row_groups
+    collect, to_arrow = frame.collect, frame.toArrow
+    read_row_groups = pq.ParquetFile.read_row_groups
 
-    def spy(df):
+    def explain(df):
         plans.append(
             df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
         )
+
+    def spy(df):
+        explain(df)
         return collect(df)
+
+    def spy_arrow(df):
+        explain(df)
+        return to_arrow(df)
 
     def spy_read(self, row_groups, columns=None, **kwargs):
         read_columns.append(columns)
         return read_row_groups(self, row_groups, columns=columns, **kwargs)
 
     monkeypatch.setattr(frame, "collect", spy)
+    monkeypatch.setattr(frame, "toArrow", spy_arrow)
     monkeypatch.setattr(pq.ParquetFile, "read_row_groups", spy_read)
     s = IndexSearcher(spark, positional_dir, preload=preload)
     assert [s.search(q, top_k=10) for q in QUERIES] == expected
@@ -490,3 +501,40 @@ def test_searcher_over_positional_dir_never_reads_positions(
     else:
         assert read_columns and all(c is not None and "gaps" in c for c in read_columns)
         assert not any("poss" in c for c in read_columns), read_columns
+
+
+def test_positional_resume_equals_uninterrupted_and_refuses_mixing(
+    spark, docs, index_dir, tmp_path_factory
+):
+    """stats.json records ``positions``: an interrupted ``positions=True``
+    build resumed with it is ``==`` an uninterrupted one, a resume with
+    the other value is refused (as a modulus mismatch is), and the
+    positional dir serves term queries ``==`` the plain dir."""
+    full_dir = str(tmp_path_factory.mktemp("idx_pos_full"))
+    part_dir = str(tmp_path_factory.mktemp("idx_pos_part"))
+    build_index_resumable(docs, full_dir, buckets=BUCKETS, positions=True)
+    assert json.loads((Path(full_dir) / "stats.json").read_text())["positions"] is True
+    build_index_resumable(docs, part_dir, buckets=BUCKETS, positions=True, max_buckets_this_run=3)
+    with pytest.raises(ValueError, match="positions"):
+        build_index_resumable(docs, part_dir, buckets=BUCKETS)
+    r = build_index_resumable(docs, part_dir, buckets=BUCKETS, positions=True)
+    assert r["resumed"] and r["skipped"] == 3
+
+    def signature(path):
+        rows = spark.read.parquet(f"{path}/postings").collect()
+        return sorted(tuple(bytes(v) if isinstance(v, bytearray) else v for v in r) for r in rows)
+
+    assert "poss" in spark.read.parquet(f"{part_dir}/postings").columns
+    assert signature(part_dir) == signature(full_dir)
+
+    plain_dir = str(tmp_path_factory.mktemp("idx_plain_part"))
+    build_index_resumable(docs, plain_dir, buckets=BUCKETS, max_buckets_this_run=2)
+    assert json.loads((Path(plain_dir) / "stats.json").read_text())["positions"] is False
+    with pytest.raises(ValueError, match="positions"):
+        build_index_resumable(docs, plain_dir, buckets=BUCKETS, positions=True)
+
+    positional, plain = IndexSearcher(spark, part_dir), IndexSearcher(spark, index_dir)
+    want = [plain.search(q, top_k=10) for q in QUERIES]
+    assert any(want)
+    assert [positional.search(q, top_k=10) for q in QUERIES] == want
+    assert positional.search_many_local(QUERIES) == plain.search_many_local(QUERIES)

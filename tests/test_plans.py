@@ -161,14 +161,15 @@ def test_preload_budget_refuses_oversized_collect(
 
 def test_preload_budget_counts_decoded_store(spark, corpus_on_disk, tmp_path_factory):
     """The preload keeps 16 bytes per posting of decoded (doc_id, impact)
-    arrays next to the collected rows and the norms: a budget that
-    admits the compressed-row estimate but not the decoded store is
-    refused; one covering rows, store and norms is admitted."""
+    arrays, plus one decode slice's transients (``decode_charge``), next
+    to the collected rows and the norms: a budget that admits the
+    compressed-row estimate but not the decode is refused; one covering
+    rows, decode and norms is admitted."""
     from sifter_mrc_search_engine_spark.operators.compressed_index import (
         PreloadBudgetExceeded,
         estimate_collect_bytes,
     )
-    from sifter_mrc_search_engine_spark.operators.wand import KERNEL_COLUMNS
+    from sifter_mrc_search_engine_spark.operators.wand import KERNEL_COLUMNS, decode_charge
     from sifter_mrc_search_engine_spark.plans.query import IndexSearcher
 
     idx = str(tmp_path_factory.mktemp("plan_idx_decoded_budget"))
@@ -176,7 +177,7 @@ def test_preload_budget_counts_decoded_store(spark, corpus_on_disk, tmp_path_fac
     postings = spark.read.parquet(f"{idx}/postings")
     # the preload collects only the kernel's columns, and charges those
     rows_est = estimate_collect_bytes(postings.select(*KERNEL_COLUMNS))
-    decoded = 16 * postings.agg(F.sum("n")).first()[0]
+    decoded = decode_charge([r["n"] for r in postings.select("n").collect()])
     norms_est = estimate_collect_bytes(spark.read.parquet(f"{idx}/doclens"))
     with pytest.raises(PreloadBudgetExceeded, match="decoded postings"):
         IndexSearcher(

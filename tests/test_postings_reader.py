@@ -1,7 +1,10 @@
-"""The driver postings read (``IndexSnapshot.rows``): rows ``==`` to the
-Spark pruned collect, in (segment dir, term, ``segment``) order; scan-tier
-queries on a local index start no Spark job; the file listing follows the
-index generation; the driver norms stay ``==`` to a per-row fill."""
+"""The driver postings read (``IndexSnapshot.table``/``rows``): rows
+``==`` to the Spark pruned collect, in (segment dir, term, ``segment``)
+order; scan-tier queries on a local index start no Spark job and score
+``==`` the brute-force oracle from one columnar decode; the term
+dictionary follows the index generation, keeps the parsed footers and is
+charged before it is built; the driver norms stay ``==`` to a per-row
+fill."""
 
 import shutil
 
@@ -10,8 +13,15 @@ import pytest
 from pyspark.sql import functions as F
 
 import sifter_mrc_search_engine_spark.operators.positional as P
+import sifter_mrc_search_engine_spark.operators.wand as W
 from sifter_mrc_search_engine_spark.functions.xxhash import term_bucket
-from sifter_mrc_search_engine_spark.operators.compressed_index import snapshot
+from sifter_mrc_search_engine_spark.operators.bm25 import bm25_brute_force
+from sifter_mrc_search_engine_spark.operators.compressed_index import (
+    PreloadBudgetExceeded,
+    TermDictionary,
+    dictionary_charge,
+    snapshot,
+)
 from sifter_mrc_search_engine_spark.operators.fielded_index import (
     FieldedSearcher,
     build_fielded_index,
@@ -25,6 +35,11 @@ from sifter_mrc_search_engine_spark.streaming.incremental import _write_segment
 N_DOCS = 600
 HEAD = VOCAB[0]
 QUERIES = [HEAD, f"{VOCAB[0]} {VOCAB[40]}", f"{VOCAB[2]} {VOCAB[7]} {VOCAB[100]}"]
+#: a batch with a repeated question, a repeated term and absent terms
+BATCH = [
+    *QUERIES, VOCAB[1], "zzznotaterm", f"{VOCAB[1]} zzznotaterm", QUERIES[1],
+    f"{VOCAB[3]} {VOCAB[3]} {VOCAB[500]}",
+]
 TERM_SETS = [
     [HEAD],
     [VOCAB[3], VOCAB[40], VOCAB[500], HEAD],
@@ -151,22 +166,28 @@ def test_scan_tier_on_a_local_index_starts_no_spark_job(spark, dirs):
 
 
 def test_scan_searcher_reader_follows_in_place_rebuild(spark, docs, tmp_path):
-    """The file listing belongs to one generation: after ``rmtree`` and a
-    rebuild with another bucket modulus, the scan searcher lists the new
-    files and answers exactly as a fresh searcher does."""
+    """The file listing and the term dictionary belong to one generation:
+    after ``rmtree`` and a rebuild with another bucket modulus, the scan
+    searcher's next request builds a new dictionary over the new files,
+    and it answers exactly as a fresh searcher does."""
     d = str(tmp_path / "rebuilt")
     build_index_resumable(docs, d, buckets=8)
     s = IndexSearcher(spark, d)
     before = [s.search(q, top_k=10) for q in QUERIES]
     old = s._snapshot().reader
+    old_dict = old.dictionary()
     shutil.rmtree(d)
     build_index_resumable(docs.filter("doc_id % 3 = 0"), d, buckets=4)
     got = [s.search(q, top_k=10) for q in QUERIES]
     new = s._snapshot().reader
     assert new is not old and new.moduli == [4]
-    assert all(f.startswith(f"{d}/postings/bucket=") for fs in new._files[0].values() for f in fs)
-    assert sorted(new._files[0]) == [0, 1, 2, 3]
-    assert got == [IndexSearcher(spark, d).search(q, top_k=10) for q in QUERIES] != before
+    files = new.dictionary()
+    assert files is not old_dict and files is new.dictionary()
+    assert all(f.startswith(f"{d}/postings/bucket=") for f in files.paths)
+    assert sorted(set(files.buckets)) == [0, 1, 2, 3]
+    fresh = IndexSearcher(spark, d)
+    assert got == [fresh.search(q, top_k=10) for q in QUERIES] != before
+    assert s.search_many_local(BATCH) == fresh.search_many_local(BATCH)
 
 
 def _loop_norms(doclens):
@@ -195,3 +216,106 @@ def test_norms_equal_per_row_fill(spark, docs, tmp_path, stride, shift):
         assert got == want and (stride > 1 or shift < 0)
     else:
         assert got.dtype == want.dtype and np.array_equal(got, want)
+
+
+def _brute(docs, q):
+    return [(r["doc_id"], r["score"]) for r in bm25_brute_force(docs, q, top_k=10).collect()]
+
+
+def _by_query(frame, n):
+    out = [[] for _ in range(n)]
+    for r in sorted(frame.collect(), key=lambda r: (r["query_id"], r["rank"])):
+        out[r["query_id"]].append((r["doc_id"], r["score"]))
+    return out
+
+
+@pytest.mark.parametrize("shape", ["salted", "streamed"])
+def test_columnar_search_equals_brute_force(spark, docs, dirs, shape, monkeypatch):
+    """``search``, ``search_many_local`` and ``search_many`` score from
+    one columnar read and decode, ``==`` to the brute-force oracle: on a
+    salted head term (its rows are several segments of one dir) and on a
+    streamed dir (each term's df merged across segments), absent terms
+    included; an empty batch is empty. Past the dense limits ``search``
+    runs WAND over the same rows as dicts, with the same answers."""
+    s = IndexSearcher(spark, dirs[shape])
+    snap = s._snapshot()
+    if shape == "salted":
+        assert len(snap.rows([HEAD], ["segment"])) > 1
+    else:
+        assert len(snap.segments) == 2
+        head = s.candidate_rows([HEAD])
+        assert len(head) == 2 and {r["df"] for r in head} == {sum(r["n"] for r in head)}
+    want = [_brute(docs, q) for q in BATCH]
+    assert any(want) and [] in want
+    assert [s.search(q, top_k=10) for q in BATCH] == want
+    score_doc = W._score_doc
+    assert s.search_many_local(BATCH, top_k=10) == want
+    assert _by_query(s.search_many(BATCH, top_k=10), len(BATCH)) == want
+    assert s.search_many_local([]) == []
+    empty = s.search_many([])
+    assert empty.collect() == [] and empty.columns == ["query_id", "rank", "doc_id", "score"]
+    monkeypatch.setattr(W, "DENSE_POSTINGS_LIMIT", 0)
+    cursors = []
+    monkeypatch.setattr(W, "_score_doc", lambda *a: cursors.append(1) or score_doc(*a))
+    assert [s.search(q, top_k=10) for q in BATCH] == want and cursors
+
+
+def test_second_batch_parses_no_footer(spark, docs, tmp_path, monkeypatch):
+    """The generation's term dictionary keeps the parsed footers: the
+    first request parses each postings file's footer once, and a second
+    batch on the same generation parses none."""
+    import pyarrow.parquet as pq
+
+    d = str(tmp_path / "footers")
+    build_index_resumable(docs, d, buckets=8)
+    parsed = []
+    init = pq.ParquetFile.__init__
+
+    def spy(self, source, *args, metadata=None, **kwargs):
+        if metadata is None:
+            parsed.append(source)
+        init(self, source, *args, metadata=metadata, **kwargs)
+
+    monkeypatch.setattr(pq.ParquetFile, "__init__", spy)
+    s = IndexSearcher(spark, d)
+    first = s.search_many_local(BATCH)
+    files = s._snapshot().reader.dictionary().paths
+    assert len(parsed) == len(files) >= 8
+    parsed.clear()
+    assert s.search_many_local(BATCH) == first
+    assert [s.search(q) for q in QUERIES] == [first[i] for i in range(len(QUERIES))]
+    assert parsed == []
+
+
+#: measures a dictionary build in a fresh process, where the Arrow
+#: pool's peak is the build's own: prints (Python peak, Arrow peak)
+_MEASURE = """
+import sys, tracemalloc
+import pyarrow as pa, pyarrow.parquet
+from sifter_mrc_search_engine_spark.operators.compressed_index import TermDictionary
+tracemalloc.start()
+TermDictionary(sys.argv[1:], None)
+print(tracemalloc.get_traced_memory()[1], pa.default_memory_pool().max_memory())
+"""
+
+
+def test_dictionary_charge_bounds_its_build(spark, dirs):
+    """The term dictionary is charged before it is built: its Python
+    objects and Arrow buffers peak under :func:`dictionary_charge` (the
+    kept footers live in the parquet reader's own memory, which neither
+    counter sees; they are charged at ``FOOTER_BYTES_PER_BYTE``), and a
+    budget one byte short refuses."""
+    import subprocess
+    import sys
+
+    reader = snapshot(spark, dirs["salted"]).reader
+    built = reader.dictionary()
+    assert built.meta.num_rows > len(built.index) > 0  # salted terms have several rows
+    charge = dictionary_charge(built.metas)
+    out = subprocess.run(
+        [sys.executable, "-c", _MEASURE, *reader.dirs], capture_output=True, text=True, check=True
+    )
+    py_peak, arrow_peak = map(int, out.stdout.split())
+    assert 0 < py_peak + arrow_peak <= charge
+    with pytest.raises(PreloadBudgetExceeded, match="term dictionary"):
+        TermDictionary(reader.dirs, charge - 1)
