@@ -35,6 +35,7 @@ because avgdl/N are fixed by the corpus stats that precede encoding.
 
 from __future__ import annotations
 
+import bisect
 import functools
 import json
 import os
@@ -193,159 +194,30 @@ def _bucket_files(postings_dir: str) -> dict[int, list[str]]:
     return out
 
 
-#: driver bytes charged per postings row for a :class:`TermDictionary`:
-#: its scalar columns, location entries and dict slot, and the build's
-#: transients (about 250 measured; tests/test_postings_reader.py)
-DICTIONARY_BYTES_PER_ROW = 384
-#: and per byte of a kept footer: a parsed ``FileMetaData`` took about 12
-#: times its serialized size of driver RSS (27 KB for a 2.3 KB footer)
-FOOTER_BYTES_PER_BYTE = 16
+#: footers a :class:`PostingsReader` keeps at most: a parsed footer
+#: took about 27 KB of driver RSS (2.3 KB serialized, 64-bucket index)
+KEPT_FOOTERS = 1024
 
 
-def dictionary_charge(metas) -> int:
-    """The driver bytes a :class:`TermDictionary` over files with footers
-    ``metas`` may hold: :data:`DICTIONARY_BYTES_PER_ROW` per row, 4 per
-    byte of the ``term`` column (long terms) and
-    :data:`FOOTER_BYTES_PER_BYTE` per byte of each kept footer."""
-    est = 0
-    for md in metas:
-        col = md.schema.names.index("term")
-        term_bytes = sum(
-            md.row_group(g).column(col).total_uncompressed_size for g in range(md.num_row_groups)
-        )
-        est += DICTIONARY_BYTES_PER_ROW * md.num_rows + 4 * term_bytes
-        est += FOOTER_BYTES_PER_BYTE * md.serialized_size
-    return est
+def _term_bounds(md) -> list:
+    """Per row group of a file with footer ``md``, the (min, max) of its
+    ``term`` column, or None where the group has no statistics."""
+    col = md.schema.names.index("term")
+    out = []
+    for g in range(md.num_row_groups):
+        s = md.row_group(g).column(col).statistics
+        out.append((s.min, s.max) if s is not None and s.has_min_max else None)
+    return out
 
 
-#: bytes of row groups a read holds before it takes its rows out of
-#: them: a 1.2M-page index's row groups are about twice the rows a batch
-#: needs, and holding them all raised the driver's peak RSS by 5%
-READ_HOLD_BYTES = 1 << 20
-
-
-class TermDictionary:
-    """One generation's term dictionary over local index dirs, the
-    columnar side table of the postings files: every file's parsed footer
-    (``FileMetaData``) and every postings row's scalar columns (``term``,
-    ``segment``, ``df``, ``n``, ``block_size``, the doc and impact bounds)
-    with the row's (file, row group, row) location, sorted by (term, dir,
-    ``segment``); ``index`` maps a term to its slice. It is built once
-    from those columns alone, charged against ``budget_bytes`` first.
-
-    A read takes its rows' scalar columns from here and opens only the
-    files and row groups that hold its terms, for the binary payload
-    columns (:data:`_BLOB_COLS`), with the kept footers."""
-
-    __slots__ = (
-        "paths", "metas", "buckets", "meta", "index", "bounds", "dir", "file", "group", "row",
-    )
-
-    def __init__(self, dirs: Sequence[str], budget_bytes: int | None):
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        self.paths, self.metas, self.buckets, dir_of = [], [], [], []
-        for i, d in enumerate(dirs):
-            for bk, files in _bucket_files(fsio.join(d, "postings")).items():
-                for p in files:
-                    self.paths.append(p)
-                    self.metas.append(pq.read_metadata(p))
-                    self.buckets.append(bk)
-                    dir_of.append(i)
-        charge_preload(
-            dictionary_charge(self.metas), f"the term dictionary of {dirs[0]}", budget_bytes
-        )
-        parts = []
-        for f, (p, md) in enumerate(zip(self.paths, self.metas)):
-            scalars = [c for c in md.schema.names if c not in _BLOB_COLS]
-            with pq.ParquetFile(p, metadata=md) as pf:
-                t = pf.read(columns=scalars, use_threads=False)
-            sizes = [md.row_group(g).num_rows for g in range(md.num_row_groups)]
-            group = np.repeat(np.arange(len(sizes), dtype=np.int32), sizes)
-            where = {
-                "dir": np.full(len(t), dir_of[f], np.int32),
-                "file": np.full(len(t), f, np.int32),
-                "group": group,
-                "row": np.arange(len(t)) - (np.cumsum(sizes) - sizes)[group],
-            }
-            for c, v in where.items():
-                t = t.append_column(c, pa.array(v))
-            parts.append(t)
-        if parts:
-            tbl = pa.concat_tables(parts, promote_options="default").sort_by(
-                [("term", "ascending"), ("dir", "ascending"), ("segment", "ascending")]
-            )
-        else:
-            tbl = pa.table({"term": pa.array([], pa.string()), **{
-                c: pa.array([], pa.int64()) for c in ("dir", "file", "group", "row")
-            }})
-        terms = tbl["term"].to_pylist()
-        first = [i for i in range(len(terms)) if i == 0 or terms[i] != terms[i - 1]]
-        self.index = {terms[i]: k for k, i in enumerate(first)}
-        self.bounds = np.append(np.asarray(first, dtype=np.int64), len(terms))
-        self.dir, self.file, self.group, self.row = (
-            tbl[c].to_numpy() for c in ("dir", "file", "group", "row")
-        )
-        self.meta = tbl.drop_columns(["dir", "file", "group", "row"])
-
-    def locate(self, tset: list) -> np.ndarray:
-        """Row indices of ``tset``'s (ascending terms) postings rows in
-        (dir, term, ``segment``) order; absent terms have none."""
-        ks = [self.index[t] for t in tset if t in self.index]
-        if not ks:
-            return np.zeros(0, dtype=np.int64)
-        loc = np.concatenate([np.arange(self.bounds[k], self.bounds[k + 1]) for k in ks])
-        return loc[np.argsort(self.dir[loc], kind="stable")]
-
-    def read(self, loc: np.ndarray, keys: Sequence[str]):
-        """The rows ``loc``, in that order, as one Arrow table of the
-        ``keys`` the dirs hold (``bucket`` included): scalar columns from
-        the dictionary, payload columns read from each holding file
-        (opened once, with its kept footer; only the row groups that
-        hold a located row), whose rows are taken out before the next
-        file is read."""
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        files = self.file[loc]
-        cols = {c: self.meta[c].take(loc) for c in keys if c in self.meta.column_names}
-        if "bucket" in keys:
-            cols["bucket"] = pa.array(np.asarray(self.buckets, dtype=np.int32)[files])
-        blobs = [c for c in keys if c in _BLOB_COLS]
-        if blobs and loc.size:
-            parts, at_all, held, rows = [], [], [], []
-            held_rows = held_bytes = 0
-            ids = np.unique(files).tolist()
-            for f in ids:
-                at = np.flatnonzero(files == f)
-                md = self.metas[f]
-                groups = np.unique(self.group[loc[at]])
-                sizes = np.array([md.row_group(g).num_rows for g in groups.tolist()])
-                starts = held_rows + np.cumsum(sizes) - sizes
-                with pq.ParquetFile(self.paths[f], metadata=md) as pf:
-                    tbl = pf.read_row_groups(
-                        groups.tolist(),
-                        columns=[c for c in blobs if c in md.schema.names],
-                        use_threads=False,
-                    )
-                held.append(tbl)
-                held_rows += tbl.num_rows
-                held_bytes += tbl.nbytes
-                g = np.searchsorted(groups, self.group[loc[at]])
-                rows.append(starts[g] + self.row[loc[at]])
-                at_all.append(at)
-                if f == ids[-1] or held_bytes >= READ_HOLD_BYTES:
-                    parts.append(pa.concat_tables(held, promote_options="default").take(
-                        np.concatenate(rows)
-                    ))
-                    held, rows, held_rows, held_bytes = [], [], 0, 0
-            payload = pa.concat_tables(parts, promote_options="default")
-            order = np.argsort(np.concatenate(at_all))
-            if (np.diff(order) < 0).any():
-                payload = payload.take(order)
-            cols.update({c: payload[c] for c in payload.column_names})
-        return pa.table(cols) if cols else pa.table({"term": pa.array([], pa.string())})
+def _may_hold(bounds, tset: list) -> bool:
+    """Whether a row group with ``term`` (min, max) ``bounds`` can hold
+    one of the ascending ``tset``: some term falls inside them. A group
+    without statistics is kept."""
+    if bounds is None:
+        return True
+    i = bisect.bisect_left(tset, bounds[0])
+    return i < len(tset) and tset[i] <= bounds[1]
 
 
 def _conform(tbl, columns: Sequence[str]):
@@ -365,64 +237,99 @@ class PostingsReader:
     of one or more index dirs (a streamed dir's segments), each written
     with its own bucket modulus, as one Arrow table.
 
-    A local dir is read in-process, with no Spark job, through the
-    generation's :class:`TermDictionary`: only the files and row groups
-    that hold the terms are read, and their rows taken out. A
-    ``scheme://`` dir keeps the bucket- and term-pruned collect of
-    ``parts`` (the dirs' postings relations) through the JVM, as Arrow
+    A local dir is read in-process, with no Spark job: its
+    ``postings/bucket=N`` files are listed once, and a read opens only
+    the query buckets' files with :class:`pyarrow.parquet.ParquetFile`,
+    keeps the row groups whose ``term`` min/max statistics overlap the
+    term set (the pushdown Spark does), reads only the asked columns and
+    filters the rows on ``term``. Each file's footer is parsed on its
+    first read and kept, with its row groups' ``term`` bounds, for the
+    generation (up to :data:`KEPT_FOOTERS` files): a later read of the
+    file parses none. A ``scheme://``
+    dir keeps the bucket- and term-pruned collect of ``parts`` (the
+    dirs' postings relations) through the JVM, as Arrow
     (``DataFrame.toArrow``): the split :mod:`functions.fsio` makes for
     sidecars.
 
     ``pyarrow.parquet`` is imported on the first local read, so a
     process that never reads this way never loads it."""
 
-    __slots__ = ("dirs", "moduli", "parts", "_dict")
+    __slots__ = ("dirs", "moduli", "parts", "_files", "_footers", "_lock")
 
     def __init__(self, dirs: Sequence[str], moduli: Sequence[int], parts: Sequence[DataFrame]):
         self.dirs = list(dirs)
         self.moduli = list(moduli)
         self.parts = list(parts)
-        self._dict: TermDictionary | None = None
+        self._files: list | None = None
+        #: path -> (parsed footer, its column names, its row groups'
+        #: ``term`` bounds)
+        self._footers: dict[str, tuple] = {}
+        self._lock = threading.Lock()
 
-    def dictionary(self, budget_bytes: int | None = DEFAULT_PRELOAD_BUDGET_BYTES) -> TermDictionary:
-        """The local dirs' term dictionary, built on first use; only that
-        build is charged against ``budget_bytes``. Racing handler threads
-        may both build; the dictionaries are equal."""
-        if self._dict is None:
-            self._dict = TermDictionary(self.dirs, budget_bytes)
-        return self._dict
-
-    def table(
-        self,
-        terms: Sequence[str],
-        columns: Sequence[str],
-        budget_bytes: int | None = DEFAULT_PRELOAD_BUDGET_BYTES,
-    ):
+    def table(self, terms: Sequence[str], columns: Sequence[str]):
         """The postings rows of ``terms`` as an Arrow table of
         ``columns`` (null where a dir's files lack one), ordered by (dir,
         term, ``segment``): a term's rows come out in the order its
-        salted segments and stream segments concatenate. ``budget_bytes``
-        bounds the dictionary a first local read builds."""
+        salted segments and stream segments concatenate."""
         import pyarrow as pa
 
         tset = sorted(set(terms))
+        keys = list(dict.fromkeys([*columns, "term", "segment"]))
         if not tset:
             tbl = pa.table({"term": pa.array([], pa.string())})
         elif fsio.is_remote(self.dirs[0]):
-            tbl = self._collect(tset, list(dict.fromkeys([*columns, "term", "segment"])))
+            tbl = self._collect(tset, keys)
         else:
-            d = self.dictionary(budget_bytes)
-            tbl = d.read(d.locate(tset), columns)
+            tbl = self._read(tset, keys)
         return _conform(tbl, columns)
 
-    def rows(
-        self,
-        terms: Sequence[str],
-        columns: Sequence[str],
-        budget_bytes: int | None = DEFAULT_PRELOAD_BUDGET_BYTES,
-    ) -> list[dict]:
-        """:meth:`table` as dicts, for the row-at-a-time consumers."""
-        return self.table(terms, columns, budget_bytes).to_pylist()
+    def _footer(self, path: str) -> tuple:
+        got = self._footers.get(path)
+        if got is None:
+            import pyarrow.parquet as pq
+
+            # racing handler threads may both parse; the footers are equal
+            with pq.ParquetFile(path) as pf:
+                md = pf.metadata
+            got = (md, md.schema.names, _term_bounds(md))
+            with self._lock:
+                if len(self._footers) >= KEPT_FOOTERS:
+                    self._footers = {}  # start over; past the cap, reads parse again
+                self._footers[path] = got
+        return got
+
+    def _read(self, tset: list, keys: list):
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        if self._files is None:
+            # racing handler threads may both list; the listings are equal
+            self._files = [_bucket_files(fsio.join(d, "postings")) for d in self.dirs]
+        wanted = pa.array(tset, pa.string())
+        parts, where = [], []
+        for i, (files, m) in enumerate(zip(self._files, self.moduli)):
+            for bk in sorted({term_bucket(t, m) for t in tset}):
+                for path in files.get(bk, ()):
+                    md, names, bounds = self._footer(path)
+                    groups = [g for g, tb in enumerate(bounds) if _may_hold(tb, tset)]
+                    if not groups:
+                        continue
+                    with pq.ParquetFile(path, metadata=md) as pf:
+                        tbl = pf.read_row_groups(
+                            groups, columns=[c for c in keys if c in names], use_threads=False
+                        )
+                    parts.append(tbl.filter(pc.is_in(tbl["term"], value_set=wanted)))
+                    where.append((bk, i))
+        if not parts:
+            return pa.table({"term": pa.array([], pa.string())})
+        # each part's (bucket, dir), one row per postings row
+        at = np.repeat(np.array(where, dtype=np.int32), [p.num_rows for p in parts], axis=0)
+        tbl = pa.concat_tables(parts, promote_options="default")
+        tbl = tbl.append_column("bucket", pa.array(at[:, 0])).append_column(
+            "_dir", pa.array(at[:, 1])
+        )
+        return tbl.sort_by([("_dir", "ascending"), ("term", "ascending"), ("segment", "ascending")])
 
     def _collect(self, tset: list, keys: list):
         frames = []
@@ -515,29 +422,17 @@ class IndexSnapshot:
             F.col("term").isin(tset)
         )
 
-    def table(
-        self,
-        terms: Sequence[str],
-        columns: Sequence[str],
-        budget_bytes: int | None = DEFAULT_PRELOAD_BUDGET_BYTES,
-    ):
+    def table(self, terms: Sequence[str], columns: Sequence[str]):
         """The postings rows of ``terms`` as one Arrow table of
         ``columns``, read on the driver (:class:`PostingsReader`): ``==``
         to :meth:`pruned`'s collect, ordered by (segment dir, term,
-        ``segment``). A local dir starts no Spark job; its term
-        dictionary is built on the generation's first read and charged
-        against ``budget_bytes``."""
-        return self.reader.table(terms, columns, budget_bytes)
+        ``segment``). A local dir starts no Spark job."""
+        return self.reader.table(terms, columns)
 
-    def rows(
-        self,
-        terms: Sequence[str],
-        columns: Sequence[str],
-        budget_bytes: int | None = DEFAULT_PRELOAD_BUDGET_BYTES,
-    ) -> list[dict]:
+    def rows(self, terms: Sequence[str], columns: Sequence[str]) -> list[dict]:
         """:meth:`table` as dicts, for the row-at-a-time consumers (the
-        WAND cursors, the positional kernel, ``FieldedSearcher``)."""
-        return self.table(terms, columns, budget_bytes).to_pylist()
+        WAND cursors, the positional kernel)."""
+        return self.table(terms, columns).to_pylist()
 
     def merged(self, table):
         """A postings ``table`` (Arrow) as the merged index scores it.

@@ -778,7 +778,7 @@ class FieldedSearcher:
     def _rows_for(self, fterms: list[str]) -> list:
         if self._mem is not None:
             return [r for t in fterms for r in self._mem.get(t, [])]
-        return self._reader.rows(fterms, self.postings.columns)
+        return self._reader.table(fterms, self.postings.columns).to_pylist()
 
     def search(
         self,

@@ -4,28 +4,26 @@ analyze(question) -> pruned postings read -> one decode -> fold -> top-k.
 
 A query touches a handful of files regardless of index size — this is
 what makes the design hold at 10^12 docs. On a local index the driver
-reads them itself through the generation's term dictionary
-(:class:`operators.compressed_index.TermDictionary`), built once per
-index generation and charged against the preload budget: the columnar
-side table of every postings row's scalar columns (term, segment, df,
-n, block size, bounds) and its (file, row group, row) location, with the
-files' parsed footers. A request looks its terms up there, opens only
-the files and row groups that hold them, reads just the binary payload
-columns and takes its rows out as one Arrow table; it starts no Spark
-job and parses no footer. A ``scheme://`` index pays one bucket- and
-term-pruned collect, through Arrow.
+reads them itself (:class:`operators.compressed_index.PostingsReader`):
+it opens only the query buckets' files, keeps the row groups whose
+``term`` min/max overlap the query terms, reads only the asked columns
+and returns the matching rows as one Arrow table, so a query starts no
+Spark job. Each file's parsed footer is kept for the index generation,
+so a repeated read of a file parses none. A ``scheme://`` index pays one
+bucket- and term-pruned collect, through Arrow.
 
 The table is then decoded once per request
 (:func:`operators.wand.term_impacts`): in slices of about 8k postings,
 each ONE :func:`postings_codec.decode_postings_many` over the slice's
 concatenated ``gaps``/``tfs`` bytes and one vectorized BM25 impact
 expression, with no decode call or byte copy per row; the decode's
-driver memory (:func:`operators.wand.decode_charge`) is charged before
-it runs. :func:`accumulate_topk` folds each term set in ascending-term
-order. Past the dense limits a single query falls back to block-max
-WAND over the rows as dicts. A preloaded searcher (``preload=True``)
-skips the read and the decode: it decoded every term once, the same
-way, at construction, and never builds the dictionary.
+driver memory (:func:`operators.wand.decode_charge`) is charged, with
+the norms, before it runs. :func:`accumulate_topk` folds each term set
+in ascending-term order. A single query past the dense limits, or whose
+decode the budget refuses, is scored by block-max WAND over the rows as
+dicts instead, with identical results. A preloaded searcher
+(``preload=True``) skips the read and the decode: it decoded every term
+once, the same way, at construction.
 
 Doc lengths: loaded once per index snapshot into a dense numpy array (a
 dict for sparse ids) — the Lucene-norms analogue. At true 10^12 scale
@@ -80,11 +78,6 @@ from ..operators.wand import (
     wand_topk,
 )
 
-#: a scan searcher's advice when a request's decode exceeds the budget
-_RELATIONAL_ADVICE = (
-    "Score with search_many_relational, which keeps postings and norms on the executors"
-)
-
 #: the batch paths' output columns: (query_id int, rank int, doc_id long,
 #: score double)
 HITS_COLUMNS = (("query_id", "int"), ("rank", "int"), ("doc_id", "long"), ("score", "double"))
@@ -118,8 +111,9 @@ class IndexSearcher:
         norms; above it the preload is refused with
         :class:`PreloadBudgetExceeded` — a clear error naming the knob
         beats an OOMed driver. ``None`` disables the check. Without
-        preload the same budget bounds the norms, the generation's term
-        dictionary and each request's decode.
+        preload the same budget bounds the norms and each request's
+        decode; a single query whose decode it refuses is scored by
+        block-max WAND, which decodes only the blocks it visits.
 
         Without preload the searcher follows the directory: each request
         checks stats.json's freshness token and re-reads the index when a
@@ -217,14 +211,14 @@ class IndexSearcher:
         stays on disk), with merged df across segments
         (:meth:`IndexSnapshot.merged`).
 
-        A local index is read through the generation's term dictionary:
-        only the row groups holding the terms are read and no footer is
-        parsed, so the fetch starts no Spark job; a ``scheme://`` index
-        pays one pruned collect (bucket routing is computed DRIVER-SIDE:
-        functions/xxhash.py is bit-identical to the JVM xxhash64).
+        Bucket routing is computed DRIVER-SIDE (functions/xxhash.py is
+        bit-identical to the JVM xxhash64), and a local index's parquet
+        row groups are read in-process with footers kept per generation,
+        so the fetch starts no Spark job; a ``scheme://`` index pays one
+        pruned collect.
         """
         snap = snap or self._snapshot()
-        return snap.merged(snap.table(terms, columns, self._preload_budget))
+        return snap.merged(snap.table(terms, columns))
 
     def candidate_rows(self, terms: Sequence[str], snap: IndexSnapshot | None = None) -> list:
         """:meth:`candidate_table` as dicts, one per (term, segment) row."""
@@ -250,17 +244,21 @@ class IndexSearcher:
         else:
             snap = self._snapshot()
             table = self.candidate_table(terms, snap)
-            if table.num_rows and not dense_fits(
+            store = None
+            if not table.num_rows or dense_fits(
                 int(table["n"].to_numpy().sum()), int(table["max_doc"].to_numpy().max())
             ):
+                what = f"postings of {terms} in {self.index_dir}"
+                try:
+                    store = self._impacts(snap, table, self._preload_budget, what)
+                except PreloadBudgetExceeded:
+                    pass  # block-max WAND decodes only the blocks it visits
+            if store is None:
                 return wand_topk(
-                    table.to_pylist(), terms, snap.norms(self._preload_budget),
-                    snap.n_docs, snap.avgdl, top_k=top_k, use_blockmax=len(snap.segments) == 1,
+                    table.to_pylist(), terms, snap.norms(self._preload_budget), snap.n_docs,
+                    snap.avgdl, top_k=top_k, use_blockmax=len(snap.segments) == 1,
+                    method="wand",
                 )
-            store = self._impacts(
-                snap, table, self._preload_budget,
-                f"postings of {terms} in {self.index_dir}", alternative=_RELATIONAL_ADVICE,
-            )
         return accumulate_topk([p for t in terms for p in store.get(t, ())], top_k)
 
     def search_many_local(
@@ -285,7 +283,8 @@ class IndexSearcher:
                 self.candidate_table(terms, snap, DENSE_COLUMNS),
                 self._preload_budget,
                 f"postings of a {len(terms)}-term batch of {self.index_dir}",
-                alternative=_RELATIONAL_ADVICE,
+                alternative="Score the batch with search_many_relational, "
+                "which keeps postings and norms on the executors",
             )
         out = []
         memo: dict[tuple, list] = {}

@@ -367,17 +367,13 @@ def test_near_topk_indexed_parity(spark, docs, tmp_path, monkeypatch):
 
 def test_phrase_indexed_scan_is_bucket_pruned(spark, docs, tmp_path, monkeypatch):
     """Both the read the driver path makes and the over-budget cluster
-    plan prune the postings to the phrase terms' bucket partitions. The
-    generation's term dictionary, built once before any request reads,
-    is what opens every postings file (its footer and scalar columns)."""
+    plan prune the postings to the phrase terms' bucket partitions."""
     import pyarrow.parquet as pq
 
     from sifter_mrc_search_engine_spark.functions.xxhash import term_bucket
 
     path = str(tmp_path / "posidx")
     stats = P.write_positional_index(docs, path)
-    files = snapshot(spark, path).reader.dictionary().paths
-    assert {f.split("/bucket=")[0] for f in files} == {f"{path}/postings"} and len(files) > 2
 
     def formatted(df):
         return df._sc._jvm.PythonSQLUtils.explainString(

@@ -1,10 +1,10 @@
 """The driver postings read (``IndexSnapshot.table``/``rows``): rows
 ``==`` to the Spark pruned collect, in (segment dir, term, ``segment``)
 order; scan-tier queries on a local index start no Spark job and score
-``==`` the brute-force oracle from one columnar decode; the term
-dictionary follows the index generation, keeps the parsed footers and is
-charged before it is built; the driver norms stay ``==`` to a per-row
-fill."""
+``==`` the brute-force oracle from one columnar decode; the reader
+follows the index generation and keeps the footers it parsed, only those
+of the files a request reads; a budget too small for a query's decode
+leaves it to WAND; the driver norms stay ``==`` to a per-row fill."""
 
 import shutil
 
@@ -17,9 +17,7 @@ import sifter_mrc_search_engine_spark.operators.wand as W
 from sifter_mrc_search_engine_spark.functions.xxhash import term_bucket
 from sifter_mrc_search_engine_spark.operators.bm25 import bm25_brute_force
 from sifter_mrc_search_engine_spark.operators.compressed_index import (
-    PreloadBudgetExceeded,
-    TermDictionary,
-    dictionary_charge,
+    estimate_collect_bytes,
     snapshot,
 )
 from sifter_mrc_search_engine_spark.operators.fielded_index import (
@@ -166,25 +164,24 @@ def test_scan_tier_on_a_local_index_starts_no_spark_job(spark, dirs):
 
 
 def test_scan_searcher_reader_follows_in_place_rebuild(spark, docs, tmp_path):
-    """The file listing and the term dictionary belong to one generation:
+    """The file listing and the kept footers belong to one generation:
     after ``rmtree`` and a rebuild with another bucket modulus, the scan
-    searcher's next request builds a new dictionary over the new files,
-    and it answers exactly as a fresh searcher does."""
+    searcher's next request reads through a new reader over the new
+    files, and it answers exactly as a fresh searcher does."""
     d = str(tmp_path / "rebuilt")
     build_index_resumable(docs, d, buckets=8)
     s = IndexSearcher(spark, d)
     before = [s.search(q, top_k=10) for q in QUERIES]
     old = s._snapshot().reader
-    old_dict = old.dictionary()
+    old_footers = set(old._footers)
+    assert old_footers
     shutil.rmtree(d)
     build_index_resumable(docs.filter("doc_id % 3 = 0"), d, buckets=4)
     got = [s.search(q, top_k=10) for q in QUERIES]
     new = s._snapshot().reader
-    assert new is not old and new.moduli == [4]
-    files = new.dictionary()
-    assert files is not old_dict and files is new.dictionary()
-    assert all(f.startswith(f"{d}/postings/bucket=") for f in files.paths)
-    assert sorted(set(files.buckets)) == [0, 1, 2, 3]
+    assert new is not old and new.moduli == [4] and set(old._footers) == old_footers
+    assert new._footers and not set(new._footers) & old_footers
+    assert {int(f.split("/bucket=")[1].split("/")[0]) for f in new._footers} <= {0, 1, 2, 3}
     fresh = IndexSearcher(spark, d)
     assert got == [fresh.search(q, top_k=10) for q in QUERIES] != before
     assert s.search_many_local(BATCH) == fresh.search_many_local(BATCH)
@@ -260,62 +257,96 @@ def test_columnar_search_equals_brute_force(spark, docs, dirs, shape, monkeypatc
     assert [s.search(q, top_k=10) for q in BATCH] == want and cursors
 
 
-def test_second_batch_parses_no_footer(spark, docs, tmp_path, monkeypatch):
-    """The generation's term dictionary keeps the parsed footers: the
-    first request parses each postings file's footer once, and a second
-    batch on the same generation parses none."""
+def _count_footer_parses(monkeypatch) -> list:
+    """Every parquet footer parsed from here on, by path: a
+    ``ParquetFile`` opened without ``metadata``."""
     import pyarrow.parquet as pq
 
-    d = str(tmp_path / "footers")
-    build_index_resumable(docs, d, buckets=8)
     parsed = []
     init = pq.ParquetFile.__init__
 
     def spy(self, source, *args, metadata=None, **kwargs):
         if metadata is None:
-            parsed.append(source)
+            parsed.append(str(source))
         init(self, source, *args, metadata=metadata, **kwargs)
 
     monkeypatch.setattr(pq.ParquetFile, "__init__", spy)
+    return parsed
+
+
+def test_second_batch_parses_no_footer(spark, docs, tmp_path, monkeypatch):
+    """The reader keeps the footers it parsed for the generation: the
+    first batch parses each file it reads once, and a second batch, and
+    single queries over the same terms, parse none."""
+    d = str(tmp_path / "footers")
+    build_index_resumable(docs, d, buckets=8)
+    parsed = _count_footer_parses(monkeypatch)
     s = IndexSearcher(spark, d)
     first = s.search_many_local(BATCH)
-    files = s._snapshot().reader.dictionary().paths
-    assert len(parsed) == len(files) >= 8
+    kept = s._snapshot().reader._footers
+    assert sorted(parsed) == sorted(kept) and len(kept) >= 4
     parsed.clear()
     assert s.search_many_local(BATCH) == first
     assert [s.search(q) for q in QUERIES] == [first[i] for i in range(len(QUERIES))]
     assert parsed == []
 
 
-#: measures a dictionary build in a fresh process, where the Arrow
-#: pool's peak is the build's own: prints (Python peak, Arrow peak)
-_MEASURE = """
-import sys, tracemalloc
-import pyarrow as pa, pyarrow.parquet
-from sifter_mrc_search_engine_spark.operators.compressed_index import TermDictionary
-tracemalloc.start()
-TermDictionary(sys.argv[1:], None)
-print(tracemalloc.get_traced_memory()[1], pa.default_memory_pool().max_memory())
-"""
+def test_first_read_parses_only_its_buckets_footers(spark, docs, tmp_path, monkeypatch):
+    """No read builds anything over the whole index: a first query on a
+    fresh generation parses the footers of its terms' bucket files only,
+    whatever the index's size."""
+    d = str(tmp_path / "first_read")
+    build_index_resumable(docs, d, buckets=8)
+    s = IndexSearcher(spark, d)
+    snap = s._snapshot()
+    parsed = _count_footer_parses(monkeypatch)
+    s.search(HEAD, top_k=10)
+    bucket = term_bucket(HEAD, snap.reader.moduli[0])
+    assert parsed and all(f"/postings/bucket={bucket}/" in p for p in parsed)
+    assert sorted(parsed) == sorted(snap.reader._footers)
 
 
-def test_dictionary_charge_bounds_its_build(spark, dirs):
-    """The term dictionary is charged before it is built: its Python
-    objects and Arrow buffers peak under :func:`dictionary_charge` (the
-    kept footers live in the parquet reader's own memory, which neither
-    counter sees; they are charged at ``FOOTER_BYTES_PER_BYTE``), and a
-    budget one byte short refuses."""
-    import subprocess
-    import sys
-
-    reader = snapshot(spark, dirs["salted"]).reader
-    built = reader.dictionary()
-    assert built.meta.num_rows > len(built.index) > 0  # salted terms have several rows
-    charge = dictionary_charge(built.metas)
-    out = subprocess.run(
-        [sys.executable, "-c", _MEASURE, *reader.dirs], capture_output=True, text=True, check=True
+def test_tight_budget_leaves_a_query_to_wand(spark, docs, tmp_path, monkeypatch):
+    """A scan ``search`` charges its decode and the norms against one
+    budget. A budget that holds the norms but not a query's decode does
+    not refuse the query: block-max WAND, which decodes only the blocks
+    it visits, answers it ``==`` the oracle."""
+    d = str(tmp_path / "tight")
+    build_index_resumable(docs, d, buckets=8)
+    norms = estimate_collect_bytes(snapshot(spark, d).doclens)
+    decode = W.decode_charge(
+        IndexSearcher(spark, d).candidate_table([HEAD])["n"].to_numpy()
     )
-    py_peak, arrow_peak = map(int, out.stdout.split())
-    assert 0 < py_peak + arrow_peak <= charge
-    with pytest.raises(PreloadBudgetExceeded, match="term dictionary"):
-        TermDictionary(reader.dirs, charge - 1)
+    s = IndexSearcher(spark, d, preload_budget_bytes=norms + decode - 1)
+    want = [_brute(docs, q) for q in QUERIES]
+    score_doc, cursors = W._score_doc, []
+    monkeypatch.setattr(W, "_score_doc", lambda *a: cursors.append(1) or score_doc(*a))
+    assert [s.search(q, top_k=10) for q in QUERIES] == want
+    assert cursors  # the head term's decode was refused: WAND served it
+
+
+def test_kept_footers_are_capped_and_shared_by_threads(spark, docs, tmp_path, monkeypatch):
+    """Past ``KEPT_FOOTERS`` the reader starts its footer cache over: it
+    never holds more, and its answers do not change, also while handler
+    threads race on one reader's cache (parses and restarts included)."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    import sifter_mrc_search_engine_spark.operators.compressed_index as CI
+
+    d = str(tmp_path / "capped")
+    build_index_resumable(docs, d, buckets=8)
+    want = IndexSearcher(spark, d).search_many_local(BATCH)
+    monkeypatch.setattr(CI, "KEPT_FOOTERS", 2)
+    shutil.copytree(d, str(tmp_path / "capped_copy"))  # a generation no read has warmed
+    s = IndexSearcher(spark, str(tmp_path / "capped_copy"))
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(8) as pool:
+            futures = [pool.submit(s.search_many_local, BATCH) for _ in range(16)]
+            got = [f.result(timeout=120) for f in futures]
+    finally:
+        sys.setswitchinterval(interval)
+    assert got == [want] * 16
+    assert 0 < len(s._snapshot().reader._footers) <= 2
