@@ -367,7 +367,7 @@ class IndexSnapshot:
     charged on that miss only."""
 
     __slots__ = (
-        "index_dir", "app", "token", "segments", "n_docs", "avgdl", "moduli",
+        "index_dir", "sc", "token", "segments", "n_docs", "avgdl", "moduli",
         "postings", "reader", "doclens", "doclen",
     )
 
@@ -375,7 +375,7 @@ class IndexSnapshot:
         stats = json.loads(fsio.read_text(fsio.join(index_dir, "stats.json"), spark))
         segs = stats.get("segments")
         self.index_dir = index_dir
-        self.app = spark.sparkContext.applicationId
+        self.sc = spark.sparkContext
         self.token = token
         self.segments = segs = (
             [{**s, "path": fsio.join(index_dir, s["path"])} for s in segs]
@@ -488,16 +488,16 @@ _SNAPSHOTS_LOCK = threading.Lock()
 
 def snapshot(spark, index_dir: str) -> IndexSnapshot:
     """``index_dir``'s current generation, for one request: one stat of
-    stats.json per call. The snapshot is reused while the session
-    (``applicationId``) and stats.json's freshness token are unchanged,
-    so the relations, merged stats and norms are built once per
-    generation. Each dir keeps only its current snapshot; a searcher
-    holding an older one keeps serving it. The lock guards the dict
-    against the front door's handler threads."""
+    stats.json per call. The snapshot is reused while the caller's
+    SparkContext (the Python object, so no JVM call) and stats.json's
+    freshness token are unchanged, so the relations, merged stats and
+    norms are built once per generation. Each dir keeps only its current
+    snapshot; a searcher holding an older one keeps serving it. The lock
+    guards the dict against the front door's handler threads."""
     token = fsio.freshness_token(fsio.join(index_dir, "stats.json"), spark)
     with _SNAPSHOTS_LOCK:
         snap = _SNAPSHOTS.get(index_dir)
-    if snap is None or snap.token != token or snap.app != spark.sparkContext.applicationId:
+    if snap is None or snap.token != token or snap.sc is not spark.sparkContext:
         snap = IndexSnapshot(spark, index_dir, token)
         with _SNAPSHOTS_LOCK:
             _SNAPSHOTS[index_dir] = snap

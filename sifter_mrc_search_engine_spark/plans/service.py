@@ -18,10 +18,14 @@ replaced by the BM25 top-k contract (BASELINE.json north_star):
 
 from __future__ import annotations
 
+import inspect
 from typing import Any
 
 from ..constants import MAX_DOC_PAGE_SIZE, MAX_TOP_K
-from ..functions.analyzer import analyze, eliminate_final_postposition, rewrite_query
+# inference() calls analyze once and joins its terms into commonQuery,
+# which is rewrite_query's result; the name stays bound here because
+# perfbench/layers.py wraps it
+from ..functions.analyzer import analyze, eliminate_final_postposition, rewrite_query  # noqa: F401
 
 #: domain retrieval over-fetch: growth factor and depth ceiling
 _OVERFETCH_GROW = 4
@@ -54,6 +58,12 @@ class InferenceService:
     def __init__(self, searcher, docmeta: dict[int, dict] | None = None):
         self.searcher = searcher
         self.docmeta = docmeta or {}
+        # feature-detect the clamp switch ONCE (an except TypeError around
+        # the call would swallow genuine TypeErrors from inside search)
+        search = getattr(searcher, "search", None)
+        self._has_clamp = (
+            search is not None and "clamp" in inspect.signature(search).parameters
+        )
 
     def _domain_of(self, doc_id: int) -> str:
         meta = self.docmeta.get(doc_id, {})
@@ -70,14 +80,9 @@ class InferenceService:
         """
         if domain is None:
             return self.searcher.search(question, top_k=doc_page_size)
-        # feature-detect the clamp switch ONCE (an except TypeError around
-        # the call would swallow genuine TypeErrors from inside search)
-        import inspect
-
-        has_clamp = "clamp" in inspect.signature(self.searcher.search).parameters
         k = doc_page_size
         while True:
-            if has_clamp:
+            if self._has_clamp:
                 hits = self.searcher.search(question, top_k=k, clamp=(k <= MAX_TOP_K))
             else:
                 hits = self.searcher.search(question, top_k=k)
@@ -94,7 +99,7 @@ class InferenceService:
         domain: str | None = None,
     ) -> dict[str, Any]:
         _validate(question, top_k, doc_page_size)
-        common_query = rewrite_query(question)
+        terms = analyze(question)
         hits = self._retrieve(question, int(doc_page_size), domain)
         answers = []
         for rank, (doc_id, score) in enumerate(hits, start=1):
@@ -122,7 +127,7 @@ class InferenceService:
             a["rank"] = i
         return {
             "question": question,
-            "commonQuery": common_query,
-            "terms": analyze(question),
+            "commonQuery": " ".join(terms),  # rewrite_query(question)
+            "terms": terms,
             "answers": answers,
         }

@@ -1,9 +1,11 @@
 """HTTP front door: the reference's GET/POST /inference + /inference/file
-routes (server.py:54-188) over stdlib http.server."""
+routes (server.py:54-188) over the front door's own HTTP/1.1 reader and
+one-write replies."""
 
 import http.client
 import json
 import socket
+import socketserver
 import threading
 import time
 import urllib.error
@@ -373,3 +375,221 @@ def test_structured_route_null_knobs(sdoor):
 def test_structured_route_unhashable_type_is_400(sdoor):
     code, out = _structured(sdoor, {"type": ["phrase"], "phrase": "a b"})
     assert code == 400 and "type" in out["detail"]
+
+
+
+# -- the reader's limits and keep-alive rules, the one-write replies -------
+
+@pytest.fixture(scope="module")
+def stub_door():
+    d = HttpFrontDoor(InferenceService(_OneHitSearcher())).start()
+    yield d
+    d.stop()
+
+
+GET = b"GET /inference?question=abc HTTP/1.1\r\nHost: x\r\n"
+
+
+def _until_eof(door, request: bytes) -> bytes:
+    """Send ``request`` and read until the server closes. Requests that
+    the server refuses end where its read stops, so no unread byte turns
+    its close into a reset."""
+    reply = b""
+    with socket.create_connection(("127.0.0.1", door.port), timeout=10) as sock:
+        sock.sendall(request)
+        while chunk := sock.recv(65536):
+            reply += chunk
+    return reply
+
+
+def _replies(reply: bytes) -> list[tuple[int, dict, bytes]]:
+    """Split a byte stream into (status, headers, body) replies, each
+    body delimited by its Content-Length."""
+    out = []
+    while reply:
+        head, _, rest = reply.partition(b"\r\n\r\n")
+        status, *lines = head.decode("latin-1").split("\r\n")
+        headers = dict(line.split(": ", 1) for line in lines)
+        n = int(headers["Content-Length"])
+        out.append((int(status.split()[1]), headers, rest[:n]))
+        reply = rest[n:]
+    return out
+
+
+def _one_reply(sock) -> http.client.HTTPResponse:
+    """Read one reply from an open connection, leaving it open."""
+    resp = http.client.HTTPResponse(sock)
+    resp.begin()
+    resp.read()
+    return resp
+
+
+def test_request_line_over_limit_is_414(stub_door):
+    reply = _until_eof(stub_door, b"GET /" + b"a" * 65532)  # 65 537 bytes
+    assert reply.startswith(b"HTTP/1.1 414 ") and b"\r\nConnection: close\r\n" in reply
+    assert reply.count(b"HTTP/1.1 ") == 1
+
+
+def test_header_limits_are_431(stub_door):
+    many = b"".join(b"X-H%d: v\r\n" % i for i in range(101))
+    reply = _until_eof(stub_door, GET + many + b"\r\n")
+    assert reply.startswith(b"HTTP/1.1 431 ") and b"\r\nConnection: close\r\n" in reply
+    # 100 header lines (Host, 98 more and Connection) are within the limit
+    ok = _until_eof(stub_door, GET + many[: many.index(b"X-H98:")] + b"Connection: close\r\n\r\n")
+    assert ok.startswith(b"HTTP/1.1 200 ")
+    long_line = b"X-Big: " + b"a" * (65537 - 7)  # 65 537 bytes, no end
+    reply = _until_eof(stub_door, GET + long_line)
+    assert reply.startswith(b"HTTP/1.1 431 ") and b"\r\nConnection: close\r\n" in reply
+
+
+@pytest.mark.parametrize("request_bytes", [
+    b"GARBAGE\r\n",
+    b"GET /inference?question=abc\r\n",
+    b"GET /inference?question=abc HTTP/1.1 extra\r\n",
+    b"GET /inference?question=abc HTTX/1.1\r\n",
+    GET + b"X-Folded: a\r\n  b\r\n\r\n",
+    GET + b"No colon\r\n\r\n",
+    b"POST /inference HTTP/1.1\r\nContent-Length: abc\r\n\r\n",
+    b"POST /inference HTTP/1.1\r\nContent-Length: -1\r\n\r\n",
+    b"POST /inference HTTP/1.1\r\nContent-Length: 0\r\nContent-Length: 0\r\n\r\n",
+])
+def test_malformed_requests_are_400_and_close(stub_door, request_bytes):
+    reply = _until_eof(stub_door, request_bytes)
+    [(status, headers, body)] = _replies(reply)
+    assert status == 400 and headers["Connection"] == "close"
+    assert json.loads(body)["detail"]
+
+
+def test_http10_closes_unless_keep_alive(stub_door):
+    reply = _until_eof(stub_door, b"GET /inference?question=abc HTTP/1.0\r\n\r\n")
+    [(status, headers, _)] = _replies(reply)
+    assert status == 200 and headers["Connection"] == "close"
+    with socket.create_connection(("127.0.0.1", stub_door.port), timeout=10) as sock:
+        for _ in range(2):
+            sock.sendall(b"GET /inference?question=abc HTTP/1.0\r\nConnection: keep-alive\r\n\r\n")
+            resp = _one_reply(sock)
+            assert resp.status == 200 and resp.getheader("Connection") is None
+
+
+def test_http11_connection_close_closes_after_the_reply(stub_door):
+    reply = _until_eof(stub_door, GET + b"Connection: close\r\n\r\n")
+    [(status, headers, body)] = _replies(reply)
+    assert status == 200 and headers["Connection"] == "close"
+    assert json.loads(body)["answers"][0]["doc_id"] == 1
+
+
+def test_transfer_encoding_closes_after_the_reply(stub_door):
+    """A body framed by Transfer-Encoding is not read, even beside a
+    Content-Length: what follows must not be served as a request."""
+    reply = _until_eof(
+        stub_door,
+        b"POST /inference HTTP/1.1\r\nContent-Length: 2\r\n"
+        b"Transfer-Encoding: chunked\r\n\r\n{}GET /nope HTTP/1.1\r\n\r\n",
+    )
+    [(status, headers, _)] = _replies(reply)
+    assert status == 400 and headers["Connection"] == "close"
+
+
+def test_expect_100_continue_comes_before_the_body_is_read(stub_door):
+    body = json.dumps({"question": "abc"}).encode()
+    with socket.create_connection(("127.0.0.1", stub_door.port), timeout=10) as sock:
+        sock.sendall(
+            b"POST /inference HTTP/1.1\r\nHost: x\r\nExpect: 100-continue\r\n"
+            b"Content-Type: application/json\r\nContent-Length: %d\r\n\r\n" % len(body)
+        )
+        interim = b""
+        while not interim.endswith(b"\r\n\r\n"):
+            interim += sock.recv(1)
+        assert interim == b"HTTP/1.1 100 Continue\r\n\r\n"
+        sock.sendall(body)
+        resp = _one_reply(sock)
+        assert resp.status == 200 and not resp.will_close
+
+
+def test_every_reply_carries_date_and_content_length(stub_door):
+    from email.utils import parsedate_to_datetime
+
+    with socket.create_connection(("127.0.0.1", stub_door.port), timeout=10) as sock:
+        sock.sendall(
+            GET + b"\r\n"
+            + b"GET /nope HTTP/1.1\r\n\r\n"
+            + b"GET /inference?question=abc&top_k=99 HTTP/1.1\r\n\r\n"
+            + b"POST /inference HTTP/1.1\r\nContent-Length: 3\r\n\r\n[1]"
+            + b"POST /inference/file HTTP/1.1\r\nContent-Length: 0\r\n\r\n"
+            + b"PUT /inference HTTP/1.1\r\n\r\n"
+        )
+        reply = b""
+        while chunk := sock.recv(65536):
+            reply += chunk
+    replies = _replies(reply)
+    assert [r[0] for r in replies] == [200, 404, 400, 400, 400, 501]
+    for _, headers, body in replies:
+        assert parsedate_to_datetime(headers["Date"]).tzinfo is not None
+        assert headers["Content-Type"] == "application/json; charset=utf-8"
+        assert int(headers["Content-Length"]) == len(body)
+        json.loads(body)
+    assert [r[1].get("Connection") for r in replies] == [None] * 5 + ["close"]
+
+
+def test_each_reply_is_one_write(stub_door, monkeypatch):
+    writes = []
+    write = socketserver._SocketWriter.write
+
+    def spy(self, data):
+        writes.append(bytes(data))
+        return write(self, data)
+
+    monkeypatch.setattr(socketserver._SocketWriter, "write", spy)
+    conn = http.client.HTTPConnection("127.0.0.1", stub_door.port, timeout=10)
+    try:
+        for path in ("/inference?question=abc", "/nope", "/inference?question=abc&top_k=x"):
+            conn.request("GET", path)
+            conn.getresponse().read()
+        conn.request("POST", "/inference", body=b'{"question": "abc"}')
+        conn.getresponse().read()
+    finally:
+        conn.close()
+    assert len(writes) == 4
+    assert [_replies(w)[0][0] for w in writes] == [200, 404, 400, 200]
+
+
+def test_no_route_reaches_the_stdlib_parse_or_send(stub_door, monkeypatch):
+    from http.server import BaseHTTPRequestHandler
+
+    called = []
+    for name in ("parse_request", "send_response", "send_header", "end_headers"):
+        monkeypatch.setattr(
+            BaseHTTPRequestHandler, name, lambda self, *a, name=name: called.append(name)
+        )
+    multipart = b"multipart/form-data; boundary=b"
+    part = (b'--b\r\nContent-Disposition: form-data; name="question"\r\n\r\nq\r\n'
+            b'--b\r\nContent-Disposition: form-data; name="file"; filename="x.xyz"\r\n\r\n'
+            b"data\r\n--b--\r\n")
+    conn = http.client.HTTPConnection("127.0.0.1", stub_door.port, timeout=10)
+    try:
+        for method, path, body, headers in [
+            ("GET", "/inference?question=abc", None, {}),
+            ("POST", "/inference", b'{"question": "abc"}', {}),
+            ("POST", "/search/structured", b"{}", {}),
+            ("POST", "/inference/file", part, {"Content-Type": multipart}),
+            ("GET", "/nope", None, {}),
+        ]:
+            conn.request(method, path, body=body, headers=headers)
+            resp = conn.getresponse()
+            resp.read()
+            assert resp.status in (200, 400, 404), (method, path)
+    finally:
+        conn.close()
+    assert called == []
+
+
+def test_loadgen_runs_clean_against_the_front_door(stub_door):
+    """The benchmark's own client, two keep-alive connections for about
+    a second: no request fails and every kept answer parses."""
+    from perfbench.loadgen import run
+
+    questions = [f"{VOCAB[i]} {VOCAB[i + 1]}" for i in range(16)]
+    out = run(stub_door.port, questions, questions[:4], 1.0, 2, 4)
+    assert out["attempted"] > 0 and out["failed"] == 0
+    assert len(out["latencies_s"]) == out["attempted"]
+    assert out["samples"] and all(s["answers"] == [[1, 1.0]] for s in out["samples"])

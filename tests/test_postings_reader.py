@@ -163,6 +163,39 @@ def test_scan_tier_on_a_local_index_starts_no_spark_job(spark, dirs):
     assert by_query == want
 
 
+def test_warm_local_search_makes_no_jvm_call(spark, dirs, monkeypatch):
+    """A warm scan-tier ``search`` on a local dir makes no py4j call:
+    the snapshot is keyed on the caller's SparkContext object, not on
+    its ``applicationId`` (two round trips per request)."""
+    from py4j.clientserver import ClientServerConnection
+
+    s = IndexSearcher(spark, dirs["plain"])
+    want = [s.search(q, top_k=10) for q in QUERIES]  # loads the norms
+    calls = []
+    send = ClientServerConnection.send_command
+
+    def spy(self, command, *a, **k):
+        calls.append(command)
+        return send(self, command, *a, **k)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", spy)
+    got = [s.search(q, top_k=10) for q in QUERIES]
+    assert calls == []
+    spark.sparkContext.applicationId  # the spy does see a JVM call
+    assert calls
+    monkeypatch.undo()
+    assert got == want
+
+
+def test_snapshot_from_another_spark_context_is_rebuilt(spark, dirs):
+    snap = snapshot(spark, dirs["plain"])
+    assert snapshot(spark, dirs["plain"]) is snap and snap.sc is spark.sparkContext
+    snap.sc = object()  # as if recorded under a stopped session's context
+    again = snapshot(spark, dirs["plain"])
+    assert again is not snap and again.sc is spark.sparkContext
+    assert snapshot(spark, dirs["plain"]) is again
+
+
 def test_scan_searcher_reader_follows_in_place_rebuild(spark, docs, tmp_path):
     """The file listing and the kept footers belong to one generation:
     after ``rmtree`` and a rebuild with another bucket modulus, the scan

@@ -111,3 +111,23 @@ def test_answer_postposition_trim_wired(service):
             assert a["answer"] == a["raw_answer"].rsplit(" ", 1)[0]
     finally:
         set_pos_tagger(None)
+
+
+def test_clamp_switch_is_detected_once(monkeypatch):
+    """The searcher's ``clamp`` parameter is detected when the service
+    is made: a domain request inspects no signature."""
+    import inspect
+
+    class NoClamp:
+        def search(self, question, top_k=10):
+            return [(i, 1.0 / (i + 1)) for i in range(top_k)]
+
+    meta = {i: {"DOCID": f"{'spo' if i % 2 else 'itx'}{i:09d}"} for i in range(100)}
+    svc = InferenceService(NoClamp(), meta)
+
+    def refuse(*a, **k):
+        raise AssertionError("inspect.signature called per request")
+
+    monkeypatch.setattr(inspect, "signature", refuse)
+    out = svc.inference(VOCAB[0], top_k=3, domain="spo")["answers"]
+    assert [a["doc_id"] for a in out] == [1, 3, 5]
