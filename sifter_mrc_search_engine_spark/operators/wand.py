@@ -32,6 +32,7 @@ batch plan is ``search_many_relational``, whose fold is Catalyst's.
 from __future__ import annotations
 
 import heapq
+import math
 from typing import Dict, List, Sequence, Tuple
 
 import numpy as np
@@ -285,6 +286,24 @@ def term_impacts(table, doclen, n_docs: int, avgdl: float,
     return out
 
 
+def _sampled_floor(by_doc: np.ndarray, top_k: int):
+    """The doc ids whose score in ``by_doc`` (scores indexed by doc id)
+    is at least the ``top_k``-th best of an evenly spaced sample, or
+    None when that floor is not positive.
+
+    A doc without postings scores exactly 0.0, so a positive floor admits
+    only docs with postings, and the sample's ``top_k`` docs at or above
+    it put the ``top_k``-th best score, and every doc tied with it, among
+    those admitted. A sample of about ``sqrt(n * top_k)`` of the ``n``
+    scores balances its own partition against the one over the admitted
+    docs."""
+    sample = by_doc[:: max(1, math.isqrt(by_doc.size // top_k))]
+    if sample.size < top_k:
+        return None
+    floor = np.partition(sample, sample.size - top_k)[sample.size - top_k]
+    return np.flatnonzero(by_doc >= floor) if floor > 0.0 else None
+
+
 def accumulate_topk(per_term: Sequence[Tuple[np.ndarray, np.ndarray]],
                     top_k: int) -> List[Tuple[int, float]]:
     """Exact top-k from per-term ``(doc_ids, impacts)`` pairs given in
@@ -294,8 +313,9 @@ def accumulate_topk(per_term: Sequence[Tuple[np.ndarray, np.ndarray]],
     and of WAND; numpy top-k with doc_id tie-break.
 
     Packed ids (:func:`packed_ids`) are counted straight into an array
-    indexed by doc id; negative or sparse ids are first mapped to dense
-    ranks with ``np.unique``."""
+    indexed by doc id, and the top-k is selected among the docs at or
+    above :func:`_sampled_floor`; negative or sparse ids are first mapped
+    to dense ranks with ``np.unique``."""
     if top_k < 1 or not per_term:
         return []
     ids = np.concatenate([i for i, _ in per_term])
@@ -304,10 +324,13 @@ def accumulate_topk(per_term: Sequence[Tuple[np.ndarray, np.ndarray]],
     imp = np.concatenate([w for _, w in per_term])
     hi = int(ids.max())
     if packed_ids(int(ids.min()), hi, ids.size):
-        seen = np.zeros(hi + 1, dtype=bool)
-        seen[ids] = True
-        cand = np.flatnonzero(seen)
-        scores = np.bincount(ids, weights=imp, minlength=hi + 1)[cand]
+        by_doc = np.bincount(ids, weights=imp, minlength=hi + 1)
+        cand = _sampled_floor(by_doc, top_k)
+        if cand is None:
+            seen = np.zeros(hi + 1, dtype=bool)
+            seen[ids] = True
+            cand = np.flatnonzero(seen)
+        scores = by_doc[cand]
     else:
         cand, inv = np.unique(ids, return_inverse=True)
         scores = np.bincount(inv, weights=imp, minlength=cand.size)

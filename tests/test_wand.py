@@ -145,3 +145,36 @@ def test_blockmax_skips_block_decodes():
         wand_mod._Cursor._load_block = orig
     assert [d for d, _ in got] == [7]
     assert loads["n"] <= 8, f"{loads['n']} block loads — skip walk is decoding"
+
+
+def _fold_reference(per_term, top_k):
+    """accumulate_topk's contract in plain Python: each doc's float sum
+    starts at 0.0 and adds its weights in the given order; (score desc,
+    doc_id asc)."""
+    acc = {}
+    for ids, weights in per_term:
+        for d, w in zip(ids.tolist(), weights.tolist()):
+            acc[d] = acc.get(d, 0.0) + w
+    return sorted(acc.items(), key=lambda kv: (-kv[1], kv[0]))[:top_k]
+
+
+@pytest.mark.parametrize("seed", range(4))
+def test_accumulate_topk_equals_plain_fold(seed):
+    """The dense fold selects its top-k among the docs at or above a
+    sampled floor: ``==`` the plain fold over dense and sparse id spaces,
+    tied, zero and negative weights, and k past the candidate count."""
+    from sifter_mrc_search_engine_spark.operators.wand import accumulate_topk
+
+    rng = np.random.default_rng(seed)
+    for trial in range(200):
+        n = int(rng.integers(1, 4000))
+        span = int(rng.choice([50, 5000, 10**9]))
+        ids = rng.integers(0 if trial % 3 else -span, span, n)
+        if trial % 2:
+            weights = rng.choice([0.5, 1.0, 2.0, 0.0, -1.0], n)
+        else:
+            weights = rng.random(n)
+        cut = int(rng.integers(0, n + 1))
+        per_term = [(ids[:cut], weights[:cut]), (ids[cut:], weights[cut:])]
+        for k in (1, 2, 10, 100, 5000):
+            assert accumulate_topk(per_term, k) == _fold_reference(per_term, k), (trial, k)
